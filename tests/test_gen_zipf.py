@@ -12,12 +12,13 @@ No SparkSession needed.
 
 import hashlib
 import importlib.util
+import os
+
+GEN_ZIPF = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools", "gen_zipf.py")
 
 
 def _load():
-    spec = importlib.util.spec_from_file_location(
-        "gen_zipf", "/root/repo/tools/gen_zipf.py"
-    )
+    spec = importlib.util.spec_from_file_location("gen_zipf", GEN_ZIPF)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod

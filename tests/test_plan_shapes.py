@@ -627,82 +627,25 @@ def test_funnel_scan_two_shuffles(spark, sf_small):
 
 
 def test_front_block_registration_order():
-    """The driver certifies ~50 queries per round in registration order.
-    Pin the round-10 front block (the 5 unigram-shingle riders lead,
-    the NaN-fixed tau epilogue + 4 rolled guard re-certs follow, and
-    ALL 40 r5-era stale greens fill the rest of the front-50 exactly)
-    so a module reshuffle can't silently push a stale or plan-changed
-    query out of the gate's reach (goal: after r10, nothing stale
-    older than r6 remains)."""
-    from vtb_datafusion_2023_spark.suite import (
-        _FRONT_R4,
-        _FRONT_R5,
-        _FRONT_R6,
-        _FRONT_R7,
-        _FRONT_R8,
-        _FRONT_R9,
-        _FRONT_R10,
-        _UNCHECKED_TAIL,
+    """The certification gate checks ~50 queries per round in registry
+    order, and that order is the certification rule applied to the
+    committed CORRECTNESS files (suite module docstring), not a
+    hand-kept list."""
+    from vtb_datafusion_2023_spark.suite.certification import (
+        certification_order,
+        load_rounds,
+        newest_status,
     )
 
     names = list(QS)
-    head = _FRONT_R10 + [
-        n
-        for block in (
-            _FRONT_R9, _FRONT_R8, _FRONT_R7, _FRONT_R6, _FRONT_R5, _FRONT_R4,
-            _UNCHECKED_TAIL
-        )
-        for n in block
-        if n not in _FRONT_R10
-    ]
-    seen: set = set()
-    head = [n for n in head if not (n in seen or seen.add(n))]
-    assert names[: len(head)] == head
     assert len(set(names)) == len(names)
-    # slots 1-12 are exactly the 12 heads VERDICT r9 item 1 requires
-    # hash-green in CORRECTNESS_r10: the 5 unigram-shingle riders, the
-    # 3 r9 plan changes, and the 4 rolled guard re-certs
-    lead = [
-        "dd_ngram_jaccard", "dd_containment", "dd_dedup_clusters",
-        "dd_canonical_pick", "dp_softdedup_weights",
-        "dp_priority_sample", "dp_priority_sample_per_source",
-        "text_contamination_report",
-        "pipeline_submission", "pipeline_user_profile",
-        "a1_pivot_count", "a11_horizontal_stats",
-    ]
-    assert names[: len(lead)] == lead
-    # ALL 40 r5-era stale greens sit inside the driver's ~50 budget:
-    # newest green per query across CORRECTNESS_r01-r09, r5-era subset
-    import glob
-    import json
-
-    newest: dict = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r0*.json")):
-        rnd = int(path.rsplit("_r", 1)[1].split(".")[0])
-        with open(path) as f:
-            for q, v in json.load(f).items():
-                ok = v.get("hash_match") or (
-                    v.get("err") == "no_oracle" and v.get("spark_rows") is not None
-                )
-                if ok:
-                    newest[q] = rnd
-    r5_era = {q for q, rnd in newest.items() if rnd == 5}
-    front50 = set(names[:50])
-    # 38 of the 40 r5-era greens fit after the 12 mandatory re-certs;
-    # the two traded out are the zero-drift-surface sum-pivots whose
-    # shared pivot_exprs path a1-a4 re-certify this same round
-    roll = {"a5_pivot_sum", "a6_pivot_sum_debit_credit"}
-    assert r5_era - roll <= front50, (r5_era - roll) - front50
-    # nothing already fresh (r9-certified) burns a front-50 slot
-    r9_certified = {q for q, rnd in newest.items() if rnd == 9}
-    assert not (front50 & r9_certified), front50 & r9_certified
-    # the sum-pivot roll candidates queue at 51-52 (lead _FRONT_R11)
-    assert names[50:52] == ["a5_pivot_sum", "a6_pivot_sum_debit_credit"]
-    # riders + plan changes + guard + r5-era(38) + roll candidates
-    assert len(_FRONT_R10) == 5 + 3 + 4 + 38 + 2
-    assert len(_FRONT_R9) == 49 + 1 + 3 + 4 + 5
-    assert len(_FRONT_R8) == 1 + 4 + 4 + 41 + 4 + 49  # twin+new+changed+r3+guard+r4
-    assert len(_FRONT_R7) == 9 + 34 + 49  # changed + r2-era + r3-era
+    rounds = load_rounds()
+    assert set(range(1, 12)) <= set(rounds)  # r01-r11 are committed
+    assert names == certification_order(names, rounds)
+    # the two newest rounds' greens wait behind every staler head
+    newest = newest_status(rounds)
+    recent = {n for n, (rnd, green) in newest.items() if green and rnd >= max(rounds) - 1}
+    assert not recent & set(names[:50])
 
 
 def test_kll_partial_quantiles_merge_properties(spark):

@@ -1,83 +1,33 @@
-"""Compute the NEXT round's certification front block.
+"""Print the certification order for the next round.
 
-The driver's correctness gate certifies ~50 queries per round in
-registration order.  This tool reads every CORRECTNESS_r*.json in the
-repo root, classifies each registered query (green / rows-only / failed
-/ never-checked / stale-green), and prints the ordered name list to
-paste into ``vtb_datafusion_2023_spark/suite/__init__.py``
-(``_FRONT_R{N}``): failed queries first (they need a green row), then
-never-checked queries, then STALE greens — queries whose NEWEST driver
-row is older than ``--stale-after`` rounds (default 2) behind the
-latest recorded round; code drifts, so old greens decay as evidence
-(VERDICT r5 item 2).  The already-certified remainder keeps its
-relative order automatically.
+The order is ``suite.queries()``'s: the registered heads sorted by the
+committed CORRECTNESS_r*.json records, with the rule stated in the
+``vtb_datafusion_2023_spark.suite`` module docstring.  The certification
+gate checks about the first 50 per round.  Each line is position, the
+head's status (``failed``, ``never`` or the round of its newest green)
+and its name.
 
 Usage:
-    PYTHONPATH=/root/repo python tools/plan_next_round.py [--stale-after N]
+    python tools/plan_next_round.py
 """
 
 from __future__ import annotations
 
-import argparse
-import glob
-import json
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument(
-        "--stale-after",
-        type=int,
-        default=2,
-        help="a green older than this many rounds behind the newest "
-        "CORRECTNESS file re-enters the front block",
-    )
-    args = ap.parse_args()
+    from vtb_datafusion_2023_spark.suite import queries
+    from vtb_datafusion_2023_spark.suite.certification import load_rounds, newest_status
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    from vtb_datafusion_2023_spark import suite
-
-    names = list(suite.queries())
-    # the LATEST driver row per query decides its status: a later green
-    # supersedes an old failure AND a later failure supersedes an old
-    # green (a regression must re-enter the front block)
-    status: dict[str, bool] = {}
-    newest: dict[str, int] = {}
-    latest_round = 0
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else 0
-        latest_round = max(latest_round, rnd)
-        with open(path) as f:
-            rows = json.load(f)
-        for name, row in rows.items():
-            status[name] = row.get("hash_match") is True or row.get("err") == "no_oracle"
-            newest[name] = rnd
-    green = {n for n, ok in status.items() if ok}
-    failed = {n for n, ok in status.items() if not ok}
-    never = [n for n in names if n not in green and n not in failed]
-    stale_cut = latest_round - args.stale_after
-    stale = [
-        n for n in names
-        if n in green and n not in failed and newest.get(n, 0) < stale_cut
-    ]
-    front = [n for n in names if n in failed] + never + stale
-    fresh = [n for n in names if n in green and n not in failed and n not in stale]
-
-    print(f"# registered: {len(names)}  green: {len(green)}  "
-          f"failed-without-green: {len(failed)}  never-checked: {len(never)}  "
-          f"stale-green (newest < r{stale_cut}): {len(stale)}")
-    print(f"# next front block ({len(front)} names; driver covers ~50/round):")
-    for i in range(0, len(front), 3):
-        print("    " + " ".join(f'"{n}",' for n in front[i : i + 3]))
-    print(f"# fresh-certified tail keeps registration order ({len(fresh)} names)")
-    if not front:
-        print("# every registered query has a fresh green (or rows-only) driver row.")
+    newest = newest_status(load_rounds())
+    for i, name in enumerate(queries(), 1):
+        rnd, green = newest.get(name, (None, False))
+        status = "never" if rnd is None else f"r{rnd:02d}" if green else "failed"
+        print(f"{i:4d}  {status:6s}  {name}")
 
 
 if __name__ == "__main__":

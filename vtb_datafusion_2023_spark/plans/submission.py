@@ -225,7 +225,6 @@ def run_submission(
     sampler: str = "bootstrap",
     scorer: str = "udf",
     blacklist_cats: Sequence = (6012,),
-    pin_cleaned: bool = False,
 ) -> DataFrame:
     """Full pipeline: (user_id, cat, amt, ts, ord) -> (user_id, target).
 
@@ -238,12 +237,6 @@ def run_submission(
 
     Returns the submission DataFrame sorted by user_id; optionally writes
     the CSV (S3).
-
-    ``pin_cleaned``: block-manager localCheckpoint of the cleaned log
-    before branch C.  Default OFF — the fused branch C leaves
-    ``cleaned`` one consumer subtree, so the pin buys nothing (A/B in
-    the comment below) while costing a job barrier and a corpus copy;
-    the parameter keeps the tradeoff re-measurable in one warm JVM.
 
     ``bucket_dir``: materialize the cleaned transactions bucketed by
     ``user_id`` before branch C (ROADMAP #7).  The cleaned table is the
@@ -277,20 +270,7 @@ def run_submission(
             path=f"{bucket_dir}/cleaned_tx",
             bucket_cols=["user_id"],
         )
-    elif pin_cleaned:
-        # The cleaned log is the reference's ONE named intermediate
-        # (run.py:84-90, written to disk and re-read): with the 8-block
-        # branch C this pin was the r5 headline (17.7 -> 5.5 s at
-        # sf0.1: every block replayed the 6-exchange cleaning chain).
-        # The FUSED branch C leaves ``cleaned`` exactly ONE consumer
-        # subtree (the trim window; everything else sits above that
-        # window's exchange and shares it via ReuseExchange), so the pin
-        # buys nothing — same-JVM interleaved A/B: 6.57 vs 6.51 s at
-        # sf0.1, 36.5 vs 35.1 s at sf10 — while costing a job barrier
-        # and a block-manager copy of the corpus (prohibitive at 100 TB).
-        # Default OFF; the flag keeps the tradeoff re-measurable, and
-        # ``bucket_dir`` remains the durable cross-pipeline form.
-        cleaned = cleaned.localCheckpoint(eager=True)
+    # no pin of ``cleaned``: branch C is its one consumer, a pin is a wash (sf10)
     # no kept-row materialization: the FUSED branch C has only three
     # consumers of the trimmed row set (wide aggregate, long aggregate,
     # dropped-users anti-join) and they all sit above the SAME trim-window

@@ -10,6 +10,17 @@ Contract (see repo root ``__spark_entry__.py``): Spark result and oracle
 result must match on row count, schema, and order-insensitive value hash —
 so every computed column is aliased identically on both sides, and float
 aggregates use deterministic arithmetic (see ``functions.stats``).
+
+Certification order: the external certification gate checks ~50 heads
+per round in registry order and records each round as
+``CORRECTNESS_rNN.json`` in the repo root.  ``queries()`` returns the
+heads sorted by those committed records (``suite.certification``): failed
+heads first, then heads with no recorded row yet, then greens by the
+round of their newest green, oldest first; ties keep module registration
+order.  A head's newest row decides its
+status, so a later failure overrides an earlier green.  Green means
+``hash_match`` is true, or ``err == "no_oracle"`` with ``spark_rows`` not
+null.  Without records the registration order stands.
 """
 
 from __future__ import annotations
@@ -80,508 +91,9 @@ NO_ORACLE_TWINS: dict[str, str] = {
 _LOADED = False
 
 
-# The driver's correctness gate certifies ~50 queries per round in
-# REGISTRATION ORDER (r1 = first 50 of the old order, rN = first ~50
-# of that round's reorder).  Rounds 1-3 certified 148 distinct queries
-# (147 green/rows-only + tbl_key_skew red); this front block holds the
-# 44 queries that still need a driver row: tbl_key_skew first (its
-# oracle HUGEINT->float64 bug is fixed in r4 — DuckDB sum(BIGINT) now
-# cast to bigint), then the 43 never-sampled queries in registration
-# order (computed by tools/plan_next_round.py from CORRECTNESS_r0{1,2,3}).
-# A green round here gives every one of the 191 registered queries a
-# driver row across r1-r4.
-_FRONT_R4 = [
-    "tbl_key_skew",
-    "an_pair_affinity", "an_seasonal_decompose", "an_seasonal_anomaly",
-    "agg_incremental_distinct", "text_repetition", "dp_corpus_mix",
-    "text_normalize", "text_tfidf", "dp_modulo_split",
-    "text_pack_sequences", "text_scrub_pii", "text_strip_html",
-    "text_top_ngrams", "emb_l2_normalize", "emb_quantize_int8",
-    "mm_resize", "dd_fuzzy_pairs", "dp_latest_by_key",
-    "text_decontaminate", "dp_cap_per_source", "dp_weighted_sample",
-    "dp_quality_percentile", "dd_segment_dedup", "dp_shard_assign",
-    "text_bm25", "dp_token_budget", "dd_incremental_minhash",
-    "dp_cluster_safe_split", "dp_scd2_intervals", "text_bpe_tokens",
-    "dd_pq_dedup", "dd_substring_dedup", "mm_audio_g711",
-    "mm_decode_gif", "dp_cdc_diff", "text_chunk_overlap",
-    "dp_feature_hash", "agg_incremental_cms", "mm_audio_flac",
-    "pipeline_corpus_prep", "dp_pseudonymize", "dp_k_anonymity",
-    "mm_decode_tiff",
-]
-
-# Every other registered query already has a green (or documented
-# rows-only) driver row; they keep their relative registration order
-# after the front block.
-_UNCHECKED_TAIL: list[str] = []
-
-# Round-6 front block (84 names = 5 new + 6 changed + 30 r1-era + 43
-# r2-era; the driver certifies ~50 in order, so the head is budget + a
-# spill that rolls to r7).  Goal (VERDICT r5 item 2): walk every query
-# whose NEWEST green predates r3 back through the gate — after r5, 74
-# registered queries' newest green was r1/r2-era (25 r1-only + 49
-# r2-only, computed by tools/plan_next_round.py over
-# CORRECTNESS_r01..05).  Order:
-#
-# 0. The 5 queries added this round, never driver-certified: the U4
-#    hash twin (VERDICT item 4), the two planted-density dedup twins
-#    (VERDICT item 3), the KMV pairwise set-op estimates, and k-core.
-# 1. The 6 queries whose code path changed this round (prefix-filter
-#    epsilon, derived semdedup fanout, top_paths TakeOrdered rewrite,
-#    throttle window-id rebuild, manifest schema recovery) — newest
-#    green notwithstanding.
-# 2. The 30 queries whose ONLY green is r1-era (oldest first; includes
-#    the trivial set ops and rows-only entries excluded from the r5
-#    rotation — a fresh driver row is still what retires them from the
-#    stale list).
-# 3. The r2-era tail in registration order; positions past the ~50
-#    budget roll to r7 — all hold r2 greens, nothing uncertified is at
-#    risk.
-_FRONT_R6 = [
-    # -- new this round (never checked) --
-    "u4_vrae_twin",
-    "dd_containment_planted",
-    "dd_jaccard_planted",
-    "sk_kmv_overlap",
-    "gr_kcore",
-    # -- changed code path this round --
-    "dd_ngram_jaccard", "dd_containment", "dd_semdedup",
-    "an_top_paths", "dp_throttle", "tbl_schema_evolution",
-    # -- newest green is r1 --
-    "agg_grouping_sets", "agg_incremental_merge", "agg_time_rollup",
-    "agg_topk_per_group", "an_retention", "clean_expectations",
-    "clean_mad_outliers", "f1_f2_filters", "f3_frequency_filter",
-    "m1_m2_null_handling", "p1_time_parts", "p2_seconds_since_midnight",
-    "p3_hours_since_anchor", "p4_p10_debit_credit_ratio",
-    "p5_p9_onehot_conform", "p6_bucket_floor_div", "p7_bin_by_edges",
-    "p_array_battery", "p_json_extract", "p_melt_unpivot",
-    "p_temporal_battery", "q1_pricing_summary", "sk_heavy_hitters",
-    "tbl_histogram", "tbl_profile", "so1_distinct_users",
-    "so2_set_difference", "so3_bootstrap_sample", "so4_intersect",
-    "sk_approx_distinct",
-    # -- newest green is r2 --
-    "sj_salted_join", "j6_bloom_prune_join", "w1_cumsum",
-    "w2_reanchor_first", "w3_zscore_per_user", "w4_keep_last_n",
-    "w6_w7_sequence_assembly", "w8_rolling_stats", "w9_event_deltas",
-    "w10_quantile_bin", "w11_minmax_scale", "w12_rank_functions",
-    "w13_rolling_time_window", "w14_ewma", "w15_gap_fill",
-    "pipeline_user_profile", "u1_rnn_scores", "u4_vrae_latents",
-    "u6_catboost_cbm", "dd_exact_dedup", "dd_dedup_clusters",
-    "dd_minhash_lsh", "dd_minhash_md5", "dd_simhash", "text_quality",
-    "text_langid", "text_fingerprint", "text_token_count",
-    "sim_topk_bruteforce", "ann_gemm_topk", "pq_encode_codes",
-    "ann_pq_topk", "ann_lsh_buckets", "ann_lsh_topk", "ann_lsh_pq_topk",
-    "dd_embedding_cosine", "dd_semantic_dedup", "ann_ivf_topk",
-    "mm_binary_metadata", "mm_decode_png", "mm_audio_wav",
-    "u6_mapinpandas_inference", "text_chunking",
-]
-
-# Round-7 front block (92 names; the driver certifies ~50 in order).
-# Goal (VERDICT r6 item 1 — "the only gap between all-green and all
-# freshly green"): walk the 83 registered queries whose newest driver
-# green predates r4 (tools/plan_next_round.py --stale-after 2) back
-# through the gate, r2-era names first.  Order:
-#
-# 0. The 6 queries whose code path changed this round, newest green
-#    notwithstanding: the PPJoin position/length filters on the
-#    AllPairs candidates (dd_jaccard_planted / dd_containment_planted /
-#    dd_ngram_jaccard / dd_containment), the kmv_set_ops pinned-sketch
-#    cardinality guard (sk_kmv_overlap), and the grouped-GEMM tiling
-#    module (dd_semdedup — its certified fold path is untouched, but
-#    clustering.py changed, so re-certify), plus the fused branch-C
-#    rewrite (pipeline_submission — ONE kept-level hash aggregate in
-#    place of the 8-block join; pivot_agg / horizontal_stats now
-#    delegate to the shared expression builders, so their flagship
-#    consumers a1_pivot_count / a11_horizontal_stats re-certify too).
-# 1. The 34 r2-era names, oldest-certification-first (VERDICT item 3's
-#    real-weight inference paths u1/u4/u6 included) — these plus block
-#    0 fit the ~50 budget, meeting the round's "zero r2-era greens
-#    remain" done-criterion.
-# 2. The r3-era tail in registration order; positions past the budget
-#    roll to r8 — all hold greens, nothing uncertified is at risk.
-_FRONT_R7 = [
-    # -- changed code path this round --
-    "dd_jaccard_planted", "dd_containment_planted",
-    "dd_ngram_jaccard", "dd_containment",
-    "sk_kmv_overlap", "dd_semdedup",
-    "pipeline_submission", "a1_pivot_count", "a11_horizontal_stats",
-    # -- newest green is r2 --
-    "w10_quantile_bin", "w11_minmax_scale", "w12_rank_functions",
-    "w13_rolling_time_window", "w14_ewma", "w15_gap_fill",
-    "pipeline_user_profile", "u1_rnn_scores", "u4_vrae_latents",
-    "u6_catboost_cbm", "dd_exact_dedup", "dd_dedup_clusters",
-    "dd_minhash_lsh", "dd_minhash_md5", "dd_simhash",
-    "text_quality", "text_langid", "text_fingerprint",
-    "text_token_count", "sim_topk_bruteforce", "ann_gemm_topk",
-    "pq_encode_codes", "ann_pq_topk", "ann_lsh_buckets",
-    "ann_lsh_topk", "ann_lsh_pq_topk", "dd_embedding_cosine",
-    "dd_semantic_dedup", "ann_ivf_topk", "mm_binary_metadata",
-    "mm_decode_png", "mm_audio_wav", "u6_mapinpandas_inference",
-    "text_chunking",
-    # -- newest green is r3 --
-    "text_surprisal", "sql_surface", "dd_incremental_md5",
-    "sink_roundtrip", "tbl_maintenance_roundtrip",
-    "tbl_merge_time_travel", "tbl_zone_map_range", "sql_udtf_chunking",
-    "gr_pagerank", "an_drift_psi", "dd_simhash_md5",
-    "text_bigram_surprisal", "gr_triangles", "text_entropy",
-    "text_stupid_backoff", "an_pattern_spans", "st_windowed_counts",
-    "st_windowed_spend", "st_stream_dedup", "st_stream_dedup_wm",
-    "sw_session_window", "st_attribution_join", "st_static_enrich",
-    "st_attribution_outer", "st_attribution_full", "st_dedup_ingest",
-    "st_dedup_ingest_md5", "st_drift_psi", "q3_shipping_priority",
-    "q5_local_supplier_volume", "q10_returned_items", "q4_order_priority",
-    "q18_large_orders", "q17_small_quantity_revenue", "q6_forecast_revenue",
-    "q7_nation_volume", "q8_market_share", "q9_product_profit",
-    "q12_late_shipments", "q14_promo_revenue", "q16_supplier_cnt",
-    "q19_disjunctive_revenue", "q20_promo_suppliers", "q21_waiting_supplier",
-    "q22_idle_customers", "q13_order_distribution", "q15_top_supplier",
-    "q11_important_parts", "q2_min_cost_supplier",
-]
-
-# Round-8 front block (103 names; the driver certifies ~50 in order).
-# Goal (VERDICT r7 items 1-3): finish the certification rotation — walk
-# the 42 r3-era stale greens through the gate this round and queue the
-# 50 r4-era names so r9 closes the walk (after r8: zero queries whose
-# newest green predates r4).  Order:
-#
-# 0. dd_simhash_md5 at the VERY front (VERDICT item 2): it is the hash
-#    twin that carries the rows-only dd_simhash's parity claim, and its
-#    newest green is r3 — four rounds of code drift behind the operator
-#    it vouches for.
-# 1. The four queries ADDED this round, never driver-checked — a
-#    never-checked query outranks any stale green:
-#    dp_priority_sample (Duffield-Lund-Thorup fixed-k weighted sample +
-#    unbiased subset-sum estimator), dd_canonical_pick (keep-best-
-#    duplicate finisher over near-dup clusters),
-#    text_contamination_report (eval-side dirty/clean audit), and
-#    dp_priority_sample_per_source (the stratified variant,
-#    WindowGroupLimit + per-group tau).
-# 2. The 4 queries with REAL plan changes this round:
-#    pipeline_corpus_prep (r8 rewrite — window-based exact dedup +
-#    pinned substring-dedup fan-out, 10 exchanges + 2 SMJ -> 5 + 0,
-#    bitwise-pinned), emb_gram_matrix (registered query now runs the
-#    arrow partial-state path — bitwise twin of the expr form, ~4x at
-#    sf0.1), sk_kmv_overlap (kmv_set_ops guard made optional via
-#    max_sets=None), dp_softdedup_weights (cluster-size agg + join-back
-#    -> one cluster-keyed window).
-# 3. The remaining 41 r3-era names (tools/plan_next_round.py order):
-#    the 12 streaming replay oracles re-certify on the CURRENT session
-#    confs (maxFields/openCostInBytes changed since r3 — VERDICT item
-#    3), then TPC-H q2-q22 and the text/graph/analytics tail.
-#    Blocks 0-3 = 50 names (1 twin + 4 new + 4 plan-changed + 41
-#    r3-era), filling the front-50 exactly — ALL 42 r3-era inside.
-# 4. The guard-hardening re-certs (horizontal_stats_multi collision
-#    guard + explicit FEATURE_COLS order — bitwise-pinned by the
-#    branch-C differential tests, all four r7-green) sit at positions
-#    51-54 and roll to r9 at r7 freshness when the driver stops at 50
-#    (r8 outcome: it did — all four rolled; they queue again in
-#    _FRONT_R9).
-# 5. The 50 r4-era names in planner order; positions past the budget
-#    roll to r9 — all hold r4 greens, nothing uncertified is at risk.
-_FRONT_R8 = [
-    # -- the stale hash twin carrying dd_simhash's parity claim --
-    "dd_simhash_md5",
-    # -- new this round (never checked) --
-    "dp_priority_sample", "dd_canonical_pick", "text_contamination_report",
-    "dp_priority_sample_per_source",
-    # -- real plan changes this round --
-    "pipeline_corpus_prep", "emb_gram_matrix", "sk_kmv_overlap",
-    "dp_softdedup_weights",  # r8: size agg + join-back -> one window
-    # -- newest green is r3 --
-    "sql_udtf_chunking", "gr_pagerank", "an_drift_psi",
-    "text_bigram_surprisal", "gr_triangles", "text_entropy",
-    "text_stupid_backoff", "an_pattern_spans", "st_windowed_counts",
-    "st_windowed_spend", "st_stream_dedup", "st_stream_dedup_wm",
-    "sw_session_window", "st_attribution_join", "st_static_enrich",
-    "st_attribution_outer", "st_attribution_full", "st_dedup_ingest",
-    "st_dedup_ingest_md5", "st_drift_psi", "q3_shipping_priority",
-    "q5_local_supplier_volume", "q10_returned_items", "q4_order_priority",
-    "q18_large_orders", "q17_small_quantity_revenue", "q6_forecast_revenue",
-    "q7_nation_volume", "q8_market_share", "q9_product_profit",
-    "q12_late_shipments", "q14_promo_revenue", "q16_supplier_cnt",
-    "q19_disjunctive_revenue", "q20_promo_suppliers", "q21_waiting_supplier",
-    "q22_idle_customers", "q13_order_distribution", "q15_top_supplier",
-    "q11_important_parts", "q2_min_cost_supplier",
-    # -- guard-hardening re-certs (r7-green, bitwise-pinned by tests;
-    #    a1/a11 sit past the ~50 budget and roll to r9 if unreached) --
-    "pipeline_submission", "pipeline_user_profile",
-    "a1_pivot_count", "a11_horizontal_stats",
-    # -- newest green is r4 (queued; spill rolls to r9) --
-    "tbl_key_skew", "an_pair_affinity", "an_seasonal_decompose",
-    "an_seasonal_anomaly", "agg_incremental_distinct", "text_repetition",
-    "dp_corpus_mix", "text_normalize", "text_tfidf",
-    "dp_modulo_split", "text_pack_sequences", "text_scrub_pii",
-    "text_strip_html", "text_top_ngrams", "emb_l2_normalize",
-    "emb_quantize_int8", "mm_resize", "dd_fuzzy_pairs",
-    "dp_latest_by_key", "text_decontaminate", "dp_cap_per_source",
-    "dp_weighted_sample", "dp_quality_percentile", "dd_segment_dedup",
-    "dp_shard_assign", "text_bm25", "dp_token_budget",
-    "dd_incremental_minhash", "dp_cluster_safe_split", "dp_scd2_intervals",
-    "text_bpe_tokens", "dd_pq_dedup", "dd_substring_dedup",
-    "mm_audio_g711", "mm_decode_gif", "dp_cdc_diff",
-    "text_chunk_overlap", "dp_feature_hash", "agg_incremental_cms",
-    "mm_audio_flac", "dp_pseudonymize", "dp_k_anonymity",
-    "mm_decode_tiff", "j1_join_enrich", "j3_anti_join",
-    "j4_union_fill_max", "tj_asof_join", "tj_range_join",
-    "j2_j5_feature_assembly",
-]
-
-# Round-9 front block (62 names; the driver certifies the first ~50).
-# Goal (VERDICT r8 item 1): close the certification walk — the 49
-# queries whose newest green is r4-era all land INSIDE the front-50,
-# so after r9 nothing stale older than r5 remains.  Order:
-#
-# 0. The 49 r4-era names, shared-code-path risk first: the dedup.py
-#    riders (PPJoin prefix/position/length filters landed in r7 after
-#    their r4 certification), then the checkpoint-pin-idiom text heads
-#    (tfidf/bm25/decontaminate), then the r8-queued order.
-# 1. u6_catboost_cbm at slot 50: its scoring kernel was REWRITTEN this
-#    round (row-blocked, width-matched accumulators — 260 -> 12.5
-#    us/row) — bitwise leaf-sum pytest vs the real model_cb.cbm stayed
-#    green and the sf0.01 oracle PASSes locally, but a kernel rewrite
-#    outranks a guard re-cert for the last driver slot.
-# 2. Slots 51-53: the three r8-green heads whose PLAN changed this
-#    round (dp_priority_sample + _per_source: driver-side tau epilogue
-#    replacing the unpartitioned window, numpy-reference bitwise pin
-#    green; text_contamination_report: eager bg pin, wash A/B).  All
-#    three re-verified locally vs the DuckDB oracle under a vanilla
-#    session this round; they roll to r10 at r8 freshness if the
-#    driver stops at 50.
-# 3. Slots 54-57: the four guard-hardening re-certs that rolled from
-#    r8 (all r7-green, bitwise-pinned by the branch-C differentials).
-# 4. Slots 58-62: the five heads riding the r9 unigram-shingle fast
-#    path (word_shingles n=1 -> array_distinct; string-identical by
-#    differential pin test, all five oracle-PASS at sf0.01 after the
-#    change).  They roll to r10, where they lead the rotation as
-#    changed-code-path re-certs.
-# Round-10 front block (52 names; the driver certifies the first ~50).
-# Goal: continue the freshness walk — after r9 every registered query
-# holds an r5-or-newer green (histogram r5:40 r6:44 r7:48 r8:50 r9:50);
-# this round re-certifies ALL 40 r5-era names plus every changed code
-# path, so after r10 nothing staler than r6 remains.  Order:
-#
-# 0. Slots 1-5: the five unigram-shingle fast-path riders queued from
-#    r9 (word_shingles n=1 -> array_distinct landed r9 AFTER their
-#    newest greens; string-identical by differential pin, all five
-#    locally oracle-green) — changed-code-path re-certs lead.
-# 1. Slots 6-8: the three r9 plan changes (VERDICT r9 item 1 lists
-#    all 12 rolled heads as must-certify): dp_priority_sample (its
-#    driver-side tau epilogue additionally gained the NaN-explicit
-#    total order this round — r9 ADVICE; window-formulation NaN pin
-#    test added), dp_priority_sample_per_source, and
-#    text_contamination_report — all three oracle re-verified at
-#    sf0.01 this session.
-# 2. Slots 9-12: the four guard-hardening re-certs that rolled through
-#    r8 AND r9 (all r7-green, bitwise-pinned by the branch-C
-#    differential tests).  Slots 1-12 = exactly the 12 heads VERDICT
-#    r9 item 1 requires hash-green in CORRECTNESS_r10.
-# 3. Slots 13-50: 38 of the 40 r5-era stale greens, shared-code-path
-#    risk first: ml_kmeans (Arrow-GEMM assignment rewritten r6),
-#    agg_incremental_quantiles (checkpoint-family GC findings), the
-#    fused-cleaner family, the stats-fusion and TF-IDF-idiom
-#    adjacencies, then the stable tail.
-# 4. Slots 51-52: the two r5-era heads with the LEAST drift surface —
-#    a5/a6 sum-pivots, whose shared pivot_exprs path is re-certified
-#    via a1 (slot 11) and a2-a4 this same round.  They roll to r11 at
-#    r5 freshness if the driver stops at 50; they lead _FRONT_R11.
-# Round-11 front block (the driver certifies ~50 in order):
-# 1. Slots 1-6: the six r10-optimized heads (VERDICT r10 item 2 — their
-#    plans changed in r10 but the r10 window was fixed before the
-#    optimization session, so the driver's oracle has never run on the
-#    changed plans; local oracle_check + pinned differentials carry the
-#    claim until these rows land).
-# 2. Slots 7-14: every head whose PLAN changed in r11 (cleaning-stats
-#    fusion -> pipeline_submission / clean_transactions_composed;
-#    verify-shingle pin -> the minhash/incremental family; min_by OHLC;
-#    a16 shared-sort ties; idf broadcast+respread -> dd_simhash_idf is
-#    already slot 2).  Rows-only twins ride their md5 certs but get
-#    fresh rows checks here too.
-# 3. Slots 15-16: a5/a6 — the r10 roll candidates (r5-freshness
-#    sum-pivots; VERDICT r10 said they lead this block's rotation).
-# 4. The 17 remaining never-driver-checked heads (r10-session additions
-#    certified locally only), then stale greens (newest row < r8) in
-#    tools/plan_next_round.py order.
-_FRONT_R11 = [
-    # -- r10-optimized, never driver-certified on the new plans --
-    "dd_lsh_recall_eval", "dd_simhash_idf", "dd_simhash_md5",
-    "dd_containment_planted", "dd_jaccard_planted", "an_cusum",
-    # -- r11 plan changes --
-    "pipeline_submission", "clean_transactions_composed",
-    "dd_minhash_md5", "dd_incremental_md5", "dd_minhash_lsh",
-    "dd_incremental_minhash", "an_ohlc_bars", "a16_roc_auc",
-    # -- r10 roll candidates (r5-freshness) --
-    "a5_pivot_sum", "a6_pivot_sum_debit_credit",
-    # -- never driver-checked (r10-session additions) --
-    "ann_recall_eval", "an_autocorr", "text_sentence_split",
-    "emb_mrl_truncate", "an_trend_slope", "dd_sentence_dedup",
-    "agg_incremental_ols", "ann_mrl_rerank", "an_forecast_holt",
-    "gr_link_jaccard", "gr_assortativity", "dp_temperature_mix",
-    "ann_int8_rerank", "mm_phash_dedup", "mm_phash_near_pairs",
-    "st_trend_ols", "dd_semdedup_scaled",
-    # -- stale greens (newest driver row < r8), riskiest-drift first --
-    "dd_semdedup", "w10_quantile_bin", "w11_minmax_scale",
-    "w12_rank_functions", "w13_rolling_time_window", "w14_ewma",
-    "w15_gap_fill", "u1_rnn_scores", "u4_vrae_latents",
-    "dd_exact_dedup", "dd_simhash", "text_quality", "text_langid",
-    "text_fingerprint", "text_token_count", "sim_topk_bruteforce",
-    "ann_gemm_topk", "pq_encode_codes", "ann_pq_topk",
-    "ann_lsh_buckets", "ann_lsh_topk", "ann_lsh_pq_topk",
-]
-
-_FRONT_R10 = [
-    # -- unigram-shingle fast-path riders (plan changed r9; pinned) --
-    "dd_ngram_jaccard", "dd_containment", "dd_dedup_clusters",
-    "dd_canonical_pick", "dp_softdedup_weights",
-    # -- r9 plan changes (tau epilogue + NaN fix; eager bg pin) --
-    "dp_priority_sample", "dp_priority_sample_per_source",
-    "text_contamination_report",
-    # -- guard-hardening re-certs rolled from r8/r9 (r7-green, pinned) --
-    "pipeline_submission", "pipeline_user_profile",
-    "a1_pivot_count", "a11_horizontal_stats",
-    # -- newest green is r5; changed/adjacent code paths first --
-    "ml_kmeans", "agg_incremental_quantiles",
-    "clean_transactions_composed", "a7_group_percentiles",
-    "a8_winsorize", "a9_rare_rewrite", "an_funnel",
-    "f4_positional_trim", "a10_vertical_stats", "text_keywords",
-    "text_pmi", "emb_drift_means",
-    # -- newest green is r5; stable paths --
-    "an_gap_histogram", "an_markov_transitions", "an_ohlc_bars",
-    "an_rfm_segments", "an_sessionize", "dp_cluster_sample",
-    "dp_dataset_card", "dp_interleave_sources", "dp_negative_sample",
-    "dp_url_dedup", "gj_proximity_pairs", "gr_label_propagation",
-    "mm_frame_sample", "p_variant_extract", "sink_orc_jsonl_roundtrip",
-    "sk_kmv_distinct", "so3_md5_sample", "tbl_zorder_roundtrip",
-    "text_hash_classifier", "a12_a13_row_normalize", "a15_ensemble_mean",
-    "a16_roc_auc", "agg_cube_source_lang", "a2_pivot_count_dom",
-    "a3_pivot_count_dow", "a4_pivot_count_hour",
-    # -- roll candidates: zero-drift-surface sum-pivots (path covered
-    #    by a1-a4 above); they lead _FRONT_R11 if the driver stops at 50 --
-    "a5_pivot_sum", "a6_pivot_sum_debit_credit",
-]
-
-_FRONT_R9 = [
-    # -- newest green is r4; dedup.py code path changed since (PPJoin) --
-    "dd_substring_dedup", "dd_segment_dedup", "dd_incremental_minhash",
-    "dd_fuzzy_pairs", "dd_pq_dedup",
-    # -- newest green is r4; checkpoint-pin idiom riders --
-    "text_tfidf", "text_bm25", "text_decontaminate",
-    # -- newest green is r4 (r8-queue order) --
-    "tbl_key_skew", "an_pair_affinity", "an_seasonal_decompose",
-    "an_seasonal_anomaly", "agg_incremental_distinct", "text_repetition",
-    "dp_corpus_mix", "text_normalize", "dp_modulo_split",
-    "text_pack_sequences", "text_scrub_pii", "text_strip_html",
-    "text_top_ngrams", "emb_l2_normalize", "emb_quantize_int8",
-    "mm_resize", "dp_latest_by_key", "dp_cap_per_source",
-    "dp_weighted_sample", "dp_quality_percentile", "dp_shard_assign",
-    "dp_token_budget", "dp_cluster_safe_split", "dp_scd2_intervals",
-    "text_bpe_tokens", "mm_audio_g711", "mm_decode_gif",
-    "dp_cdc_diff", "text_chunk_overlap", "dp_feature_hash",
-    "agg_incremental_cms", "mm_audio_flac", "dp_pseudonymize",
-    "dp_k_anonymity", "mm_decode_tiff", "j1_join_enrich",
-    "j3_anti_join", "j4_union_fill_max", "tj_asof_join",
-    "tj_range_join", "j2_j5_feature_assembly",
-    # -- kernel rewritten this round (r9) --
-    "u6_catboost_cbm",
-    # -- plan changed this round (r8-green; local oracle re-verified) --
-    "dp_priority_sample", "dp_priority_sample_per_source",
-    "text_contamination_report",
-    # -- guard-hardening re-certs rolled from r8 (r7-green, pinned) --
-    "pipeline_submission", "pipeline_user_profile",
-    "a1_pivot_count", "a11_horizontal_stats",
-    # -- unigram-shingle fast-path riders (plan changed r9; pinned +
-    #    locally oracle-green; lead the r10 rotation) --
-    "dd_ngram_jaccard", "dd_containment", "dd_dedup_clusters",
-    "dd_canonical_pick", "dp_softdedup_weights",
-]
-
-# Round-5 front block (75 names; the driver certified the first 50 —
-# r5 came back 50/50 green):
-#
-# 0. The 13 session-3 additions (batch sessionization, containment
-#    dedup, label-propagation communities, raw-frame sampling, RFM
-#    segmentation, TF-IDF keyword extraction, ORC+JSONL sink roundtrip,
-#    schema evolution, windowed throttle, top paths, embedding
-#    drift, gap histogram, soft-dedup weights) — never
-#    driver-certified, all locally hash-green at sf0.01.
-# 1. The 19 queries added this round, never driver-certified — the
-#    end-to-end submission pipeline (VERDICT r4 item 1), the
-#    hash-certifiable twins that shrink the rows-only set (item 4),
-#    the k-means/SemDeDup/KLL curation additions, and the session-2
-#    operators (z-order cert, PMI, negative sampling, embedding Gram,
-#    hash classifier, URL dedup).  All inside the budget by a wide
-#    margin.
-# 2. 43 of the 48 queries whose ONLY driver row is from round 1 — four
-#    rounds of code drift since their last certification.  Ordered by
-#    regression risk: the robust-cleaning family first (this round's
-#    fused-cleaner rewrite changed their shared code path), then
-#    an_funnel (rewritten as the one-pass automaton in r4 but never
-#    re-certified), then the rest in r1 order.  Excluded:
-#    sk_approx_distinct / so3_bootstrap_sample (rows-only by design —
-#    a re-run adds no hash evidence) and the three trivial set ops
-#    (so1/so2/so4 — single-operator plans with no drift surface).
-#    The excluded five plus the 25 tail names past the 50-query budget
-#    (positions 51-75 after the 13 session-3 inserts) rolled to r6 — all
-#    held r1 greens, so nothing uncertified was at risk.
-_FRONT_R5 = [
-    # -- new this round, session 3 (never checked) --
-    "an_sessionize",
-    "dd_containment",
-    "gr_label_propagation",
-    "mm_frame_sample",
-    "an_rfm_segments",
-    "text_keywords",
-    "sink_orc_jsonl_roundtrip",
-    "tbl_schema_evolution",
-    "dp_throttle",
-    "an_top_paths",
-    "emb_drift_means",
-    "an_gap_histogram",
-    "dp_softdedup_weights",
-    # -- new this round (never checked) --
-    "pipeline_submission",
-    "sk_kmv_distinct",
-    "so3_md5_sample",
-    "ml_kmeans",
-    "agg_incremental_quantiles",
-    "dd_semdedup",
-    "dp_cluster_sample",
-    "tbl_zorder_roundtrip",
-    "text_pmi",
-    "dp_negative_sample",
-    "emb_gram_matrix",
-    "text_hash_classifier",
-    "dp_url_dedup",
-    "p_variant_extract",
-    "gj_proximity_pairs",
-    "an_markov_transitions",
-    "an_ohlc_bars",
-    "dp_dataset_card",
-    "dp_interleave_sources",
-    # -- stale-green, changed code path this round or last --
-    "a7_group_percentiles", "a8_winsorize", "a9_rare_rewrite",
-    "clean_transactions_composed", "an_funnel", "f4_positional_trim",
-    # -- stale-green (r1-only), re-certify --
-    "a1_pivot_count", "a2_pivot_count_dom", "a3_pivot_count_dow",
-    "a4_pivot_count_hour", "a5_pivot_sum", "a6_pivot_sum_debit_credit",
-    "a10_vertical_stats", "a11_horizontal_stats", "a12_a13_row_normalize",
-    "a15_ensemble_mean", "a16_roc_auc", "agg_cube_source_lang",
-    "agg_grouping_sets", "agg_incremental_merge", "agg_time_rollup",
-    "agg_topk_per_group", "an_retention", "clean_expectations",
-    "clean_mad_outliers", "f1_f2_filters", "f3_frequency_filter",
-    "m1_m2_null_handling", "p1_time_parts", "p2_seconds_since_midnight",
-    "p3_hours_since_anchor", "p4_p10_debit_credit_ratio",
-    "p5_p9_onehot_conform", "p6_bucket_floor_div", "p7_bin_by_edges",
-    "p_array_battery", "p_json_extract", "p_melt_unpivot",
-    "p_temporal_battery", "q1_pricing_summary", "sk_heavy_hitters",
-    "tbl_histogram", "tbl_profile",
-]
-
-
 def _load_all() -> None:
     """Import every suite module (each registers its queries on import),
-    then reorder the registry: never-driver-certified queries first
-    (``_FRONT_R4`` + ``_UNCHECKED_TAIL``), the already-certified
-    queries last in their original relative order.
-    """
+    then put the registry in certification order (module docstring)."""
     global _LOADED
     if _LOADED:
         return
@@ -598,20 +110,9 @@ def _load_all() -> None:
     from . import cleaning  # noqa: F401
     from . import submission_e2e  # noqa: F401
     from . import ml  # noqa: F401
+    from .certification import certification_order, load_rounds
 
-    head = _FRONT_R11 + [
-        n
-        for block in (_FRONT_R10, _FRONT_R9, _FRONT_R8, _FRONT_R7, _FRONT_R6, _FRONT_R5, _FRONT_R4, _UNCHECKED_TAIL)
-        for n in block
-        if n not in _FRONT_R11
-    ]
-    seen: set[str] = set()
-    head = [n for n in head if not (n in seen or seen.add(n))]
-    missing = [n for n in head if n not in REGISTRY]
-    if missing:  # a rename would silently break the certification plan
-        raise RuntimeError(f"priority list names unknown queries: {missing}")
-    ordered = {n: REGISTRY[n] for n in head}
-    ordered.update((n, q) for n, q in REGISTRY.items() if n not in ordered)
+    ordered = {n: REGISTRY[n] for n in certification_order(list(REGISTRY), load_rounds())}
     REGISTRY.clear()
     REGISTRY.update(ordered)
     _LOADED = True

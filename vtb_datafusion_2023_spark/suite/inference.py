@@ -18,12 +18,30 @@ reference math (tests/test_nn_numpy.py differential tests).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
+from ..inference.udfs import REFERENCE_CBM, REFERENCE_RNN_CKPT, REFERENCE_VRAE_CKPT
 from . import register
 from ._util import SIGNED_AMT, T
 
 _BINS_PATH = "/root/reference/nn_bins.pickle"
+
+# The reference files each real-model head loads.  They ship only with
+# the reference checkout; tests skip these heads, itemized, without them.
+REFERENCE_ARTIFACTS: dict[str, tuple[str, ...]] = {
+    "u1_rnn_scores": (_BINS_PATH, REFERENCE_RNN_CKPT),
+    "u4_vrae_latents": (REFERENCE_VRAE_CKPT,),
+    "u6_catboost_cbm": (REFERENCE_CBM,),
+}
+
+
+def missing_reference_artifacts(name: str) -> list[str]:
+    """The files ``name`` loads that are absent here (empty if none)."""
+    return [p for p in REFERENCE_ARTIFACTS.get(name, ()) if not os.path.exists(p)]
+
+
 _VOCAB = ["click", "error", "purchase", "refund", "signup", "view"]
 
 
@@ -291,7 +309,6 @@ def u4_vrae_twin(spark, sf_dir):
 # leaf sums — which makes GBDT inference SQL-replayable, so this entry is
 # fully DuckDB-hash-gated (unlike the RNN/VRAE recurrences above).
 
-_CBM_PATH = "/root/reference/model_dir/model_cb.cbm"
 # Each mapped feature sweeps its own border range, driven by a distinct
 # (prime, modulus) of c_custkey — all-integer SQL arithmetic, then one
 # exact /64.0, so Spark and DuckDB binarize identical IEEE doubles.
@@ -319,13 +336,11 @@ def _cbm_feature_exprs(model):
 
 
 def _cbm_oracle() -> str | None:
-    import os
-
-    if not os.path.exists(_CBM_PATH):
+    if missing_reference_artifacts("u6_catboost_cbm"):
         return None  # artifact-less environment: rows-only gate
     from ..inference.cbm import CbmModel, oracle_sql
 
-    model = CbmModel.load(_CBM_PATH)
+    model = CbmModel.load(REFERENCE_CBM)
     return oracle_sql(
         model, _cbm_feature_exprs(model), source_sql="customer", id_expr="c_custkey"
     )
@@ -346,10 +361,10 @@ def u6_catboost_cbm(spark, sf_dir):
     from ..inference.cbm import CbmModel
     from ..inference.udfs import catboost_cbm_model, score_catboost
 
-    model = CbmModel.load(_CBM_PATH)
+    model = CbmModel.load(REFERENCE_CBM)
     exprs = _cbm_feature_exprs(model)
     cust = T(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("vec_id"),
         *[F.expr(e).alias(name) for name, e in exprs.items()],
     )
-    return score_catboost(cust, catboost_cbm_model(_CBM_PATH), id_col="vec_id")
+    return score_catboost(cust, catboost_cbm_model(REFERENCE_CBM), id_col="vec_id")
