@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import argparse
 import os
+import sys
 
 import duckdb
 
@@ -49,6 +50,30 @@ PLAN = [
 # it).  Relational tables keep the default (they get hundreds of groups
 # at these scales and their per-row work is light).
 ROW_GROUP_OVERRIDE = {"documents": 4096, "embeddings": 16384}
+# DuckDB closes a row group on the first 2048-row vector that reaches the
+# requested size, so a fresh file's groups run up to one vector over it.
+DUCKDB_VECTOR_ROWS = 2048
+
+
+def stale_layouts(sf_dir: str) -> dict[str, int]:
+    """Override tables in ``sf_dir`` whose first row group is larger than
+    ``ROW_GROUP_OVERRIDE`` allows, as {table: rows in row group 0}.
+
+    A fixture written before the override (duckdb's default ~123k-row
+    groups) keeps the few-task scan cap the override removes; like
+    gen_zipf.ensure(), callers regenerate or refuse such a directory
+    instead of measuring it."""
+    import pyarrow.parquet as pq
+
+    stale = {}
+    for table, rows in ROW_GROUP_OVERRIDE.items():
+        path = os.path.join(sf_dir, f"{table}.parquet")
+        if not os.path.exists(path):
+            continue
+        meta = pq.ParquetFile(path).metadata
+        if meta.num_row_groups and meta.row_group(0).num_rows > rows + DUCKDB_VECTOR_ROWS:
+            stale[table] = meta.row_group(0).num_rows
+    return stale
 
 # key domains shared across tables must shift by the SAME stride
 DOMAIN_OF = {
@@ -61,7 +86,7 @@ DOMAIN_OF = {
 }
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--src", default="/root/testdata/sf0.1")
     ap.add_argument("--dst", required=True)
@@ -75,8 +100,12 @@ def main() -> None:
         "woven into every word (copies are distinct docs — isolates "
         "corpus-size scaling from duplicate-density scaling)",
     )
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
     os.makedirs(args.dst, exist_ok=True)
+    stale = stale_layouts(args.dst)
+    if stale:
+        print(f"gen_scale: stale row-group layout in {args.dst} {stale} — regenerating",
+              file=sys.stderr)
     con = duckdb.connect()
 
     # stride per key domain = max over every table that carries it, + 1
@@ -116,6 +145,9 @@ def main() -> None:
         con.execute(f"copy ({union}) to '{dst}' {fmt}")
         n = con.execute(f"select count(*) from '{dst}'").fetchone()[0]
         print(f"{table}: {n} rows")
+    stale = stale_layouts(args.dst)
+    if stale:
+        raise SystemExit(f"gen_scale: wrote row groups larger than ROW_GROUP_OVERRIDE: {stale}")
 
 
 if __name__ == "__main__":

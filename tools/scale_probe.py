@@ -24,6 +24,7 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def run(names: list[str], sf_dir: str, reps: int) -> dict[str, float]:
@@ -46,7 +47,7 @@ def run(names: list[str], sf_dir: str, reps: int) -> dict[str, float]:
     return out
 
 
-def main() -> int:
+def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--base", default="/root/testdata/sf0.1")
     ap.add_argument("--big", default="/root/repo/.benchdata/sf1")
@@ -54,10 +55,18 @@ def main() -> int:
     ap.add_argument("--flag", type=float, default=12.0,
                     help="ratio above which a head is flagged super-linear")
     ap.add_argument("names", nargs="*")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
     if not os.path.isdir(args.big):
         print(f"--big dir {args.big} missing — run tools/gen_scale.py first",
               file=sys.stderr)
+        return 2
+    from gen_scale import stale_layouts
+
+    stale = stale_layouts(args.big)
+    if stale:
+        print(f"--big dir {args.big} has row groups larger than gen_scale's "
+              f"ROW_GROUP_OVERRIDE {stale}: its scans would cap at a few tasks — "
+              f"regenerate it with tools/gen_scale.py", file=sys.stderr)
         return 2
 
     import bench

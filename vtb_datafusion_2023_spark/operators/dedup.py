@@ -1318,6 +1318,10 @@ def simhash_idf_chunks(
     # partitions and this branch never fires, so no extra exchange is
     # paid where it would hurt (keyed by _id: pre-clusters the vote
     # groupBy; values are int sums — partitioning-invariant bitwise).
+    # When it fires, its second eager localCheckpoint materializes tf a
+    # second time (shuffle + block-manager write of the whole table), so
+    # the head runs one more job on hosts whose parallelism exceeds the
+    # pinned partition count than on hosts where it does not.
     _sc = df.sparkSession.sparkContext
     if tf.rdd.getNumPartitions() < _sc.defaultParallelism:
         tf = tf.repartition(_sc.defaultParallelism, "_id").localCheckpoint(eager=True)

@@ -7,6 +7,14 @@ stats are per-(user) aggregates over the long form (one shuffle, bounded
 state) — and pivot to the wide matrix only as the final presentation step,
 with a FROZEN ``values=`` vocabulary so Spark never runs the implicit
 distinct-values job.
+
+The pivot expressions are built as SQL text, one ``F.expr`` parse per
+output column.  In PySpark 4.x every Column-API call also captures its
+call site (active-session lookup, a conf read, origin set/clear), so
+the 5-13 Column ops of one conditional aggregate cost tens of py4j
+round trips.  Built that way, branch C plus the scorer's feature vector
+over a 70-code vocabulary took ~30k round trips; as text it takes ~2.2k
+(tests/test_build_cost.py), with the same analyzed plan.
 """
 
 from __future__ import annotations
@@ -17,7 +25,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import sqlgen
-from ..functions.stats import dsum
 
 
 def pivot_exprs(
@@ -32,18 +39,19 @@ def pivot_exprs(
     (plans.features.branch_c_features): the expressions are identical
     whether they run in their own groupBy or alongside 200 others, and
     counts / decimal sums are order-insensitive, so fusion is
-    bitwise-free."""
+    bitwise-free.  ``vocab`` holds ints or strings (``sqlgen.lit``)."""
     prefix = prefix or f"{pivot_col}_{agg}"
+    col = sqlgen.ident(pivot_col)
     aggs = []
     for v in vocab:
-        cond = F.col(pivot_col) == F.lit(v)
+        cond = f"{col} = {sqlgen.lit(v)}"
         if agg == "count":
-            e = F.count(F.when(cond, 1))
+            e = f"count(case when {cond} then 1 end)"
         elif agg == "sum":
-            e = dsum(F.when(cond, F.col(value_col)))
+            e = sqlgen.dsum_cast(f"case when {cond} then {sqlgen.ident(value_col)} end")
         else:
             raise ValueError(f"unsupported agg: {agg}")
-        aggs.append(e.alias(f"{prefix}-{v}"))
+        aggs.append(F.expr(f"{e} as {sqlgen.ident(f'{prefix}-{v}')}"))
     return aggs
 
 

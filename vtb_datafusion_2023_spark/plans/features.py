@@ -20,6 +20,12 @@ runs the same math as 8 separate aggregates over ``kept`` joined 8-wide:
 3 extra shuffles of the row set and 6 extra join legs that a 100 TB run
 would pay per query.  Measured at sf0.1: branch C 2.2 s -> ~1 s,
 pipeline_submission end-to-end ~7.5 -> ~5.5 s, identical values.
+
+Wide expression lists (the pivots, the ~250-column ordered projection
+at a 70-code vocabulary) are SQL text, one parse per column: in PySpark 4.x
+each Column-API call also pays a call-site capture of several py4j
+round trips, which made building this plan cost seconds of driver time
+before any job ran (operators.pivots has the numbers).
 """
 
 from __future__ import annotations
@@ -59,10 +65,7 @@ def _long_counts(kept: DataFrame, freq_divisor: int) -> DataFrame:
     """The (user, cat) long aggregate feeding the A11 stat blocks."""
     long = kept.groupBy("user_id", "cat").agg(
         F.count(F.lit(1)).alias("cnt"),
-        F.expr(
-            "(cast(cast(sum(cast(amt as decimal(38,6))) - (sum(cast(amt as decimal(38,6))) % 1) as decimal(38,0)) as double)"
-            " + cast(sum(cast(amt as decimal(38,6))) % 1 as double)) as amt_sum"
-        ),
+        F.expr(sqlgen.dsum_cast("amt", alias="amt_sum")),
         F.expr(
             "count(case when amt > 0 then amt end) as debit_cnt"
         ),
@@ -141,7 +144,7 @@ def branch_c_features(
             + [f"hod-{h}" for h in HOURS]
             + [f"time_day_{s}" for s in _MOMENT_SUFFIXES]
         )
-        feats = feats.select("user_id", *[F.col(f"`{c}`") for c in ordered])
+        feats = feats.selectExpr("user_id", *[sqlgen.ident(c) for c in ordered])
         return feats, dropped
 
     # --- unfused reference form (differential-test baseline) ---

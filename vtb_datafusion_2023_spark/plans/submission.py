@@ -28,12 +28,17 @@ reference's trained feature names.
 The three branches are independent DAG subtrees off one scan: Spark runs
 them as parallel jobs feeding the assembly joins (vs the reference's
 sequential single-threaded loops — SURVEY §4).
+
+The scorer inputs over the wide row (the feature vector, the stand-in
+score) are single SQL expressions rather than one Column-API call per
+feature: PySpark 4.x captures the call site on every Column call, at
+several py4j round trips each, and building this plan runs on the
+driver before the eager checkpoint below can start.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
-from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -83,11 +88,16 @@ def standin_weights(cols: Sequence[str]) -> dict[str, float]:
 
 def standin_target_column(feature_cols: Sequence[str]):
     """In-plan deterministic linear score: left-associated weighted sum
-    over the NAME-SORTED feature columns — IEEE-op-for-op identical to
-    ``standin_target_sql`` on the oracle side."""
-    ws = standin_weights(feature_cols)
-    terms = [F.lit(ws[c]) * F.col(f"`{c}`").cast("double") for c in sorted(feature_cols)]
-    return reduce(lambda a, b: a + b, terms)
+    over the NAME-SORTED feature columns — the same SQL text the oracle
+    side evaluates (``standin_target_sql``)."""
+    return F.expr(standin_target_sql(feature_cols, quote="`"))
+
+
+def feature_vector_column(feature_cols: Sequence[str]):
+    """The positional double vector the model UDF scores."""
+    return F.expr(
+        "array(" + ", ".join(f"cast({sqlgen.ident(c)} as double)" for c in feature_cols) + ")"
+    )
 
 
 def standin_target_sql(feature_cols: Sequence[str], quote: str = '"') -> str:
@@ -305,7 +315,7 @@ def run_submission(
     else:
         vecs = assembled.select(
             "user_id",
-            F.array(*[F.col(f"`{c}`").cast("double") for c in feature_cols]).alias("features"),
+            feature_vector_column(feature_cols).alias("features"),
         )
         if model is None:
             dim = len(feature_cols)

@@ -20,6 +20,8 @@ regardless of task scheduling), mirrored in ``functions.stats``.
 
 from __future__ import annotations
 
+import numbers
+
 DEC = "decimal(38,6)"
 
 
@@ -69,6 +71,34 @@ def dsum(x: str, alias: str | None = None) -> str:
 def davg(x: str, alias: str | None = None) -> str:
     e = f"({dsum(x)} / count({x}))"
     return f"{e} as {alias}" if alias else e
+
+
+def dsum_cast(x: str, alias: str | None = None) -> str:
+    """Spark-only SQL text of ``functions.stats.dsum``: the same exact
+    decimal sum and integral/fractional split as ``dsum``, with a plain
+    signed cast of the integral part.  Spark rounds that cast once, so
+    the bits equal ``dsum``'s; DuckDB double-rounds negative integral
+    parts past 2^53 (see ``dec_to_double``), so oracle SQL uses ``dsum``."""
+    s = f"sum(cast(({x}) as {DEC}))"
+    e = f"(cast(cast({s} - ({s} % 1) as decimal(38,0)) as double) + cast({s} % 1 as double))"
+    return f"{e} as {alias}" if alias else e
+
+
+def ident(name: str) -> str:
+    """Spark SQL backtick-quoted identifier (embedded backticks doubled)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def lit(v) -> str:
+    """Spark SQL text of an int or string literal that parses to the same
+    typed literal as ``F.lit(v)``: an int is INT within int32 and BIGINT
+    past it; a string is single-quoted with backslash escapes (Spark's
+    default ``spark.sql.parser.escapedStringLiterals=false``)."""
+    if isinstance(v, numbers.Integral):
+        return str(v)
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    raise TypeError(f"no SQL literal rendering for {type(v).__name__}: {v!r}")
 
 
 def _fparts(x: str) -> tuple[str, str]:
