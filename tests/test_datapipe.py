@@ -72,9 +72,32 @@ def test_lsh_ann_subset_of_bruteforce_candidates(spark, sf_small):
         assert abs(cos_by_pair[(r.query_id, r.neighbor_id)] - r.cos) < 1e-12
 
 
+def reference_shingle_pairs(df, n, threshold, measure="jaccard"):
+    """Brute-force shingle-set join in plain Python: every document pair,
+    word n-gram sets built the way ``word_shingles`` builds them,
+    Jaccard (``id_a < id_b``) or directed containment ``|A & B| / |A|``
+    (``id_a != id_b``) at or above ``threshold``."""
+    sets = {}
+    for r in df.select("doc_id", "text").collect():
+        if r.text is None:
+            continue
+        toks = r.text.split(" ")
+        sets[r.doc_id] = {" ".join(toks[i : i + n]) for i in range(max(len(toks) - n + 1, 1))}
+    out = {}
+    for a, sa in sets.items():
+        for b, sb in sets.items():
+            if a == b or (measure == "jaccard" and a > b):
+                continue
+            inter = len(sa & sb)
+            v = inter / (len(sa) + len(sb) - inter) if measure == "jaccard" else inter / len(sa)
+            if v >= threshold:
+                out[(a, b)] = v
+    return out
+
+
 def test_ngram_jaccard_prefix_filter_matches_naive(spark, sf_small):
-    """The prefix-filtered AllPairs default must return EXACTLY the naive
-    full-posting-join result (candidates are a superset; verify is an
+    """The prefix-filtered AllPairs operator must return EXACTLY the
+    brute-force shingle-set join (candidates are a superset; verify is an
     exact set intersection)."""
     from vtb_datafusion_2023_spark.operators.dedup import ngram_jaccard_pairs
 
@@ -83,13 +106,7 @@ def test_ngram_jaccard_prefix_filter_matches_naive(spark, sf_small):
         (r.id_a, r.id_b): r.jaccard
         for r in ngram_jaccard_pairs(d, "doc_id", "text", n=1, threshold=0.6).collect()
     }
-    naive = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in ngram_jaccard_pairs(
-            d, "doc_id", "text", n=1, threshold=0.6, prefix_filter=False
-        ).collect()
-    }
-    assert fast == naive and len(fast) > 0
+    assert fast == reference_shingle_pairs(d, 1, 0.6) and len(fast) > 0
 
 
 def test_incremental_minhash_equals_full_rerun(spark, sf_small):
@@ -621,10 +638,7 @@ def _cc_reference(n_nodes, edges):
 def test_star_contraction_matches_union_find_on_graph_families(spark):
     import random
 
-    from vtb_datafusion_2023_spark.operators.dedup import (
-        connected_components_star,
-        dedup_clusters,
-    )
+    from vtb_datafusion_2023_spark.operators.dedup import dedup_clusters
 
     rng = random.Random(7)
     graphs = {
@@ -645,48 +659,18 @@ def test_star_contraction_matches_union_find_on_graph_families(spark):
             "id_a long, id_b long",
         )
         want = _cc_reference(n, edge_list)
-        star = {
-            r.doc_id: r.cluster_id
-            for r in connected_components_star(docs, pairs).collect()
-        }
+        star = {r.doc_id: r.cluster_id for r in dedup_clusters(docs, pairs).collect()}
         assert star == want, (name, star, want)
-        # propagate path agrees (identical-contract check); the 40-node
-        # chain needs diameter rounds, hence the raised max_iter
-        prop = {
-            r.doc_id: r.cluster_id
-            for r in dedup_clusters(
-                docs, pairs, method="propagate", max_iter=80
-            ).collect()
-        }
-        assert prop == want, (name, prop, want)
-
-
-def test_propagate_raises_instead_of_partial_labels_on_deep_chain(spark):
-    """Min-label propagation must FAIL LOUDLY when max_iter < component
-    diameter — a node labeled with the min id within max_iter hops (not
-    its component's) would silently corrupt downstream dedup."""
-    import pytest as _pytest
-
-    from vtb_datafusion_2023_spark.operators.dedup import dedup_clusters
-
-    docs = spark.createDataFrame([(i,) for i in range(40)], "doc_id long")
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(39)], "id_a long, id_b long"
-    )
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        dedup_clusters(docs, pairs, method="propagate", max_iter=25).collect()
-    # the star default handles the same graph inside the same budget
-    star = {
-        r.doc_id: r.cluster_id
-        for r in dedup_clusters(docs, pairs, max_iter=25).collect()
-    }
-    assert star == {i: 0 for i in range(40)}
 
 
 def test_star_contraction_round_count_logarithmic_on_chain(spark):
     """A 64-node chain (diameter 63) must converge in O(log n) star
-    rounds — the reason star contraction is the scale default."""
-    from vtb_datafusion_2023_spark.operators.dedup import connected_components_star
+    rounds — the reason star contraction is the clustering path — and
+    fail LOUDLY below that budget: partial labels (the min id within a
+    few hops, not the component's) would silently corrupt dedup."""
+    import pytest as _pytest
+
+    from vtb_datafusion_2023_spark.operators.dedup import dedup_clusters
 
     docs = spark.createDataFrame([(i,) for i in range(64)], "doc_id long")
     pairs = spark.createDataFrame(
@@ -694,9 +678,11 @@ def test_star_contraction_round_count_logarithmic_on_chain(spark):
     )
     out = {
         r.doc_id: r.cluster_id
-        for r in connected_components_star(docs, pairs, max_iter=10).collect()
+        for r in dedup_clusters(docs, pairs, max_iter=10).collect()
     }
     assert out == {i: 0 for i in range(64)}
+    with _pytest.raises(RuntimeError, match="did not converge"):
+        dedup_clusters(docs, pairs, max_iter=2)
 
 
 def test_mask_positive_nulls_nonpositive(spark):
@@ -1123,6 +1109,90 @@ def test_stupid_backoff_branch_closed_forms(spark):
     assert abs(got[14][1] - -(2 * math.log(0.4) + math.log(1) - math.log(9))) < 1e-12
 
 
+def reference_funnel_joins(events, steps, within="7 days", user_col="user_id",
+                           ts_col="ts", type_col="event_type"):
+    """``analytics.funnel`` as per-step min-ts aggregation joins: step i's
+    completion time is the earliest step-i event strictly after step
+    i-1's and within the step-1 deadline — one co-partitioned hash
+    aggregate + join per step."""
+    cur = (
+        events.filter(F.col(type_col) == steps[0])
+        .groupBy(user_col)
+        .agg(F.min(ts_col).alias("t_0"))
+        .withColumn("deadline", F.expr(f"t_0 + interval {within}"))
+    )
+    rows = [(1, steps[0], cur)]
+    for i, step in enumerate(steps[1:], start=2):
+        prev_t = f"t_{i - 2}"
+        cur = (
+            events.filter(F.col(type_col) == step)
+            .join(cur, user_col)
+            .filter((F.col(ts_col) > F.col(prev_t)) & (F.col(ts_col) <= F.col("deadline")))
+            .groupBy(user_col, "deadline")
+            .agg(F.min(ts_col).alias(f"t_{i - 1}"))
+        )
+        rows.append((i, step, cur))
+    out = None
+    for i, name, df in rows:
+        c = df.agg(F.count(F.lit(1)).alias("n_users")).select(
+            F.lit(i).alias("step"), F.lit(name).alias("step_name"), "n_users"
+        )
+        out = c if out is None else out.unionByName(c)
+    return out
+
+
+def reference_pattern_spans_joins(df, key, ord_col, type_col, steps, max_matches=8):
+    """``analytics.pattern_spans`` as a relational frontier-join loop:
+    each round advances every key's frontier past its previous match
+    with one min-aggregation join per step; rounds = matches found,
+    early exit when a round matches nothing."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    ev = df.select(F.col(key), F.col(ord_col).alias("_o"), F.col(type_col).alias("_t"))
+    ord_type = df.schema[ord_col].dataType
+    frontier = ev.select(key).distinct().withColumn("_prev", F.lit(None).cast(ord_type))
+    out = None
+    for match_id in range(1, max_matches + 1):
+        cur = frontier
+        start = None
+        for i, s in enumerate(steps):
+            nxt = (
+                ev.filter(F.col("_t") == s)
+                .join(cur.select(key, "_prev"), key)
+                .filter(F.col("_prev").isNull() | (F.col("_o") > F.col("_prev")))
+                .groupBy(key)
+                .agg(F.min("_o").alias("_next"))
+            )
+            cur = nxt.withColumnRenamed("_next", "_prev")
+            if i == 0:
+                start = nxt.withColumnRenamed("_next", "_start")
+        matches = (
+            start.join(cur.withColumnRenamed("_prev", "_end"), key)
+            .select(
+                key,
+                F.lit(match_id).alias("match_id"),
+                F.col("_start").alias("start_ord"),
+                F.col("_end").alias("end_ord"),
+            )
+            .localCheckpoint(eager=True)
+        )
+        if matches.limit(1).count() == 0:
+            break
+        out = matches if out is None else out.unionByName(matches)
+        frontier = matches.select(key, F.col("end_ord").alias("_prev"))
+    if out is None:
+        schema = StructType(
+            [
+                StructField(key, df.schema[key].dataType, True),
+                StructField("match_id", IntegerType(), True),
+                StructField("start_ord", ord_type, True),
+                StructField("end_ord", ord_type, True),
+            ]
+        )
+        return df.sparkSession.createDataFrame([], schema)
+    return out
+
+
 def test_pattern_spans_skip_till_next_match_semantics(spark):
     from vtb_datafusion_2023_spark.operators.analytics import pattern_spans
 
@@ -1148,9 +1218,10 @@ def test_pattern_spans_skip_till_next_match_semantics(spark):
 
 
 def test_pattern_spans_automaton_matches_joins(spark):
-    """The one-pass applyInPandas automaton (default) and the relational
-    frontier-join loop are row-identical — including on a skewed key
-    (one key holding most of the events) and interleaved false starts."""
+    """The one-pass SQL aggregate-HOF automaton and the relational
+    frontier-join reference are row-identical — including on a skewed
+    key (one key holding most of the events) and interleaved false
+    starts."""
     import random
 
     rng = random.Random(42)
@@ -1166,27 +1237,23 @@ def test_pattern_spans_automaton_matches_joins(spark):
 
     from vtb_datafusion_2023_spark.operators.analytics import pattern_spans
 
-    sql, pandas_, joins = (
-        norm(
-            pattern_spans(
-                df, "uid", "ord", "typ", ["a", "b", "c"], max_matches=12, strategy=st
-            )
-        )
-        for st in ("sql", "pandas", "joins")
+    sql = norm(pattern_spans(df, "uid", "ord", "typ", ["a", "b", "c"], max_matches=12))
+    joins = norm(
+        reference_pattern_spans_joins(df, "uid", "ord", "typ", ["a", "b", "c"], max_matches=12)
     )
-    assert sql == pandas_ == joins
+    assert sql == joins
     assert len(sql) > 0
 
 
 def test_pattern_spans_max_events_per_key_guard(spark):
     """The max_events_per_key memory guard: prefix-stable semantics
     (trim == automaton over the first-N-events prefix; a no-op cap
-    changes nothing), row-identical across all three strategies, and
+    changes nothing), row-identical to the join reference, and
     plan-pinned to add NO exchange (the trim window and the groupBy
     share one hash shuffle on the key)."""
     import random
 
-    from vtb_datafusion_2023_spark.operators.analytics import pattern_spans
+    from vtb_datafusion_2023_spark.operators.analytics import _trim_per_key, pattern_spans
 
     rng = random.Random(7)
     rows = []
@@ -1205,17 +1272,14 @@ def test_pattern_spans_max_events_per_key_guard(spark):
     assert norm(
         pattern_spans(df, "uid", "ord", "typ", steps, max_matches=50, max_events_per_key=10**6)
     ) == full
-    # a binding cap: all three strategies agree on the trimmed input
-    capped = [
-        norm(
-            pattern_spans(
-                df, "uid", "ord", "typ", steps,
-                max_matches=50, strategy=st, max_events_per_key=300,
-            )
-        )
-        for st in ("sql", "pandas", "joins")
-    ]
-    assert capped[0] == capped[1] == capped[2]
+    # a binding cap: the join reference agrees on the trimmed input
+    capped = norm(
+        pattern_spans(df, "uid", "ord", "typ", steps, max_matches=50, max_events_per_key=300)
+    )
+    trimmed = _trim_per_key(df, "uid", "ord", "typ", 300)
+    assert capped == norm(
+        reference_pattern_spans_joins(trimmed, "uid", "ord", "typ", steps, max_matches=50)
+    )
     # prefix semantics: trimmed result == full automaton over each key's
     # first 300 events (ord, typ) — computed independently here
     by_key: dict = {}
@@ -1227,10 +1291,10 @@ def test_pattern_spans_max_events_per_key_guard(spark):
         for i, t in sorted(evs)[:300]
     ]
     pref_df = spark.createDataFrame(prefix_rows, "uid bigint, ord bigint, typ string")
-    assert capped[0] == norm(pattern_spans(pref_df, "uid", "ord", "typ", steps, max_matches=50))
+    assert capped == norm(pattern_spans(pref_df, "uid", "ord", "typ", steps, max_matches=50))
     # the hot key (2000 events, cap 300) lost its tail matches
     hot_full = [r for r in full if r[0] == 1]
-    hot_capped = [r for r in capped[0] if r[0] == 1]
+    hot_capped = [r for r in capped if r[0] == 1]
     assert 0 < len(hot_capped) < len(hot_full)
     assert hot_capped == hot_full[: len(hot_capped)]
     # memory-guard plan contract: the trim adds NO exchange — one hash
@@ -1244,11 +1308,12 @@ def test_pattern_spans_max_events_per_key_guard(spark):
 
 def test_funnel_max_events_per_key_guard(spark):
     """funnel's max_events_per_key: no-op cap preserves results, a
-    binding cap keeps both strategies row-identical."""
+    binding cap stays row-identical to the join reference over the
+    trimmed step events."""
     import datetime as dt
     import random
 
-    from vtb_datafusion_2023_spark.operators.analytics import funnel
+    from vtb_datafusion_2023_spark.operators.analytics import _trim_per_key, funnel
 
     rng = random.Random(3)
     t0 = dt.datetime(2023, 1, 1)
@@ -1267,7 +1332,10 @@ def test_funnel_max_events_per_key_guard(spark):
     steps = ["view", "click", "purchase"]
     assert norm(funnel(df, steps, max_events_per_key=10**6)) == norm(funnel(df, steps))
     capped_scan = norm(funnel(df, steps, max_events_per_key=5))
-    capped_joins = norm(funnel(df, steps, strategy="joins", max_events_per_key=5))
+    trimmed = _trim_per_key(
+        df.filter(F.col("event_type").isin(steps)), "user_id", "ts", "event_type", 5
+    )
+    capped_joins = norm(reference_funnel_joins(trimmed, steps))
     assert capped_scan == capped_joins
 
 
@@ -1275,7 +1343,8 @@ def test_pattern_spans_nulls_and_duplicate_ords(spark):
     """NULL event types never match a step (null-safe <=>), NULL ords
     are ignored like the join formulation's strict > would, and
     duplicate ord values across types follow the strict-ordering
-    contract — identical rows from all three strategies."""
+    contract — identical rows from the automaton and the join
+    reference."""
     from vtb_datafusion_2023_spark.operators.analytics import pattern_spans
 
     rows = [
@@ -1285,22 +1354,20 @@ def test_pattern_spans_nulls_and_duplicate_ords(spark):
     ]
     df = spark.createDataFrame(rows, "uid bigint, ord bigint, typ string")
 
-    def norm(st):
-        return sorted(
-            (r.uid, r.match_id, r.start_ord, r.end_ord)
-            for r in pattern_spans(df, "uid", "ord", "typ", ["a", "b", "c"], strategy=st).collect()
-        )
+    def norm(res):
+        return sorted((r.uid, r.match_id, r.start_ord, r.end_ord) for r in res.collect())
 
-    sql, pd_, joins = norm("sql"), norm("pandas"), norm("joins")
-    assert sql == pd_ == joins
+    sql = norm(pattern_spans(df, "uid", "ord", "typ", ["a", "b", "c"]))
+    joins = norm(reference_pattern_spans_joins(df, "uid", "ord", "typ", ["a", "b", "c"]))
+    assert sql == joins
     # uid 1: b@1 is NOT after a@1 (strict) -> b@2 is; uid 2 ignores the
     # null-ord 'a' and matches (4, 6); uid 3 has no typed events
     assert sql == [(1, 1, 1, 3), (2, 1, 4, 6)]
 
 
 def test_funnel_scan_matches_joins(spark):
-    """The one-pass aggregate-HOF funnel (default) and the per-step
-    min-ts join formulation are row-identical — including ts ties at
+    """The one-pass aggregate-HOF funnel and the per-step min-ts join
+    reference are row-identical — including ts ties at
     step boundaries, users who skip step 1, and deadline expiry."""
     import datetime as dt
     import random
@@ -1329,7 +1396,7 @@ def test_funnel_scan_matches_joins(spark):
         return sorted((r.step, r.step_name, r.n_users) for r in res.collect())
 
     scan = norm(funnel(df, ["view", "click", "purchase"], within="7 days"))
-    joins = norm(funnel(df, ["view", "click", "purchase"], within="7 days", strategy="joins"))
+    joins = norm(reference_funnel_joins(df, ["view", "click", "purchase"], within="7 days"))
     assert scan == joins
     # tie rejected (strict >), expiry rejected (<= deadline): user 900
     # reaches click via the next-day event, 901 stops at view
@@ -1344,30 +1411,29 @@ def test_pattern_spans_zero_match_schema_derived(spark):
     df = spark.sql(
         "select 'u1' as uid, timestamp'2023-01-01 00:00:00' as ts, 'b' as typ"
     )
-    for strategy in ("sql", "pandas", "joins"):
-        out = pattern_spans(df, "uid", "ts", "typ", ["a", "b"], strategy=strategy)
-        assert out.count() == 0
-        types = {f.name: f.dataType.simpleString() for f in out.schema.fields}
-        assert types == {
-            "uid": "string",
-            "match_id": "int",
-            "start_ord": "timestamp",
-            "end_ord": "timestamp",
-        }
-        # non-empty result for the same shapes: schema must union cleanly
-        df2 = spark.sql(
-            "select * from values ('u1', timestamp'2023-01-01 00:00:00', 'a'),"
-            " ('u1', timestamp'2023-01-01 01:00:00', 'b') as t(uid, ts, typ)"
-        )
-        out2 = pattern_spans(df2, "uid", "ts", "typ", ["a", "b"], strategy=strategy)
-        assert out.unionByName(out2).count() == 1
+    out = pattern_spans(df, "uid", "ts", "typ", ["a", "b"])
+    assert out.count() == 0
+    types = {f.name: f.dataType.simpleString() for f in out.schema.fields}
+    assert types == {
+        "uid": "string",
+        "match_id": "int",
+        "start_ord": "timestamp",
+        "end_ord": "timestamp",
+    }
+    # non-empty result for the same shapes: schema must union cleanly
+    df2 = spark.sql(
+        "select * from values ('u1', timestamp'2023-01-01 00:00:00', 'a'),"
+        " ('u1', timestamp'2023-01-01 01:00:00', 'b') as t(uid, ts, typ)"
+    )
+    out2 = pattern_spans(df2, "uid", "ts", "typ", ["a", "b"])
+    assert out.unionByName(out2).count() == 1
 
 
 def test_funnel_null_ts_step1_counted_all_strategies(spark):
     """A user whose ONLY step-1 events carry NULL timestamps still counts
-    at step 1 (the joins formulation's groupBy+min yields a t_0=NULL row,
+    at step 1 (the join reference's groupBy+min yields a t_0=NULL row,
     and so does the SQL oracle); NULL-ts events never advance the ordered
-    chain.  The scan strategy used to filter them out entirely."""
+    chain.  The scan used to filter them out entirely."""
     from vtb_datafusion_2023_spark.operators.analytics import funnel
 
     df = spark.sql(
@@ -1387,7 +1453,7 @@ def test_funnel_null_ts_step1_counted_all_strategies(spark):
         return sorted((r.step, r.step_name, r.n_users) for r in res.collect())
 
     scan = norm(funnel(df, ["view", "click"], within="7 days"))
-    joins = norm(funnel(df, ["view", "click"], within="7 days", strategy="joins"))
+    joins = norm(reference_funnel_joins(df, ["view", "click"], within="7 days"))
     assert scan == joins
     # users 1, 2, 3 have a view row (null ts included); only user 1 chains
     # to click (user 3's click cannot be compared against a NULL t_0)
@@ -1397,8 +1463,8 @@ def test_funnel_null_ts_step1_counted_all_strategies(spark):
 def test_steps_literal_backslash_safe(spark):
     """Step names containing backslashes must survive the SQL-literal
     round trip: Spark string literals interpret escape sequences, so a
-    bare backslash silently corrupted the sql/scan automaton comparisons
-    while the Column-API strategies matched the raw string."""
+    bare backslash silently corrupted the automaton comparisons while
+    the Column-API join reference matched the raw string."""
     from vtb_datafusion_2023_spark.operators.analytics import funnel, pattern_spans
 
     df = spark.sql(
@@ -1411,27 +1477,13 @@ def test_steps_literal_backslash_safe(spark):
     )
     steps = [r"a\b", "c"]
     assert df.filter("typ = 'a\\\\b'").count() == 1  # fixture sanity
-    for strategy in ("sql", "pandas", "joins"):
-        out = pattern_spans(df, "uid", "ts", "typ", steps, strategy=strategy)
-        assert out.count() == 1, strategy
+    assert pattern_spans(df, "uid", "ts", "typ", steps).count() == 1
+    assert reference_pattern_spans_joins(df, "uid", "ts", "typ", steps).count() == 1
 
     res = {r.step: r.n_users for r in funnel(
         df, steps, within="7 days", user_col="uid", ts_col="ts", type_col="typ"
     ).collect()}
     assert res == {1: 1, 2: 1}
-
-
-def test_pattern_spans_broadcast_frontier_requires_joins(spark):
-    import pytest as _pytest
-
-    from vtb_datafusion_2023_spark.operators.analytics import pattern_spans
-
-    df = spark.sql("select 'u1' uid, timestamp'2023-01-01' ts, 'a' typ")
-    with _pytest.raises(ValueError, match="broadcast_frontier"):
-        pattern_spans(df, "uid", "ts", "typ", ["a"], strategy="sql", broadcast_frontier=True)
-    # positional compatibility: 7th positional arg is still broadcast_frontier
-    out = pattern_spans(df, "uid", "ts", "typ", ["a"], 8, True, strategy="joins")
-    assert out.count() == 1
 
 
 def test_incremental_minhash_duplicate_batch_rows_collapse(spark, sf_small):
@@ -1799,7 +1851,8 @@ def test_jaccard_alpha_never_tighter_than_verify():
 def test_position_filter_output_invariant(spark, sf_small):
     """PPJoin position/length pruning must not change the verified
     output of either AllPairs operator — at a low threshold (alpha
-    rounding exercised hard) and at the operator defaults."""
+    rounding exercised hard) and at the operator defaults — against the
+    brute-force shingle-set join."""
     from vtb_datafusion_2023_spark.operators.dedup import (
         containment_pairs,
         ngram_jaccard_pairs,
@@ -1811,24 +1864,12 @@ def test_position_filter_output_invariant(spark, sf_small):
             (r.id_a, r.id_b): r.jaccard
             for r in ngram_jaccard_pairs(d, "doc_id", "text", n=ng, threshold=thr).collect()
         }
-        off = {
-            (r.id_a, r.id_b): r.jaccard
-            for r in ngram_jaccard_pairs(
-                d, "doc_id", "text", n=ng, threshold=thr, position_filter=False
-            ).collect()
-        }
-        assert on == off and len(on) > 0, (thr, ng)
+        assert on == reference_shingle_pairs(d, ng, thr) and len(on) > 0, (thr, ng)
     c_on = {
         (r.id_a, r.id_b): r.containment
         for r in containment_pairs(d, "doc_id", "text", n=3, threshold=0.7).collect()
     }
-    c_off = {
-        (r.id_a, r.id_b): r.containment
-        for r in containment_pairs(
-            d, "doc_id", "text", n=3, threshold=0.7, position_filter=False
-        ).collect()
-    }
-    assert c_on == c_off and len(c_on) > 0
+    assert c_on == reference_shingle_pairs(d, 3, 0.7, "containment") and len(c_on) > 0
 
 
 def test_planted_corpus_offset_guard_fires_on_collision(spark, sf_small, monkeypatch):
@@ -2553,9 +2594,9 @@ def test_simhash_idf_planted_complete_and_partition_invariant(spark, sf_small):
     # operator docstring and the bench SF_OVERRIDE note)
 
 
-def test_simhash_idf_xxhash_scale_path_and_validation(spark):
-    """The xxhash64 family runs the same pipeline (scale path), and the
-    parameter guards raise loudly."""
+def test_simhash_idf_duplicate_pair_and_validation(spark):
+    """An exact duplicate pairs at hamming 0 and nothing else pairs, and
+    the parameter guards raise loudly."""
     import pytest
 
     from vtb_datafusion_2023_spark.operators.dedup import (
@@ -2564,17 +2605,49 @@ def test_simhash_idf_xxhash_scale_path_and_validation(spark):
     )
 
     # exact duplicate -> identical token multiset -> identical signature
-    # (hamming 0) in ANY hash family; the distinct third doc must not pair
+    # (hamming 0); the distinct third doc must not pair
     dup = " ".join(f"tok{j}" for j in range(40))
     other = " ".join(f"oth{j}" for j in range(40))
     rows = [(0, dup), (1, dup), (2, other)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = simhash_idf_pairs(docs, "doc_id", "text", hash_family="xxhash64").collect()
+    got = simhash_idf_pairs(docs, "doc_id", "text").collect()
     assert {(r.id_a, r.id_b, r.hamming) for r in got} == {(0, 1, 0)}
 
     with pytest.raises(ValueError, match="chunks"):
         simhash_idf_chunks(docs, "doc_id", "text", chunks=7)
-    with pytest.raises(ValueError, match="hash_family"):
-        simhash_idf_chunks(docs, "doc_id", "text", hash_family="sha1")
     with pytest.raises(ValueError, match="distinct"):
         simhash_idf_chunks(docs, "doc_id", "text", max_distinct_dfs=1).collect()
+
+
+def test_shingled_table_n_must_match_consumer(spark, sf_small):
+    """A shingle_array_table records its n; a consumer with another n
+    refuses it instead of scoring trigram sets as 5-grams, and a matching
+    table gives the same pairs and bands as the consumer's own build."""
+    import pytest
+
+    from vtb_datafusion_2023_spark.operators.dedup import (
+        minhash_md5_band_table,
+        ngram_jaccard_pairs,
+        shingle_array_table,
+    )
+
+    d = docs(spark, sf_small)
+    sh3 = shingle_array_table(d, "doc_id", "text", n=3)
+    assert sh3.schema["_sh"].metadata == {"shingle_n": 3}
+    assert sh3.localCheckpoint(eager=True).schema["_sh"].metadata == {"shingle_n": 3}
+    with pytest.raises(ValueError, match="shingle_n=3, expected 5"):
+        ngram_jaccard_pairs(d, "doc_id", "text", n=5, threshold=0.5, shingled=sh3)
+    with pytest.raises(ValueError, match="shingle_n=3, expected 5"):
+        minhash_md5_band_table(d, "doc_id", "text", shingle_n=5, shingled=sh3)
+    bare = d.select(F.col("doc_id").alias("_id"), F.split("text", " ").alias("_sh"))
+    with pytest.raises(ValueError, match="shingle_n=None"):
+        ngram_jaccard_pairs(d, "doc_id", "text", n=3, shingled=bare.withColumn("_sz", F.size("_sh")))
+
+    def pairs(df):
+        return sorted((r.id_a, r.id_b, r.jaccard) for r in df.collect())
+
+    shared = pairs(ngram_jaccard_pairs(d, "doc_id", "text", n=3, threshold=0.3, shingled=sh3))
+    assert shared == pairs(ngram_jaccard_pairs(d, "doc_id", "text", n=3, threshold=0.3))
+    assert len(shared) > 0
+    bands = sorted(minhash_md5_band_table(d, "doc_id", "text", shingle_n=3, shingled=sh3).collect())
+    assert bands == sorted(minhash_md5_band_table(d, "doc_id", "text", shingle_n=3).collect())

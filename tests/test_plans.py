@@ -14,12 +14,51 @@ from vtb_datafusion_2023_spark.plans import (
     vrae_input_sequences,
 )
 from vtb_datafusion_2023_spark.sources.readers import load_table
+from test_pivot_sql import reference_pivot_exprs
 
 # events -> transactions contract: 5 category codes incl. the 6012
 # blacklist target (FIXTURES.md §1)
 _CAT_MAP = "case event_type when 'click' then 5411 when 'view' then 4111 " \
     "when 'signup' then 742 when 'purchase' then 5812 when 'error' then 6012 end"
 CAT_VOCAB = [742, 4111, 5411, 5812]  # post-blacklist
+
+
+def reference_branch_c_blocks(tx, cat_vocab, trim=20, blacklist_cats=(6012,), freq_divisor=20):
+    """Branch C as the historical 8-block composition: each block its own
+    aggregate over the kept rows, joined 8-wide.  The five pivots use
+    the Column-API ``reference_pivot_exprs``, so this arm shares no
+    pivot text with ``branch_c_features``."""
+    from vtb_datafusion_2023_spark.functions.temporal import with_time_parts
+    from vtb_datafusion_2023_spark.operators.filtering import blacklist, positional_trim
+    from vtb_datafusion_2023_spark.operators.gstats import horizontal_stats, vertical_stats
+    from vtb_datafusion_2023_spark.operators.joins import anti_join_missing, assemble_features
+    from vtb_datafusion_2023_spark.operators.pivots import row_normalize
+    from vtb_datafusion_2023_spark.plans.features import _long_counts
+    from vtb_datafusion_2023_spark.schema import DAYS_OF_MONTH, DAYS_OF_WEEK, HOURS
+
+    tx = with_time_parts(tx.withColumnRenamed("ts", "transaction_dttm"))
+    trimmed = positional_trim(tx, "user_id", ["transaction_dttm", "ord"], trim, trim)
+    kept = blacklist(trimmed, "cat", *blacklist_cats)
+    dropped = anti_join_missing(trimmed.select("user_id").distinct(), kept, "user_id")
+
+    def pivot(col, vocab, agg, prefix, value_col=None, fill=0):
+        aggs = reference_pivot_exprs(col, vocab, agg, value_col, prefix)
+        return kept.groupBy("user_id").agg(*aggs).na.fill(fill)
+
+    long = _long_counts(kept, freq_divisor)
+    freq_long = row_normalize(long, "user_id", "cnt", out_col="freq")
+    blocks = [
+        pivot("cat", cat_vocab, "count", "mcc_freq"),
+        pivot("cat", cat_vocab, "sum", "mcc_sum", value_col="amt", fill=0.0),
+        horizontal_stats(long, "user_id", "cnt_b", "mcc_freq_stats"),
+        horizontal_stats(freq_long, "user_id", "freq", "mcc_freq_proc_stats"),
+        pivot("day_of_month", DAYS_OF_MONTH, "count", "dom"),
+        pivot("day_of_week", DAYS_OF_WEEK, "count", "dow"),
+        pivot("hour", HOURS, "count", "hod"),
+        vertical_stats(kept, ["user_id"], "time_day", "time_day"),
+    ]
+    feats = assemble_features(blocks, key="user_id", how="outer", fill=0.0)
+    return feats, dropped
 
 
 @pytest.fixture(scope="module")
@@ -49,13 +88,13 @@ def test_branch_c_features_shape(tx):
 
 def test_branch_c_fused_matches_blocks_bitwise(tx):
     """The fused single-aggregate branch C must reproduce the 8-block
-    composition bit-for-bit (counts / decimal sums / exact percentiles
+    reference bit-for-bit (counts / decimal sums / exact percentiles
     are order-insensitive, so fusion is a pure plan change) — including
     column order, which the FEATURE_COLS contract pins downstream."""
     import numpy as np
 
-    fused, d1 = branch_c_features(tx, cat_vocab=CAT_VOCAB, fused=True)
-    blocks, d2 = branch_c_features(tx, cat_vocab=CAT_VOCAB, fused=False)
+    fused, d1 = branch_c_features(tx, cat_vocab=CAT_VOCAB)
+    blocks, d2 = reference_branch_c_blocks(tx, cat_vocab=CAT_VOCAB)
     pa = fused.orderBy("user_id").toPandas()
     pb = blocks.orderBy("user_id").toPandas()
     assert list(pa.columns) == list(pb.columns)
@@ -111,24 +150,41 @@ def test_branch_c_fused_plan_is_narrow(tx):
     cleaned = clean_transactions(
         tx, user_col="user_id", cat_col="cat", value_col="amt", n_amt=10, n_mcc=10
     ).localCheckpoint(eager=True)
-    feats, _ = branch_c_features(cleaned, cat_vocab=CAT_VOCAB, fused=True)
+    feats, _ = branch_c_features(cleaned, cat_vocab=CAT_VOCAB)
     p = feats._jdf.queryExecution().executedPlan().toString()
     assert p.count("Exchange") <= 3, p.count("Exchange")
     assert p.count("SortMergeJoin") + p.count("BroadcastHashJoin") <= 2
+
+
+def reference_corpus_prep_blocks(spark, sf_dir):
+    """``pipeline_corpus_prep`` as the plain composition of the certified
+    operators: ``exact_dedup`` + join-back for the exact stage, and no
+    pin at the substring-dedup fan-out."""
+    from vtb_datafusion_2023_spark.operators.dedup import exact_dedup, substring_dedup
+    from vtb_datafusion_2023_spark.operators.filtering import shard_assign
+    from vtb_datafusion_2023_spark.operators.text import decontaminate_drop
+    from vtb_datafusion_2023_spark.suite.datapipe import _PREP_W, _corpus_prep_inputs
+
+    q, bench = _corpus_prep_inputs(spark, sf_dir)
+    reps = exact_dedup(q, "doc_id", ["text"]).select(F.col("keep_id").alias("doc_id"))
+    s2 = q.join(reps, "doc_id")
+    sd = substring_dedup(s2, window_tokens=_PREP_W).withColumnRenamed("text_dedup", "text_final")
+    s4 = decontaminate_drop(
+        sd, bench.withColumnRenamed("text", "text_final"), "doc_id", "text_final", n=3
+    )
+    out = shard_assign(s4, "doc_id", n_shards=4, salt="ep1")
+    return out.select("doc_id", "shard", "pos", "n_removed", "text_final")
 
 
 def test_corpus_prep_fused_matches_blocks_bitwise(spark, sf_small):
     """The r8 corpus-prep rewrite (window-based exact-dedup + pinned
     substring-dedup fan-out) must reproduce the block composition
     bit-for-bit, including the shard/pos assignment (order-sensitive
-    through the md5 sort keys).  Measured: sf1 6.5 -> 3.5 s, sf10
-    39-47 -> 13-14 s (the unfused form replays the window-dedup subtree
-    twice — ReuseExchange can't cover it because column pruning makes
-    the two consumers' subtrees non-identical)."""
-    from vtb_datafusion_2023_spark.suite.datapipe import _corpus_prep
+    through the md5 sort keys)."""
+    from vtb_datafusion_2023_spark.suite.datapipe import pipeline_corpus_prep
 
-    pa = _corpus_prep(spark, sf_small, fused=True).orderBy("doc_id").toPandas()
-    pb = _corpus_prep(spark, sf_small, fused=False).orderBy("doc_id").toPandas()
+    pa = pipeline_corpus_prep(spark, sf_small).orderBy("doc_id").toPandas()
+    pb = reference_corpus_prep_blocks(spark, sf_small).orderBy("doc_id").toPandas()
     assert list(pa.columns) == list(pb.columns)
     assert len(pa) == len(pb) > 0
     assert pa.equals(pb)
@@ -138,9 +194,9 @@ def test_corpus_prep_fused_plan_is_narrow(spark, sf_small):
     """Post-rewrite plan shape: the window-dedup subtree executes once
     (pinned), exact dedup is one window exchange, no SMJ legs remain —
     10 exchanges + 2 SMJ in the block form, <= 5 + 0 fused."""
-    from vtb_datafusion_2023_spark.suite.datapipe import _corpus_prep
+    from vtb_datafusion_2023_spark.suite.datapipe import pipeline_corpus_prep
 
-    df = _corpus_prep(spark, sf_small, fused=True)
+    df = pipeline_corpus_prep(spark, sf_small)
     p = df._jdf.queryExecution().executedPlan().toString()
     assert p.count("Exchange") <= 5, p.count("Exchange")
     assert p.count("SortMergeJoin") == 0
@@ -183,32 +239,6 @@ def test_run_submission_deterministic(spark, tx):
     a = run_submission(spark, tx, cat_vocab=CAT_VOCAB, n_reps=2).toPandas()
     b = run_submission(spark, tx, cat_vocab=CAT_VOCAB, n_reps=2).toPandas()
     assert (a["target"].to_numpy() == b["target"].to_numpy()).all()
-
-
-def test_run_submission_bucketed_matches_and_skips_exchange(spark, tx, tmp_path):
-    """ROADMAP #7: bucketing the cleaned intermediate must not change the
-    submission, and per-user groupBys over the bucketed table must plan
-    without a user_id exchange.  (Linear branch-A scorer: the property
-    under test is the bucketed exchange elision, which is independent of
-    the scorer; the real-weights path is covered by the e2e and
-    determinism tests.)"""
-    plain = run_submission(
-        spark, tx, cat_vocab=CAT_VOCAB, n_reps=2, use_real_rnn=False
-    ).toPandas()
-    bucketed = run_submission(
-        spark,
-        tx,
-        cat_vocab=CAT_VOCAB,
-        n_reps=2,
-        bucket_dir=str(tmp_path),
-        use_real_rnn=False,
-    ).toPandas()
-    assert (plain["user_id"].to_numpy() == bucketed["user_id"].to_numpy()).all()
-    assert (plain["target"].to_numpy() == bucketed["target"].to_numpy()).all()
-
-    cleaned = spark.table("cleaned_tx_bucketed")
-    plan = cleaned.groupBy("user_id").count()._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning(user_id" not in plan, plan
 
 
 def test_run_submission_with_real_cbm(spark, tx):

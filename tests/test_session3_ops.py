@@ -69,21 +69,16 @@ def test_containment_detects_subset_direction(spark):
 
 
 def test_containment_prefix_filter_matches_bruteforce(spark, sf_small):
+    from test_datapipe import reference_shingle_pairs
+
     from vtb_datafusion_2023_spark.operators.dedup import containment_pairs
 
     docs = spark.read.parquet(f"{sf_small}/documents.parquet")
     fast = {
-        (r.id_a, r.id_b): round(r.containment, 12)
-        for r in containment_pairs(
-            docs, "doc_id", "text", threshold=0.7, prefix_filter=True
-        ).collect()
+        (r.id_a, r.id_b): r.containment
+        for r in containment_pairs(docs, "doc_id", "text", threshold=0.7).collect()
     }
-    slow = {
-        (r.id_a, r.id_b): round(r.containment, 12)
-        for r in containment_pairs(
-            docs, "doc_id", "text", threshold=0.7, prefix_filter=False
-        ).collect()
-    }
+    slow = reference_shingle_pairs(docs, 1, 0.7, "containment")
     assert fast == slow and len(fast) > 0
 
 

@@ -122,24 +122,113 @@ def _load_emb(spark, sf_dir):
     return load_table(spark, sf_dir, "embeddings")
 
 
-def test_pq_encode_expr_path_is_codegen_only(spark, sf_small):
-    from vtb_datafusion_2023_spark.operators.similarity import pq_encode
-
-    plan = (
-        pq_encode(_load_emb(spark, sf_small), method="expr")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+def _pq_sub_dists(vec_sql, sub, subdim, cb_sql):
+    """Distances of one subvector to every centroid of its codebook:
+    left-fold of squared differences in index order (the oracle's)."""
+    return (
+        f"transform(element_at({cb_sql}, {sub + 1}), cv -> "
+        f"aggregate(zip_with(slice({vec_sql}, {sub * subdim + 1}, {subdim}), cv, "
+        f"(x, y) -> (cast(x as double) - y) * (cast(x as double) - y)), "
+        f"cast(0 as double), (a, b) -> a + b))"
     )
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    assert "Exchange" not in plan  # scan-speed map, no shuffle
+
+
+def _pq_codes_sql(vec_sql, m, subdim, cb):
+    per_sub = []
+    for sub in range(m):
+        d = _pq_sub_dists(vec_sql, sub, subdim, cb)
+        per_sub.append(f"(array_position({d}, array_min({d})) - 1)")
+    return F.expr("array(" + ", ".join(per_sub) + ")").cast("array<int>")
+
+
+def _pq_adist_sql(lut_col, codes_col, m):
+    return F.expr(
+        f"aggregate(transform(sequence(1, {m}), s -> "
+        f"element_at(element_at({lut_col}, s), element_at({codes_col}, s) + 1)), "
+        f"cast(0 as double), (a, b) -> a + b)"
+    )
+
+
+def _pq_luts_sql(vec_sql, m, subdim, cb):
+    return F.expr("array(" + ", ".join(_pq_sub_dists(vec_sql, s, subdim, cb) for s in range(m)) + ")")
+
+
+def reference_pq_encode_expr(df, id_col="vec_id", vec_col="embedding", m=8, k=16, subdim=8):
+    """``pq_encode`` as pure Catalyst array expressions (zero Python)."""
+    from vtb_datafusion_2023_spark.operators.similarity import pq_formula_codebook_sql
+
+    cb = pq_formula_codebook_sql(m, k, subdim)
+    return df.select(id_col, _pq_codes_sql(vec_col, m, subdim, cb).alias("codes"))
+
+
+def reference_pq_topk_expr(corpus, queries, k_neighbors=5, m=8, k=16, subdim=8):
+    """``pq_topk`` as pure Catalyst: expression codes, a broadcast query
+    LUT, and the per-pair ADC fold."""
+    from pyspark.sql import Window
+
+    from vtb_datafusion_2023_spark.operators.similarity import pq_formula_codebook_sql
+
+    cb = pq_formula_codebook_sql(m, k, subdim)
+    codes = reference_pq_encode_expr(corpus, m=m, k=k, subdim=subdim).withColumnRenamed(
+        "vec_id", "neighbor_id"
+    )
+    q = queries.select(
+        F.col("vec_id").alias("query_id"), _pq_luts_sql("embedding", m, subdim, cb).alias("qlut")
+    )
+    scored = codes.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id")).withColumn(
+        "adist", _pq_adist_sql("qlut", "codes", m)
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("adist").asc(), F.col("neighbor_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k_neighbors)
+        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "adist")
+    )
+
+
+def reference_lsh_pq_topk_expr(corpus, queries, k=5, n_planes=16, rerank=20, m=8,
+                               n_centroids=16, subdim=8):
+    """``lsh_pq_topk`` as pure Catalyst: JVM bucket signatures, expression
+    codes and LUTs, an ADC shortlist window, then the exact cosine
+    rerank."""
+    from pyspark.sql import Window
+
+    from vtb_datafusion_2023_spark.operators.similarity import (
+        cosine,
+        lsh_signature,
+        pq_formula_codebook_sql,
+    )
+
+    cb = pq_formula_codebook_sql(m, n_centroids, subdim)
+    c = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("_cv"))
+    c = c.withColumn("_bkt", lsh_signature(F.col("_cv"), n_planes)).withColumn(
+        "_codes", _pq_codes_sql("_cv", m, subdim, cb)
+    )
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv"))
+    q = q.withColumn("_bkt", lsh_signature(F.col("_qv"), n_planes)).withColumn(
+        "_qlut", _pq_luts_sql("_qv", m, subdim, cb)
+    )
+    cand = (
+        c.join(F.broadcast(q), "_bkt")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn("_adist", _pq_adist_sql("_qlut", "_codes", m))
+    )
+    w_adc = Window.partitionBy("query_id").orderBy(F.col("_adist").asc(), F.col("neighbor_id").asc())
+    short = cand.withColumn("_rr", F.row_number().over(w_adc)).filter(F.col("_rr") <= rerank)
+    rescored = short.withColumn("cos", cosine(F.col("_qv"), F.col("_cv")))
+    w_fin = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
+    return (
+        rescored.withColumn("rank", F.row_number().over(w_fin))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "cos")
+    )
 
 
 def test_pq_encode_arrow_path_is_shuffle_free(spark, sf_small):
     from vtb_datafusion_2023_spark.operators.similarity import pq_encode
 
     plan = (
-        pq_encode(_load_emb(spark, sf_small), method="arrow")
+        pq_encode(_load_emb(spark, sf_small))
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -153,13 +242,13 @@ def test_pq_arrow_and_expr_paths_bitwise_equal(spark, sf_small):
     from vtb_datafusion_2023_spark.operators.similarity import pq_encode, pq_topk
 
     emb = _load_emb(spark, sf_small)
-    a = [tuple(r) for r in pq_encode(emb, method="arrow").orderBy("vec_id").collect()]
-    e = [tuple(r) for r in pq_encode(emb, method="expr").orderBy("vec_id").collect()]
+    a = [tuple(r) for r in pq_encode(emb).orderBy("vec_id").collect()]
+    e = [tuple(r) for r in reference_pq_encode_expr(emb).orderBy("vec_id").collect()]
     assert a == e
     qs = emb.filter(F.col("vec_id") < 4)
-    ta = [tuple(r) for r in pq_topk(emb, qs, 5, method="arrow").orderBy("query_id", "rank").collect()]
-    te = [tuple(r) for r in pq_topk(emb, qs, 5, method="expr").orderBy("query_id", "rank").collect()]
-    assert ta == te
+    ta = [tuple(r) for r in pq_topk(emb, qs, 5).orderBy("query_id", "rank").collect()]
+    te = [tuple(r) for r in reference_pq_topk_expr(emb, qs, 5).orderBy("query_id", "rank").collect()]
+    assert ta == te and len(ta) > 0
 
 
 def test_pq_encode_partitioning_invariant(spark, sf_small):
@@ -276,8 +365,11 @@ def test_lsh_pq_topk_arrow_expr_parity_and_membership(spark, sf_small):
 
     emb = _load_emb(spark, sf_small)
     qs = emb.filter(F.col("vec_id") < 5)
-    a = [tuple(r) for r in lsh_pq_topk(emb, qs, k=5, n_planes=8, method="arrow").orderBy("query_id", "rank").collect()]
-    e = [tuple(r) for r in lsh_pq_topk(emb, qs, k=5, n_planes=8, method="expr").orderBy("query_id", "rank").collect()]
+    a = [tuple(r) for r in lsh_pq_topk(emb, qs, k=5, n_planes=8).orderBy("query_id", "rank").collect()]
+    e = [
+        tuple(r)
+        for r in reference_lsh_pq_topk_expr(emb, qs, k=5, n_planes=8).orderBy("query_id", "rank").collect()
+    ]
     assert a == e and len(a) > 0
     # stage-1 soundness: every result lives in the query's LSH bucket
     # (= appears in the unlimited in-bucket exact ranking)
@@ -321,6 +413,31 @@ def test_ivf_indexed_search_matches_in_memory_and_prunes_files(spark, sf_small, 
 
     probed = read_versioned_pruned(spark, idx + "/cells", keys=[0])
     assert len(set(probed.inputFiles())) < total_files
+
+
+def reference_gram_expr(df, vec_col="embedding"):
+    """``embedding_gram`` as pure Catalyst: each row's upper-triangle
+    products from a nested ``transform``, exploded into one (i, j) hash
+    aggregate with the same ``sqlgen.fsum`` accumulation; a ragged
+    vector raises through ``raise_error``."""
+    from vtb_datafusion_2023_spark import sqlgen
+
+    nn = df.filter(F.col(vec_col).isNotNull())
+    probe = nn.select(F.size(vec_col)).first()
+    dim = 0 if probe is None else int(probe[0])
+    guarded = (
+        f"case when size({vec_col}) = {dim} then {vec_col} "
+        f"else raise_error(concat('embedding_gram: expected dim {dim}, got "
+        f"vector of size ', cast(size({vec_col}) as string))) end"
+    )
+    tri = F.expr(
+        f"""flatten(transform({guarded}, (x, i) ->
+              transform(slice({vec_col}, i + 1, size({vec_col}) - i), (y, k) ->
+                struct(i as i, i + k as j,
+                       cast(x as double) * cast(y as double) as p))))"""
+    )
+    prods = nn.select(F.explode(tri).alias("t")).select("t.i", "t.j", "t.p")
+    return prods.groupBy("i", "j").agg(F.expr(sqlgen.fsum("p", "g")), F.count(F.lit(1)).alias("n"))
 
 
 def test_embedding_gram_matches_numpy_and_partitioning_invariant(spark, sf_small):
@@ -372,16 +489,13 @@ def test_embedding_gram_arrow_path_bitwise_equals_expr(spark, sf_small):
     from vtb_datafusion_2023_spark.operators.similarity import embedding_gram
 
     emb = load_table(spark, sf_small, "embeddings")
-    expr = {(r["i"], r["j"]): (r["g"], r["n"]) for r in embedding_gram(emb).collect()}
-    arrow = {
-        (r["i"], r["j"]): (r["g"], r["n"])
-        for r in embedding_gram(emb, method="arrow").collect()
-    }
-    assert arrow == expr  # bitwise: same quantized int64 partials
+    expr = {(r["i"], r["j"]): (r["g"], r["n"]) for r in reference_gram_expr(emb).collect()}
+    arrow = {(r["i"], r["j"]): (r["g"], r["n"]) for r in embedding_gram(emb).collect()}
+    assert arrow == expr and len(arrow) > 0  # bitwise: same quantized int64 partials
     # and invariant under partitioning
     again = {
         (r["i"], r["j"]): (r["g"], r["n"])
-        for r in embedding_gram(emb.repartition(9), method="arrow").collect()
+        for r in embedding_gram(emb.repartition(9)).collect()
     }
     assert again == expr
 
@@ -399,10 +513,11 @@ def test_embedding_gram_ragged_dim_fails_loudly_both_paths(spark):
     with _pt.raises(Exception, match="expected dim"):
         embedding_gram(df).collect()
     with _pt.raises(Exception, match="expected dim"):
-        embedding_gram(df, method="arrow").collect()
-    # NULL embeddings drop silently on both gram paths and in projection
+        reference_gram_expr(df).collect()
+    # NULL embeddings drop silently in the gram, its reference and projection
     ok = df.filter("vec_id != 2")
     assert {r["n"] for r in embedding_gram(ok).collect()} == {1}
+    assert {r["n"] for r in reference_gram_expr(ok).collect()} == {1}
     import numpy as np
 
     got = apply_projection(ok, np.eye(2)).collect()

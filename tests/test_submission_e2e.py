@@ -84,7 +84,6 @@ def test_inplan_scorer_matches_udf_scorer(spark, sf_small):
         cat_vocab=SE.VOCAB,
         n_reps=2,
         sampler="md5",
-        scorer="inplan",
         use_real_rnn=False,
         blacklist_cats=(2,),
     ).toPandas()

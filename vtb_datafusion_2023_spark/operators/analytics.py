@@ -22,7 +22,6 @@ def funnel(
     user_col: str = "user_id",
     ts_col: str = "ts",
     type_col: str = "event_type",
-    strategy: str = "scan",
     max_events_per_key: int | None = None,
 ) -> DataFrame:
     """Ordered-funnel completion counts: users whose first ``steps[0]``
@@ -30,22 +29,23 @@ def funnel(
     previous step's completion time and all within ``within`` of step 1.
     Returns (step, step_name, n_users).
 
-    ``strategy='scan'`` (default, the 100 TB shape): pre-filter to the
-    step types, ONE shuffle on ``user_col``, then the greedy state
-    machine runs JVM-side as an ``aggregate`` HOF over each user's
-    time-sorted event array (the earliest valid event per step IS the
-    per-step min the join formulation computes), followed by one global
-    conditional aggregation for the per-step counts.  ``'joins'`` keeps
-    the per-step min-ts aggregation joins — len(steps) co-partitioned
-    hash aggs over the event table, the differential cross-check
-    (pinned row-identical by pytest).
+    Plan (the 100 TB shape): pre-filter to the step types, ONE shuffle
+    on ``user_col``, then the greedy state machine runs JVM-side as an
+    ``aggregate`` HOF over each user's time-sorted event array, followed
+    by one global conditional aggregation for the per-step counts — two
+    shuffles total, independent of len(steps).  An event advances the
+    state iff it is the next step's type, strictly after the previous
+    step's time, and within the step-1 deadline; the scan consumes the
+    EARLIEST such event, which is exactly the per-step ``min(ts)`` of
+    the per-step join formulation (len(steps) co-partitioned hash aggs
+    and joins; pinned row-identical to it by the test reference
+    ``reference_funnel_joins`` in tests/test_datapipe.py).
 
     ``max_events_per_key`` (optional) bounds per-user memory: each user
     keeps only their first N step-type events in ``(ts, type)`` order
     (NULL ts trimmed first) before the funnel runs — see
     :func:`_trim_per_key` for the prefix-semantics contract and why the
-    trim adds no exchange.  Applied uniformly to both strategies so the
-    differential stays row-identical.
+    trim adds no exchange.
     """
     if max_events_per_key is not None:
         # trim AFTER the step-type pre-filter so the budget counts only
@@ -57,111 +57,6 @@ def funnel(
             type_col,
             max_events_per_key,
         )
-    if strategy == "scan":
-        return _funnel_scan(events, steps, within, user_col, ts_col, type_col)
-    if strategy != "joins":
-        raise ValueError(f"strategy must be scan|joins, got {strategy!r}")
-    spark = events.sparkSession
-    cur = (
-        events.filter(F.col(type_col) == steps[0])
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias("t_0"))
-        .withColumn("deadline", F.expr(f"t_0 + interval {within}"))
-    )
-    rows = [(1, steps[0], cur)]
-    for i, step in enumerate(steps[1:], start=2):
-        prev_t = f"t_{i - 2}"
-        cur = (
-            events.filter(F.col(type_col) == step)
-            .join(cur, user_col)
-            .filter((F.col(ts_col) > F.col(prev_t)) & (F.col(ts_col) <= F.col("deadline")))
-            .groupBy(user_col, "deadline")
-            .agg(F.min(ts_col).alias(f"t_{i - 1}"))
-        )
-        rows.append((i, step, cur))
-    counts = [
-        df.agg(F.count(F.lit(1)).alias("n_users")).select(
-            F.lit(i).alias("step"), F.lit(name).alias("step_name"), "n_users"
-        )
-        for i, name, df in rows
-    ]
-    out = counts[0]
-    for c in counts[1:]:
-        out = out.unionByName(c)
-    return out
-
-
-
-
-def _trim_per_key(
-    df: DataFrame, key: str, ord_col: str, type_col: str, max_events_per_key: int
-) -> DataFrame:
-    """Keep each key's first ``max_events_per_key`` events in
-    ``(ord_col, type_col)`` order (NULL ords sort LAST, so they are
-    trimmed first — a NULL ord has no position in event time).
-
-    This is the memory guard for the per-key sequence automata: the
-    window's partitioning matches the downstream ``groupBy(key)``, so
-    Catalyst reuses ONE exchange (plan-pinned by pytest), and the trim
-    happens inside the window's SPILLABLE sort — converting the
-    unbounded ``collect_list`` hash-agg buffer a hot key would otherwise
-    grow into a bounded array of at most ``max_events_per_key`` entries.
-
-    The greedy automata are prefix-stable (each match/step consumes the
-    earliest valid event, never a later one), so the trimmed result is
-    exactly the full scan's result restricted to spans completing within
-    the key's first ``max_events_per_key`` events.
-
-    Determinism: when a key holds duplicate ``(ord_col, type_col)`` rows,
-    a binding cap must still keep the SAME physical rows on every
-    execution (speculative retries, the three-strategy differential), so
-    the window order ends with a content hash over all columns as the
-    final tiebreaker — rows identical in every column are the only
-    remaining ties, and those are interchangeable.
-    """
-    from pyspark.sql import Window
-    from pyspark.sql.types import MapType
-
-    hashable = [
-        f.name for f in df.schema.fields if not isinstance(f.dataType, MapType)
-    ]  # maps aren't hashable in Spark
-    w = Window.partitionBy(key).orderBy(
-        F.col(ord_col).asc_nulls_last(),
-        F.col(type_col).asc_nulls_last(),
-        F.xxhash64(*[F.col(c) for c in hashable]).asc(),
-    )
-    return (
-        df.withColumn("_rn_trim", F.row_number().over(w))
-        .filter(F.col("_rn_trim") <= max_events_per_key)
-        .drop("_rn_trim")
-    )
-
-
-def _steps_literal(steps: list[str]) -> str:
-    """Spark-SQL array literal of step names.  Backslashes must escape
-    too: Spark string literals interpret \\b etc., so a bare backslash
-    in a step name would silently corrupt the automaton's comparisons
-    while the Column-API strategies match the raw string."""
-    def q(s: str) -> str:
-        return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
-
-    return "array(" + ",".join(q(s) for s in steps) + ")"
-
-def _funnel_scan(
-    events: DataFrame,
-    steps: list[str],
-    within: str,
-    user_col: str,
-    ts_col: str,
-    type_col: str,
-) -> DataFrame:
-    """One-pass funnel: per-user greedy state machine as a JVM
-    ``aggregate`` HOF over the sorted (ts, type) array.  An event
-    advances the state iff it is the next step's type, strictly after
-    the previous step's time, and within the step-1 deadline.  The scan
-    consumes the EARLIEST such event — exactly the per-step ``min(ts)``
-    of the join formulation.  Two shuffles total (user group + global
-    count), independent of len(steps)."""
     ts_t = events.schema[ts_col].dataType.simpleString()
     n = len(steps)
     steps_sql = _steps_literal(steps)
@@ -170,8 +65,8 @@ def _funnel_scan(
     # whose ONLY step-1 events are NULL-ts still counts at step 1 there
     # (groupBy+min yields a t_0=NULL row).  The automaton scans the
     # non-NULL-ord events (collect_list skips the NULL branch) and a
-    # second aggregate restores the step-1 membership — keeping all
-    # strategies and the SQL oracle row-identical on NULL timestamps.
+    # second aggregate restores the step-1 membership — keeping the
+    # join formulation and the SQL oracle row-identical on NULL timestamps.
     scan = f"""
     aggregate(
       sort_array(collect_list(case when _o is not null then struct(_o, _t) end)),
@@ -218,6 +113,60 @@ def _funnel_scan(
         "_t.step", "_t.step_name", "_t.n_users"
     )
 
+
+def _trim_per_key(
+    df: DataFrame, key: str, ord_col: str, type_col: str, max_events_per_key: int
+) -> DataFrame:
+    """Keep each key's first ``max_events_per_key`` events in
+    ``(ord_col, type_col)`` order (NULL ords sort LAST, so they are
+    trimmed first — a NULL ord has no position in event time).
+
+    This is the memory guard for the per-key sequence automata: the
+    window's partitioning matches the downstream ``groupBy(key)``, so
+    Catalyst reuses ONE exchange (plan-pinned by pytest), and the trim
+    happens inside the window's SPILLABLE sort — converting the
+    unbounded ``collect_list`` hash-agg buffer a hot key would otherwise
+    grow into a bounded array of at most ``max_events_per_key`` entries.
+
+    The greedy automata are prefix-stable (each match/step consumes the
+    earliest valid event, never a later one), so the trimmed result is
+    exactly the full scan's result restricted to spans completing within
+    the key's first ``max_events_per_key`` events.
+
+    Determinism: when a key holds duplicate ``(ord_col, type_col)`` rows,
+    a binding cap must still keep the SAME physical rows on every
+    execution (speculative retries, the test-reference differentials), so
+    the window order ends with a content hash over all columns as the
+    final tiebreaker — rows identical in every column are the only
+    remaining ties, and those are interchangeable.
+    """
+    from pyspark.sql import Window
+    from pyspark.sql.types import MapType
+
+    hashable = [
+        f.name for f in df.schema.fields if not isinstance(f.dataType, MapType)
+    ]  # maps aren't hashable in Spark
+    w = Window.partitionBy(key).orderBy(
+        F.col(ord_col).asc_nulls_last(),
+        F.col(type_col).asc_nulls_last(),
+        F.xxhash64(*[F.col(c) for c in hashable]).asc(),
+    )
+    return (
+        df.withColumn("_rn_trim", F.row_number().over(w))
+        .filter(F.col("_rn_trim") <= max_events_per_key)
+        .drop("_rn_trim")
+    )
+
+
+def _steps_literal(steps: list[str]) -> str:
+    """Spark-SQL array literal of step names.  Backslashes must escape
+    too: Spark string literals interpret \\b etc., so a bare backslash
+    in a step name would silently corrupt the automaton's comparisons
+    while Column-API comparisons match the raw string."""
+    def q(s: str) -> str:
+        return "'" + s.replace("\\", "\\\\").replace("'", "''") + "'"
+
+    return "array(" + ",".join(q(s) for s in steps) + ")"
 
 def retention_cohorts(
     events: DataFrame,
@@ -387,25 +336,6 @@ def seasonal_decompose(
     return s2.selectExpr("*", f"(({value}) - trend - seasonal) as residual")
 
 
-def _pattern_out_schema(df: DataFrame, key: str, ord_col: str):
-    """Output schema for pattern matching, with the key and ord types
-    DERIVED from the input schema (a string key or timestamp/double ord
-    column must produce the same schema whether or not any match exists —
-    zero-match results previously hardcoded bigint)."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    kf = df.schema[key]
-    of = df.schema[ord_col]
-    return StructType(
-        [
-            StructField(key, kf.dataType, True),
-            StructField("match_id", IntegerType(), True),
-            StructField("start_ord", of.dataType, True),
-            StructField("end_ord", of.dataType, True),
-        ]
-    )
-
-
 def pattern_spans(
     df: DataFrame,
     key: str,
@@ -413,12 +343,6 @@ def pattern_spans(
     type_col: str,
     steps: list[str],
     max_matches: int = 8,
-    # broadcast_frontier keeps its pre-rewrite positional slot (callers
-    # predating the strategy parameter passed it 7th); it only applies to
-    # the 'joins' strategy, and setting it with another strategy raises
-    # instead of being silently ignored.
-    broadcast_frontier: bool | None = None,
-    strategy: str = "sql",
     max_events_per_key: int | None = None,
 ) -> DataFrame:
     """Sequential event-pattern matching (MATCH_RECOGNIZE-lite) with
@@ -428,123 +352,29 @@ def pattern_spans(
     Returns one row per match: ``(key, match_id, start_ord, end_ord)``,
     ``match_id`` 1-based in temporal order.
 
-    Three strategies, pinned row-identical by pytest:
+    Plan (the 100 TB shape): ONE shuffle on ``key``, then the greedy
+    automaton runs entirely JVM-side as an ``aggregate`` higher-order
+    function over the per-key ``sort_array(collect_list(...))`` event
+    array — a linear scan with a (state, start, last, matches)
+    accumulator, no Python workers, no driver coordination.  Same
+    per-key-fits-in-memory contract as every ordered per-user sequence
+    op in the engine.  An event is consumed iff it is the current step's
+    type and strictly after the last consumed event (skip-till-next-
+    match + non-overlap), exactly the semantics of the relational
+    frontier-join loop (one min-aggregation join per step per match
+    round, a driver action per round) that the test reference
+    ``reference_pattern_spans_joins`` in tests/test_datapipe.py runs and
+    pins row-identical.  Null-safe: a NULL type never equals a step
+    (``<=>``), NULL ords are filtered like the join formulation's
+    ``_o > _prev`` predicate would.
 
-    - ``'sql'`` (default, the 100 TB shape): ONE shuffle on ``key``,
-      then the greedy automaton runs entirely JVM-side as an
-      ``aggregate`` higher-order function over the per-key
-      ``sort_array(collect_list(...))`` event array — a linear scan with
-      a (state, start, last, matches) accumulator, no Python workers, no
-      driver coordination.  Same per-key-fits-in-memory contract as
-      every ordered per-user sequence op in the engine.
-    - ``'pandas'``: the same automaton in ``applyInPandas`` (per-step
-      sorted ord arrays + binary search, O(len(steps)*log n) per match)
-      — for pipelines already paying the Python boundary; measurably
-      slower than 'sql' on many small keys (per-group Arrow dispatch).
-    - ``'joins'``: the relational frontier-join loop
-      (:func:`pattern_spans_joins`) — the differential oracle; len(steps)
-      joins + a driver action per match round, so at cluster scale it
-      makes ~rounds*steps passes over the fact table.
-
-    ``max_events_per_key`` (optional) bounds per-key memory for the
-    array-building strategies: each key keeps only its first N events in
-    ``(ord, type)`` order before matching (see :func:`_trim_per_key` —
-    spillable window sort, no extra exchange, prefix-stable semantics).
-    Applied uniformly to all three strategies so the differentials stay
-    row-identical.
+    ``max_events_per_key`` (optional) bounds per-key memory: each key
+    keeps only its first N events in ``(ord, type)`` order before
+    matching (see :func:`_trim_per_key` — spillable window sort, no
+    extra exchange, prefix-stable semantics).
     """
     if max_events_per_key is not None:
         df = _trim_per_key(df, key, ord_col, type_col, max_events_per_key)
-    if strategy == "joins":
-        return pattern_spans_joins(
-            df, key, ord_col, type_col, steps, max_matches, bool(broadcast_frontier)
-        )
-    if broadcast_frontier is not None:
-        raise ValueError(
-            "broadcast_frontier only applies to strategy='joins' "
-            f"(got strategy={strategy!r})"
-        )
-    if strategy == "sql":
-        return _pattern_spans_sql(df, key, ord_col, type_col, steps, max_matches)
-    if strategy != "pandas":
-        raise ValueError(f"strategy must be sql|pandas|joins, got {strategy!r}")
-
-    import numpy as np
-    import pandas as pd
-
-    out_schema = _pattern_out_schema(df, key, ord_col)
-    n_steps = len(steps)
-
-    def match_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        # per-step sorted ord arrays; greedy leftmost match by binary
-        # search — identical semantics to the min-aggregation join loop
-        # (first step strictly after the previous match's end, each
-        # subsequent step strictly after the previous step's ord).
-        by_step = []
-        for s in steps:
-            o = pdf.loc[pdf["_t"] == s, "_o"].to_numpy()
-            o.sort(kind="stable")
-            by_step.append(o)
-        def empty():
-            # dtype-preserving empty frame (a float64-default empty frame
-            # fails the Arrow cast for timestamp/string columns)
-            return pd.DataFrame(
-                {
-                    key: pdf[key].iloc[:0],
-                    "match_id": pd.Series([], dtype="int32"),
-                    "start_ord": pdf["_o"].iloc[:0],
-                    "end_ord": pdf["_o"].iloc[:0],
-                }
-            )
-
-        if any(len(o) == 0 for o in by_step):
-            return empty()
-        kv = pdf[key].iloc[0]
-        rows = []
-        prev = None
-        for match_id in range(1, max_matches + 1):
-            cur = prev
-            start = None
-            for i in range(n_steps):
-                arr = by_step[i]
-                j = 0 if cur is None else int(np.searchsorted(arr, cur, side="right"))
-                if j >= len(arr):
-                    cur = None
-                    break
-                cur = arr[j]
-                if i == 0:
-                    start = cur
-            if cur is None:
-                break
-            rows.append((kv, match_id, start, cur))
-            prev = cur
-        if not rows:
-            return empty()
-        return pd.DataFrame(rows, columns=[key, "match_id", "start_ord", "end_ord"])
-
-    ev = df.select(
-        F.col(key), F.col(ord_col).alias("_o"), F.col(type_col).alias("_t")
-    ).filter(F.col("_o").isNotNull())
-    return ev.groupBy(key).applyInPandas(match_group, schema=out_schema)
-
-
-def _pattern_spans_sql(
-    df: DataFrame,
-    key: str,
-    ord_col: str,
-    type_col: str,
-    steps: list[str],
-    max_matches: int,
-) -> DataFrame:
-    """JVM-side greedy automaton: one hash shuffle on ``key``, then an
-    ``aggregate`` HOF linear scan over the per-key time-sorted event
-    array.  Accumulator = (state, start, last, matches); an event is
-    consumed iff it is the current step's type and strictly after the
-    last consumed event (skip-till-next-match + non-overlap), exactly
-    the min-aggregation join semantics.  Null-safe: a NULL type never
-    equals a step (``<=>``), NULL ords are filtered like the join
-    formulation's ``_o > _prev`` predicate would.
-    """
     ot = df.schema[ord_col].dataType.simpleString()
     n = len(steps)
     steps_sql = _steps_literal(steps)
@@ -580,74 +410,6 @@ def _pattern_spans_sql(
         .select(key, F.explode("_ms").alias("_m"))
         .select(key, "_m.match_id", "_m.start_ord", "_m.end_ord")
     )
-
-
-def pattern_spans_joins(
-    df: DataFrame,
-    key: str,
-    ord_col: str,
-    type_col: str,
-    steps: list[str],
-    max_matches: int = 8,
-    broadcast_frontier: bool = False,
-) -> DataFrame:
-    """Relational frontier-join formulation of :func:`pattern_spans` —
-    the differential oracle for the automaton, and the shape a pure-SQL
-    engine would run: each round advances every key's frontier past its
-    previous match with one min-aggregation join per step — len(steps)
-    joins per round, rounds = matches found, early exit when a round
-    matches nothing.  Driver-coordinated (one action per round), so at
-    100 TB prefer the automaton; this variant exists for cross-checking
-    and for engines without Python workers.
-    """
-    ev = df.select(
-        F.col(key), F.col(ord_col).alias("_o"), F.col(type_col).alias("_t")
-    )
-    ord_type = df.schema[ord_col].dataType
-    frontier = ev.select(key).distinct().withColumn("_prev", F.lit(None).cast(ord_type))
-    out = None
-    for match_id in range(1, max_matches + 1):
-        cur = frontier
-        start = None
-        for i, s in enumerate(steps):
-            # broadcast_frontier=True keeps the event table un-shuffled
-            # per step (one row per active key broadcasts) — worth it
-            # when the event table dwarfs the frontier at cluster scale;
-            # measured SLOWER on local[32] at sf0.1 (30 blocking
-            # broadcast builds beat cheap shuffles of a cached table),
-            # so shuffle joins are the default and AQE picks per-round
-            side = cur.select(key, "_prev")
-            if broadcast_frontier:
-                from pyspark.sql.functions import broadcast as _bc
-
-                side = _bc(side)
-            nxt = (
-                ev.filter(F.col("_t") == s)
-                .join(side, key)
-                .filter(F.col("_prev").isNull() | (F.col("_o") > F.col("_prev")))
-                .groupBy(key)
-                .agg(F.min("_o").alias("_next"))
-            )
-            cur = nxt.withColumnRenamed("_next", "_prev")
-            if i == 0:
-                start = nxt.withColumnRenamed("_next", "_start")
-        matches = (
-            start.join(cur.withColumnRenamed("_prev", "_end"), key)
-            .select(
-                key,
-                F.lit(match_id).alias("match_id"),
-                F.col("_start").alias("start_ord"),
-                F.col("_end").alias("end_ord"),
-            )
-        )
-        matches = matches.localCheckpoint(eager=True)
-        if matches.limit(1).count() == 0:
-            break
-        out = matches if out is None else out.unionByName(matches)
-        frontier = matches.select(key, F.col("end_ord").alias("_prev"))
-    if out is None:
-        return df.sparkSession.createDataFrame([], _pattern_out_schema(df, key, ord_col))
-    return out
 
 
 def markov_transitions(

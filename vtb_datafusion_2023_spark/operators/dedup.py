@@ -308,13 +308,16 @@ def minhash_md5_band_table(
     same (df, id_col, text_col, shingle_n) — lets a caller that shingles
     the corpus for another pipeline (the recall-eval truth stage) share
     ONE shingle build (r11); identical values, the explode just reads
-    the pinned arrays.
+    the pinned arrays.  A table built with a different n raises
+    ``ValueError`` (:func:`_check_shingle_n`).
     """
     if num_perm % bands:
         raise ValueError("num_perm must be divisible by bands")
     r = num_perm // bands
     if shingled is not None:
-        sh = shingled.select("_id", F.explode("_sh").alias("_s"))
+        sh = _check_shingle_n(shingled, shingle_n, "minhash_md5_band_table").select(
+            "_id", F.explode("_sh").alias("_s")
+        )
     else:
         sh = df.select(
             F.col(id_col).alias("_id"),
@@ -674,12 +677,32 @@ def shingle_array_table(df: DataFrame, id_col: str, text_col: str, n: int) -> Da
     dominant fixed cost of the n>=2 slice+array_join form — runs once
     per corpus instead of once per consumer (r11 guide §1.2; the
     recall-eval head built the identical trigram table twice, once for
-    the exact-Jaccard truth and once for the banding candidates)."""
+    the exact-Jaccard truth and once for the banding candidates).
+
+    ``_sh`` carries n in its column metadata (``shingle_n``), which the
+    consumers check (:func:`_check_shingle_n`)."""
     return (
-        df.select(F.col(id_col).alias("_id"), word_shingles(text_col, n).alias("_sh"))
+        df.select(
+            F.col(id_col).alias("_id"),
+            word_shingles(text_col, n).alias("_sh", metadata={"shingle_n": n}),
+        )
         .withColumn("_sz", F.size("_sh"))
         .localCheckpoint(eager=False)
     )
+
+
+def _check_shingle_n(shingled: DataFrame, n: int, consumer: str) -> DataFrame:
+    """``shingled`` itself, after checking that it is a
+    :func:`shingle_array_table` built with the consumer's own n: a
+    trigram table passed to a 5-gram consumer would otherwise yield
+    plausible but wrong similarities."""
+    got = shingled.schema["_sh"].metadata.get("shingle_n")
+    if got != n:
+        raise ValueError(
+            f"{consumer}: shingled table has shingle_n={got}, expected {n} "
+            "(build it with shingle_array_table(df, id_col, text_col, n))"
+        )
+    return shingled
 
 
 def ngram_jaccard_pairs(
@@ -688,13 +711,11 @@ def ngram_jaccard_pairs(
     text_col: str,
     n: int = 1,
     threshold: float = 0.5,
-    prefix_filter: bool = True,
-    position_filter: bool = True,
     shingled: DataFrame | None = None,
 ) -> DataFrame:
     """EXACT n-gram Jaccard similarity for all pairs above ``threshold``.
 
-    Default = prefix-filtered AllPairs (Bayardo et al., WWW'07 — public
+    Prefix-filtered AllPairs (Bayardo et al., WWW'07 — public
     algorithm): shingles get a global rarity order (document frequency
     asc, shingle asc); a pair with J >= t must share its smallest-ordered
     common shingle within BOTH docs' prefixes of length
@@ -707,7 +728,7 @@ def ngram_jaccard_pairs(
     brute-force path (same counts, same division — bitwise; certified by
     the ``dd_ngram_jaccard`` oracle, which stays the naive SQL).
 
-    ``position_filter`` (PPJoin, Xiao et al., WWW'08 — the standard next
+    A position filter (PPJoin, Xiao et al., WWW'08 — the standard next
     notch on AllPairs) prunes candidates BEFORE the distinct + verify
     join using two bounds a qualifying pair must satisfy, both epsilon-
     guarded so they are provably never tighter than the verify division
@@ -726,17 +747,14 @@ def ngram_jaccard_pairs(
     filter lemma), and at that token the position bound is >= the true
     overlap >= alpha — so every qualifying pair survives via at least
     that occurrence, and the verified output stays identical to the
-    brute-force path (differential test).
-
-    ``prefix_filter=False`` keeps the naive full posting self-join (the
-    r01 baseline; useful as a differential check);
-    ``position_filter=False`` keeps plain AllPairs (the r1-r6 path, the
-    candidate-count differential for the measured reduction).
+    brute-force shingle-set join (``reference_shingle_pairs`` in
+    tests/test_datapipe.py, differential at several thresholds).
 
     ``shingled``: an already-pinned :func:`shingle_array_table` of the
     SAME (df, id_col, text_col, n) — callers that also shingle the
     corpus elsewhere (the recall-eval head's banding stage) pass it so
-    one pinned table feeds both pipelines (r11).
+    one pinned table feeds both pipelines (r11).  A table built with a
+    different n raises ``ValueError`` (:func:`_check_shingle_n`).
     """
     # the shingle-array table feeds five plan branches (df frequency,
     # prefix, both candidate sides, both verify sides) — pin it once so
@@ -744,23 +762,11 @@ def ngram_jaccard_pairs(
     # (same rationale as containment_pairs; measured on the planted
     # corpus at sf0.1: 20.4 -> ~4 s, where the upstream derivation is
     # nontrivial).  Lazy: plan construction stays job-free.
-    docs = shingled if shingled is not None else shingle_array_table(df, id_col, text_col, n)
+    if shingled is not None:
+        docs = _check_shingle_n(shingled, n, "ngram_jaccard_pairs")
+    else:
+        docs = shingle_array_table(df, id_col, text_col, n)
     sh = docs.select("_id", "_sz", F.explode("_sh").alias("_s"))
-    if not prefix_filter:
-        l, r = sh.alias("l"), sh.alias("r")
-        inter = (
-            l.join(r, (F.col("l._s") == F.col("r._s")) & (F.col("l._id") < F.col("r._id")))
-            .groupBy(F.col("l._id").alias("id_a"), F.col("r._id").alias("id_b"))
-            .agg(F.count(F.lit(1)).alias("_inter"), F.first("l._sz").alias("_sza"), F.first("r._sz").alias("_szb"))
-        )
-        return (
-            inter.withColumn(
-                "jaccard",
-                F.col("_inter") / (F.col("_sza") + F.col("_szb") - F.col("_inter")),
-            )
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard")
-        )
     dfreq = sh.groupBy("_s").agg(F.count(F.lit(1)).alias("_df"))
     w = Window.partitionBy("_id").orderBy(F.col("_df").asc(), F.col("_s").asc())
     prefix = (
@@ -792,18 +798,17 @@ def ngram_jaccard_pairs(
         )
         .filter(F.col("id_a") < F.col("id_b"))
     )
-    if position_filter:
-        alpha = _jaccard_alpha(threshold, F.col("_sza"), F.col("_szb"))
-        raw = raw.filter(
-            F.least("_sza", "_szb")
-            >= F.ceil(F.lit(threshold) * F.greatest("_sza", "_szb") - F.lit(1e-9))
-        ).filter(
-            F.lit(1)
-            + F.least(
-                F.col("_sza") - F.col("_rna"), F.col("_szb") - F.col("_rnb")
-            )
-            >= alpha
+    alpha = _jaccard_alpha(threshold, F.col("_sza"), F.col("_szb"))
+    raw = raw.filter(
+        F.least("_sza", "_szb")
+        >= F.ceil(F.lit(threshold) * F.greatest("_sza", "_szb") - F.lit(1e-9))
+    ).filter(
+        F.lit(1)
+        + F.least(
+            F.col("_sza") - F.col("_rna"), F.col("_szb") - F.col("_rnb")
         )
+        >= alpha
+    )
     cand = raw.select("id_a", "id_b").distinct()
     a = docs.select(F.col("_id").alias("id_a"), F.col("_sh").alias("_sha"), F.col("_sz").alias("_sza"))
     b = docs.select(F.col("_id").alias("id_b"), F.col("_sh").alias("_shb"), F.col("_sz").alias("_szb"))
@@ -862,7 +867,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return rewired.union(self_links).distinct()
 
 
-def connected_components_star(
+def dedup_clusters(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
@@ -870,12 +875,13 @@ def connected_components_star(
     id_b: str = "id_b",
     max_iter: int = 25,
 ) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    contraction (Kiveris et al., SoCC'14) — the 100 TB scale path.
+    """Connected components over near-dup pairs: every document gets
+    ``cluster_id`` = the smallest doc id reachable through the pair graph
+    (its own id for singletons) — the final "assemble duplicate groups"
+    step of a dedup pipeline (keep ``min(id)`` per cluster, drop the rest).
 
-    Same contract as ``dedup_clusters``: every document gets
-    ``cluster_id`` = the smallest doc id reachable through the pair
-    graph (own id for singletons).  Unlike min-label propagation
+    Alternating large-star / small-star contraction (Kiveris et al.,
+    SoCC'14) — the 100 TB scale path.  Unlike min-label propagation
     (O(component diameter) rounds), star contraction halves path
     lengths every round and converges in O(log n) rounds on ANY graph —
     a 10M-node chain finishes in ~25 rounds instead of 10M.  Each round
@@ -886,6 +892,7 @@ def connected_components_star(
     Convergence = the edge set reached a fixed point (stars pointing at
     component minimums), detected by an order-insensitive (count,
     hash-sum) fingerprint — one scalar agg per round, no edge collect.
+    Raises instead of returning partial labels past ``max_iter``.
     """
     edges = (
         pairs.select(F.col(id_a).cast("long").alias("src"), F.col(id_b).cast("long").alias("dst"))
@@ -913,81 +920,6 @@ def connected_components_star(
             F.coalesce(F.col("_label"), F.col(id_col)).alias("cluster_id"),
         )
     )
-
-
-def dedup_clusters(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 25,
-    method: str = "star",
-) -> DataFrame:
-    """Connected components over near-dup pairs: every document gets
-    ``cluster_id`` = the smallest doc id reachable through the pair graph
-    (its own id for singletons) — the final "assemble duplicate groups"
-    step of a dedup pipeline (keep ``min(id)`` per cluster, drop the rest).
-
-    ``method="star"`` (default) delegates to
-    ``connected_components_star`` — O(log n)-round large-star/small-star
-    contraction, correct and fast on ANY graph shape.
-    ``method="propagate"`` keeps iterative min-label propagation: each
-    round a vertex takes the min of its label and its neighbors' labels;
-    O(component diameter) rounds (fine for shallow star-like near-dup
-    clusters, pathological on long chains).  Per propagation round: one
-    join + one groupBy = two shuffles over the EDGE set only;
-    ``localCheckpoint`` truncates the growing lineage so round N doesn't
-    replay rounds 1..N-1.  Both methods produce identical labels
-    (property-tested on chains/cliques/random graphs).
-    """
-    if method == "star":
-        return connected_components_star(
-            docs, pairs, id_col=id_col, id_a=id_a, id_b=id_b, max_iter=max_iter
-        )
-    if method != "propagate":
-        raise ValueError(f"unknown method {method!r} (use 'star' or 'propagate')")
-    fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    rev = pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-    edges = fwd.unionByName(rev).localCheckpoint(eager=True)
-    labels = docs.select(F.col(id_col).alias("id"), F.col(id_col).alias("label"))
-    for _ in range(max_iter):
-        neigh = (
-            edges.join(
-                labels.select(F.col("id").alias("dst"), F.col("label").alias("_dl")),
-                "dst",
-            )
-            .groupBy("src")
-            .agg(F.min("_dl").alias("nlabel"))
-        )
-        new = (
-            labels.join(neigh.select(F.col("src").alias("id"), "nlabel"), "id", "left")
-            .select(
-                "id",
-                F.least(F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))).alias(
-                    "label"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-        n_changed = (
-            new.select(F.col("id"), F.col("label").alias("_new"))
-            .join(labels, "id")
-            .filter(F.col("_new") != F.col("label"))
-            .count()
-        )
-        labels = new
-        if n_changed == 0:
-            break
-    else:
-        # silent partial labels are a correctness hazard (a node ends up
-        # labeled with the min id within max_iter hops, not its
-        # component's); long-diameter graphs should use method="star"
-        raise RuntimeError(
-            f"min-label propagation did not converge in {max_iter} rounds; "
-            "use method='star' (O(log n) rounds) or raise max_iter"
-        )
-    return labels.select(F.col("id").alias(id_col), F.col("label").alias("cluster_id"))
 
 
 def canonical_pick(
@@ -1254,7 +1186,6 @@ def simhash_idf_chunks(
     text_col: str,
     chunks: int = 8,
     quant: int = 1_000_000,
-    hash_family: str = "md5",
     max_distinct_dfs: int = 2_000_000,
 ) -> DataFrame:
     """IDF-weighted SimHash signatures (Charikar STOC'02 with the tf-idf
@@ -1279,11 +1210,9 @@ def simhash_idf_chunks(
     int64 — order-insensitive, partitioning-invariant, and replayable
     bitwise by a DuckDB oracle sharing the libm.
 
-    ``hash_family="md5"`` takes each token's 64 signature bits from the
-    hex digits of ``md5(token)`` (pure integer extraction — the
-    cross-engine family, same rationale as ``simhash_md5_chunks``);
-    ``"xxhash64"`` is the engine-native scale path (same pipeline, not
-    oracle-replayable).
+    Each token's 64 signature bits come from the hex digits of
+    ``md5(token)`` (pure integer extraction — the cross-engine family,
+    same rationale as ``simhash_md5_chunks``).
 
     Emits (_id, sig: array<int> of length ``chunks``) — the signature as
     ``chunks`` ``64/chunks``-bit pigeonhole keys.  Plan: one (id, term)
@@ -1295,8 +1224,6 @@ def simhash_idf_chunks(
 
     if 64 % chunks:
         raise ValueError(f"chunks must divide 64, got {chunks}")
-    if hash_family not in ("md5", "xxhash64"):
-        raise ValueError(f"hash_family must be md5|xxhash64, got {hash_family!r}")
     bits_per = 64 // chunks
 
     terms = df.select(
@@ -1346,49 +1273,31 @@ def simhash_idf_chunks(
     # that is a vocab-vs-corpus reduction (~20k vs ~400k rows at
     # zipf0.1) with no new exchange (r10 guide §1.2 per-task work;
     # values identical, term-functional)
-    if hash_family == "md5":
-        _hw1, _hw2 = _md5_bit_words(F.md5("_t"))
-        # parse the digest into two bit words ONCE per distinct term;
-        # the 64 vote probes are then shift+mask (see _md5_bit_words)
-        df_t = df_t.select("_t", "_df", _hw1.alias("_w1"), _hw2.alias("_w2"))
-        # df_t is the DISTINCT-TERM table — vocab-sized, and this
-        # operator's own determinism contract already driver-bounds the
-        # vocabulary statistics (the distinct-df collect above).  The
-        # planner cannot see that: both join sides are RDD-backed after
-        # the checkpoint, and its estimate picked the CORPUS side as the
-        # broadcast build (r11 SQL-metrics audit on zipf0.1: a 383k-row
-        # tf broadcast per consumer; scoring exec 2.5 s -> 1.5 s with
-        # the hint).  Guide §3.1: hint the side we KNOW is small.
-        hashed = (
-            tf.join(F.broadcast(df_t), "_t")
-            .join(F.broadcast(idf), "_df")
-            .select("_id", (F.col("_tf") * F.col("_wq")).alias("_w"), "_w1", "_w2")
-        )
+    _hw1, _hw2 = _md5_bit_words(F.md5("_t"))
+    # parse the digest into two bit words ONCE per distinct term;
+    # the 64 vote probes are then shift+mask (see _md5_bit_words)
+    df_t = df_t.select("_t", "_df", _hw1.alias("_w1"), _hw2.alias("_w2"))
+    # df_t is the DISTINCT-TERM table — vocab-sized, and this
+    # operator's own determinism contract already driver-bounds the
+    # vocabulary statistics (the distinct-df collect above).  The
+    # planner cannot see that: both join sides are RDD-backed after
+    # the checkpoint, and its estimate picked the CORPUS side as the
+    # broadcast build (r11 SQL-metrics audit on zipf0.1: a 383k-row
+    # tf broadcast per consumer; scoring exec 2.5 s -> 1.5 s with
+    # the hint).  Guide §3.1: hint the side we KNOW is small.
+    hashed = (
+        tf.join(F.broadcast(df_t), "_t")
+        .join(F.broadcast(idf), "_df")
+        .select("_id", (F.col("_tf") * F.col("_wq")).alias("_w"), "_w1", "_w2")
+    )
 
-        def bit(p: int):
-            return _md5_bit(F.col("_w1"), F.col("_w2"), p)
+    def bit(p: int):
+        return _md5_bit(F.col("_w1"), F.col("_w2"), p)
 
-        votes = [
-            F.sum(F.when(bit(p) == 1, F.col("_w")).otherwise(-F.col("_w"))).alias(f"_v{p}")
-            for p in range(64)
-        ]
-    else:
-        df_t = df_t.select("_t", "_df", F.xxhash64("_t").alias("_h"))
-        # same broadcast rationale as the md5 branch above
-        hashed = (
-            tf.join(F.broadcast(df_t), "_t")
-            .join(F.broadcast(idf), "_df")
-            .select("_id", (F.col("_tf") * F.col("_wq")).alias("_w"), "_h")
-        )
-        votes = [
-            F.sum(
-                F.when(
-                    F.col("_h").bitwiseAND(F.shiftleft(F.lit(1).cast("long"), p)) != 0,
-                    F.col("_w"),
-                ).otherwise(-F.col("_w"))
-            ).alias(f"_v{p}")
-            for p in range(64)
-        ]
+    votes = [
+        F.sum(F.when(bit(p) == 1, F.col("_w")).otherwise(-F.col("_w"))).alias(f"_v{p}")
+        for p in range(64)
+    ]
     ckeys = [
         _reduce(
             lambda x, y: x + y,
@@ -1410,7 +1319,6 @@ def simhash_idf_pairs(
     chunks: int = 8,
     max_bucket_size: int = 1000,
     quant: int = 1_000_000,
-    hash_family: str = "md5",
 ) -> DataFrame:
     """Near-dup pairs on the IDF-weighted SimHash: chunk-pigeonhole
     candidates + in-bucket hamming verify — the `simhash_md5_pairs`
@@ -1425,9 +1333,7 @@ def simhash_idf_pairs(
     non-planted pairs (see `simhash_idf_chunks`).  Returns
     (id_a, id_b, hamming).
     """
-    sig = simhash_idf_chunks(
-        df, id_col, text_col, chunks=chunks, quant=quant, hash_family=hash_family
-    )
+    sig = simhash_idf_chunks(df, id_col, text_col, chunks=chunks, quant=quant)
     chunked = sig.select("_id", "sig", F.posexplode("sig").alias("chunk", "ckey"))
     buckets = (
         chunked.groupBy("chunk", "ckey")
@@ -1548,8 +1454,6 @@ def containment_pairs(
     text_col: str,
     n: int = 1,
     threshold: float = 0.9,
-    prefix_filter: bool = True,
-    position_filter: bool = True,
 ) -> DataFrame:
     """EXACT directed n-gram containment ``C(A -> B) = |A ∩ B| / |A|``
     for every ordered pair with ``C >= threshold`` — the quote / subset
@@ -1570,9 +1474,10 @@ def containment_pairs(
     only; stopword-grade postings are still skipped because A's rare
     prefix seldom lands on them.  Candidates verify with a full set
     intersection, so output is identical to the naive quadratic path
-    (``prefix_filter=False`` keeps that baseline for differentials).
+    (the brute-force ``reference_shingle_pairs`` in
+    tests/test_datapipe.py).
 
-    ``position_filter`` (PPJoin, Xiao et al., WWW'08, containment form —
+    A position filter (PPJoin, Xiao et al., WWW'08, containment form —
     VERDICT r6 item 4) prunes each probe-vs-posting match before the
     distinct + verify join: with ``alpha = ceil(t·|A|)`` (epsilon-
     guarded, :func:`_containment_alpha`), a qualifying pair needs
@@ -1597,52 +1502,41 @@ def containment_pairs(
     # materialization; lazy so plain plan construction stays job-free)
     docs = docs.localCheckpoint(eager=False)
     sh = docs.select("_id", "_sz", F.explode("_sh").alias("_s"))
-    if prefix_filter:
-        dfreq = sh.groupBy("_s").agg(F.count(F.lit(1)).alias("_df"))
-        w = Window.partitionBy("_id").orderBy(F.col("_df").asc(), F.col("_s").asc())
-        # one rarity rank feeds BOTH the probe prefix and (under the
-        # position filter) the posting side — pin it lazily so the
-        # window shuffle runs once, not per branch
-        ranked = (
-            sh.join(dfreq, "_s")
-            .withColumn("_rn", F.row_number().over(w))
-            .select("_id", "_sz", "_s", "_rn")
-            .localCheckpoint(eager=False)
-        )
-        probe = ranked.filter(
-            F.col("_rn") <= _prefix_keep(threshold, F.col("_sz"))
-        ).select(
-            F.col("_id").alias("id_a"), "_s",
-            F.col("_rn").alias("_rna"), F.col("_sz").alias("_sza"),
-        )
-        if position_filter:
-            posting = ranked.select(
-                F.col("_id").alias("id_b"), "_s",
-                F.col("_rn").alias("_rnb"), F.col("_sz").alias("_szb"),
+    dfreq = sh.groupBy("_s").agg(F.count(F.lit(1)).alias("_df"))
+    w = Window.partitionBy("_id").orderBy(F.col("_df").asc(), F.col("_s").asc())
+    # one rarity rank feeds BOTH the probe prefix and the position-
+    # filtered posting side — pin it lazily so the window shuffle runs
+    # once, not per branch
+    ranked = (
+        sh.join(dfreq, "_s")
+        .withColumn("_rn", F.row_number().over(w))
+        .select("_id", "_sz", "_s", "_rn")
+        .localCheckpoint(eager=False)
+    )
+    probe = ranked.filter(
+        F.col("_rn") <= _prefix_keep(threshold, F.col("_sz"))
+    ).select(
+        F.col("_id").alias("id_a"), "_s",
+        F.col("_rn").alias("_rna"), F.col("_sz").alias("_sza"),
+    )
+    posting = ranked.select(
+        F.col("_id").alias("id_b"), "_s",
+        F.col("_rn").alias("_rnb"), F.col("_sz").alias("_szb"),
+    )
+    alpha = _containment_alpha(threshold, F.col("_sza"))
+    raw = (
+        probe.join(posting, "_s")
+        .filter(F.col("id_a") != F.col("id_b"))
+        .filter(F.col("_szb") >= alpha)
+        .filter(
+            F.lit(1)
+            + F.least(
+                F.col("_sza") - F.col("_rna"),
+                F.col("_szb") - F.col("_rnb"),
             )
-            alpha = _containment_alpha(threshold, F.col("_sza"))
-            raw = (
-                probe.join(posting, "_s")
-                .filter(F.col("id_a") != F.col("id_b"))
-                .filter(F.col("_szb") >= alpha)
-                .filter(
-                    F.lit(1)
-                    + F.least(
-                        F.col("_sza") - F.col("_rna"),
-                        F.col("_szb") - F.col("_rnb"),
-                    )
-                    >= alpha
-                )
-            )
-        else:
-            raw = probe.join(sh.select(F.col("_id").alias("id_b"), "_s"), "_s").filter(
-                F.col("id_a") != F.col("id_b")
-            )
-    else:
-        probe = sh.select(F.col("_id").alias("id_a"), "_s")
-        raw = probe.join(sh.select(F.col("_id").alias("id_b"), "_s"), "_s").filter(
-            F.col("id_a") != F.col("id_b")
+            >= alpha
         )
+    )
     cand = raw.select("id_a", "id_b").distinct()
     a = docs.select(
         F.col("_id").alias("id_a"), F.col("_sh").alias("_sha"), F.col("_sz").alias("_sza")

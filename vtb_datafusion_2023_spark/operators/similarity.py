@@ -453,9 +453,12 @@ def quantize_int8(
 # one (m x k) lookup table of subspace distances; each corpus row costs
 # m table lookups instead of d multiplies.
 #
-# Everything below is JVM array expressions with left-fold sums -- no
-# Python in the data path, bitwise partitioning-invariant, and exactly
-# replayable in DuckDB (suite `pq_encode_codes` / `ann_pq_topk`).
+# Encoding and scoring run batched in numpy inside ``mapInPandas`` with
+# the fold orders and tie-breaks of the DuckDB oracle's array
+# expressions -- bitwise partitioning-invariant and exactly replayable
+# (suite `pq_encode_codes` / `ann_pq_topk` / `ann_lsh_pq_topk`); the
+# all-Catalyst expression forms are the bitwise test references in
+# tests/test_similarity.py.
 
 
 def pq_formula_codebook_sql(m: int = 8, k: int = 16, subdim: int = 8) -> str:
@@ -485,21 +488,10 @@ def pq_codebook_literal_sql(codebooks) -> str:
     return "array(" + ", ".join(subs) + ")"
 
 
-def _pq_sub_dists(vec_sql: str, sub: int, subdim: int, cb_sql: str) -> str:
-    """Distances of one subvector to every centroid of its codebook:
-    left-fold of squared differences in index order (engine-shared)."""
-    return (
-        f"transform(element_at({cb_sql}, {sub + 1}), cv -> "
-        f"aggregate(zip_with(slice({vec_sql}, {sub * subdim + 1}, {subdim}), cv, "
-        f"(x, y) -> (cast(x as double) - y) * (cast(x as double) - y)), "
-        f"cast(0 as double), (a, b) -> a + b))"
-    )
-
-
 def _pq_codebook_numpy(spark, cb_sql: str):
     """Materialize a codebook SQL expression to (m, k, subdim) float64 —
-    one driver-side row, so the Arrow path scores against the exact same
-    constants as the expression/oracle path."""
+    one driver-side row, so the numpy kernels score against the exact
+    same constants as the oracle's expression."""
     import numpy as np
 
     row = spark.range(1).select(F.expr(cb_sql).alias("cb")).first()
@@ -508,8 +500,8 @@ def _pq_codebook_numpy(spark, cb_sql: str):
 
 def _pq_encode_numpy(x, books):
     """Sequential-fold subspace argmin: same summation order (j
-    ascending from a 0.0 seed) and tie-break (lowest code) as the SQL
-    expression path, hence bitwise-identical codes."""
+    ascending from a 0.0 seed) and tie-break (lowest code) as the
+    oracle's SQL expression, hence bitwise-identical codes."""
     import numpy as np
 
     m, k, subdim = books.shape
@@ -533,29 +525,16 @@ def pq_encode(
     subdim: int = 8,
     codebook_sql: str | None = None,
     out_col: str = "codes",
-    method: str = "arrow",
 ) -> DataFrame:
     """Encode vectors to m centroid codes (argmin squared distance per
-    subspace; ties break to the lowest code).  Shuffle-free map either
-    way; ``method``:
-
-    - ``'arrow'`` (default): vectorized numpy inside ``mapInPandas`` —
-      the m*k interpreted lambda folds of the expression path cost
-      ~0.5 ms/row, the batched numpy equivalent ~5 us/row.  Fold order
-      and tie-break replicate the SQL exactly (differentially tested),
-      so the output — and the DuckDB oracle — stay bitwise identical.
-    - ``'expr'``: pure Catalyst array expressions, zero Python workers.
+    subspace; ties break to the lowest code).  A shuffle-free map of
+    vectorized numpy inside ``mapInPandas``: the m*k interpreted lambda
+    folds of the all-Catalyst form cost ~0.5 ms/row, the batched numpy
+    equivalent ~5 us/row.  Fold order and tie-break replicate the SQL
+    exactly (differentially tested), so the output — and the DuckDB
+    oracle — stay bitwise identical.
     """
     cb = codebook_sql or pq_formula_codebook_sql(m, k, subdim)
-    if method == "expr":
-        per_sub = []
-        for sub in range(m):
-            d = _pq_sub_dists(vec_col, sub, subdim, cb)
-            per_sub.append(f"(array_position({d}, array_min({d})) - 1)")
-        return df.select(
-            id_col, F.expr("array(" + ", ".join(per_sub) + ")").cast("array<int>").alias(out_col)
-        )
-
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -593,86 +572,67 @@ def pq_topk(
     k: int = 16,
     subdim: int = 8,
     codebook_sql: str | None = None,
-    method: str = "arrow",
 ) -> DataFrame:
     """ADC top-k: per-query (m x k) LUT of subspace distances against the
     PQ-encoded corpus; a corpus row costs m lookups + a left-fold sum.
 
-    ``method='arrow'`` (default) encodes and scores batched in numpy —
-    per Arrow batch it emits only the k best (adist, neighbor) per query
-    (argpartition-style candidate pruning, the ``knn_join_blocked``
-    shape), so the shuffle carries O(batches * Q * k) rows, never the
-    corpus.  ``method='expr'`` stays pure-JVM.  Both share fold orders
-    with the DuckDB oracle, and the final (adist, neighbor_id) window
-    makes the cut deterministic — outputs are bitwise identical.
+    Encodes and scores batched in numpy — per Arrow batch it emits only
+    the k best (adist, neighbor) per query (argpartition-style candidate
+    pruning, the ``knn_join_blocked`` shape), so the shuffle carries
+    O(batches * Q * k) rows, never the corpus.  Fold orders match the
+    DuckDB oracle, and the final (adist, neighbor_id) window makes the
+    cut deterministic — outputs are bitwise identical.
     """
     cb = codebook_sql or pq_formula_codebook_sql(m, k, subdim)
-    if method == "expr":
-        codes = pq_encode(
-            corpus, id_col, vec_col, m, k, subdim, cb, method="expr"
-        ).withColumnRenamed(id_col, "neighbor_id")
-        luts = "array(" + ", ".join(_pq_sub_dists(vec_col, s, subdim, cb) for s in range(m)) + ")"
-        q = queries.select(F.col(id_col).alias("query_id"), F.expr(luts).alias("qlut"))
-        adist = (
-            f"aggregate(transform(sequence(1, {m}), s -> "
-            f"element_at(element_at(qlut, s), element_at(codes, s) + 1)), "
-            f"cast(0 as double), (a, b) -> a + b)"
-        )
-        scored = (
-            codes.join(broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-            .withColumn("adist", F.expr(adist))
-            .select("query_id", "neighbor_id", "adist")
-        )
-    else:
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql import types as T
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
 
-        books = _pq_codebook_numpy(corpus.sparkSession, cb)
-        q_rows = queries.select(id_col, vec_col).collect()
-        if not q_rows:
-            return corpus.sparkSession.createDataFrame(
-                [], schema="query_id bigint, neighbor_id bigint, rank int, adist double"
-            )
-        q_ids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
-        q_mat = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
-        # per-query LUT with the oracle's fold order (j ascending, 0 seed)
-        luts = np.zeros((len(q_ids), m, k))
-        for sub in range(m):
-            for j in range(subdim):
-                diff = q_mat[:, sub * subdim + j, None] - books[None, sub, :, j]
-                luts[:, sub, :] += diff * diff
-        b = corpus.sparkSession.sparkContext.broadcast((q_ids, luts, books))
-        schema = T.StructType(
-            [
-                T.StructField("query_id", T.LongType(), False),
-                T.StructField("neighbor_id", T.LongType(), False),
-                T.StructField("adist", T.DoubleType(), True),
-            ]
+    books = _pq_codebook_numpy(corpus.sparkSession, cb)
+    q_rows = queries.select(id_col, vec_col).collect()
+    if not q_rows:
+        return corpus.sparkSession.createDataFrame(
+            [], schema="query_id bigint, neighbor_id bigint, rank int, adist double"
         )
+    q_ids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
+    q_mat = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
+    # per-query LUT with the oracle's fold order (j ascending, 0 seed)
+    luts = np.zeros((len(q_ids), m, k))
+    for sub in range(m):
+        for j in range(subdim):
+            diff = q_mat[:, sub * subdim + j, None] - books[None, sub, :, j]
+            luts[:, sub, :] += diff * diff
+    b = corpus.sparkSession.sparkContext.broadcast((q_ids, luts, books))
+    schema = T.StructType(
+        [
+            T.StructField("query_id", T.LongType(), False),
+            T.StructField("neighbor_id", T.LongType(), False),
+            T.StructField("adist", T.DoubleType(), True),
+        ]
+    )
 
-        def run(batches):
-            qi, lut, bk = b.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                ids = pdf[id_col].to_numpy(dtype=np.int64)
-                x = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-                codes = _pq_encode_numpy(x, bk)
-                acc = np.zeros((len(ids), len(qi)))
-                for sub in range(bk.shape[0]):  # s ascending: the SQL fold order
-                    acc += lut[:, sub, codes[:, sub]].T
-                out: dict[str, list] = {"query_id": [], "neighbor_id": [], "adist": []}
-                for qpos in range(len(qi)):
-                    mask = ids != qi[qpos]
-                    cand_ids, cand_d = ids[mask], acc[mask, qpos]
-                    order = np.lexsort((cand_ids, cand_d))[:k_neighbors]
-                    out["query_id"].extend([int(qi[qpos])] * len(order))
-                    out["neighbor_id"].extend(cand_ids[order].tolist())
-                    out["adist"].extend(cand_d[order].tolist())
-                yield pd.DataFrame(out)
+    def run(batches):
+        qi, lut, bk = b.value
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            ids = pdf[id_col].to_numpy(dtype=np.int64)
+            x = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            codes = _pq_encode_numpy(x, bk)
+            acc = np.zeros((len(ids), len(qi)))
+            for sub in range(bk.shape[0]):  # s ascending: the SQL fold order
+                acc += lut[:, sub, codes[:, sub]].T
+            out: dict[str, list] = {"query_id": [], "neighbor_id": [], "adist": []}
+            for qpos in range(len(qi)):
+                mask = ids != qi[qpos]
+                cand_ids, cand_d = ids[mask], acc[mask, qpos]
+                order = np.lexsort((cand_ids, cand_d))[:k_neighbors]
+                out["query_id"].extend([int(qi[qpos])] * len(order))
+                out["neighbor_id"].extend(cand_ids[order].tolist())
+                out["adist"].extend(cand_d[order].tolist())
+            yield pd.DataFrame(out)
 
-        scored = corpus.select(id_col, vec_col).mapInPandas(run, schema=schema)
+    scored = corpus.select(id_col, vec_col).mapInPandas(run, schema=schema)
     w = Window.partitionBy("query_id").orderBy(F.col("adist").asc(), F.col("neighbor_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -758,7 +718,6 @@ def lsh_pq_topk(
     n_centroids: int = 16,
     subdim: int = 8,
     codebook_sql: str | None = None,
-    method: str = "arrow",
 ) -> DataFrame:
     """Two-stage production retrieval: LSH bucket recall -> PQ/ADC cheap
     scoring -> exact cosine rerank of the short list.
@@ -771,118 +730,83 @@ def lsh_pq_topk(
     (adist|cos, neighbor_id) tie-breaks), so the whole pipeline replays
     bitwise in the DuckDB oracle (suite ``ann_lsh_pq_topk``).
 
-    ``method='arrow'`` (default) runs bucket match + encode + ADC +
-    per-batch shortlist pruning in ONE numpy pass over the corpus scan
-    (query buckets/LUTs precomputed driver-side with the identical
-    integer-plane and fold arithmetic — differentially tested bitwise
-    against the JVM signatures); only the O(Q * rerank) shortlist
-    reaches the JVM rerank join.  ``method='expr'`` is the all-Catalyst
-    formulation (zero Python, but m*k interpreted lambdas per row).
+    Bucket match + encode + ADC + per-batch shortlist pruning run in ONE
+    numpy pass over the corpus scan (query buckets/LUTs precomputed
+    driver-side with the identical integer-plane and fold arithmetic —
+    differentially tested bitwise against the JVM signatures and the
+    all-Catalyst form, which costs m*k interpreted lambdas per row);
+    only the O(Q * rerank) shortlist reaches the JVM rerank join.
     """
     cb = codebook_sql or pq_formula_codebook_sql(m, n_centroids, subdim)
-    if method == "expr":
-        enc_cols = []
-        for sub in range(m):
-            d = _pq_sub_dists("_cv", sub, subdim, cb)
-            enc_cols.append(f"(array_position({d}, array_min({d})) - 1)")
-        c = (
-            corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
-            .withColumn("_bkt", lsh_signature(F.col("_cv"), n_planes))
-            .withColumn(
-                "_codes", F.expr("array(" + ", ".join(enc_cols) + ")").cast("array<int>")
-            )
-        )
-        luts = "array(" + ", ".join(_pq_sub_dists("_qv", s, subdim, cb) for s in range(m)) + ")"
-        q = (
-            queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
-            .withColumn("_bkt", lsh_signature(F.col("_qv"), n_planes))
-            .withColumn("_qlut", F.expr(luts))
-        )
-        adist = (
-            f"aggregate(transform(sequence(1, {m}), s -> "
-            f"element_at(element_at(_qlut, s), element_at(_codes, s) + 1)), "
-            f"cast(0 as double), (a, b) -> a + b)"
-        )
-        cand = (
-            c.join(broadcast(q), "_bkt")
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .withColumn("_adist", F.expr(adist))
-        )
-        w_adc = Window.partitionBy("query_id").orderBy(
-            F.col("_adist").asc(), F.col("neighbor_id").asc()
-        )
-        short = cand.withColumn("_rr", F.row_number().over(w_adc)).filter(F.col("_rr") <= rerank)
-        rescored = short.withColumn("cos", cosine(F.col("_qv"), F.col("_cv")))
-    else:
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql import types as T
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
 
-        books = _pq_codebook_numpy(corpus.sparkSession, cb)
-        q_rows = queries.select(id_col, vec_col).collect()
-        if not q_rows:
-            return corpus.sparkSession.createDataFrame(
-                [], schema="query_id bigint, neighbor_id bigint, rank int, cos double"
-            )
-        q_ids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
-        q_mat = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
-        q_bkt = _lsh_signature_numpy(q_mat, n_planes)
-        luts_np = np.zeros((len(q_ids), m, n_centroids))
-        for sub in range(m):
-            for j in range(subdim):
-                diff = q_mat[:, sub * subdim + j, None] - books[None, sub, :, j]
-                luts_np[:, sub, :] += diff * diff
-        b = corpus.sparkSession.sparkContext.broadcast(
-            (q_ids, q_bkt, luts_np, books, n_planes)
+    books = _pq_codebook_numpy(corpus.sparkSession, cb)
+    q_rows = queries.select(id_col, vec_col).collect()
+    if not q_rows:
+        return corpus.sparkSession.createDataFrame(
+            [], schema="query_id bigint, neighbor_id bigint, rank int, cos double"
         )
-        schema = T.StructType(
-            [
-                T.StructField("query_id", T.LongType(), False),
-                T.StructField("neighbor_id", T.LongType(), False),
-                T.StructField("_adist", T.DoubleType(), True),
-            ]
-        )
+    q_ids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
+    q_mat = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
+    q_bkt = _lsh_signature_numpy(q_mat, n_planes)
+    luts_np = np.zeros((len(q_ids), m, n_centroids))
+    for sub in range(m):
+        for j in range(subdim):
+            diff = q_mat[:, sub * subdim + j, None] - books[None, sub, :, j]
+            luts_np[:, sub, :] += diff * diff
+    b = corpus.sparkSession.sparkContext.broadcast(
+        (q_ids, q_bkt, luts_np, books, n_planes)
+    )
+    schema = T.StructType(
+        [
+            T.StructField("query_id", T.LongType(), False),
+            T.StructField("neighbor_id", T.LongType(), False),
+            T.StructField("_adist", T.DoubleType(), True),
+        ]
+    )
 
-        def run(batches):
-            qi, qb, lut, bk, planes = b.value
-            for pdf in batches:
-                if not len(pdf):
+    def run(batches):
+        qi, qb, lut, bk, planes = b.value
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            ids = pdf[id_col].to_numpy(dtype=np.int64)
+            x = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            cbkt = _lsh_signature_numpy(x, planes)
+            codes = _pq_encode_numpy(x, bk)
+            out: dict[str, list] = {"query_id": [], "neighbor_id": [], "_adist": []}
+            for qpos in range(len(qi)):
+                mask = (cbkt == qb[qpos]) & (ids != qi[qpos])
+                if not mask.any():
                     continue
-                ids = pdf[id_col].to_numpy(dtype=np.int64)
-                x = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-                cbkt = _lsh_signature_numpy(x, planes)
-                codes = _pq_encode_numpy(x, bk)
-                out: dict[str, list] = {"query_id": [], "neighbor_id": [], "_adist": []}
-                for qpos in range(len(qi)):
-                    mask = (cbkt == qb[qpos]) & (ids != qi[qpos])
-                    if not mask.any():
-                        continue
-                    cids, ccodes = ids[mask], codes[mask]
-                    acc = np.zeros(len(cids))
-                    for sub in range(bk.shape[0]):  # s ascending: SQL fold order
-                        acc += lut[qpos, sub, ccodes[:, sub]]
-                    order = np.lexsort((cids, acc))[:rerank]
-                    out["query_id"].extend([int(qi[qpos])] * len(order))
-                    out["neighbor_id"].extend(cids[order].tolist())
-                    out["_adist"].extend(acc[order].tolist())
-                yield pd.DataFrame(out)
+                cids, ccodes = ids[mask], codes[mask]
+                acc = np.zeros(len(cids))
+                for sub in range(bk.shape[0]):  # s ascending: SQL fold order
+                    acc += lut[qpos, sub, ccodes[:, sub]]
+                order = np.lexsort((cids, acc))[:rerank]
+                out["query_id"].extend([int(qi[qpos])] * len(order))
+                out["neighbor_id"].extend(cids[order].tolist())
+                out["_adist"].extend(acc[order].tolist())
+            yield pd.DataFrame(out)
 
-        cand = corpus.select(id_col, vec_col).mapInPandas(run, schema=schema)
-        w_adc = Window.partitionBy("query_id").orderBy(
-            F.col("_adist").asc(), F.col("neighbor_id").asc()
-        )
-        short = (
-            cand.withColumn("_rr", F.row_number().over(w_adc))
-            .filter(F.col("_rr") <= rerank)
-            .select("query_id", "neighbor_id")
-        )
-        qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
-        cv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
-        rescored = (
-            cv.join(broadcast(short), "neighbor_id")
-            .join(broadcast(qv), "query_id")
-            .withColumn("cos", cosine(F.col("_qv"), F.col("_cv")))
-        )
+    cand = corpus.select(id_col, vec_col).mapInPandas(run, schema=schema)
+    w_adc = Window.partitionBy("query_id").orderBy(
+        F.col("_adist").asc(), F.col("neighbor_id").asc()
+    )
+    short = (
+        cand.withColumn("_rr", F.row_number().over(w_adc))
+        .filter(F.col("_rr") <= rerank)
+        .select("query_id", "neighbor_id")
+    )
+    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
+    cv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
+    rescored = (
+        cv.join(broadcast(short), "neighbor_id")
+        .join(broadcast(qv), "query_id")
+        .withColumn("cos", cosine(F.col("_qv"), F.col("_cv")))
+    )
     w_fin = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
     return (
         rescored.withColumn("rank", F.row_number().over(w_fin))
@@ -1025,7 +949,6 @@ def ivf_search_indexed(
 def embedding_gram(
     df: DataFrame,
     vec_col: str = "embedding",
-    method: str = "expr",
     dim: int | None = None,
 ) -> DataFrame:
     """Upper-triangular Gram matrix of an embedding column — the one-pass
@@ -1033,80 +956,41 @@ def embedding_gram(
     embedding space (e.g. the decorrelation step ahead of semantic dedup
     or IVF training).
 
-    Each row contributes its d(d+1)/2 upper-triangle component products
-    via an in-array double ``transform`` (no per-component self-join),
-    exploded into ONE hash aggregate keyed by (i, j): map-side partial
-    aggregation means the shuffle carries at most d(d+1)/2 rows per
-    task regardless of corpus size — the correct 100 TB shape for a
-    dense second-moment sum.  Accumulation uses the engine's fixed-point
-    ``sqlgen.fsum`` mode (micro-unit int64 partials): partial-aggregable,
-    partitioning-independent, bitwise cross-engine; per-product
-    quantization at 1e-6 keeps the RELATIVE error of an n-row moment
-    at ~5e-7/E[x_i x_j], far below what eigendecomposition-based
-    whitening is sensitive to.
+    Per Arrow batch, numpy forms the d(d+1)/2 upper-triangle component
+    products (one BLAS product block per row index, no per-component
+    self-join) and emits at most d(d+1)/2 partial rows; ONE hash
+    aggregate keyed by (i, j) merges them, so the shuffle carries at
+    most d(d+1)/2 rows per batch regardless of corpus size — the correct
+    100 TB shape for a dense second-moment sum.  Accumulation uses the
+    engine's fixed-point ``sqlgen.fsum`` mode: each product quantizes
+    through the IDENTICAL IEEE ops (floor(p + 0.5) / floor((p - hi) *
+    1e6 + 0.5)) into int64 hi/lo partials — integer-valued doubles cast
+    to int64 PER ELEMENT before the sum, so the exact envelope is
+    int64's 9.2e18 rather than float64's 2^53 — and the final merge and
+    double recombination reuse the ``fsum_merge``/``fsum_final`` SQL
+    text: partitioning-independent and bitwise equal to the DuckDB
+    oracle and to the all-Catalyst explode form (``reference_gram_expr``
+    in tests/test_similarity.py).  Per-product quantization at 1e-6
+    keeps the RELATIVE error of an n-row moment at ~5e-7/E[x_i x_j], far
+    below what eigendecomposition-based whitening is sensitive to.
 
     Returns ``(i, j, g, n)`` for ``0 <= i <= j < d`` — g the quantized
     product sum, n the contributing vector count (NULL embeddings drop).
 
-    ``method``: "expr" (default — pure JVM, the oracle-certifiable path)
-    or "arrow" (per-batch numpy outer products quantized with the SAME
-    floor arithmetic into the SAME int64 hi/lo partials, then the same
-    tiny (i, j) merge — bitwise equal by construction and pinned by
-    pytest; the BLAS constant makes it the throughput path for large
-    corpora, exactly the ``pq_encode`` expr/arrow precedent).
-
     ``dim``: expected vector size; ``None`` probes it from one row.  A
-    ragged vector fails LOUDLY on either path (the k-means rule —
-    clustering.py's dim guard): silently, ragged input would skew the
-    per-cell counts and corrupt the downstream whitening scale.
+    ragged vector fails LOUDLY (the k-means rule — clustering.py's dim
+    guard): silently, ragged input would skew the per-cell counts and
+    corrupt the downstream whitening scale.
     """
+    import numpy as np
+    import pandas as pd
+
     from .. import sqlgen
 
     nn = df.filter(F.col(vec_col).isNotNull())
     if dim is None:
         probe = nn.select(F.size(vec_col)).first()
-        if probe is None:  # empty corpus: empty gram, nothing to guard
-            dim = 0
-        else:
-            dim = int(probe[0])
-    guarded = (
-        f"case when size({vec_col}) = {dim} then {vec_col} "
-        f"else raise_error(concat('embedding_gram: expected dim {dim}, got "
-        f"vector of size ', cast(size({vec_col}) as string))) end"
-    )
-    if method == "arrow":
-        return _embedding_gram_arrow(nn, vec_col, dim)
-    if method != "expr":
-        raise ValueError(f"method must be 'expr' or 'arrow', got {method!r}")
-    tri = F.expr(
-        f"""flatten(transform({guarded}, (x, i) ->
-              transform(slice({vec_col}, i + 1, size({vec_col}) - i), (y, k) ->
-                struct(i as i, i + k as j,
-                       cast(x as double) * cast(y as double) as p))))"""
-    )
-    prods = nn.select(F.explode(tri).alias("t")).select(
-        F.col("t.i").alias("i"), F.col("t.j").alias("j"), F.col("t.p").alias("p")
-    )
-    return (
-        prods.groupBy("i", "j")
-        .agg(F.expr(sqlgen.fsum("p", "g")), F.count(F.lit(1)).alias("n"))
-    )
-
-
-def _embedding_gram_arrow(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
-    """numpy partial-state twin of the expr gram: per Arrow batch, the
-    upper-triangle products quantize through the IDENTICAL IEEE ops as
-    ``sqlgen.fsum`` (floor(p + 0.5) / floor((p - hi) * 1e6 + 0.5) —
-    integer-valued doubles cast to int64 PER ELEMENT before the sum,
-    matching the expr path's per-element bigint cast so both share the
-    same 9.2e18 exact envelope rather than float64's 2^53), emitting at
-    most d(d+1)/2 partial rows per batch; the final (i, j) aggregate and
-    double recombination reuse the ``fsum_merge``/``fsum_final`` SQL
-    text, so merged == expr-path bitwise."""
-    import numpy as np
-    import pandas as pd
-
-    from .. import sqlgen
+        dim = 0 if probe is None else int(probe[0])  # empty corpus: empty gram
 
     def _partials(batches):
         for pdf in batches:
@@ -1143,7 +1027,7 @@ def _embedding_gram_arrow(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
                 }
             )
 
-    part = df.select(vec_col).mapInPandas(
+    part = nn.select(vec_col).mapInPandas(
         _partials, schema="i int, j int, g_hi long, g_lo long, c long"
     )
     merged = part.groupBy("i", "j").agg(

@@ -198,7 +198,6 @@ def with_rolling_time(
     value_col: str,
     window: str = "24 hours",
     prefix: str = "tw",
-    interval_frame: bool = False,
 ) -> DataFrame:
     """Trailing TIME-window stats: sum/count/mean of ``value_col`` over
     the last ``window`` of event time per user (current row inclusive) —
@@ -208,32 +207,14 @@ def with_rolling_time(
     Implemented as a numeric RANGE frame over epoch seconds (engines
     agree on integer range bounds; interval RANGE frames differ across
     dialects).  One shuffle+sort on (user, time), state is O(rows in the
-    window) per key — no self-join blowup at 100 TB.
-
-    ``interval_frame=True`` (ROADMAP #9) instead orders by the timestamp
-    itself with a native Spark ``RANGE BETWEEN INTERVAL ... PRECEDING``
-    frame — same plan shape (one window over the (user, ts) sort), sane
-    for Spark-only pipelines and sub-second timestamps, but NOT used for
-    the cross-engine oracle because interval-frame dialects differ.
-    Equivalence on whole-second data is pytest-asserted.
+    window) per key — no self-join blowup at 100 TB.  On whole-second
+    data it equals Spark's native ``RANGE BETWEEN INTERVAL ... PRECEDING``
+    frame over the timestamp bitwise (a test reference in
+    tests/test_reference_parity.py).
     """
     n_sec = {"hours": 3600, "hour": 3600, "minutes": 60, "minute": 60, "days": 86400, "day": 86400}
     qty, unit = window.split()
     sec = int(qty) * n_sec[unit]
-    if interval_frame:
-        frame = (
-            f"over (partition by {user_col} order by {ts_col} "
-            f"range between interval {sec} seconds preceding and current row)"
-        )
-        # same decimal-exact accumulation as the epoch path, so the two
-        # variants are bitwise equal on whole-second timestamps
-        isum = sqlgen.dec_to_double(f"sum(cast(({value_col}) as {sqlgen.DEC})) {frame}")
-        icnt = f"count({value_col}) {frame}"
-        return (
-            df.withColumn(f"{prefix}_sum", F.expr(isum))
-            .withColumn(f"{prefix}_n", F.expr(icnt))
-            .withColumn(f"{prefix}_mean", F.expr(f"({isum}) / ({icnt})"))
-        )
     epoch = f"_epoch_{ts_col}"
     rsum = sqlgen.wrangesum(value_col, user_col, epoch, sec)
     rcnt = sqlgen.wrangecount(value_col, user_col, epoch, sec)

@@ -8,18 +8,18 @@ Output: (features_df keyed by user_id, dropped_users_df) — users whose
 rows all vanished under trim+blacklist are tracked for the J3/J4
 imputation path, exactly like run.py:200-202.
 
-Plan shape at scale (fused=True, the default): ONE user-window (trim),
-ONE user hash aggregate carrying every kept-level block (both category
-pivots + the three temporal pivots + the A10 time-of-day moments — all
-conditional counts / exact decimal sums / exact percentiles, so fusing
-them is bitwise-identical to running each block alone), one
-(user, cat) hash aggregate + one user window + one user hash aggregate
-for the A11 stat families, and a single 2-way user-aligned join.  The
-unfused form (fused=False — kept as the differential-test reference)
-runs the same math as 8 separate aggregates over ``kept`` joined 8-wide:
-3 extra shuffles of the row set and 6 extra join legs that a 100 TB run
-would pay per query.  Measured at sf0.1: branch C 2.2 s -> ~1 s,
-pipeline_submission end-to-end ~7.5 -> ~5.5 s, identical values.
+Plan shape at scale: ONE user-window (trim), ONE user hash aggregate
+carrying every kept-level block (both category pivots + the three
+temporal pivots + the A10 time-of-day moments — all conditional counts
+/ exact decimal sums / exact percentiles, so fusing them is
+bitwise-identical to running each block alone), one (user, cat) hash
+aggregate + one user window + one user hash aggregate for the A11 stat
+families, and a single 2-way user-aligned join.  The historical 8-block
+composition (8 separate aggregates over ``kept`` joined 8-wide: 3 extra
+shuffles of the row set and 6 extra join legs) lives on as the test
+reference ``reference_branch_c_blocks`` in tests/test_plans.py, which
+pins this plan to it bit for bit.  Measured at sf0.1: branch C 2.2 s ->
+~1 s, pipeline_submission end-to-end ~7.5 -> ~5.5 s, identical values.
 
 Wide expression lists (the pivots, the ~250-column ordered projection
 at a 70-code vocabulary) are SQL text, one parse per column: in PySpark 4.x
@@ -39,9 +39,9 @@ from .. import sqlgen
 from ..functions.temporal import with_time_parts
 from ..operators.filtering import blacklist as _blacklist
 from ..operators.filtering import positional_trim
-from ..operators.gstats import horizontal_stats, horizontal_stats_multi, vertical_stats
+from ..operators.gstats import horizontal_stats_multi
 from ..operators.joins import anti_join_missing, assemble_features
-from ..operators.pivots import pivot_agg, pivot_exprs, row_normalize
+from ..operators.pivots import pivot_exprs, row_normalize
 from ..schema import DAYS_OF_MONTH, DAYS_OF_WEEK, HOURS
 
 # Explicit output orders for the fused projection (the FEATURE_COLS
@@ -80,96 +80,64 @@ def branch_c_features(
     trim: int = 20,
     blacklist_cats: Sequence = (6012,),
     freq_divisor: int = 20,
-    materialize: bool = False,
-    fused: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
-    """``materialize``: pin the trimmed+blacklisted row set once
-    (block-manager localCheckpoint) before the downstream blocks —
-    otherwise each consumer replays the trim window (measured: recompute
-    0.36 s/block vs 0.15 s/block off the checkpoint at sf0.1).  Off by
-    default: the fused form has only two consumers of ``kept``.
+    """(features keyed by user_id, users dropped by trim+blacklist).
+    Every kept-level block is one hash aggregate and both A11 stat
+    families another (see the module docstring).
 
-    ``fused``: compute every kept-level block in ONE hash aggregate and
-    both A11 stat families in one (see module docstring).  ``False``
-    preserves the original 8-block/8-way-join composition — same values
-    (pinned by tests/test_plans.py differential), worse plan."""
+    The trimmed row set is not pinned: its three consumers (wide
+    aggregate, long aggregate, dropped-users anti-join) all sit above
+    the SAME trim-window exchange, which ReuseExchange shares, and
+    replaying the post-shuffle window beats a block-manager barrier of
+    the row set (measured in run_submission: 6.25 -> 5.90 s at sf0.1,
+    63.4 -> 38.3 s at sf10)."""
     tx = with_time_parts(tx.withColumnRenamed("ts", "transaction_dttm"))
     trimmed = positional_trim(tx, "user_id", ["transaction_dttm", "ord"], trim, trim)
     users_before = trimmed.select("user_id").distinct()
     kept = _blacklist(trimmed, "cat", *blacklist_cats)
-    if materialize:
-        kept = kept.localCheckpoint(eager=True)
     dropped = anti_join_missing(users_before, kept, "user_id")
 
-    if fused:
-        # every kept-level block is a per-user aggregate over the same
-        # rows: conditional counts (pivots), exact decimal conditional
-        # sums, and the A10 moment fragments are all order-insensitive,
-        # so one wide hash aggregate produces bit-identical columns with
-        # ONE exchange where the block form pays six.
-        kept_aggs = (
-            pivot_exprs("cat", cat_vocab, agg="count", prefix="mcc_freq")
-            + pivot_exprs("cat", cat_vocab, agg="sum", value_col="amt", prefix="mcc_sum")
-            + pivot_exprs("day_of_month", DAYS_OF_MONTH, agg="count", prefix="dom")
-            + pivot_exprs("day_of_week", DAYS_OF_WEEK, agg="count", prefix="dow")
-            + pivot_exprs("hour", HOURS, agg="count", prefix="hod")
-            + [
-                F.expr(s)
-                for s in sqlgen.moment_stats("time_day", "time_day", percentile_fn="percentile")
-            ]
-        )
-        kept_block = kept.groupBy("user_id").agg(*kept_aggs)
-
-        # A11 stat families off the long form: freq rides the same
-        # user-partitioned window output the stats aggregate consumes,
-        # so cnt_b + freq stats share one exchange and one scan of long.
-        freq_long = row_normalize(_long_counts(kept, freq_divisor), "user_id", "cnt", out_col="freq")
-        stats_block = horizontal_stats_multi(
-            freq_long,
-            "user_id",
-            [("cnt_b", "mcc_freq_stats"), ("freq", "mcc_freq_proc_stats")],
-        )
-
-        feats = assemble_features([kept_block, stats_block], key="user_id", how="outer", fill=0.0)
-        # present columns in the historical 8-block assembly order (the
-        # FEATURE_COLS contract in suite.submission_e2e) — a zero-cost
-        # projection over the joined row.
-        ordered = (
-            [f"mcc_freq-{v}" for v in cat_vocab]
-            + [f"mcc_sum-{v}" for v in cat_vocab]
-            + [f"mcc_freq_stats_{s}" for s in _HSTAT_SUFFIXES]
-            + [f"mcc_freq_proc_stats_{s}" for s in _HSTAT_SUFFIXES]
-            + [f"dom-{d}" for d in DAYS_OF_MONTH]
-            + [f"dow-{d}" for d in DAYS_OF_WEEK]
-            + [f"hod-{h}" for h in HOURS]
-            + [f"time_day_{s}" for s in _MOMENT_SUFFIXES]
-        )
-        feats = feats.selectExpr("user_id", *[sqlgen.ident(c) for c in ordered])
-        return feats, dropped
-
-    # --- unfused reference form (differential-test baseline) ---
-    long = _long_counts(kept, freq_divisor)
-    freq_long = row_normalize(long, "user_id", "cnt", out_col="freq")
-
-    cat_count = pivot_agg(kept, "user_id", "cat", cat_vocab, agg="count", prefix="mcc_freq")
-    cat_sum = pivot_agg(
-        kept, "user_id", "cat", cat_vocab, agg="sum", value_col="amt", prefix="mcc_sum", fill=0.0
+    # every kept-level block is a per-user aggregate over the same
+    # rows: conditional counts (pivots), exact decimal conditional
+    # sums, and the A10 moment fragments are all order-insensitive,
+    # so one wide hash aggregate produces bit-identical columns with
+    # ONE exchange where the block form pays six.
+    kept_aggs = (
+        pivot_exprs("cat", cat_vocab, agg="count", prefix="mcc_freq")
+        + pivot_exprs("cat", cat_vocab, agg="sum", value_col="amt", prefix="mcc_sum")
+        + pivot_exprs("day_of_month", DAYS_OF_MONTH, agg="count", prefix="dom")
+        + pivot_exprs("day_of_week", DAYS_OF_WEEK, agg="count", prefix="dow")
+        + pivot_exprs("hour", HOURS, agg="count", prefix="hod")
+        + [
+            F.expr(s)
+            for s in sqlgen.moment_stats("time_day", "time_day", percentile_fn="percentile")
+        ]
     )
-    freq_stats = horizontal_stats(long, "user_id", "cnt_b", "mcc_freq_stats")
-    proc_stats = horizontal_stats(freq_long, "user_id", "freq", "mcc_freq_proc_stats")
+    kept_block = kept.groupBy("user_id").agg(*kept_aggs)
 
-    # temporal pivot blocks A2-A4
-    dom = pivot_agg(kept, "user_id", "day_of_month", DAYS_OF_MONTH, agg="count", prefix="dom")
-    dow = pivot_agg(kept, "user_id", "day_of_week", DAYS_OF_WEEK, agg="count", prefix="dow")
-    hod = pivot_agg(kept, "user_id", "hour", HOURS, agg="count", prefix="hod")
-
-    # A10 vertical time-of-day stats
-    td = vertical_stats(kept, ["user_id"], "time_day", "time_day")
-
-    feats = assemble_features(
-        [cat_count, cat_sum, freq_stats, proc_stats, dom, dow, hod, td],
-        key="user_id",
-        how="outer",
-        fill=0.0,
+    # A11 stat families off the long form: freq rides the same
+    # user-partitioned window output the stats aggregate consumes,
+    # so cnt_b + freq stats share one exchange and one scan of long.
+    freq_long = row_normalize(_long_counts(kept, freq_divisor), "user_id", "cnt", out_col="freq")
+    stats_block = horizontal_stats_multi(
+        freq_long,
+        "user_id",
+        [("cnt_b", "mcc_freq_stats"), ("freq", "mcc_freq_proc_stats")],
     )
+
+    feats = assemble_features([kept_block, stats_block], key="user_id", how="outer", fill=0.0)
+    # present columns in the historical 8-block assembly order (the
+    # FEATURE_COLS contract in suite.submission_e2e) — a zero-cost
+    # projection over the joined row.
+    ordered = (
+        [f"mcc_freq-{v}" for v in cat_vocab]
+        + [f"mcc_sum-{v}" for v in cat_vocab]
+        + [f"mcc_freq_stats_{s}" for s in _HSTAT_SUFFIXES]
+        + [f"mcc_freq_proc_stats_{s}" for s in _HSTAT_SUFFIXES]
+        + [f"dom-{d}" for d in DAYS_OF_MONTH]
+        + [f"dow-{d}" for d in DAYS_OF_WEEK]
+        + [f"hod-{h}" for h in HOURS]
+        + [f"time_day_{s}" for s in _MOMENT_SUFFIXES]
+    )
+    feats = feats.selectExpr("user_id", *[sqlgen.ident(c) for c in ordered])
     return feats, dropped

@@ -230,30 +230,22 @@ def run_submission(
     n_reps: int = 5,
     seed: int = 42,
     output_path: str | None = None,
-    bucket_dir: str | None = None,
     use_real_rnn: bool = True,
     sampler: str = "bootstrap",
-    scorer: str = "udf",
     blacklist_cats: Sequence = (6012,),
 ) -> DataFrame:
     """Full pipeline: (user_id, cat, amt, ts, ord) -> (user_id, target).
 
     ``sampler``: "bootstrap" (production: seeded RNG draw with
-    replacement) or "md5" (certification: deterministic md5-seeded
-    subsample — same plan shape, oracle-replayable).
-    ``scorer``: "udf" (production: broadcast-model mapInPandas) or
-    "inplan" (certification/scale path for the linear stand-in: the
-    weighted sum stays inside whole-stage codegen — no Python boundary).
+    replacement, then the ``model`` — or a linear stand-in — scores the
+    feature vector in a broadcast-model mapInPandas) or "md5"
+    (certification: the two stand-ins above as a pair — a deterministic
+    md5-seeded subsample and, unless a ``model`` is given, the in-plan
+    linear score, whose weighted sum stays inside whole-stage codegen;
+    same plan shape, oracle-replayable).
 
     Returns the submission DataFrame sorted by user_id; optionally writes
     the CSV (S3).
-
-    ``bucket_dir``: materialize the cleaned transactions bucketed by
-    ``user_id`` before branch C (ROADMAP #7).  The cleaned table is the
-    reference's only named intermediate (run.py:84-90, re-read by two
-    branches); bucketing it means every downstream per-user groupBy /
-    window in branch C — and any later pipeline over the same artifact —
-    reads pre-partitioned data with no user_id exchange.
     """
     # Branch A on the raw log (the reference scores the RNN before cleaning)
     if sampler == "md5":
@@ -271,26 +263,8 @@ def run_submission(
     cleaned = clean_transactions(
         tx, user_col="user_id", cat_col="cat", value_col="amt", n_amt=10, n_mcc=10
     )
-    if bucket_dir is not None:
-        from ..sources.bucketed import bucketed_checkpoint
-
-        cleaned = bucketed_checkpoint(
-            cleaned,
-            table="cleaned_tx_bucketed",
-            path=f"{bucket_dir}/cleaned_tx",
-            bucket_cols=["user_id"],
-        )
     # no pin of ``cleaned``: branch C is its one consumer, a pin is a wash (sf10)
-    # no kept-row materialization: the FUSED branch C has only three
-    # consumers of the trimmed row set (wide aggregate, long aggregate,
-    # dropped-users anti-join) and they all sit above the SAME trim-window
-    # exchange, which ReuseExchange shares — replaying the post-shuffle
-    # window beats a full block-manager barrier of the row set (measured:
-    # 6.25 -> 5.90 s at sf0.1, 63.4 -> 38.3 s at sf10).  The 8-block
-    # unfused form is where the checkpoint paid for itself.
-    feats, dropped = branch_c_features(
-        cleaned, cat_vocab=cat_vocab, blacklist_cats=blacklist_cats, materialize=False
-    )
+    feats, dropped = branch_c_features(cleaned, cat_vocab=cat_vocab, blacklist_cats=blacklist_cats)
 
     # Assembly J2 + strict dropna M1 (run.py:435-465)
     assembled = assemble_features([nn, feats], key="user_id", how="outer", fill=None).na.drop()
@@ -300,7 +274,7 @@ def run_submission(
     # through the REAL reference GBDT, conforming columns by name (J5);
     # any other kind scores the positional feature vector.
     feature_cols = [c for c in assembled.columns if c != "user_id"]
-    if scorer == "inplan" and model is None:
+    if sampler == "md5" and model is None:
         preds = assembled.select(
             "user_id", standin_target_column(feature_cols).alias("target")
         )

@@ -1453,24 +1453,22 @@ from p group by i, j
 """,
     survey_ref="emb-gram",
     doc="one-pass upper-triangular Gram (second-moment) matrix of the "
-    "embedding corpus — the PCA/whitening aggregation: in-array outer "
-    "products (no component self-join on the Spark side), one hash "
-    "aggregate with map-side combine (shuffle <= d(d+1)/2 rows/task at "
-    "any corpus size), fixed-point fsum accumulation => bitwise "
+    "embedding corpus — the PCA/whitening aggregation: Arrow-batched "
+    "numpy outer products (no component self-join on the Spark side), "
+    "one hash aggregate merging the per-batch partials (shuffle <= "
+    "d(d+1)/2 rows/batch at any corpus size), fixed-point fsum "
+    "accumulation => bitwise "
     "cross-engine.  The driver-side eigh + Arrow-batched projection "
     "(whitening_matrix/apply_projection) are numpy-parity pytest-pinned.",
 )
 def emb_gram_matrix(spark, sf_dir):
     from ..operators.similarity import embedding_gram
 
-    # the Arrow path is the production/throughput form (one BLAS product
-    # block per batch vs the d(d+1)/2-row explode); it is bitwise-pinned
-    # to the expr path (test_embedding_gram_arrow_path_bitwise_equals_expr
-    # in tests/test_similarity.py), so it is
-    # equally oracle-certifiable — registering it here makes the driver
-    # hash-certify the path real corpora run (~4x at sf0.1: 3.4 -> 0.9 s
-    # warm; the expr twin stays pytest-pinned).
-    return embedding_gram(T(spark, sf_dir, "embeddings"), method="arrow")
+    # embedding_gram's one path is Arrow-batched numpy (one BLAS product
+    # block per batch, ~4x the all-Catalyst explode at sf0.1: 3.4 -> 0.9 s
+    # warm); the explode survives as the bitwise test reference
+    # reference_gram_expr in tests/test_similarity.py.
+    return embedding_gram(T(spark, sf_dir, "embeddings"))
 
 
 @register(
@@ -3718,19 +3716,16 @@ where doc_id not in (select doc_id from bad)
     "too, not just the stages in isolation.",
 )
 def pipeline_corpus_prep(spark, sf_dir):
-    return _corpus_prep(spark, sf_dir, fused=True)
-
-
-def _corpus_prep(spark, sf_dir, fused: bool = True):
-    """``fused=True`` (the certified/bench path, r8): two plan rewrites
-    with bitwise-identical output, pinned by
-    tests/test_plans.py::test_corpus_prep_fused_matches_blocks_bitwise —
+    """Two plan rewrites (r8) over the block composition of the certified
+    operators, with bitwise-identical output — pinned against that
+    composition, kept as ``reference_corpus_prep_blocks`` in
+    tests/test_plans.py, by test_corpus_prep_fused_matches_blocks_bitwise:
 
     1. The exact-dedup stage (min-id representative per md5(text)) runs
        as ONE ``row_number`` window over ``md5(text)`` instead of
-       groupBy + join-back: same survivor set (doc_id is unique, so
-       rank-1-by-doc_id == min(doc_id) per content key), but 1 exchange
-       where the block form paid 3 (agg + both SMJ legs).
+       ``exact_dedup``'s groupBy + join-back: same survivor set (doc_id
+       is unique, so rank-1-by-doc_id == min(doc_id) per content key),
+       but 1 exchange where the block form paid 3 (agg + both SMJ legs).
     2. The substring-dedup output is PINNED at its fan-out point: the
        decontamination ban set derives from POST-dedup trigrams, so
        ``sd`` feeds both the anti-join probe and the ban-set build —
@@ -3741,52 +3736,41 @@ def _corpus_prep(spark, sf_dir, fused: bool = True):
 
     Measured (interleaved A/B, same host): sf0.1 flat (overhead-bound),
     sf1 6.5 -> 3.4-3.9 s, sf10 39-47 -> 13-14 s (~3x) — at 100 TB the
-    unfused form replays the dominant window-dedup term twice per run.
-
-    ``fused=False`` keeps the original block composition as the
-    differential-test baseline.
+    block form replays the dominant window-dedup term twice per run.
     """
-    from ..operators.dedup import exact_dedup, substring_dedup
+    from ..operators.dedup import substring_dedup
     from ..operators.filtering import shard_assign
     from ..operators.text import decontaminate_drop
 
-    docs = T(spark, sf_dir, "documents").select("doc_id", "text")
-    bench = docs.filter(F.col("doc_id") % 97 == 0)
-    corpus = docs.filter(F.col("doc_id") % 97 != 0)
-
-    toks = F.split(F.col("text"), " ")
-    n = F.size(toks)
-    dup_ratio = (n - F.size(F.array_distinct(toks))) / n.cast("double")
-    q = corpus.filter((n >= 20) & (n <= 200) & (dup_ratio < 0.4))
-
-    if fused:
-        w = Window.partitionBy(F.md5(F.col("text"))).orderBy("doc_id")
-        s2 = (
-            q.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-            .localCheckpoint(eager=False)
-        )
-    else:
-        reps = exact_dedup(q, "doc_id", ["text"]).select(F.col("keep_id").alias("doc_id"))
-        # S4 checkpoint at the pipeline's fan-out point (the reference's
-        # own write-then-reread of its cleaned intermediate,
-        # run.py:84-90): the exact-dedup survivors feed substring-dedup's
-        # window AND reassembly branches plus decontamination — unpinned,
-        # each branch replays scan -> quality filter -> dedup agg -> join
-        # (9 scans audited).
-        s2 = q.join(reps, "doc_id").localCheckpoint(eager=False)
-
-    sd = substring_dedup(s2, window_tokens=_PREP_W).withColumnRenamed(
-        "text_dedup", "text_final"
+    corpus, bench = _corpus_prep_inputs(spark, sf_dir)
+    w = Window.partitionBy(F.md5(F.col("text"))).orderBy("doc_id")
+    s2 = (
+        corpus.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+        .localCheckpoint(eager=False)
     )
-    if fused:
-        sd = sd.localCheckpoint(eager=False)
+    sd = (
+        substring_dedup(s2, window_tokens=_PREP_W)
+        .withColumnRenamed("text_dedup", "text_final")
+        .localCheckpoint(eager=False)
+    )
     s4 = decontaminate_drop(
         sd, bench.withColumnRenamed("text", "text_final"), "doc_id", "text_final", n=3
     )
     out = shard_assign(s4, "doc_id", n_shards=4, salt="ep1")
     return out.select("doc_id", "shard", "pos", "n_removed", "text_final")
+
+
+def _corpus_prep_inputs(spark, sf_dir):
+    """(quality-gated corpus, benchmark split) of the corpus-prep head."""
+    docs = T(spark, sf_dir, "documents").select("doc_id", "text")
+    bench = docs.filter(F.col("doc_id") % 97 == 0)
+    corpus = docs.filter(F.col("doc_id") % 97 != 0)
+    toks = F.split(F.col("text"), " ")
+    n = F.size(toks)
+    dup_ratio = (n - F.size(F.array_distinct(toks))) / n.cast("double")
+    return corpus.filter((n >= 20) & (n <= 200) & (dup_ratio < 0.4)), bench
 
 
 def _seasonal_anomaly_oracle() -> str:
@@ -4071,9 +4055,9 @@ def _pattern_oracle(steps: list[str], rounds: int) -> str:
     "(analytics.pattern_spans): earliest-first NON-OVERLAPPING "
     "view->click->purchase spans per user under skip-till-next-match "
     "semantics — ONE shuffle on user_id + a JVM-side aggregate-HOF "
-    "automaton over the per-key sorted event array (applyInPandas and "
-    "relational frontier-join variants remain as strategy='pandas'/"
-    "'joins', pinned row-identical by pytest), "
+    "automaton over the per-key sorted event array (pinned row-identical "
+    "to the relational frontier-join test reference "
+    "reference_pattern_spans_joins in tests/test_datapipe.py), "
     "matched by a 10-round unrolled oracle with the identical bound.",
 )
 def an_pattern_spans(spark, sf_dir):

@@ -212,7 +212,6 @@ def pipeline_submission(spark, sf_dir):
         cat_vocab=VOCAB,
         n_reps=N_REPS,
         sampler="md5",
-        scorer="inplan",
         use_real_rnn=False,
         blacklist_cats=(2,),
     )
