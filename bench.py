@@ -235,8 +235,9 @@ def _wait_for_quiet_window() -> float:
     return waited
 
 
-def _bench_query(run, base_reps: int = 3) -> tuple[float, bool, int, int]:
-    """min over steal-clean reps of ``run()``; heads at >= 2 s extend to 5
+def _bench_query(run, after_rep, base_reps: int = 3) -> tuple[float, bool, int, int]:
+    """min over steal-clean reps of ``run()``, calling ``after_rep()``
+    outside the timed window of each rep; heads at >= 2 s extend to 5
     clean reps (longer windows carry more burst exposure — VERDICT r5
     item 1).  Sub-second heads get twice the rerun budget: their reps
     are cheap and the 0.25 s steal floor flags them easily during
@@ -261,6 +262,7 @@ def _bench_query(run, base_reps: int = 3) -> tuple[float, bool, int, int]:
         run()
         elapsed = time.time() - t0
         stolen = _steal_seconds() - s0
+        after_rep()
         if elapsed < 1.0:
             extra = 2 * _MAX_EXTRA  # cheap reps: buy more chances at clean
         if stolen > max(_STEAL_FLOOR_S, 0.10 * elapsed):
@@ -289,7 +291,7 @@ def _bench_query(run, base_reps: int = 3) -> tuple[float, bool, int, int]:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from vtb_datafusion_2023_spark.session import get_spark
+    from vtb_datafusion_2023_spark.session import codegen_compiles, get_spark
     from vtb_datafusion_2023_spark.suite import queries
 
     spark = get_spark(app_name="bench")
@@ -318,9 +320,12 @@ def main() -> None:
         spark.read.parquet(os.path.join(_ZIPF_DIR, "documents.parquet")).count()
 
     # min of 3 steal-clean runs per query (5 for >= 2 s heads): the first
-    # run pays one-time whole-stage-codegen compilation (~2-4s of JIT per
-    # distinct plan), which on a real cluster amortizes across
-    # executors/queries, and this sandbox's hypervisor exhibits
+    # run pays one-time whole-stage-codegen compilation (~2-4s of Janino
+    # per distinct plan), which later runs skip while the JVM's codegen
+    # cache holds the plan's classes (get_spark sizes it: at Spark's
+    # default 100 entries pipeline_submission recompiled on every rep;
+    # the per-head compile counts on stderr flag a head that still does),
+    # and this sandbox's hypervisor exhibits
     # multi-second CPU-steal bursts (measured round 5: 5-rep arrays like
     # [0.98, 0.98, 1.33, 1.96, 22.18] on an unchanged query — BASELINE.md)
     # — _bench_query probes /proc/stat steal around each rep and RERUNS
@@ -335,8 +340,17 @@ def main() -> None:
         print(f"bench: {name} @ {time.strftime('%H:%M:%S')}", file=sys.stderr, flush=True)
         q = qs[name]
         q_dir = SF_OVERRIDE.get(name, sf_dir)
+        # compile counts only: past ~1k compiles per JVM the ms are estimates
+        compiled = [codegen_compiles(spark)[0]]
         best, is_clean, n_clean, rep_target = _bench_query(
-            lambda q=q, d=q_dir: q(spark, d).write.format("noop").mode("overwrite").save()
+            lambda q=q, d=q_dir: q(spark, d).write.format("noop").mode("overwrite").save(),
+            lambda: compiled.append(codegen_compiles(spark)[0]),
+        )
+        print(
+            f"bench:   codegen compiles: first rep {compiled[1] - compiled[0]}, "
+            f"later {len(compiled) - 2} reps {compiled[-1] - compiled[1]}",
+            file=sys.stderr,
+            flush=True,
         )
         timings[name] = round(best, 3)
         if not is_clean:

@@ -8,6 +8,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from vtb_datafusion_2023_spark import session
 from vtb_datafusion_2023_spark.session import get_spark
 
 SF_SMALL = "/root/testdata/sf0.001"
@@ -57,5 +58,24 @@ def py4j_calls(monkeypatch):
             yield calls
         finally:
             active.remove(calls)
+
+    return count
+
+
+@pytest.fixture
+def codegen_compiles(spark):
+    """``with codegen_compiles() as c:`` sets ``c.n`` and ``c.ms`` to the
+    classes whole-stage codegen compiled inside the block and the compile
+    ms (``session.codegen_compiles``; reads JVM counters, runs no job)."""
+
+    @contextlib.contextmanager
+    def count():
+        n0, ms0 = session.codegen_compiles(spark)
+        c = types.SimpleNamespace(n=0, ms=0.0)
+        try:
+            yield c
+        finally:
+            n1, ms1 = session.codegen_compiles(spark)
+            c.n, c.ms = n1 - n0, ms1 - ms0
 
     return count

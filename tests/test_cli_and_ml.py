@@ -32,7 +32,7 @@ def _make_csv(path, n_users=12, rows_per_user=60, with_ord=True):
     pd.DataFrame(rows).to_csv(path, index=False)
 
 
-def test_cli_end_to_end(spark, tmp_path):
+def test_cli_end_to_end(spark, tmp_path, capsys):
     src = tmp_path / "tx.csv"
     out = tmp_path / "out"
     _make_csv(str(src))
@@ -42,9 +42,11 @@ def test_cli_end_to_end(spark, tmp_path):
     back = spark.read.option("header", True).csv(str(out))
     assert back.count() == 12
     assert set(back.columns) == {"user_id", "target"}
+    # the printed count (observed on the write job) matches the rows written
+    assert f"wrote 12 user scores to {out}" in capsys.readouterr().out
 
 
-def test_cli_stamps_missing_ord(spark, tmp_path):
+def test_cli_stamps_missing_ord(spark, tmp_path, capsys):
     src = tmp_path / "tx_noord.csv"
     out = tmp_path / "out2"
     _make_csv(str(src), with_ord=False)
@@ -53,6 +55,7 @@ def test_cli_stamps_missing_ord(spark, tmp_path):
     main([str(src), str(out), "--reps", "1", "--cats", "742,4111,5411,5812"])
     back = spark.read.option("header", True).csv(str(out))
     assert back.count() == 12
+    assert f"wrote 12 user scores to {out}" in capsys.readouterr().out
 
 
 def test_mlcv_harness_u7(spark, sf_small):

@@ -28,7 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def run(names: list[str], sf_dir: str, reps: int) -> dict[str, float]:
-    from vtb_datafusion_2023_spark.session import get_spark
+    from vtb_datafusion_2023_spark.session import codegen_compiles, get_spark
     from vtb_datafusion_2023_spark.suite import queries
 
     spark = get_spark(app_name="scale_probe")
@@ -37,13 +37,17 @@ def run(names: list[str], sf_dir: str, reps: int) -> dict[str, float]:
     out: dict[str, float] = {}
     for name in names:
         best = float("inf")
+        compiled = [codegen_compiles(spark)[0]]
         for _ in range(reps):
             t0 = time.time()
             qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
             best = min(best, time.time() - t0)
+            compiled.append(codegen_compiles(spark)[0])
         out[name] = round(best, 3)
         gc.collect()
-        print(f"  {sf_dir.rsplit('/', 1)[-1]} {name}: {out[name]}s", file=sys.stderr)
+        print(f"  {sf_dir.rsplit('/', 1)[-1]} {name}: {out[name]}s, codegen compiles "
+              f"first rep {compiled[1] - compiled[0]}, later reps {compiled[-1] - compiled[1]}",
+              file=sys.stderr)
     return out
 
 

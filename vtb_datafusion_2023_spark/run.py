@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import argparse
 
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 
@@ -38,10 +39,17 @@ def main(argv: list[str] | None = None) -> None:
     args = ap.parse_args(argv)
 
     from .plans import run_submission
-    from .session import get_spark
+    from .session import get_spark, tune_session
     from .sources.readers import read_transactions_csv
+    from .sources.writers import write_csv
 
+    # A session of its own: after an Observation (the row count below) a
+    # classic SparkSession no longer serializes in Spark 4.1 (its
+    # ObservationManager is not transient), so a later job that ships the
+    # session, such as a spark.ml model with a training summary, would
+    # fail on a session shared with the caller.
     spark = get_spark(app_name="vtb-submission", cpus=args.cpus)
+    spark = tune_session(spark.newSession(), args.cpus)
     # stamp a row-order column when the file doesn't carry one explicitly
     # (pandas positional semantics — SURVEY §7.4.1)
     try:
@@ -63,8 +71,12 @@ def main(argv: list[str] | None = None) -> None:
         vocab = sorted(
             r.cat for r in tx.filter(F.col("cat") != 6012).select("cat").distinct().collect()
         )
-    sub = run_submission(spark, tx, cat_vocab=vocab, n_reps=args.reps, output_path=args.output_dir)
-    n = sub.count()
+    sub = run_submission(spark, tx, cat_vocab=vocab, n_reps=args.reps)
+    # the row count rides on the write job: a count() after it would run
+    # the post-checkpoint tail (CSV scan, anti-join, sort) a second time
+    rows = Observation("rows")
+    write_csv(sub.observe(rows, F.count(F.lit(1)).alias("n")), args.output_dir)
+    n = rows.get["n"]
     print(f"wrote {n} user scores to {args.output_dir}")
 
 

@@ -10,6 +10,14 @@ Two entry paths exist:
    and local performance (AQE, shuffle partitions) and is safe to call on
    any session, repeatedly.
 
+Generated-code reuse needs two settings.  ``useIdInClassName=false`` is a
+runtime conf, so ``tune_session`` gives it to an externally-owned session
+(path 2) too.  The codegen cache size (``_CODEGEN_CACHE_ENTRIES``) is a
+static conf read when the JVM starts: only ``get_spark`` can set it, and
+an externally-owned session keeps Spark's 100-entry cache.  There the
+wide submission plan still recompiles on every pass, and the registered
+``pipeline_submission`` head gains only from the class-name setting.
+
 Scale notes (100 TB design): the static builder enables AQE with
 coalescing + skew-join handling so the same code re-plans itself on a real
 cluster; shuffle partition count here is only the *initial* number — AQE
@@ -72,6 +80,17 @@ _RUNTIME_CONFS = {
     # on all 8 probed heads, cold (incl. Janino compile) AND warm —
     # the global setting is free.
     "spark.sql.codegen.maxFields": "512",
+    # Whole-stage codegen names each generated class after its stage id
+    # (GeneratedIteratorForCodegenStageN), and the codegen cache is keyed
+    # by the source text, class name included.  Ids shift between passes
+    # and across the submission plan's 45 codegen stages, so an identical
+    # stage body compiled again under a new id: with a large enough cache,
+    # 20 of the 55 distinct stage bodies of a warm submission pass were
+    # such misses.  With the id out of the name they hit; the id stays in
+    # the formatted source's `// codegenStageId=N` comment.  Measured
+    # (perfbench submission, seed 601, local[4], with the cache below):
+    # compiles over three passes 188/38/4 -> 156/0/0.
+    "spark.sql.codegen.useIdInClassName": "false",
     # NOTE on events.ts: the driver's events.parquet stores
     # TIMESTAMP(MICROS, isAdjustedToUTC=false), which Spark 4 scans as
     # TIMESTAMP_NTZ (bit-identical to DuckDB's read of the same file).
@@ -83,6 +102,37 @@ _RUNTIME_CONFS = {
     # exact `percentile`, not approx — required for reference parity
     # (SURVEY §7.4.2); nothing to set, noted for readers.
 }
+
+
+# Static conf ``spark.sql.codegen.cache.maxEntries`` (read at JVM start,
+# so it cannot join _RUNTIME_CONFS).  Spark's default LRU of 100 compiled
+# classes is smaller than one submission pass, which generates 156-193
+# classes (perfbench submission, seed 601, local[4]): the pass evicted
+# its own classes and every warm pass ran Janino again, ~180 compiles
+# and ~4 s of an ~11 s pass.  2000 holds a dozen such plans, so a test
+# or bench JVM running many heads keeps the submission plan's classes
+# too.  Cost of a full cache: the pass's 156 classes held ~3.2 MB of
+# source text (the cache key), and each recompile at the default size
+# grew Metaspace by ~20 KB (~3.5 MB per warm pass), so ~40 MB of heap
+# and ~40 MB of Metaspace at 2000 entries.  On the submission pass it
+# is a saving: Metaspace after four passes is 155 MB with this cache
+# and 160 MB with the default, which keeps loading new copies of the
+# same classes.
+_CODEGEN_CACHE_ENTRIES = 2000
+
+
+def codegen_compiles(spark: SparkSession) -> tuple[int, float]:
+    """(classes compiled, compile ms) by this JVM so far, from Spark's
+    ``CodegenMetrics`` compilation histogram; runs no job.  The count is
+    exact.  The ms are exact up to the histogram's 1,028-sample reservoir
+    and scaled up from that sample past it."""
+    jvm = spark._jvm
+    hist = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    n = hist.getCount()
+    sample = hist.getSnapshot()
+    kept = sample.size()
+    ms = jvm.java.util.Arrays.stream(sample.getValues()).sum() * n / kept if kept else 0.0
+    return n, ms
 
 
 def default_cpus() -> int:
@@ -137,6 +187,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
     )
     spark = builder.getOrCreate()
     return tune_session(spark, shuffle_partitions or cpus)
