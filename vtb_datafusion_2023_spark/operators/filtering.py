@@ -12,6 +12,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources.readers import small_frame
+
 
 def blacklist(df: DataFrame, col: str, *values) -> DataFrame:
     """F2: drop rows whose ``col`` is in ``values``
@@ -412,7 +414,7 @@ def priority_sample(
             T.StructField("w_hat", T.DoubleType(), True),
         ]
     )
-    return spark.createDataFrame(out, schema)
+    return small_frame(spark, out, schema)
 
 
 def priority_sample_per_group(

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.readers import small_frame
+
 # A small English stopword list (public knowledge); frozen so language
 # scores are reproducible.
 EN_STOPWORDS = [
@@ -381,8 +383,8 @@ def tfidf(
                 "not be driver-bounded.  Pass exact_idf=False (in-plan JVM "
                 "log, 1-ulp engine variance) or raise max_distinct_dfs."
             )
-        idf = df.sparkSession.createDataFrame(
-            [(d, math.log(n_docs / d)) for d in dfs], "df bigint, _idf double"
+        idf = small_frame(
+            df.sparkSession, [(d, math.log(n_docs / d)) for d in dfs], "df bigint, _idf double"
         )
         joined = joined.join(broadcast(idf), "df").withColumn(
             "tfidf", F.col("tf") * F.col("_idf")

@@ -15,13 +15,80 @@ intermediate three times (``run.py:84-90,185`` — S4).  Spark-first:
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..schema import TESTDATA_TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# The SQL confs Spark's parquet-to-Spark schema converter reads
+# (ParquetToSparkSchemaConverter(SQLConf), Spark 4.1): with the file's
+# footer they fully determine an inferred schema.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+)
+# The inferred schema of each single-file parquet table read so far, with
+# the file identity and conf values it was inferred under; a rewrite or a
+# changed conf replaces the entry.  Inference runs a footer-reading Spark
+# job on every read (~0.1 s warm on local[4]; 8 of them per pass of the
+# perfbench `queries` mix); a known schema given to the reader runs none.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring a single file's schema once
+    per file version and session settings.  Directories (partition
+    discovery, schema merging) are inferred on every read as before."""
+    try:
+        st = os.stat(path)
+    except OSError:  # not a local path; Spark's reader resolves it or fails
+        return spark.read.parquet(path)
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    # get(k, None) is the value set in this session, None when unset (the
+    # build's default applies) or when this build has no such conf
+    confs = tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS)
+    stamp = (st.st_ino, st.st_mtime_ns, st.st_size, confs)
+    key = os.path.abspath(path)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (stamp, df.schema)
+    return df
+
+
+def small_frame(spark: SparkSession, rows: list[tuple], schema: StructType | str) -> DataFrame:
+    """A driver-sized DataFrame of ``rows`` (tuples in ``schema`` order),
+    handed to the JVM as one Arrow table.
+
+    ``createDataFrame`` of a Python list plans a PythonRDD over
+    ``defaultParallelism`` partitions, so each job that reads the frame
+    starts Python workers (~0.25 s per job on local[4]); an Arrow table
+    becomes a JVM-side relation and starts none.  Integers, doubles
+    (NaN included), strings and NULLs arrive bit-for-bit."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [() for _ in arrow]
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -39,7 +106,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     from ..session import tune_session
 
     tune_session(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
