@@ -19,6 +19,7 @@ REMOVED = [
     (features.branch_c_features, "materialize"),
     (submission.run_submission, "bucket_dir"),
     (submission.run_submission, "scorer"),
+    (submission.run_submission, "sampler"),
     (analytics.funnel, "strategy"),
     (analytics.pattern_spans, "strategy"),
     (analytics.pattern_spans, "broadcast_frontier"),

@@ -236,9 +236,40 @@ def test_run_submission_end_to_end(spark, tx, tmp_path):
 
 
 def test_run_submission_deterministic(spark, tx):
+    """Replayable, and without the reference artifacts independent of the
+    input's partitioning: branch A draws by md5 of ``ord``, not by a
+    per-partition RNG stream."""
     a = run_submission(spark, tx, cat_vocab=CAT_VOCAB, n_reps=2).toPandas()
     b = run_submission(spark, tx, cat_vocab=CAT_VOCAB, n_reps=2).toPandas()
     assert (a["target"].to_numpy() == b["target"].to_numpy()).all()
+    # use_real_rnn=False: the real-weights branch A keeps the seeded
+    # bootstrap draws, which follow the layout
+    one, seven = (
+        run_submission(
+            spark, tx.repartition(n), cat_vocab=CAT_VOCAB, n_reps=2, use_real_rnn=False
+        ).toPandas()
+        for n in (1, 7)
+    )
+    assert len(one) and one["user_id"].tolist() == seven["user_id"].tolist()
+    assert one["target"].tolist() == seven["target"].tolist()
+
+
+def test_run_submission_standin_plan_runs_no_python(spark, tx, monkeypatch):
+    """Without the reference artifacts and a model, the plan the eager
+    checkpoint executes is all JVM: no sample draw, no Python operator."""
+    frame_cls = type(tx)
+    plans = []
+    checkpoint = frame_cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", spy)
+    run_submission(spark, tx, cat_vocab=CAT_VOCAB, n_reps=2, use_real_rnn=False)
+    assert len(plans) == 1
+    for node in ("MapInPandas", "Python", "Sample"):
+        assert node not in plans[0], node
 
 
 def test_run_submission_with_real_cbm(spark, tx):

@@ -40,10 +40,10 @@ def test_feature_inventory_matches_runtime(spark, sf_small):
     from vtb_datafusion_2023_spark.operators.cleaning import clean_transactions
     from vtb_datafusion_2023_spark.operators.joins import assemble_features
     from vtb_datafusion_2023_spark.plans.features import branch_c_features
-    from vtb_datafusion_2023_spark.plans.submission import _rnn_branch_md5
+    from vtb_datafusion_2023_spark.plans.submission import _rnn_branch
 
     tx = _tx(spark, sf_small)
-    nn = _rnn_branch_md5(tx, n_reps=2)
+    nn = _rnn_branch(tx, n_reps=2, seed=42, use_real_rnn=False)
     cleaned = clean_transactions(
         tx, user_col="user_id", cat_col="cat", value_col="amt", n_amt=10, n_mcc=10
     )
@@ -83,7 +83,6 @@ def test_inplan_scorer_matches_udf_scorer(spark, sf_small):
         _tx(spark, sf_small),
         cat_vocab=SE.VOCAB,
         n_reps=2,
-        sampler="md5",
         use_real_rnn=False,
         blacklist_cats=(2,),
     ).toPandas()
@@ -102,11 +101,11 @@ def test_inplan_scorer_matches_udf_scorer(spark, sf_small):
     from vtb_datafusion_2023_spark.operators.cleaning import clean_transactions
     from vtb_datafusion_2023_spark.operators.joins import assemble_features
     from vtb_datafusion_2023_spark.plans.features import branch_c_features
-    from vtb_datafusion_2023_spark.plans.submission import _rnn_branch_md5
+    from vtb_datafusion_2023_spark.plans.submission import _rnn_branch
     from vtb_datafusion_2023_spark.inference.udfs import score_with_model
 
     tx = _tx(spark, sf_small)
-    nn = _rnn_branch_md5(tx, n_reps=2)
+    nn = _rnn_branch(tx, n_reps=2, seed=42, use_real_rnn=False)
     cleaned = clean_transactions(
         tx, user_col="user_id", cat_col="cat", value_col="amt", n_amt=10, n_mcc=10
     )

@@ -4,13 +4,13 @@ SURVEY §3.1).
 
 Stages (all from the operator library):
 
-1. RNN branch (A): bootstrap ensemble over the raw log — SO3 seeded
-   samples x scorer x A15 mean (model.py:247-294).
+1. RNN branch (A): bootstrap ensemble over the raw log x scorer x A15
+   mean (model.py:247-294).
 2. Robust cleaning: winsorize + rare-category rewrite (run.py:25-85).
 3. Branch C: wide per-user feature matrix + dropped-user tracking
    (run.py:185-430).
 4. Assembly J2 + strict dropna M1 (run.py:435-465).
-5. Scoring U6: broadcast-artifact mapInPandas (run.py:466-475).
+5. Scoring U6 over the wide row (run.py:466-475).
 6. Submission: union-fill dropped users at the global max A14/J4, sort
    W6, CSV S3 (run.py:477-486).
 
@@ -21,9 +21,9 @@ forward (``inference.nn_numpy``) inside mapInPandas — torch is not
 needed.  The final U6 stage likewise runs the REAL CatBoost model when
 given ``model=catboost_cbm_model()`` — the ``.cbm`` parses through the
 public flatbuffers format (``inference.cbm``) and scores conform-by-name;
-the default stays a deterministic linear stand-in because the driver's
-synthetic feature vocabulary shares only ``nn_predict`` with the
-reference's trained feature names.
+without a model it is a deterministic linear stand-in, because the
+driver's synthetic feature vocabulary shares only ``nn_predict`` with
+the reference's trained feature names.
 
 The three branches are independent DAG subtrees off one scan: Spark runs
 them as parallel jobs feeding the assembly joins (vs the reference's
@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import sqlgen
-from ..inference.udfs import BroadcastModel, linear_scorer, score_with_model
+from ..inference.udfs import BroadcastModel, score_rnn_sequences, score_with_model
 from ..operators.cleaning import clean_transactions
 from ..operators.joins import (
     anti_join_missing,
@@ -54,19 +54,21 @@ from ..operators.joins import (
     union_fill_max,
 )
 from .features import branch_c_features
+from .sequences import reference_feature_frame, rnn_input_sequences
 
 
 REFERENCE_BINS = "/root/reference/nn_bins.pickle"
 
-# --- deterministic certification stand-ins (driver t2 gate) -------------
+# --- stand-ins for absent reference artifacts -----------------------------
 #
-# The production pipeline has two non-SQL-expressible stages: the seeded
-# bootstrap draw (numpy RNG) and the NN/CatBoost forward.  For the
-# driver's hash gate the SAME composed plan runs with (a) an md5-seeded
-# subsample in place of the RNG draw and (b) an in-plan linear scorer in
-# place of the model UDF — every replacement is a textual SQL fragment
-# DuckDB evaluates bit-identically, so the full relational spine
-# (cleaning, branch C, assembly, imputation) is certified end to end.
+# The reference has two non-SQL-expressible stages: the seeded bootstrap
+# draw (numpy RNG) and the NN/CatBoost forward.  Without the reference
+# RNN artifacts branch A keeps an md5-keyed subsample of the rows per rep
+# in place of the RNG draw, and without a ``model`` U6 is an in-plan
+# linear score in place of the model UDF.  Both are textual SQL fragments
+# DuckDB evaluates bit-identically, so ``pipeline_submission`` certifies
+# the plan production runs end to end, and the draws depend only on
+# ``ord``, never on partitioning.
 
 def md5_keep_sql(ord_col: str, rep: int, threshold_hex: str = "f2") -> str:
     """Deterministic per-rep row keep predicate: the first md5 byte of
@@ -114,8 +116,8 @@ def standin_target_sql(feature_cols: Sequence[str], quote: str = '"') -> str:
 
 def _real_rnn_artifacts() -> tuple | None:
     """(bin_edges, BroadcastModel) from the reference artifacts, or None
-    when they are absent (the engine then falls back to the linear
-    stand-in so the pipeline stays runnable anywhere)."""
+    when they are absent (branch A then runs ``_rnn_branch_md5``, so the
+    pipeline stays runnable anywhere)."""
     import os
 
     from ..inference.udfs import REFERENCE_RNN_CKPT, rnn_scorer_model
@@ -127,7 +129,7 @@ def _real_rnn_artifacts() -> tuple | None:
 
 
 def _rnn_branch_md5(tx: DataFrame, n_reps: int) -> DataFrame:
-    """Deterministic certification twin of branch A: md5-seeded ~95%
+    """Branch A without the reference artifacts: md5-keyed ~95%
     subsamples (one per rep) -> per-user aggregate features -> exact-
     binary-weight linear score -> decimal-exact ensemble mean.  Every
     float op is a shared ``sqlgen`` fragment or an exact-operand IEEE
@@ -172,50 +174,27 @@ def _rnn_branch_md5(tx: DataFrame, n_reps: int) -> DataFrame:
     ).filter(F.col("nn_predict").isNotNull())
 
 
-def _rnn_branch(
-    tx: DataFrame,
-    n_reps: int,
-    seed: int,
-    weights: Sequence[float],
-    use_real_rnn: bool = True,
-) -> DataFrame:
-    """Branch A: ``reliable_predict`` (model.py:247-294) — seeded
-    bootstrap x RNN scorer x mean.
+def _rnn_branch(tx: DataFrame, n_reps: int, seed: int, use_real_rnn: bool) -> DataFrame:
+    """Branch A: ``reliable_predict`` (model.py:247-294) — bootstrap x
+    RNN scorer x mean.
 
-    With the reference artifacts present (the default), each repetition
-    scores through the REAL weights: nn_bins digitize -> last-300
-    zero-padded sequences -> broadcast ``nn_weights.ckpt`` -> numpy BiGRU
-    forward (eval mode; the reference's per-pass dropout noise is what
-    its 50-rep average suppresses — our reps differ by bootstrap draw).
-    Without them, a per-user aggregate + broadcast linear model exercises
-    the identical plumbing."""
+    With the reference artifacts present (and ``use_real_rnn``), each
+    repetition is a seeded bootstrap draw scored through the REAL
+    weights: nn_bins digitize -> last-300 zero-padded sequences ->
+    broadcast ``nn_weights.ckpt`` -> numpy BiGRU forward (eval mode; the
+    reference's per-pass dropout noise is what its 50-rep average
+    suppresses — our reps differ by bootstrap draw).  Without them it is
+    ``_rnn_branch_md5``."""
     real = _real_rnn_artifacts() if use_real_rnn else None
+    if real is None:
+        return _rnn_branch_md5(tx, n_reps)
+    bins, model = real
     runs = []
-    for i, rep in enumerate(bootstrap_runs(tx, n_reps, fraction=0.95, seed=seed)):
-        if real is not None:
-            from ..inference.udfs import score_rnn_sequences
-            from .sequences import reference_feature_frame, rnn_input_sequences
-
-            bins, model = real
-            seqs = rnn_input_sequences(reference_feature_frame(rep), bins, seq_len=300)
-            scored = score_rnn_sequences(
-                seqs, model, id_col="user_id", seq_col="seq"
-            ).withColumnRenamed("vec_id", "user_id")
-        else:
-            per_user = rep.groupBy("user_id").agg(
-                F.count(F.lit(1)).cast("double").alias("f0"),
-                F.avg("amt").alias("f1"),
-                F.avg(F.col("cat").cast("double")).alias("f2"),
-            )
-            assembled = per_user.select(
-                "user_id", F.array("f0", "f1", "f2").alias("features")
-            )
-            scored = score_with_model(
-                assembled,
-                linear_scorer(list(weights)),
-                id_col="user_id",
-                vec_col="features",
-            ).withColumnRenamed("vec_id", "user_id")
+    for rep in bootstrap_runs(tx, n_reps, fraction=0.95, seed=seed):
+        seqs = rnn_input_sequences(reference_feature_frame(rep), bins, seq_len=300)
+        scored = score_rnn_sequences(
+            seqs, model, id_col="user_id", seq_col="seq"
+        ).withColumnRenamed("vec_id", "user_id")
         runs.append(scored.select("user_id", F.col("score").alias("target")))
     return ensemble_mean(runs, key="user_id", score_col="target").withColumnRenamed(
         "target_mean", "nn_predict"
@@ -231,33 +210,21 @@ def run_submission(
     seed: int = 42,
     output_path: str | None = None,
     use_real_rnn: bool = True,
-    sampler: str = "bootstrap",
     blacklist_cats: Sequence = (6012,),
 ) -> DataFrame:
     """Full pipeline: (user_id, cat, amt, ts, ord) -> (user_id, target).
 
-    ``sampler``: "bootstrap" (production: seeded RNG draw with
-    replacement, then the ``model`` — or a linear stand-in — scores the
-    feature vector in a broadcast-model mapInPandas) or "md5"
-    (certification: the two stand-ins above as a pair — a deterministic
-    md5-seeded subsample and, unless a ``model`` is given, the in-plan
-    linear score, whose weighted sum stays inside whole-stage codegen;
-    same plan shape, oracle-replayable).
+    Without the reference artifacts (or with ``use_real_rnn=False``) and
+    without a ``model``, every stage is in-plan SQL: branch A draws by
+    md5 of ``ord`` and U6 is the linear stand-in score, so the output
+    depends on the rows alone, not on their partitioning.  ``seed``
+    seeds the real-weights branch A's bootstrap draws only.
 
     Returns the submission DataFrame sorted by user_id; optionally writes
     the CSV (S3).
     """
     # Branch A on the raw log (the reference scores the RNN before cleaning)
-    if sampler == "md5":
-        nn = _rnn_branch_md5(tx, n_reps=n_reps)
-    else:
-        nn = _rnn_branch(
-            tx,
-            n_reps=n_reps,
-            seed=seed,
-            weights=[0.01, 0.002, 0.001],
-            use_real_rnn=use_real_rnn,
-        )
+    nn = _rnn_branch(tx, n_reps=n_reps, seed=seed, use_real_rnn=use_real_rnn)
 
     # Robust cleaning (A7-A9) then branch C features
     cleaned = clean_transactions(
@@ -269,16 +236,17 @@ def run_submission(
     # Assembly J2 + strict dropna M1 (run.py:435-465)
     assembled = assemble_features([nn, feats], key="user_id", how="outer", fill=None).na.drop()
 
-    # U6 scoring over the wide row with a broadcast artifact.  A
-    # ``kind='cbm'`` model (inference.udfs.catboost_cbm_model) scores
-    # through the REAL reference GBDT, conforming columns by name (J5);
-    # any other kind scores the positional feature vector.
+    # U6 scoring over the wide row.  A ``kind='cbm'`` model
+    # (inference.udfs.catboost_cbm_model) scores through the REAL
+    # reference GBDT, conforming columns by name (J5); any other kind
+    # scores the positional feature vector in a broadcast-model
+    # mapInPandas; no model is the in-plan stand-in score.
     feature_cols = [c for c in assembled.columns if c != "user_id"]
-    if sampler == "md5" and model is None:
+    if model is None:
         preds = assembled.select(
             "user_id", standin_target_column(feature_cols).alias("target")
         )
-    elif model is not None and model.kind == "cbm":
+    elif model.kind == "cbm":
         from ..inference.udfs import score_catboost
 
         preds = (
@@ -291,9 +259,6 @@ def run_submission(
             "user_id",
             feature_vector_column(feature_cols).alias("features"),
         )
-        if model is None:
-            dim = len(feature_cols)
-            model = linear_scorer([((j * 37) % 19 - 9) / (10.0 * dim) for j in range(dim)])
         preds = (
             score_with_model(vecs, model, id_col="user_id", vec_col="features")
             .withColumnRenamed("vec_id", "user_id")

@@ -11,6 +11,12 @@ UNCALIBRATED scores; swapping in a real CatBoost/torch BroadcastModel
 (inference.udfs) yields predict_proba-style [0,1] targets like the
 reference.
 
+Without the reference artifacts the output depends only on the rows and
+their ``ord`` column, not on how Spark splits the file.  An input without
+``ord`` gets one from ``monotonically_increasing_id()``, which follows
+the split layout, so its scores can change with the file's splits and
+the core count.
+
 Usage:
     python -m vtb_datafusion_2023_spark.run <source_csv> <output_dir> \
         [--cats 742,4111,...] [--reps N] [--cpus N]
@@ -34,7 +40,13 @@ def main(argv: list[str] | None = None) -> None:
         help="comma-separated closed category vocabulary (default: distinct codes "
         "minus the 6012 blacklist — one extra pass, fine for ad-hoc runs)",
     )
-    ap.add_argument("--reps", type=int, default=5, help="bootstrap repetitions (reference: 50)")
+    ap.add_argument(
+        "--reps",
+        type=int,
+        default=5,
+        help="branch-A ensemble repetitions: md5-keyed ~95%% subsamples, or seeded "
+        "bootstrap draws with the reference artifacts (reference: 50)",
+    )
     ap.add_argument("--cpus", type=int, default=None)
     args = ap.parse_args(argv)
 

@@ -4,19 +4,20 @@ point ``python run.py src out`` (/root/reference/run.py:17,
 metadata.json:3), composed from the same operator library the per-stage
 queries certify:
 
-  branch A (md5-deterministic ensemble stand-in for the RNN bootstrap)
+  branch A (md5-keyed ensemble stand-in for the RNN bootstrap)
   -> A7-A9 robust cleaning -> branch C wide feature matrix -> J2 assembly
   + M1 strict dropna -> in-plan linear scoring stand-in for U6
   -> J3/J4/A14 global-max imputation of eliminated users -> W6 sort.
 
-Certification strategy (SURVEY §7.4.5): the two non-SQL-expressible
-production stages (numpy RNG bootstrap, NN/CatBoost forward) are replaced
-by deterministic twins with identical plan shape — an md5-seeded
-subsample and an exact-binary-weight in-plan linear scorer — so DuckDB
-replays the ENTIRE composed relational spine bit-for-bit.  The model
-kernels themselves are hash-certified separately (`u6_catboost_cbm`,
-`u6_mapinpandas_inference`) and bitwise pytest-pinned against the real
-reference checkpoints (tests/test_nn_numpy.py).
+Certification strategy (SURVEY §7.4.5): this is the plan the CLI runs
+without the reference artifacts.  There, the two non-SQL-expressible
+reference stages (numpy RNG bootstrap, NN/CatBoost forward) are an
+md5-keyed subsample and an exact-binary-weight in-plan linear scorer,
+so DuckDB replays the ENTIRE composed relational spine bit-for-bit.  The
+model kernels themselves are hash-certified separately
+(`u6_catboost_cbm`, `u6_mapinpandas_inference`) and bitwise
+pytest-pinned against the real reference checkpoints
+(tests/test_nn_numpy.py).
 
 The events table stands in for the transaction log (FIXTURES.md §1) with
 the event_type mapped to a closed numeric category code like the
@@ -211,7 +212,6 @@ def pipeline_submission(spark, sf_dir):
         tx,
         cat_vocab=VOCAB,
         n_reps=N_REPS,
-        sampler="md5",
         use_real_rnn=False,
         blacklist_cats=(2,),
     )
