@@ -28,7 +28,7 @@ def test_branch_c_and_feature_vector_build_round_trips(spark, py4j_calls):
     ]
     tx = spark.createDataFrame(rows, "user_id long, cat long, amt double, ts timestamp, ord long")
     with py4j_calls() as calls:
-        feats, _ = branch_c_features(tx, cat_vocab=VOCAB)
+        feats = branch_c_features(tx, cat_vocab=VOCAB)
         cols = [c for c in feats.columns if c != "user_id"]
         vecs = feats.select("user_id", feature_vector_column(cols).alias("features"))
     assert vecs.columns == ["user_id", "features"]

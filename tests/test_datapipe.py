@@ -4,6 +4,7 @@ SimHash, LSH-ANN) and the multimodal/inference plumbing."""
 from __future__ import annotations
 
 import hashlib
+import re
 
 import pyspark.sql.functions as F
 
@@ -161,8 +162,6 @@ def test_minhash_index_bucketed_join_no_exchange_on_index_side(spark, sf_small, 
         .toString()
     )
     # count exchanges: only the probe side may shuffle
-    import re
-
     n_exchanges = len(re.findall(r"Exchange hashpartitioning", plan))
     assert n_exchanges <= 1, plan
 
@@ -935,16 +934,19 @@ def test_token_entropy_closed_forms(spark):
     assert got[3][0] == 3 and abs(got[3][1] - (math.log(3) - 2 * math.log(2) / 3)) < 1e-15
 
 
-def test_lm_family_exact_and_inplan_log_agree(spark):
+def test_lm_family_exact_and_inplan_log_agree(spark, monkeypatch):
     """The exact (driver-side libm table, bitwise-oracle) and in-plan
     (executor-side JVM F.log, the 100 TB scale path) variants of the LM
     scoring family agree to float tolerance — the guarantee that lets
-    the cardinality guard auto-switch without changing results."""
+    the cardinality guard auto-switch without changing results.  Guard
+    0 forces the in-plan path, which must plan an ``ln``."""
     import random
 
+    from vtb_datafusion_2023_spark.functions import stats
     from vtb_datafusion_2023_spark.operators.text import (
         bigram_logprob,
         stupid_backoff_logprob,
+        tfidf,
         token_entropy,
         unigram_logprob,
     )
@@ -957,9 +959,13 @@ def test_lm_family_exact_and_inplan_log_agree(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
 
-    def cmp(fn, val_col):
-        exact = {r.doc_id: r[val_col] for r in fn(df, exact_log=True).collect()}
-        inplan = {r.doc_id: r[val_col] for r in fn(df, exact_log=False).collect()}
+    def cmp(fn, val_col, key=("doc_id",)):
+        exact = {tuple(r[c] for c in key): r[val_col] for r in fn(df).collect()}
+        with monkeypatch.context() as m:
+            m.setattr(stats, "EXACT_LN_GUARD", 0)
+            out = fn(df)
+            assert re.search(r"\bln\(", out._jdf.queryExecution().optimizedPlan().toString())
+            inplan = {tuple(r[c] for c in key): r[val_col] for r in out.collect()}
         assert exact.keys() == inplan.keys()
         for k in exact:
             assert abs(exact[k] - inplan[k]) <= 1e-9 * max(1.0, abs(exact[k])), (
@@ -970,28 +976,27 @@ def test_lm_family_exact_and_inplan_log_agree(spark):
     cmp(bigram_logprob, "bi_surprisal")
     cmp(token_entropy, "entropy")
     cmp(stupid_backoff_logprob, "sb_surprisal")
+    cmp(tfidf, "tfidf", key=("doc_id", "term"))
 
 
-def test_lm_family_guard_switches_to_inplan(spark):
+def test_lm_family_guard_switches_to_inplan(spark, monkeypatch):
     """Dropping EXACT_LN_GUARD below the corpus cardinality must flip the
     auto path to in-plan log (no driver ln tables) with tolerant-equal
-    results, and the in-plan plan must contain a LOG expression."""
+    results, and the in-plan plan must contain an ``ln`` expression."""
+    from vtb_datafusion_2023_spark.functions import stats
     from vtb_datafusion_2023_spark.operators import text as T
 
     df = spark.createDataFrame(
         [(1, "a a a b b c"), (2, "b c d d d d"), (3, "a c e")],
         "doc_id bigint, text string",
     )
-    exact = {r.doc_id: r.surprisal for r in T.unigram_logprob(df, exact_log=True).collect()}
-    old = T.EXACT_LN_GUARD
-    T.EXACT_LN_GUARD = 1
-    try:
+    exact = {r.doc_id: r.surprisal for r in T.unigram_logprob(df).collect()}
+    with monkeypatch.context() as m:
+        m.setattr(stats, "EXACT_LN_GUARD", 1)
         auto = T.unigram_logprob(df)  # cardinality > 1 -> in-plan
         plan = auto._jdf.queryExecution().optimizedPlan().toString()
-        assert "LOG" in plan.upper()
+        assert re.search(r"\bln\(", plan)
         got = {r.doc_id: r.surprisal for r in auto.collect()}
-    finally:
-        T.EXACT_LN_GUARD = old
     for k in exact:
         assert abs(exact[k] - got[k]) <= 1e-9 * max(1.0, abs(exact[k]))
 
@@ -1571,16 +1576,16 @@ def test_bigram_pmi_matches_python_reference(spark):
     assert want[("new", "york")][1] > 0
 
 
-def test_bigram_pmi_exact_and_inplan_paths_agree(spark, sf_small):
+def test_bigram_pmi_exact_and_inplan_paths_agree(spark, sf_small, monkeypatch):
+    from vtb_datafusion_2023_spark.functions import stats
     from vtb_datafusion_2023_spark.operators.text import bigram_pmi
 
     d = load_table(spark, sf_small, "documents")
-    exact = {
-        (r.w1, r.w2): r.pmi for r in bigram_pmi(d, min_count=3, exact_log=True).collect()
-    }
-    inplan = {
-        (r.w1, r.w2): r.pmi for r in bigram_pmi(d, min_count=3, exact_log=False).collect()
-    }
+    exact = {(r.w1, r.w2): r.pmi for r in bigram_pmi(d, min_count=3).collect()}
+    monkeypatch.setattr(stats, "EXACT_LN_GUARD", 0)
+    out = bigram_pmi(d, min_count=3)
+    assert re.search(r"\bln\(", out._jdf.queryExecution().optimizedPlan().toString())
+    inplan = {(r.w1, r.w2): r.pmi for r in out.collect()}
     assert set(exact) == set(inplan) and exact
     for k in exact:
         assert abs(exact[k] - inplan[k]) < 1e-12
@@ -2594,11 +2599,12 @@ def test_simhash_idf_planted_complete_and_partition_invariant(spark, sf_small):
     # operator docstring and the bench SF_OVERRIDE note)
 
 
-def test_simhash_idf_duplicate_pair_and_validation(spark):
+def test_simhash_idf_duplicate_pair_and_validation(spark, monkeypatch):
     """An exact duplicate pairs at hamming 0 and nothing else pairs, and
     the parameter guards raise loudly."""
     import pytest
 
+    from vtb_datafusion_2023_spark.functions import stats
     from vtb_datafusion_2023_spark.operators.dedup import (
         simhash_idf_chunks,
         simhash_idf_pairs,
@@ -2615,8 +2621,11 @@ def test_simhash_idf_duplicate_pair_and_validation(spark):
 
     with pytest.raises(ValueError, match="chunks"):
         simhash_idf_chunks(docs, "doc_id", "text", chunks=7)
-    with pytest.raises(ValueError, match="distinct"):
-        simhash_idf_chunks(docs, "doc_id", "text", max_distinct_dfs=1).collect()
+    # a 1-ulp in-plan log could move a floor()ed weight, so past the
+    # guard the head raises instead of falling back
+    monkeypatch.setattr(stats, "EXACT_LN_GUARD", 0)
+    with pytest.raises(ValueError, match="EXACT_LN_GUARD=0"):
+        simhash_idf_chunks(docs, "doc_id", "text")
 
 
 def test_shingled_table_n_must_match_consumer(spark, sf_small):

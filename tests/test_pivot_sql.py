@@ -169,9 +169,9 @@ def _transactions(spark):
 def test_branch_c_fused_matches_reference_pivots(spark, monkeypatch):
     tx = _transactions(spark)
     vocab = [-(2**31) - 1, -5, 742, 2**31, 5411, 8888]
-    got, _ = features.branch_c_features(tx, cat_vocab=vocab, trim=2)
+    got = features.branch_c_features(tx, cat_vocab=vocab, trim=2)
     monkeypatch.setattr(features, "pivot_exprs", reference_pivot_exprs)
-    want, _ = features.branch_c_features(tx, cat_vocab=vocab, trim=2)
+    want = features.branch_c_features(tx, cat_vocab=vocab, trim=2)
     _assert_bitwise(got, want)
     assert _analyzed(got) == _analyzed(want)
     sums = got.select(*[f"`mcc_sum-{v}`" for v in vocab]).collect()

@@ -31,7 +31,7 @@ def reference_branch_c_blocks(tx, cat_vocab, trim=20, blacklist_cats=(6012,), fr
     from vtb_datafusion_2023_spark.functions.temporal import with_time_parts
     from vtb_datafusion_2023_spark.operators.filtering import blacklist, positional_trim
     from vtb_datafusion_2023_spark.operators.gstats import horizontal_stats, vertical_stats
-    from vtb_datafusion_2023_spark.operators.joins import anti_join_missing, assemble_features
+    from vtb_datafusion_2023_spark.operators.joins import assemble_features
     from vtb_datafusion_2023_spark.operators.pivots import row_normalize
     from vtb_datafusion_2023_spark.plans.features import _long_counts
     from vtb_datafusion_2023_spark.schema import DAYS_OF_MONTH, DAYS_OF_WEEK, HOURS
@@ -39,7 +39,6 @@ def reference_branch_c_blocks(tx, cat_vocab, trim=20, blacklist_cats=(6012,), fr
     tx = with_time_parts(tx.withColumnRenamed("ts", "transaction_dttm"))
     trimmed = positional_trim(tx, "user_id", ["transaction_dttm", "ord"], trim, trim)
     kept = blacklist(trimmed, "cat", *blacklist_cats)
-    dropped = anti_join_missing(trimmed.select("user_id").distinct(), kept, "user_id")
 
     def pivot(col, vocab, agg, prefix, value_col=None, fill=0):
         aggs = reference_pivot_exprs(col, vocab, agg, value_col, prefix)
@@ -57,8 +56,7 @@ def reference_branch_c_blocks(tx, cat_vocab, trim=20, blacklist_cats=(6012,), fr
         pivot("hour", HOURS, "count", "hod"),
         vertical_stats(kept, ["user_id"], "time_day", "time_day"),
     ]
-    feats = assemble_features(blocks, key="user_id", how="outer", fill=0.0)
-    return feats, dropped
+    return assemble_features(blocks, key="user_id", how="outer", fill=0.0)
 
 
 @pytest.fixture(scope="module")
@@ -74,8 +72,7 @@ def tx(spark, sf_small):
 
 
 def test_branch_c_features_shape(tx):
-    feats, dropped = branch_c_features(tx, cat_vocab=CAT_VOCAB)
-    pdf = feats.toPandas()
+    pdf = branch_c_features(tx, cat_vocab=CAT_VOCAB).toPandas()
     assert len(pdf) > 0
     # every expected block present
     for probe in ["mcc_freq-5411", "mcc_sum-742", "mcc_freq_stats_mean",
@@ -83,7 +80,9 @@ def test_branch_c_features_shape(tx):
                   "time_day_skew"]:
         assert probe in pdf.columns, probe
     assert pdf.isna().sum().sum() == 0  # fill-0 conform (P9/M2)
-    assert dropped.count() == 0  # sf0.001 users all survive trim+blacklist
+    # sf0.001 users all survive trim+blacklist: one row per input user
+    users = sorted(r[0] for r in tx.select("user_id").distinct().collect())
+    assert sorted(pdf["user_id"]) == users
 
 
 def test_branch_c_fused_matches_blocks_bitwise(tx):
@@ -93,8 +92,8 @@ def test_branch_c_fused_matches_blocks_bitwise(tx):
     column order, which the FEATURE_COLS contract pins downstream."""
     import numpy as np
 
-    fused, d1 = branch_c_features(tx, cat_vocab=CAT_VOCAB)
-    blocks, d2 = reference_branch_c_blocks(tx, cat_vocab=CAT_VOCAB)
+    fused = branch_c_features(tx, cat_vocab=CAT_VOCAB)
+    blocks = reference_branch_c_blocks(tx, cat_vocab=CAT_VOCAB)
     pa = fused.orderBy("user_id").toPandas()
     pb = blocks.orderBy("user_id").toPandas()
     assert list(pa.columns) == list(pb.columns)
@@ -106,7 +105,6 @@ def test_branch_c_fused_matches_blocks_bitwise(tx):
         else:
             eq = va == vb
         assert eq.all(), (c, va[~eq][:3], vb[~eq][:3])
-    assert d1.count() == d2.count()
 
 
 def test_horizontal_stats_multi_extras_match_separate_blocks(tx):
@@ -150,7 +148,7 @@ def test_branch_c_fused_plan_is_narrow(tx):
     cleaned = clean_transactions(
         tx, user_col="user_id", cat_col="cat", value_col="amt", n_amt=10, n_mcc=10
     ).localCheckpoint(eager=True)
-    feats, _ = branch_c_features(cleaned, cat_vocab=CAT_VOCAB)
+    feats = branch_c_features(cleaned, cat_vocab=CAT_VOCAB)
     p = feats._jdf.queryExecution().executedPlan().toString()
     assert p.count("Exchange") <= 3, p.count("Exchange")
     assert p.count("SortMergeJoin") + p.count("BroadcastHashJoin") <= 2

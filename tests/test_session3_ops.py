@@ -2,6 +2,8 @@
 label-propagation communities, raw-frame sampling."""
 
 import datetime as dt
+import math
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -218,13 +220,12 @@ def test_text_keywords_rank_and_tiebreak(spark):
     assert all(len(v) == 2 for v in got.values())
 
 
-def test_tfidf_exact_idf_collect_is_structurally_bounded(spark):
+def test_tfidf_idf_collect_is_guard_bounded(spark, monkeypatch):
     """The one data-dependent driver-side collection (VERDICT r8 watch
-    item): the distinct-df collect goes through limit(bound + 1), so a
-    pathological vocabulary raises with the exact_idf=False escape
-    hatch instead of pulling an unbounded table onto the driver."""
-    import pytest
-
+    item): the distinct-df collect goes through limit(guard + 1), so a
+    pathological vocabulary switches idf to in-plan log instead of
+    pulling an unbounded table onto the driver."""
+    from vtb_datafusion_2023_spark.functions import stats
     from vtb_datafusion_2023_spark.operators.text import tfidf
 
     docs = spark.createDataFrame(
@@ -235,11 +236,20 @@ def test_tfidf_exact_idf_collect_is_structurally_bounded(spark):
         ],  # dfs: a=3, b=2, c=1 -> 3 distinct df values
         "doc_id long, text string",
     )
-    with pytest.raises(ValueError, match="exact_idf=False"):
-        tfidf(docs, max_distinct_dfs=2).collect()
-    # at/above the true distinct count the exact path is unchanged
-    ok = tfidf(docs, max_distinct_dfs=3)
-    assert ok.filter("term = 'c'").select("df").first()[0] == 1
+
+    def run(guard):
+        monkeypatch.setattr(stats, "EXACT_LN_GUARD", guard)
+        out = tfidf(docs)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        return bool(re.search(r"\bln\(", plan)), {(r.doc_id, r.term): (r.df, r.tfidf) for r in out.collect()}
+
+    inplan_log, inplan = run(2)  # one below the distinct count
+    exact_log, exact = run(3)  # at the distinct count the exact path is unchanged
+    assert inplan_log and not exact_log
+    assert exact[(1, "c")] == (1, math.log(3.0))
+    assert inplan.keys() == exact.keys()
+    for k, (d, v) in exact.items():
+        assert inplan[k][0] == d and abs(inplan[k][1] - v) <= 1e-12
 
 
 from hypothesis import given, settings, strategies as st

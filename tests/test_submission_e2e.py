@@ -47,7 +47,7 @@ def test_feature_inventory_matches_runtime(spark, sf_small):
     cleaned = clean_transactions(
         tx, user_col="user_id", cat_col="cat", value_col="amt", n_amt=10, n_mcc=10
     )
-    feats, _ = branch_c_features(cleaned, cat_vocab=SE.VOCAB, blacklist_cats=(2,))
+    feats = branch_c_features(cleaned, cat_vocab=SE.VOCAB, blacklist_cats=(2,))
     assembled = assemble_features([nn, feats], key="user_id", how="outer", fill=None)
     runtime = sorted(c for c in assembled.columns if c != "user_id")
     assert runtime == sorted(SE.FEATURE_COLS)
@@ -109,7 +109,7 @@ def test_inplan_scorer_matches_udf_scorer(spark, sf_small):
     cleaned = clean_transactions(
         tx, user_col="user_id", cat_col="cat", value_col="amt", n_amt=10, n_mcc=10
     )
-    feats, _ = branch_c_features(cleaned, cat_vocab=SE.VOCAB, blacklist_cats=(2,))
+    feats = branch_c_features(cleaned, cat_vocab=SE.VOCAB, blacklist_cats=(2,))
     assembled = assemble_features([nn, feats], key="user_id", how="outer", fill=None).na.drop()
     vecs = assembled.select(
         "user_id", F.array(*[F.col(f"`{c}`").cast("double") for c in cols]).alias("features")

@@ -373,20 +373,19 @@ def scd2_intervals(
     )
 
 
-def pseudonymize(df, cols: list[str], secret: str, keep_null: bool = True):
+def pseudonymize(df, cols: list[str], secret: str):
     """GDPR-style keyed pseudonymization: replace each value with
     ``md5(secret || ':' || value)`` — deterministic (joins/groupBys on the
     token still work across tables tokenized with the same secret),
     irreversible without the secret, engine-portable (the md5 cross-engine
     family), and a pure codegen projection (no shuffle, no vocabulary).
 
-    NULLs stay NULL by default (``keep_null``) so missingness semantics
-    survive tokenization.  Rotate the secret to unlink releases.
+    NULLs stay NULL so missingness semantics survive tokenization.  Rotate the secret to unlink releases.
     """
     from pyspark.sql import functions as F
 
     out = df
     for c in cols:
         tok = F.md5(F.concat_ws(":", F.lit(secret), F.col(c).cast("string")))
-        out = out.withColumn(c, tok if not keep_null else F.when(F.col(c).isNotNull(), tok))
+        out = out.withColumn(c, F.when(F.col(c).isNotNull(), tok))
     return out

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import stats
+
 MERSENNE_P = (1 << 31) - 1  # 31-bit domain: affine products stay < 2^63 (ANSI-safe)
 
 
@@ -1186,7 +1188,6 @@ def simhash_idf_chunks(
     text_col: str,
     chunks: int = 8,
     quant: int = 1_000_000,
-    max_distinct_dfs: int = 2_000_000,
 ) -> DataFrame:
     """IDF-weighted SimHash signatures (Charikar STOC'02 with the tf-idf
     feature weights the original formulation assumes; Manku et al.
@@ -1201,10 +1202,12 @@ def simhash_idf_chunks(
     <= 11, planted recall 72%@7 / 95%@11.
 
     Determinism contract: the idf is an INTEGER weight from the repo's
-    exact-libm pattern (cf. ``text.tfidf(exact_idf=True)``): the
+    exact-libm tables (``functions.stats``, as in ``text.tfidf``): the
     (df -> weight) table is built driver-side from the DISTINCT df
-    values only (bounded by ``max_distinct_dfs``, raises past it) with
-    ``math.floor(math.log(N/df) * quant)`` and broadcast — ``floor``
+    values only with ``math.floor(math.log(N/df) * quant)`` and
+    broadcast.  Past ``EXACT_LN_GUARD`` distinct df values it raises
+    instead of falling back to in-plan ``F.log``: a 1-ulp log difference
+    can move a weight across an integer.  ``floor``
     (never ``round``: Python banker's vs SQL half-away) makes the
     quantization unambiguous, and all downstream vote sums are pure
     int64 — order-insensitive, partitioning-invariant, and replayable
@@ -1254,19 +1257,13 @@ def simhash_idf_chunks(
         tf = tf.repartition(_sc.defaultParallelism, "_id").localCheckpoint(eager=True)
     df_t = tf.groupBy("_t").agg(F.count(F.lit(1)).alias("_df"))
     n_docs = float(df.count())
-    dfs = [
-        r[0] for r in df_t.select("_df").distinct().limit(max_distinct_dfs + 1).collect()
-    ]
-    if len(dfs) > max_distinct_dfs:
+    dfs = stats.exact_ints((df_t, "_df"))
+    if dfs is None:
         raise ValueError(
-            f"simhash_idf_chunks: more than {max_distinct_dfs} distinct "
-            "document-frequency values — the exact-libm idf table would not "
-            "be driver-bounded; raise max_distinct_dfs."
+            f"simhash_idf_chunks: more than EXACT_LN_GUARD={stats.EXACT_LN_GUARD} "
+            "distinct document-frequency values — the exact-libm idf table "
+            "would not be driver-bounded."
         )
-    idf = df.sparkSession.createDataFrame(
-        [(d, int(math.floor(math.log(n_docs / d) * quant))) for d in dfs],
-        "_df bigint, _wq bigint",
-    )
     # the per-token hash depends only on the TERM, so it rides the df_t
     # side of the existing tf-join: one hash (+bit-word parse) per
     # DISTINCT term instead of per (doc, term) row — on zipfian text
@@ -1285,11 +1282,14 @@ def simhash_idf_chunks(
     # broadcast build (r11 SQL-metrics audit on zipf0.1: a 383k-row
     # tf broadcast per consumer; scoring exec 2.5 s -> 1.5 s with
     # the hint).  Guide §3.1: hint the side we KNOW is small.
-    hashed = (
-        tf.join(F.broadcast(df_t), "_t")
-        .join(F.broadcast(idf), "_df")
-        .select("_id", (F.col("_tf") * F.col("_wq")).alias("_w"), "_w1", "_w2")
-    )
+    hashed = stats.join_exact(
+        tf.join(F.broadcast(df_t), "_t"),
+        "_df",
+        dfs,
+        lambda d: int(math.floor(math.log(n_docs / d) * quant)),
+        "_wq",
+        dtype="bigint",
+    ).select("_id", (F.col("_tf") * F.col("_wq")).alias("_w"), "_w1", "_w2")
 
     def bit(p: int):
         return _md5_bit(F.col("_w1"), F.col("_w2"), p)

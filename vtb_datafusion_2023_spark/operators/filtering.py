@@ -26,9 +26,7 @@ def blacklist(df: DataFrame, col: str, *values) -> DataFrame:
     return df.filter(F.col(col).isNull() | ~F.col(col).isin(*values))
 
 
-def frequency_filter(
-    df: DataFrame, keys: list[str], min_count: int, keep_above: bool = True
-) -> DataFrame:
+def frequency_filter(df: DataFrame, keys: list[str], min_count: int) -> DataFrame:
     """F3: keep rows whose (keys) group appears more than ``min_count``
     times (/root/reference/run.py:41-44).
 
@@ -39,9 +37,7 @@ def frequency_filter(
     """
     w = Window.partitionBy(*keys)
     cnt = F.count(F.lit(1)).over(w)
-    grp = F.col("_grp_cnt")
-    cond = grp > min_count if keep_above else grp <= min_count
-    return df.withColumn("_grp_cnt", cnt).filter(cond).drop("_grp_cnt")
+    return df.withColumn("_grp_cnt", cnt).filter(F.col("_grp_cnt") > min_count).drop("_grp_cnt")
 
 
 def positional_trim(

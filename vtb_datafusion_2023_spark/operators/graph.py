@@ -23,7 +23,6 @@ def pagerank(
     iterations: int = 3,
     damping: float = 0.85,
     checkpoint_every: int | None = None,
-    materialize_aux: bool = True,
 ) -> DataFrame:
     """Fixed-iteration PageRank over an edge list; returns ``(node, r)``
     with ranks in the mean-1 formulation (``r`` averages 1.0; divide by
@@ -71,9 +70,8 @@ def pagerank(
         .select("x.node", "x.is_src")
         .groupBy("node")
         .agg(F.sum("is_src").alias("od"))
+        .localCheckpoint(eager=True)
     )
-    if materialize_aux:
-        aux = aux.localCheckpoint(eager=True)
     nodes = aux.select("node")
     deg = aux.filter(F.col("od") > 0).select(F.col("node").alias(src), "od")
     ranks = nodes.selectExpr("node", "cast(1 as double) as r")
@@ -190,7 +188,7 @@ def label_propagation(
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
     und = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).distinct()
     # referenced every iteration — pin the distinct once (pagerank's
-    # materialize_aux rationale: iteration cost = the join, not
+    # pinned-aux rationale: iteration cost = the join, not
     # re-deduplicating the edge list)
     und = und.localCheckpoint(eager=True)
     nodes = und.select(F.col("u").alias("node")).distinct()

@@ -4,9 +4,8 @@ ranges in ONE scan.
 
 All metrics are plain partial-aggregable aggregates computed in a single
 ``agg`` (one job, no per-column scans); the long-form output unpivots
-via ``stack``, which is projection-only.  Exact distincts are hash aggs;
-pass ``approx=True`` to swap in HLL++ for the cardinality column when
-the exact distinct shuffle is the bottleneck.
+via ``stack``, which is projection-only.  Distinct counts are exact
+hash aggs.
 """
 
 from __future__ import annotations
@@ -16,8 +15,11 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.stats import join_exact
+from ..sources.readers import small_frame
 
-def profile(df: DataFrame, approx: bool = False) -> DataFrame:
+
+def profile(df: DataFrame) -> DataFrame:
     """Profile every column: (column, n, n_null, n_distinct, min_num,
     max_num) — min/max only for numeric columns (null otherwise)."""
     numeric = {
@@ -25,15 +27,10 @@ def profile(df: DataFrame, approx: bool = False) -> DataFrame:
         if t in ("tinyint", "smallint", "int", "bigint", "float", "double")
         or t.startswith("decimal")
     }
-    nd = (
-        (lambda c: F.approx_count_distinct(c).alias(f"nd_{c}"))
-        if approx
-        else (lambda c: F.count_distinct(F.col(c)).alias(f"nd_{c}"))
-    )
     aggs = [F.count(F.lit(1)).alias("_n")]
     for c in df.columns:
         aggs.append(F.count(F.when(F.col(c).isNull(), 1)).alias(f"nn_{c}"))
-        aggs.append(nd(c))
+        aggs.append(F.count_distinct(F.col(c)).alias(f"nd_{c}"))
         if c in numeric:
             aggs.append(F.min(F.col(c)).cast("double").alias(f"mn_{c}"))
             aggs.append(F.max(F.col(c)).cast("double").alias(f"mx_{c}"))
@@ -240,8 +237,8 @@ def drift_psi(
     p_i = (n_i + 1) / (N + B).  PSI = sum_i (p_i - q_i) * ln(p_i / q_i).
 
     Determinism contract (hash-gated cross-engine): every ln argument is
-    an INTEGER (counts + smoothed totals), so logs come from a broadcast
-    (int -> libm ln) table — the same device as tfidf's exact idf — and
+    an INTEGER (counts + smoothed totals), so logs come from an
+    exact-libm table (``functions.stats``, as in tfidf's idf) — and
     ln(p/q) decomposes as (ln n_a - ln N_a) - (ln n_b - ln N_b).  The
     per-bin fold into the PSI total runs over the bin-sorted array
     (list_reduce / aggregate), giving one IEEE summation order on any
@@ -272,11 +269,9 @@ def psi_from_counts(ca: DataFrame, cb: DataFrame, edges: list[float]) -> DataFra
     completion and feeds the final counts here)."""
     import math
 
+    spark = ca.sparkSession
     n_bins = len(edges) - 1 + 1  # real bins + the out-of-range NULL bucket
-    df_a = ca
-    bins = df_a.sparkSession.createDataFrame(
-        [(b,) for b in range(len(edges) - 1)] + [(None,)], "bin int"
-    )
+    bins = small_frame(spark, [(b,) for b in range(len(edges) - 1)] + [(None,)], "bin int")
     joined = (
         bins.join(ca, "bin", "left")
         .join(cb, "bin", "left")
@@ -292,15 +287,10 @@ def psi_from_counts(ca: DataFrame, cb: DataFrame, edges: list[float]) -> DataFra
     # frame from the already-collected rows so the corpus-scale count
     # scans execute exactly once (r8 — the corpus_prep double-replay
     # lesson; before this, each count scan ran 3x per invocation)
-    joined = df_a.sparkSession.createDataFrame(rows, joined.schema)
+    joined = small_frame(spark, rows, joined.schema)
     tot_a = sum(r.n_a for r in rows) + n_bins
     tot_b = sum(r.n_b for r in rows) + n_bins
-    ints = sorted({r.n_a + 1 for r in rows} | {r.n_b + 1 for r in rows} | {tot_a, tot_b})
-    ln = df_a.sparkSession.createDataFrame(
-        [(i, math.log(i)) for i in ints], "i bigint, ln double"
-    )
-    la = ln.select(F.col("i").alias("_ia"), F.col("ln").alias("_lna"))
-    lb = ln.select(F.col("i").alias("_ib"), F.col("ln").alias("_lnb"))
+    ints = sorted({r.n_a + 1 for r in rows} | {r.n_b + 1 for r in rows})
     lta = float(math.log(tot_a))
     ltb = float(math.log(tot_b))
     term = (
@@ -308,9 +298,9 @@ def psi_from_counts(ca: DataFrame, cb: DataFrame, edges: list[float]) -> DataFra
         f" - (cast(n_b + 1 as double) / cast({tot_b} as double)))"
         f" * ((_lna - cast({lta!r} as double)) - (_lnb - cast({ltb!r} as double)))"
     )
+    joined = joined.withColumns({"_ia": F.col("n_a") + 1, "_ib": F.col("n_b") + 1})
     detailed = (
-        joined.join(F.broadcast(la), joined["n_a"] + 1 == la["_ia"])
-        .join(F.broadcast(lb), joined["n_b"] + 1 == lb["_ib"])
+        join_exact(join_exact(joined, "_ia", ints, math.log, "_lna"), "_ib", ints, math.log, "_lnb")
         .withColumn("p_a", F.expr(f"cast(n_a + 1 as double) / cast({tot_a} as double)"))
         .withColumn("p_b", F.expr(f"cast(n_b + 1 as double) / cast({tot_b} as double)"))
         .withColumn("term", F.expr(term))

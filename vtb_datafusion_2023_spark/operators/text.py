@@ -9,9 +9,11 @@ count, repetition, chunking, PII scrub, HTML strip) stay inside
 whole-stage codegen as a narrow map over the corpus (100 TB = one scan,
 no shuffle).  The corpus-statistics family (TF-IDF, BM25, the LM
 scorers) additionally pays one hash aggregation per count table — each
-pinned once at its fan-out (lazy ``localCheckpoint``) — and keeps a
-bitwise-oracle exact-log path under :data:`EXACT_LN_GUARD` with fully
-in-plan ``F.log`` beyond it.
+pinned once at its fan-out (lazy ``localCheckpoint``).  Their logarithms
+take integer arguments and come from the exact-libm tables of
+``functions.stats`` (bitwise equal to the DuckDB oracle's ``ln``) while
+the distinct arguments stay under ``stats.EXACT_LN_GUARD``; past it the
+scorers and :func:`tfidf` switch to in-plan ``F.log``.
 """
 
 from __future__ import annotations
@@ -19,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.readers import small_frame
+from ..functions.stats import exact_ints, exact_ints_agg, guarded, join_exact
 
 # A small English stopword list (public knowledge); frozen so language
 # scores are reproducible.
@@ -35,31 +37,6 @@ TOKEN_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 def tokens(text: Column | str, sep: str = " ") -> Column:
     c = F.col(text) if isinstance(text, str) else text
     return F.split(c, sep)
-
-
-# Cardinality guard for the exact-log (bitwise-oracle) path of the LM
-# scoring family: the exact path materializes a driver-side libm ``ln``
-# table over the DISTINCT integer count values (which grow ~O(sqrt(total
-# tokens)) — ~3M values at 10^13 tokens).  Above this many distinct
-# values the functions auto-switch to fully in-plan JVM ``F.log`` (1-ulp
-# engine variance, zero driver materialization, no extra jobs) — the
-# same escape hatch :func:`tfidf` has always had via ``exact_idf``.
-EXACT_LN_GUARD = 100_000
-
-# "exact_log=True" sentinel: effectively-unbounded guard that still fits
-# DataFrame.limit's 32-bit argument.
-_NO_GUARD = (1 << 31) - 2
-
-
-def _distinct_ints_under_guard(frame: DataFrame, col: str, guard: int) -> list[int] | None:
-    """Distinct integer values of ``frame[col]``, or None if there are
-    more than ``guard`` of them (bounding the driver materialization to
-    ``guard + 1`` rows — the deciding collect IS the value collect, so
-    the exact path costs one job, not two)."""
-    rows = frame.select(col).distinct().limit(guard + 1).collect()
-    if len(rows) > guard:
-        return None
-    return sorted(int(r[0]) for r in rows if r[0] is not None)
 
 
 def with_text_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -252,14 +229,15 @@ def bm25_search(
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     df_t = posting.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    dfs = sorted({r[0] for r in df_t.select("df").distinct().collect()})
-    idf = df.sparkSession.createDataFrame(
-        [(d, math.log(1.0 + (n_docs - d + 0.5) / (d + 0.5))) for d in dfs],
-        "df bigint, _idf double",
-    )
+    dfs = [r[0] for r in df_t.select("df").distinct().collect()]  # <= |q| values
     scored = (
-        posting.join(df_t, "term")
-        .join(F.broadcast(idf), "df")
+        join_exact(
+            posting.join(df_t, "term"),
+            "df",
+            dfs,
+            lambda d: math.log(1.0 + (n_docs - d + 0.5) / (d + 0.5)),
+            "_idf",
+        )
         .join(lens, id_col)
         .withColumn(
             "_s",
@@ -316,41 +294,20 @@ def normalize_text(df: DataFrame, text_col: str = "text", out_col: str = "text_n
     return df.withColumn(out_col, c)
 
 
-def tfidf(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    exact_idf: bool = True,
-    max_distinct_dfs: int = 2_000_000,
-) -> DataFrame:
+def tfidf(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Corpus TF-IDF over whitespace terms: one row per (doc, term) with
     raw term frequency, document frequency, and ``tf * ln(N/df)``.
 
     Scale: two hash aggregations — (doc, term) then (term) — and one
-    term-keyed join; no driver-side vocabulary.
-
-    ``exact_idf``: JVM ``Math.log`` and libm ``ln`` disagree by 1 ulp on
-    ~9% of inputs (measured), so in-plan ``F.log`` cannot bitwise-match a
-    libm-based oracle.  idf depends only on the distinct ``df`` values
-    (bounded by the doc count), so the exact path collects them and
-    broadcast-joins libm-computed (df -> idf).  At extreme scale, pass
-    ``exact_idf=False`` for fully in-plan JVM log (1-ulp engine variance).
-
-    ``max_distinct_dfs`` bounds the one data-dependent driver-side
-    collection STRUCTURALLY (VERDICT r8 watch item): the collect runs
-    through ``limit(max_distinct_dfs + 1)``, so the driver never holds
-    more than the bound regardless of how pathological the vocabulary
-    is; hitting the bound raises with the ``exact_idf=False`` escape
-    hatch instead of silently degrading.  Distinct df values are
-    heavy-tailed small in practice (<< vocabulary size); 2M rows of
-    (bigint, double) is ~32 MB — far above anything real, far below
-    driver memory.
+    term-keyed join; no driver-side vocabulary.  idf depends only on the
+    distinct ``df`` values (heavy-tailed small, far below the vocabulary
+    size), so it comes from an exact-libm table (``functions.stats``)
+    while they stay under ``EXACT_LN_GUARD``, and from in-plan ``F.log``
+    past it.
     """
     import math
 
     terms = df.select(id_col, F.explode(F.split(F.col(text_col), " ")).alias("term"))
-    # tf feeds both the document-frequency aggregation and the scoring
-    # join — pin it once instead of replaying the corpus explode
     # eager: tf feeds three consumers (df_t, the distinct-df collect, the
     # scoring join) — materialize once so none replays the corpus explode
     tf = (
@@ -361,37 +318,13 @@ def tfidf(
     df_t = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = float(df.count())
     joined = tf.join(df_t, "term")
-    if exact_idf:
-        from pyspark.sql.functions import broadcast
-
-        # The (df -> libm idf) table is built from the DISTINCT df values
-        # only — bounded by the number of distinct document frequencies
-        # (<= vocabulary size, heavy-tailed small in practice), never by
-        # n_docs.  The limit makes the driver-side bound structural: the
-        # collect can never return more than max_distinct_dfs + 1 rows,
-        # so a pathological vocabulary raises instead of OOMing the
-        # driver.  The collect reads the materialized tf checkpoint,
-        # not the raw scan.
-        dfs = [
-            r[0]
-            for r in df_t.select("df").distinct().limit(max_distinct_dfs + 1).collect()
-        ]
-        if len(dfs) > max_distinct_dfs:
-            raise ValueError(
-                f"tfidf(exact_idf=True): more than {max_distinct_dfs} distinct "
-                "document-frequency values — the exact-libm idf table would "
-                "not be driver-bounded.  Pass exact_idf=False (in-plan JVM "
-                "log, 1-ulp engine variance) or raise max_distinct_dfs."
-            )
-        idf = small_frame(
-            df.sparkSession, [(d, math.log(n_docs / d)) for d in dfs], "df bigint, _idf double"
-        )
-        joined = joined.join(broadcast(idf), "df").withColumn(
-            "tfidf", F.col("tf") * F.col("_idf")
-        )
+    dfs = exact_ints((df_t, "df"))
+    if dfs is not None:
+        joined = join_exact(joined, "df", dfs, lambda d: math.log(n_docs / d), "_idf")
+        idf = F.col("_idf")
     else:
-        joined = joined.withColumn("tfidf", F.col("tf") * F.log(F.lit(n_docs) / F.col("df")))
-    return joined.select(id_col, "term", "tf", "df", "tfidf")
+        idf = F.log(F.lit(n_docs) / F.col("df"))
+    return joined.select(id_col, "term", "tf", "df", (F.col("tf") * idf).alias("tfidf"))
 
 
 PII_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
@@ -593,7 +526,6 @@ def unigram_logprob(
     text_col: str = "text",
     min_count: int = 2,
     oov_weight: float = 0.5,
-    exact_log: bool | None = None,
 ) -> DataFrame:
     """Unigram language-model surprisal per document: mean
     ``-ln p(token)`` under the corpus's own unigram distribution, with
@@ -604,18 +536,12 @@ def unigram_logprob(
 
     Two corpus passes: (1) token counts (explode -> hash agg, one shuffle
     on token); (2) posexplode -> broadcast-join the per-count ``ln``
-    lookup (computed driver-side with libm ``math.log`` over the distinct
-    count values, same exact-log contract as :func:`tfidf`) -> reassemble
-    per doc.  The per-doc float sum folds oldest->newest over a
-    position-sorted array, so it is bitwise-deterministic across
-    partitionings and engines.
-
-    ``exact_log``: True = always the driver-side libm ``ln`` table
-    (bitwise oracle parity); False = always in-plan JVM ``F.log`` (no
-    driver materialization, no extra jobs — the 100 TB path); None
-    (default) = exact while the distinct count values stay under
-    :data:`EXACT_LN_GUARD`, in-plan beyond it.  Both paths agree to
-    float tolerance (property-tested).
+    lookup (an exact-libm table over the distinct count values, same
+    contract as :func:`tfidf`) -> reassemble per doc.  The per-doc float
+    sum folds oldest->newest over a position-sorted array, so it is
+    bitwise-deterministic across partitionings and engines.  Past
+    ``EXACT_LN_GUARD`` distinct count values the ``ln`` is in-plan JVM
+    ``F.log`` (no driver materialization, tolerant-equal, tested).
 
     Returns ``(id_col, n_tokens, surprisal)``.
     """
@@ -635,36 +561,20 @@ def unigram_logprob(
     )
     vocab = counts.filter(F.col("cnt") >= min_count)
     # ONE build-time job for both driver-side inputs: the corpus total
-    # and (on the exact-log path) the distinct vocab count values —
-    # collect_set skips the when()-nulled sub-min_count rows and the
-    # slice bounds the transfer to guard + 1 values, so the guard
-    # semantics match _distinct_ints_under_guard exactly.
-    guard = EXACT_LN_GUARD if exact_log is None else _NO_GUARD
-    aggs = [F.sum("cnt").alias("t")]
-    if exact_log is None or exact_log:
-        aggs.append(
-            F.slice(
-                F.array_sort(
-                    F.collect_set(F.when(F.col("cnt") >= min_count, F.col("cnt")))
-                ),
-                1,
-                guard + 1,
-            ).alias("vals")
-        )
-    row = counts.agg(*aggs).collect()[0]
+    # and the distinct vocab count values (collect_set skips the
+    # when()-nulled sub-min_count rows)
+    row = counts.agg(
+        F.sum("cnt").alias("t"),
+        exact_ints_agg(F.when(F.col("cnt") >= min_count, F.col("cnt"))).alias("vals"),
+    ).collect()[0]
     total = int(row["t"])
-    cnt_values = None
-    if exact_log is None or exact_log:
-        vals = row["vals"] or []
-        if len(vals) <= guard:
-            cnt_values = sorted(int(v) for v in vals)
+    cnt_values = guarded(row["vals"])
     ln_oov = math.log(oov_weight / total)
     scored = pos.join(vocab, "term", "left")
     if cnt_values is not None:
-        ln_map = df.sparkSession.createDataFrame(
-            [(c, math.log(c / total)) for c in cnt_values], "cnt bigint, _lnp double"
+        scored = join_exact(
+            scored, "cnt", cnt_values, lambda c: math.log(c / total), "_lnp", how="left"
         )
-        scored = scored.join(F.broadcast(ln_map), "cnt", "left")
         lnp = F.coalesce(F.col("_lnp"), F.lit(ln_oov))
     else:
         lnp = F.coalesce(F.log(F.col("cnt") / F.lit(float(total))), F.lit(ln_oov))
@@ -741,7 +651,6 @@ def bigram_logprob(
     text_col: str = "text",
     min_count: int = 2,
     oov_weight: float = 0.5,
-    exact_log: bool | None = None,
 ) -> DataFrame:
     """Bigram language-model surprisal per document: mean
     ``-ln p(w2 | w1)`` under the corpus's own bigram distribution
@@ -751,15 +660,12 @@ def bigram_logprob(
     word-salad (every token common, transitions impossible).
 
     Same determinism contract: both logs take INTEGER arguments
-    (``ln c(w1,w2) - ln c(w1,·)``), served from broadcast libm tables
-    over the distinct count values; the per-doc fold runs over the
-    position-sorted array.  Bigram assembly is a shuffle-free array
-    transform (no window/lead pass over the corpus); the two count
-    aggregations are the only shuffles.
-
-    ``exact_log`` as in :func:`unigram_logprob`: None (default) keeps
-    the bitwise libm tables under :data:`EXACT_LN_GUARD` distinct count
-    values and switches to in-plan JVM ``F.log`` beyond it.
+    (``ln c(w1,w2) - ln c(w1,·)``), served from exact-libm tables over
+    the distinct count values (in-plan ``F.log`` past
+    ``EXACT_LN_GUARD``, as in :func:`unigram_logprob`); the per-doc fold
+    runs over the position-sorted array.  Bigram assembly is a
+    shuffle-free array transform (no window/lead pass over the corpus);
+    the two count aggregations are the only shuffles.
 
     Returns ``(id_col, n_bigrams, bi_surprisal)`` for docs with >= 1
     bigram.
@@ -798,42 +704,20 @@ def bigram_logprob(
         .localCheckpoint(eager=False)
     )
     vocab = cb.filter(F.col("cnt") >= min_count)
-    guard = EXACT_LN_GUARD if exact_log is None else _NO_GUARD
     # ONE job over the pinned cb for total + distinct vocab cnt values
     # (same merged-collect idiom as unigram_logprob)
-    aggs = [F.sum("cnt").alias("t")]
-    if exact_log is None or exact_log:
-        aggs.append(
-            F.slice(
-                F.array_sort(
-                    F.collect_set(F.when(F.col("cnt") >= min_count, F.col("cnt")))
-                ),
-                1,
-                guard + 1,
-            ).alias("vals")
-        )
-    row = cb.agg(*aggs).collect()[0]
+    row = cb.agg(
+        F.sum("cnt").alias("t"),
+        exact_ints_agg(F.when(F.col("cnt") >= min_count, F.col("cnt"))).alias("vals"),
+    ).collect()[0]
     total = int(row["t"])
     ln_oov = math.log(oov_weight) - math.log(total)
-    spark = df.sparkSession
-    cnt_vals = ctx_vals = None
-    if exact_log is None or exact_log:
-        vals = row["vals"] or []
-        if len(vals) <= guard:
-            cnt_vals = sorted(int(v) for v in vals)
-        ctx_vals = _distinct_ints_under_guard(cw, "ctx", guard) if cnt_vals is not None else None
+    cnt_vals = guarded(row["vals"])
+    ctx_vals = exact_ints((cw, "ctx")) if cnt_vals is not None else None
     scored = big.join(cw, "w1").join(vocab, ["w1", "w2"], "left")
     if cnt_vals is not None and ctx_vals is not None:
-        ln_cnt = spark.createDataFrame(
-            [(c, math.log(c)) for c in cnt_vals], "cnt bigint, _lncnt double"
-        )
-        ln_ctx = spark.createDataFrame(
-            [(c, math.log(c)) for c in ctx_vals], "ctx bigint, _lnctx double"
-        )
-        scored = (
-            scored.join(F.broadcast(ln_cnt), "cnt", "left")
-            .join(F.broadcast(ln_ctx), "ctx", "left")
-        )
+        scored = join_exact(scored, "cnt", cnt_vals, math.log, "_lncnt", how="left")
+        scored = join_exact(scored, "ctx", ctx_vals, math.log, "_lnctx", how="left")
         lnp = F.coalesce(F.col("_lncnt") - F.col("_lnctx"), F.lit(ln_oov))
     else:
         # in-plan JVM log (the 100 TB path — no driver ln tables)
@@ -864,7 +748,6 @@ def token_entropy(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    exact_log: bool | None = None,
 ) -> DataFrame:
     """Shannon entropy of each document's token distribution:
     ``H = ln(n) - (1/n) * sum_c c*ln(c)`` over per-doc term counts ``c``
@@ -873,14 +756,10 @@ def token_entropy(
     the doc-local half of the cheap LM-quality pair.
 
     Bitwise cross-engine by the module's established contract: ``ln`` is
-    evaluated only at INTEGER arguments (driver-side libm over the
-    bounded set of distinct counts/lengths, broadcast back), and the
-    per-doc sum folds in term order over a sorted array.  One shuffle on
-    ``(doc, term)``, one on ``doc``.
-
-    ``exact_log`` as in :func:`unigram_logprob`: None (default) keeps
-    the bitwise libm tables under :data:`EXACT_LN_GUARD` distinct
-    values, switching to in-plan JVM ``F.log`` beyond it.
+    evaluated only at INTEGER arguments (exact-libm tables over the
+    distinct counts/lengths; in-plan ``F.log`` past ``EXACT_LN_GUARD``
+    of them), and the per-doc sum folds in term order over a sorted
+    array.  One shuffle on ``(doc, term)``, one on ``doc``.
 
     Returns ``(id_col, n_tokens, entropy)``.
     """
@@ -896,16 +775,9 @@ def token_entropy(
         .agg(F.count(F.lit(1)).alias("c"))
         .localCheckpoint(eager=False)
     )
-    spark = df.sparkSession
-    c_values = None
-    if exact_log is None or exact_log:
-        guard = EXACT_LN_GUARD if exact_log is None else _NO_GUARD
-        c_values = _distinct_ints_under_guard(tc, "c", guard)
+    c_values = exact_ints((tc, "c"))
     if c_values is not None:
-        ln_c = spark.createDataFrame(
-            [(c, float(c) * math.log(c)) for c in c_values], "c bigint, _cl double"
-        )
-        tc = tc.join(F.broadcast(ln_c), "c")
+        tc = join_exact(tc, "c", c_values, lambda c: float(c) * math.log(c), "_cl")
     else:
         tc = tc.withColumn("_cl", F.col("c").cast("double") * F.log(F.col("c").cast("double")))
     per_doc = tc.groupBy(id_col).agg(
@@ -915,16 +787,9 @@ def token_entropy(
             " x -> x._cl), cast(0 as double), (a, b) -> a + b)"
         ).alias("_s"),
     ).localCheckpoint(eager=False)
-    n_values = None
-    if c_values is not None:
-        n_values = _distinct_ints_under_guard(
-            per_doc, "n_tokens", EXACT_LN_GUARD if exact_log is None else _NO_GUARD
-        )
+    n_values = exact_ints((per_doc, "n_tokens")) if c_values is not None else None
     if n_values is not None:
-        ln_n = spark.createDataFrame(
-            [(n, math.log(n)) for n in n_values], "n_tokens bigint, _lnn double"
-        )
-        per_doc = per_doc.join(F.broadcast(ln_n), "n_tokens")
+        per_doc = join_exact(per_doc, "n_tokens", n_values, math.log, "_lnn")
         lnn = F.col("_lnn")
     else:
         lnn = F.log(F.col("n_tokens").cast("double"))
@@ -940,7 +805,6 @@ def stupid_backoff_logprob(
     id_col: str = "doc_id",
     text_col: str = "text",
     train: DataFrame | None = None,
-    exact_log: bool | None = None,
 ) -> DataFrame:
     """Stupid Backoff trigram LM surprisal (Brants et al. 2007, "Large
     Language Models in Machine Translation" — THE distributed n-gram LM:
@@ -956,12 +820,12 @@ def stupid_backoff_logprob(
 
     Distributed shape: three count tables (one hash agg each), four
     equi-joins back to the position stream, then the module's bitwise
-    contract — ``ln`` ONLY at integer arguments via a driver-side libm
-    table over the distinct count values (broadcast), ``ln(0.4)`` as a
-    python-libm literal (DuckDB's ln agrees on the same double), and a
-    position-ordered fold per document.  ``exact_log`` as in
-    :func:`unigram_logprob` — None auto-switches to in-plan JVM log past
-    :data:`EXACT_LN_GUARD` distinct count values.
+    contract — ``ln`` ONLY at integer arguments via an exact-libm table
+    over the distinct count values of all three tables (in-plan
+    ``F.log`` past ``EXACT_LN_GUARD`` of them, as in
+    :func:`unigram_logprob`), ``ln(0.4)`` as a python-libm literal
+    (DuckDB's ln agrees on the same double), and a position-ordered fold
+    per document.
     """
     import math
 
@@ -1029,29 +893,14 @@ def stupid_backoff_logprob(
         .join(uni.select(F.col("w").alias("w2"), F.col("cu").alias("cu2")), ["w2"], "left")
         .join(uni.select(F.col("w").alias("w3"), F.col("cu").alias("cu3")), ["w3"], "left")
     )
-    # integer-argument libm ln over every distinct count value (bounded
-    # set) — or, past the EXACT_LN_GUARD cardinality (exact_log as in
-    # :func:`unigram_logprob`), fully in-plan JVM log with no driver
-    # materialization.
-    spark = df.sparkSession
-    vals: set[int] | None = set()
-    if exact_log is False:
-        vals = None
-    else:
-        guard = EXACT_LN_GUARD if exact_log is None else _NO_GUARD
-        for frame, col in ((tri, "c3"), (bi, "cb"), (uni, "cu")):
-            got = _distinct_ints_under_guard(frame, col, guard)
-            if got is None or len(vals) + len(got) > guard:
-                vals = None
-                break
-            vals.update(got)
+    # integer-argument libm ln over the distinct count values of all
+    # three tables, collected in one job — or, past the guard, fully
+    # in-plan JVM log with no driver materialization.
+    vals = exact_ints((tri, "c3"), (bi, "cb"), (uni, "cu"))
     if vals is not None:
-        ln_map = {int(v): math.log(v) for v in vals}
-        lnt = spark.createDataFrame(sorted(ln_map.items()), "v bigint, lnv double")
 
         def with_ln(frame, src, dst):
-            t = lnt.select(F.col("v").alias(src), F.col("lnv").alias(dst))
-            return frame.join(F.broadcast(t), [src], "left")
+            return join_exact(frame, src, vals, math.log, dst, how="left")
 
     else:
 
@@ -1093,7 +942,6 @@ def bigram_pmi(
     df: DataFrame,
     text_col: str = "text",
     min_count: int = 5,
-    exact_log: bool | None = None,
 ) -> DataFrame:
     """Pointwise mutual information of adjacent word pairs — the classic
     collocation detector (Church & Hanks 1990), used on training corpora
@@ -1103,8 +951,8 @@ def bigram_pmi(
     ``pmi(a, b) = ln p(a,b) - ln p(a) - ln p(b)`` decomposes into lns of
     INTEGER counts: ``ln c_ab - ln N_big - ln c_a - ln c_b + 2 ln N_uni``
     — so the engine's exact-log contract applies unchanged: under
-    :data:`EXACT_LN_GUARD` distinct count values, a driver-side libm
-    ``ln`` lookup (bitwise equal to DuckDB's glibc ``ln``); beyond it,
+    ``EXACT_LN_GUARD`` distinct count values, an exact-libm ``ln`` table
+    (bitwise equal to DuckDB's glibc ``ln``); beyond it,
     in-plan JVM ``F.log`` (the 100 TB path, no driver materialization).
     The PMI sum is left-associated single IEEE ops, so both engines and
     both paths agree bitwise given equal ln inputs.
@@ -1147,28 +995,14 @@ def bigram_pmi(
         .localCheckpoint(eager=False)
     )
 
-    cnt_vals = None
-    if exact_log is None or exact_log:
-        guard = EXACT_LN_GUARD if exact_log is None else _NO_GUARD
-        both = big.select(F.col("c_ab").alias("v")).unionByName(
-            uni.select(F.col("c").alias("v"))
-        )
-        cnt_vals = _distinct_ints_under_guard(both, "v", guard)
+    cnt_vals = exact_ints((big, "c_ab"), (uni, "c"))
     joined = (
         big.join(uni.withColumnRenamed("w", "w1").withColumnRenamed("c", "_ca"), "w1")
         .join(uni.withColumnRenamed("w", "w2").withColumnRenamed("c", "_cb"), "w2")
     )
     if cnt_vals is not None:
-        ln_map = df.sparkSession.createDataFrame(
-            [(v, math.log(v)) for v in cnt_vals], "v bigint, lnv double"
-        )
-        joined = (
-            joined.join(
-                F.broadcast(ln_map.withColumnsRenamed({"v": "c_ab", "lnv": "_ln_ab"})), "c_ab"
-            )
-            .join(F.broadcast(ln_map.withColumnsRenamed({"v": "_ca", "lnv": "_ln_a"})), "_ca")
-            .join(F.broadcast(ln_map.withColumnsRenamed({"v": "_cb", "lnv": "_ln_b"})), "_cb")
-        )
+        for src, dst in (("c_ab", "_ln_ab"), ("_ca", "_ln_a"), ("_cb", "_ln_b")):
+            joined = join_exact(joined, src, cnt_vals, math.log, dst)
         ln_ab, ln_a, ln_b = F.col("_ln_ab"), F.col("_ln_a"), F.col("_ln_b")
     else:
         ln_ab = F.log(F.col("c_ab").cast("double"))

@@ -4,9 +4,11 @@
 Input contract: a transactions DataFrame with columns
 (user_id, cat [category code], amt [signed], ts, ord).
 
-Output: (features_df keyed by user_id, dropped_users_df) — users whose
-rows all vanished under trim+blacklist are tracked for the J3/J4
-imputation path, exactly like run.py:200-202.
+Output: the feature frame keyed by user_id.  Users whose rows all
+vanish under trim+blacklist have no row; ``run_submission`` restores
+every missing user at the J4 imputation step (an anti-join against all
+input users), which covers them as run.py:200-202's dropped-user list
+does.
 
 Plan shape at scale: ONE user-window (trim), ONE user hash aggregate
 carrying every kept-level block (both category pivots + the three
@@ -40,7 +42,7 @@ from ..functions.temporal import with_time_parts
 from ..operators.filtering import blacklist as _blacklist
 from ..operators.filtering import positional_trim
 from ..operators.gstats import horizontal_stats_multi
-from ..operators.joins import anti_join_missing, assemble_features
+from ..operators.joins import assemble_features
 from ..operators.pivots import pivot_exprs, row_normalize
 from ..schema import DAYS_OF_MONTH, DAYS_OF_WEEK, HOURS
 
@@ -80,22 +82,19 @@ def branch_c_features(
     trim: int = 20,
     blacklist_cats: Sequence = (6012,),
     freq_divisor: int = 20,
-) -> tuple[DataFrame, DataFrame]:
-    """(features keyed by user_id, users dropped by trim+blacklist).
-    Every kept-level block is one hash aggregate and both A11 stat
-    families another (see the module docstring).
+) -> DataFrame:
+    """Features keyed by user_id.  Every kept-level block is one hash
+    aggregate and both A11 stat families another (see the module
+    docstring).
 
-    The trimmed row set is not pinned: its three consumers (wide
-    aggregate, long aggregate, dropped-users anti-join) all sit above
-    the SAME trim-window exchange, which ReuseExchange shares, and
-    replaying the post-shuffle window beats a block-manager barrier of
-    the row set (measured in run_submission: 6.25 -> 5.90 s at sf0.1,
-    63.4 -> 38.3 s at sf10)."""
+    The trimmed row set is not pinned: its two consumers (wide
+    aggregate, long aggregate) both sit above the SAME trim-window
+    exchange, which ReuseExchange shares, and replaying the post-shuffle
+    window beats a block-manager barrier of the row set (measured in
+    run_submission: 6.25 -> 5.90 s at sf0.1, 63.4 -> 38.3 s at sf10)."""
     tx = with_time_parts(tx.withColumnRenamed("ts", "transaction_dttm"))
     trimmed = positional_trim(tx, "user_id", ["transaction_dttm", "ord"], trim, trim)
-    users_before = trimmed.select("user_id").distinct()
     kept = _blacklist(trimmed, "cat", *blacklist_cats)
-    dropped = anti_join_missing(users_before, kept, "user_id")
 
     # every kept-level block is a per-user aggregate over the same
     # rows: conditional counts (pivots), exact decimal conditional
@@ -139,5 +138,4 @@ def branch_c_features(
         + [f"hod-{h}" for h in HOURS]
         + [f"time_day_{s}" for s in _MOMENT_SUFFIXES]
     )
-    feats = feats.selectExpr("user_id", *[sqlgen.ident(c) for c in ordered])
-    return feats, dropped
+    return feats.selectExpr("user_id", *[sqlgen.ident(c) for c in ordered])

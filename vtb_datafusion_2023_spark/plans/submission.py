@@ -7,12 +7,12 @@ Stages (all from the operator library):
 1. RNN branch (A): bootstrap ensemble over the raw log x scorer x A15
    mean (model.py:247-294).
 2. Robust cleaning: winsorize + rare-category rewrite (run.py:25-85).
-3. Branch C: wide per-user feature matrix + dropped-user tracking
-   (run.py:185-430).
+3. Branch C: wide per-user feature matrix (run.py:185-430).
 4. Assembly J2 + strict dropna M1 (run.py:435-465).
 5. Scoring U6 over the wide row (run.py:466-475).
-6. Submission: union-fill dropped users at the global max A14/J4, sort
-   W6, CSV S3 (run.py:477-486).
+6. Submission: union-fill every input user missing from the scores
+   (dropped by trim+blacklist or by the strict dropna) at the global max
+   A14/J4, sort W6, CSV S3 (run.py:477-486).
 
 Branch A scores through the REAL reference weights when the artifacts
 are present: ``nn_weights.ckpt`` loads via the restricted numpy
@@ -231,7 +231,7 @@ def run_submission(
         tx, user_col="user_id", cat_col="cat", value_col="amt", n_amt=10, n_mcc=10
     )
     # no pin of ``cleaned``: branch C is its one consumer, a pin is a wash (sf10)
-    feats, dropped = branch_c_features(cleaned, cat_vocab=cat_vocab, blacklist_cats=blacklist_cats)
+    feats = branch_c_features(cleaned, cat_vocab=cat_vocab, blacklist_cats=blacklist_cats)
 
     # Assembly J2 + strict dropna M1 (run.py:435-465)
     assembled = assemble_features([nn, feats], key="user_id", how="outer", fill=None).na.drop()

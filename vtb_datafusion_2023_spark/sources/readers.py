@@ -126,17 +126,18 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         df.createOrReplaceTempView(name)
 
 
-def read_transactions_csv(
-    spark: SparkSession, path: str, drop_null: bool = True, stamp_ord: bool = False
-) -> DataFrame:
-    """S1+S2: schema-pinned CSV scan of the canonical transactions table.
+def read_transactions_csv(spark: SparkSession, path: str, stamp_ord: bool = False) -> DataFrame:
+    """S1+S2: schema-pinned CSV scan of the canonical transactions table;
+    rows with a NULL field are dropped, as the reference's ``.dropna()``
+    on ingest (``model.py:214``).
 
-    ``drop_null`` mirrors ``.dropna()`` on ingest
-    (/root/reference/model.py:214).  ``stamp_ord=True`` adds a
-    monotonically-increasing order stamp when the file lacks an explicit
-    ``ord`` column; note monotonic ids are only unique+increasing, not
-    dense, and are assigned per input split — adequate as a deterministic
-    tie-break for a single ordered file read (SURVEY §7.4.1).
+    ``stamp_ord=True`` adds an order stamp when the file lacks an
+    explicit ``ord`` column.  The stamp is ``monotonically_increasing_id``,
+    which encodes the input split's partition index: it is unique and
+    increasing within one read, but its values — and so the ``ord``
+    tie-break between rows with equal timestamps — follow the split
+    layout, which changes with the number of cores and the split size.
+    A split-independent stamp is open (ROADMAP Direction 2).
     """
     ddl = (
         "user_id long, mcc_code int, currency_rk int, "
@@ -146,30 +147,25 @@ def read_transactions_csv(
     df = spark.read.schema(ddl).option("header", True).csv(path)
     if stamp_ord:
         df = df.withColumn("ord", F.monotonically_increasing_id())
-    if drop_null:
-        df = df.na.drop()
-    return df
+    return df.na.drop()
 
 
-def read_jsonl(
-    spark: SparkSession, path: str, schema: str, drop_corrupt: bool = True
-) -> DataFrame:
+def read_jsonl(spark: SparkSession, path: str, schema: str) -> DataFrame:
     """Schema-pinned newline-delimited JSON scan — the common wire format
     for document/training-data corpora.
 
     The explicit schema (DDL string) skips Spark's inference pass (a full
     extra read at 100 TB) and pins types against drifting producers.
-    ``drop_corrupt`` routes unparseable lines to a ``_corrupt_record``
-    column and filters them instead of failing the scan (PERMISSIVE mode).
+    Unparseable lines land in a ``_corrupt_record`` column (PERMISSIVE
+    mode) and are dropped instead of failing the scan: the input comes
+    from outside the program.
     """
     from ..session import tune_session
 
     tune_session(spark)
-    full = schema + (", _corrupt_record string" if drop_corrupt else "")
+    full = schema + ", _corrupt_record string"
     df = spark.read.schema(full).option("mode", "PERMISSIVE").json(path)
-    if drop_corrupt:
-        df = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
-    return df
+    return df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:

@@ -23,11 +23,10 @@ def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = Non
     w.parquet(path)
 
 
-def write_jsonl(df: DataFrame, path: str, single_file: bool = False) -> None:
-    """Newline-delimited JSON sink (document-corpus interchange).  One
-    file only for small exports; at scale keep one file per task."""
-    out = df.coalesce(1) if single_file else df
-    out.write.mode("overwrite").json(path)
+def write_jsonl(df: DataFrame, path: str) -> None:
+    """Newline-delimited JSON sink (document-corpus interchange), one
+    file per task."""
+    df.write.mode("overwrite").json(path)
 
 
 def checkpoint_parquet(df: DataFrame, path: str) -> DataFrame:
