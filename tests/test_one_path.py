@@ -2,23 +2,30 @@
 between an engine path and a differential alternative, and the
 alternatives now live in tests as reference implementations.  This
 guard fails if any of them is accepted again, as it does for the
-parameters that no caller set and for driver-side tables built outside
-the one exact-libm helper (``functions.stats.join_exact``).  It needs no
-SparkSession."""
+parameters that no caller set, for frames of Python rows built outside
+``sources.readers.small_frame`` and for copies of the A10/A11 statistic
+names, which only ``sqlgen`` spells.  It needs no SparkSession."""
 
 from __future__ import annotations
 
 import ast
+import importlib
 import inspect
+import pkgutil
+import re
 
 import pytest
 
+import vtb_datafusion_2023_spark as package
+from vtb_datafusion_2023_spark import functions, sqlgen
+from vtb_datafusion_2023_spark.functions import stats
 from vtb_datafusion_2023_spark.operators import (
     analytics,
     cleaning,
     dedup,
     filtering,
     graph,
+    joins,
     profile,
     similarity,
     text,
@@ -28,12 +35,19 @@ from vtb_datafusion_2023_spark.plans import features, submission
 from vtb_datafusion_2023_spark.sources import readers, writers
 from vtb_datafusion_2023_spark.suite import datapipe
 
+MODULES = [
+    importlib.import_module(m.name)
+    for m in pkgutil.walk_packages(package.__path__, package.__name__ + ".")
+]
+
 REMOVED = [
     (features.branch_c_features, "fused"),
     (features.branch_c_features, "materialize"),
     (submission.run_submission, "bucket_dir"),
     (submission.run_submission, "scorer"),
     (submission.run_submission, "sampler"),
+    (submission.run_submission, "output_path"),
+    (submission.run_submission, "seed"),
     (analytics.funnel, "strategy"),
     (analytics.pattern_spans, "strategy"),
     (analytics.pattern_spans, "broadcast_frontier"),
@@ -85,24 +99,66 @@ def test_removed_selector_not_accepted(fn, param):
         (datapipe, "_corpus_prep"),
         (text, "_NO_GUARD"),
         (text, "_distinct_ints_under_guard"),
+        (submission, "feature_vector_column"),
+        (joins, "join_labels"),
+        (dedup, "minhash_signature"),
+        *[
+            (module, name)
+            for module in (stats, functions)
+            for name in ("dsum", "davg", "sem", "skew_adjusted", "zscore_window")
+        ],
+        (stats, "DECIMAL_SUM_TYPE"),
     ],
 )
 def test_alternative_entry_point_gone(module, name):
     assert not hasattr(module, name)
 
 
-@pytest.mark.parametrize("module", [text, dedup, profile], ids=lambda m: m.__name__)
-def test_no_python_list_frames(module):
-    """Driver-side tables in these modules go through ``small_frame``
-    (a JVM-side local relation), never ``createDataFrame``, whose
-    Python-list form plans a PythonRDD that starts Python workers."""
-    tree = ast.parse(inspect.getsource(module))
-    calls = [
-        node.lineno
-        for node in ast.walk(tree)
-        if isinstance(node, ast.Call)
-        and isinstance(node.func, ast.Attribute)
-        and node.func.attr == "createDataFrame"
-    ]
-    assert calls == []
+class _CreateDataFrameCalls(ast.NodeVisitor):
+    """``(enclosing function, line)`` of every ``createDataFrame`` call."""
 
+    def __init__(self):
+        self.functions, self.calls = [], []
+
+    def visit_FunctionDef(self, node):
+        self.functions.append(node.name)
+        self.generic_visit(node)
+        self.functions.pop()
+
+    def visit_Call(self, node):
+        if isinstance(node.func, ast.Attribute) and node.func.attr == "createDataFrame":
+            self.calls.append((self.functions[-1] if self.functions else None, node.lineno))
+        self.generic_visit(node)
+
+
+@pytest.mark.parametrize("module", MODULES, ids=lambda m: m.__name__)
+def test_no_python_list_frames(module):
+    """Frames of Python rows go through ``small_frame`` (a JVM-side local
+    relation), never ``createDataFrame``, whose Python-list form plans a
+    PythonRDD that starts Python workers.  ``small_frame`` itself is the
+    one caller."""
+    finder = _CreateDataFrameCalls()
+    finder.visit(ast.parse(inspect.getsource(module)))
+    callers = [function for function, _ in finder.calls]
+    assert callers == (["small_frame"] if module is readers else []), finder.calls
+
+
+_DERIVED_NAME = re.compile(r"(amplitude|divmm)[1-5]")
+
+
+@pytest.mark.parametrize(
+    "module", [m for m in MODULES if m is not sqlgen], ids=lambda m: m.__name__
+)
+def test_stat_names_only_in_sqlgen(module):
+    """The A10/A11 column names have one definition (``sqlgen``): no other
+    module spells a derived amplitude/ratio name or lists the moment
+    names by hand."""
+    moments = set(sqlgen.MOMENT_COLS)
+    for node in ast.walk(ast.parse(inspect.getsource(module))):
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            assert not _DERIVED_NAME.search(node.value), (node.lineno, node.value)
+        if isinstance(node, (ast.List, ast.Tuple, ast.Set)):
+            names = [
+                e.value for e in node.elts if isinstance(e, ast.Constant) and e.value in moments
+            ]
+            assert len(names) < 3, (node.lineno, names)

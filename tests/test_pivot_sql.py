@@ -27,14 +27,20 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from vtb_datafusion_2023_spark.functions.stats import dsum
 from vtb_datafusion_2023_spark.operators import pivots
 from vtb_datafusion_2023_spark.plans import features
 
 
+def dsum(c):
+    """Column-API exact sum: a decimal(38,6) sum split into integral and
+    fractional parts before the double cast (``sqlgen.dsum_cast``)."""
+    s = F.sum(c.cast("decimal(38,6)"))
+    return (s - s % 1).cast("decimal(38,0)").cast("double") + (s % 1).cast("double")
+
+
 def reference_pivot_exprs(pivot_col, vocab, agg="count", value_col=None, prefix=None):
     """Column-API conditional aggregates: one ``F.when`` per vocabulary
-    value, counted or summed through ``functions.stats.dsum``."""
+    value, counted or summed through ``dsum``."""
     prefix = prefix or f"{pivot_col}_{agg}"
     aggs = []
     for v in vocab:

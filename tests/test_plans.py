@@ -14,6 +14,7 @@ from vtb_datafusion_2023_spark.plans import (
     vrae_input_sequences,
 )
 from vtb_datafusion_2023_spark.sources.readers import load_table
+from vtb_datafusion_2023_spark.sources.writers import write_csv
 from test_pivot_sql import reference_pivot_exprs
 
 # events -> transactions contract: 5 category codes incl. the 6012
@@ -219,9 +220,9 @@ def test_rnn_sequences_fixed_length(tx):
 
 def test_run_submission_end_to_end(spark, tx, tmp_path):
     out = str(tmp_path / "submission")
-    sub = run_submission(
-        spark, tx, cat_vocab=CAT_VOCAB, n_reps=3, output_path=out
-    ).toPandas()
+    sub = run_submission(spark, tx, cat_vocab=CAT_VOCAB, n_reps=3)
+    write_csv(sub, out)
+    sub = sub.toPandas()
     n_users = tx.select("user_id").distinct().count()
     # one score per input user (J4 re-adds anyone dropped), sorted
     assert len(sub) == n_users

@@ -9,6 +9,7 @@ to later reads, which then run no job.
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 import shutil
 
@@ -86,3 +87,23 @@ def test_small_frame_matches_create_data_frame_without_python_rdd(spark):
     assert "LocalRelation" in plan and "LogicalRDD" not in plan
     empty = readers.small_frame(spark, [], ddl)
     assert empty.schema == want.schema and empty.collect() == []
+
+
+def test_small_frame_arrays_and_ntz_timestamps_match_create_data_frame(spark):
+    """The IVF centroid table (int, array<double>) and the streaming
+    sentinel rows (timestamp_ntz) arrive as ``createDataFrame`` builds
+    them: element NaN/-0.0/NULL, empty and NULL arrays, naive datetimes
+    at microsecond resolution, before 1970 and past 2038."""
+    ddl = "cid int, v array<double>, ts timestamp_ntz"
+    rows = [
+        (0, [1.5, -0.0, float("nan")], dt.datetime(2023, 1, 1, 12, 30, 45, 123456)),
+        (1, [], dt.datetime(1969, 12, 31, 23, 59, 59, 999999)),
+        (2, None, None),
+        (None, [None, 0.1 + 0.2, float("-inf")], dt.datetime(2100, 2, 28, 0, 0, 0, 1)),
+    ]
+    got = readers.small_frame(spark, rows, ddl)
+    want = spark.createDataFrame(rows, ddl)
+    assert got.schema == want.schema
+    assert repr(got.collect()) == repr(want.collect())
+    plan = got._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan

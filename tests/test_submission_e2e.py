@@ -43,7 +43,7 @@ def test_feature_inventory_matches_runtime(spark, sf_small):
     from vtb_datafusion_2023_spark.plans.submission import _rnn_branch
 
     tx = _tx(spark, sf_small)
-    nn = _rnn_branch(tx, n_reps=2, seed=42, use_real_rnn=False)
+    nn = _rnn_branch(tx, n_reps=2, use_real_rnn=False)
     cleaned = clean_transactions(
         tx, user_col="user_id", cat_col="cat", value_col="amt", n_amt=10, n_mcc=10
     )
@@ -105,7 +105,7 @@ def test_inplan_scorer_matches_udf_scorer(spark, sf_small):
     from vtb_datafusion_2023_spark.inference.udfs import score_with_model
 
     tx = _tx(spark, sf_small)
-    nn = _rnn_branch(tx, n_reps=2, seed=42, use_real_rnn=False)
+    nn = _rnn_branch(tx, n_reps=2, use_real_rnn=False)
     cleaned = clean_transactions(
         tx, user_col="user_id", cat_col="cat", value_col="amt", n_amt=10, n_mcc=10
     )

@@ -4,10 +4,3 @@ from .temporal import (  # noqa: F401
     hours_since,
     with_time_parts,
 )
-from .stats import (  # noqa: F401
-    dsum,
-    davg,
-    sem,
-    skew_adjusted,
-    zscore_window,
-)

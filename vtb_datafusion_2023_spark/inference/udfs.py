@@ -11,9 +11,9 @@ Spark-native pattern is identical for any model family:
    model per executor (torch/CatBoost import inside the closure),
 4. emit (id, score) — joins back into the feature assembly (J2).
 
-torch/catboost are NOT installed in this container, so the shipped scorer
-is a deterministic linear model exercising the identical plumbing; the
-torch path is gated behind an import-try with a clear error.
+torch/catboost are not dependencies: the reference checkpoints load into
+numpy (``torch_ckpt``/``nn_numpy``, ``cbm``), and ``score_with_model``
+is a deterministic linear model over the same plumbing.
 """
 
 from __future__ import annotations
@@ -31,8 +31,8 @@ from pyspark.sql import types as T
 class BroadcastModel:
     """Artifact container shipped to executors (S5 -> broadcast)."""
 
-    kind: str  # 'linear' | 'torch' | 'catboost'
-    payload: object  # weights vector / state-dict bytes / cbm bytes
+    kind: str  # 'linear' | 'cbm' | 'numpy_rnn' | 'numpy_vrae'
+    payload: object  # weights vector / cbm arrays / numpy state dict
 
 
 def linear_scorer(weights: list[float]) -> BroadcastModel:
@@ -70,19 +70,9 @@ def score_with_model(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         m = b.value
-        if m["kind"] == "linear":
-            w = m["payload"]
-        elif m["kind"] == "torch":
-            try:
-                import torch  # noqa: F401
-            except ImportError as err:  # pragma: no cover - env-dependent
-                raise NotImplementedError(
-                    "torch not installed in this container; RNN/VRAE scoring "
-                    "(reference model.py:27-145, vrae/vrae.py) plugs in here"
-                ) from err
-            raise NotImplementedError("torch scoring path: load state-dict from m.payload")
-        else:  # pragma: no cover
-            raise NotImplementedError(f"unknown model kind {m['kind']}")
+        if m["kind"] != "linear":  # pragma: no cover
+            raise NotImplementedError(f"score_with_model scores linear models, not {m['kind']}")
+        w = m["payload"]
         for pdf in batches:
             vecs = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
             # sequential fold, not BLAS dot: deterministic accumulation order

@@ -93,31 +93,6 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
     return F.array_distinct(grams)
 
 
-def minhash_signature(shingles: Column, num_perm: int = 64, seed: int = 1) -> Column:
-    """K permuted min-hashes over the shingle set, fully JVM-side.
-
-    h_i(s) = (a_i * h(s) + b_i) mod p with p = 2^31-1 (Mersenne), h(s) =
-    xxhash64 folded into [0, p), and a_i, b_i derived deterministically
-    from ``seed``.  The 31-bit domain keeps every product < 2^62, safe
-    under Spark's default ANSI overflow checking.  Signature element i is
-    min over shingles; nested array lambdas keep it one projection.
-    """
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_perm - 1)),
-        lambda i: F.array_min(
-            F.transform(
-                shingles,
-                lambda s: F.pmod(
-                    (F.pmod(i * 40503 + F.lit(seed * 7919 + 1), F.lit(MERSENNE_P)) + 1)
-                    * F.pmod(F.xxhash64(s), F.lit(MERSENNE_P))
-                    + (i * 2654435761 + 7) % MERSENNE_P,
-                    F.lit(MERSENNE_P),
-                ),
-            )
-        ),
-    )
-
-
 def minhash_band_table(
     df: DataFrame,
     id_col: str,
@@ -137,7 +112,7 @@ def minhash_band_table(
     WITHOUT touching historical text (``incremental_minhash_pairs``).
     """
     rows = num_perm // bands
-    seed_ = 1  # matches minhash_signature's derivation
+    seed_ = 1  # fixed: band tables from separate runs must collide
 
     if shingle_strategy == "window":
         w = Window.partitionBy("_id").orderBy("pos")

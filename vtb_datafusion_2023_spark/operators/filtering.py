@@ -725,4 +725,4 @@ def temperature_mix_weights(
             T.StructField("epochs", T.DoubleType(), True),
         ]
     )
-    return spark.createDataFrame(out, schema)
+    return small_frame(spark, out, schema)

@@ -20,18 +20,6 @@ from pyspark.sql import functions as F
 
 from .. import sqlgen
 
-# Every column name ``horizontal_stats_multi`` generates for a family
-# prefix ``p``: the moment_stats aggregate outputs (``_n``/``_sum``/
-# ``_amplitude`` are dropped post-derivation but exist in the
-# intermediate, so extras may not collide with them either) plus the
-# derived amplitude/ratio columns.
-_HSTAT_GENERATED = (
-    "n", "mean", "median", "min", "max", "std", "sem", "skew", "var",
-    "sum", "amplitude",
-    "amplitude1", "amplitude2", "amplitude3", "amplitude4", "amplitude5",
-    "divmm1", "divmm2", "divmm3", "divmm4", "divmm5",
-)
-
 
 def vertical_stats(
     df: DataFrame, group_cols: list[str], value_col: str, prefix: str
@@ -87,30 +75,19 @@ def horizontal_stats_multi(
     # from the NaN->0 pass BY NAME — an extra aliased to a generated stat
     # name (or a duplicate / the group key) would silently misclassify
     # the real stat column and skip its coalesce.  Fail loudly instead.
-    generated = {f"{p}_{s}" for _, p in specs for s in _HSTAT_GENERATED}
+    generated = {
+        f"{p}_{s}" for _, p in specs for s in sqlgen.MOMENT_COLS + sqlgen.HSTAT_COLS
+    }
     bad = [c for c in extra_cols if c in generated or c == group_col]
     if bad or len(set(extra_cols)) != n_extra:
         raise ValueError(
             f"extra_aggs aliases must be unique and disjoint from the group "
             f"key and generated stat names; offending: {bad or extra_cols}"
         )
-    derived: list[str] = []
-    for _, p in specs:
-        derived += [
-            f"({p}_max - {p}_min) as {p}_amplitude1",
-            f"({p}_max - {p}_median) as {p}_amplitude2",
-            f"({p}_max - {p}_mean) as {p}_amplitude3",
-            f"({p}_median - {p}_min) as {p}_amplitude4",
-            f"({p}_mean - {p}_min) as {p}_amplitude5",
-            f"({p}_max / {p}_min) as {p}_divmm1",
-            f"({p}_max / {p}_mean) as {p}_divmm2",
-            f"({p}_max / {p}_median) as {p}_divmm3",
-            f"({p}_mean / {p}_min) as {p}_divmm4",
-            f"({p}_median / {p}_min) as {p}_divmm5",
-        ]
+    derived = [s for _, p in specs for s in sqlgen.hstat_derived(p)]
     out = agg.select("*", *[F.expr(s) for s in derived])
     for _, p in specs:
-        out = out.drop(f"{p}_n", f"{p}_sum", f"{p}_amplitude")
+        out = out.drop(*[f"{p}_{c}" for c in sqlgen.HSTAT_DROPPED])
     # pandas fillna(0): NaN -> 0 across every stat column.  The inner cast
     # keeps bigint min/max as double (coalesce with a bare 0.0 literal
     # would promote the whole thing to DECIMAL in Spark).

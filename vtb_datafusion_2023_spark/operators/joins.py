@@ -1,4 +1,4 @@
-"""Join / assembly operators J1-J5, SO1-SO2, A14-A15 (SURVEY §2.4/§2.5/§2.7).
+"""Join / assembly operators J2-J4, SO2-SO3, A14-A15 (SURVEY §2.4/§2.5/§2.7).
 
 Join strategy at 100 TB: per-user feature blocks are all keyed by user_id
 with ~1 row/user, so the assembly joins are same-key and AQE picks
@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from ..functions.stats import dsum
+from .. import sqlgen
 
 
 def assemble_features(
@@ -29,12 +29,6 @@ def assemble_features(
     """
     out = reduce(lambda a, b: a.join(b, on=key, how=how), blocks)
     return out if fill is None else out.na.fill(fill)
-
-
-def join_labels(features: DataFrame, labels: DataFrame, key: str = "user_id") -> DataFrame:
-    """J1: inner equi-join features<->labels with the small side broadcast
-    (/root/reference/model.py:151)."""
-    return features.join(broadcast(labels), on=key, how="inner")
 
 
 def anti_join_missing(universe: DataFrame, present: DataFrame, key: str) -> DataFrame:
@@ -73,8 +67,9 @@ def ensemble_mean(
     """
     tagged = [df.select(key, score_col) for df in runs]
     unioned = reduce(lambda a, b: a.unionByName(b), tagged)
+    c = sqlgen.ident(score_col)
     return unioned.groupBy(key).agg(
-        (dsum(score_col) / F.count(score_col)).alias(f"{score_col}_mean")
+        F.expr(f"({sqlgen.dsum_cast(c)} / count({c}))").alias(f"{score_col}_mean")
     )
 
 

@@ -67,7 +67,7 @@ def pivot_agg(
 ) -> DataFrame:
     """A1-A6: pivot with a FROZEN vocabulary as conditional aggregation.
 
-    ``agg``: 'count' | 'sum' (sum is decimal-exact — see functions.stats).
+    ``agg``: 'count' | 'sum' (sum is decimal-exact — see sqlgen.dsum_cast).
     Columns are named ``{prefix}-{v}`` like the reference's
     ``f'mcc_freq-{code}'`` scheme (/root/reference/run.py:241).
 

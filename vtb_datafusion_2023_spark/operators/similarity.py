@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
+from ..sources.readers import small_frame
+
 
 def dot(a: Column, b: Column) -> Column:
     """Left-fold dot product (deterministic summation order)."""
@@ -165,7 +167,7 @@ def ivf_train_centroids(
     train = corpus.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"))
     model = KMeans(k=k, seed=seed, featuresCol="features").fit(train)
     centers = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    return corpus.sparkSession.createDataFrame(centers, "cid int, centroid array<double>")
+    return small_frame(corpus.sparkSession, centers, "cid int, centroid array<double>")
 
 
 def ivf_topk(
@@ -338,14 +340,8 @@ def knn_join_blocked(
 
     q_rows = queries.select(id_col, vec_col).collect()
     if not q_rows:
-        empty = [
-            ("query_id", "bigint"),
-            ("neighbor_id", "bigint"),
-            ("rank", "int"),
-            ("cos", "double"),
-        ]
-        return corpus.sparkSession.createDataFrame(
-            [], schema=", ".join(f"{n} {t}" for n, t in empty)
+        return small_frame(
+            corpus.sparkSession, [], "query_id bigint, neighbor_id bigint, rank int, cos double"
         )
     q_ids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
     q_mat = np.asarray([r[1] for r in q_rows], dtype=np.float64)
@@ -591,8 +587,8 @@ def pq_topk(
     books = _pq_codebook_numpy(corpus.sparkSession, cb)
     q_rows = queries.select(id_col, vec_col).collect()
     if not q_rows:
-        return corpus.sparkSession.createDataFrame(
-            [], schema="query_id bigint, neighbor_id bigint, rank int, adist double"
+        return small_frame(
+            corpus.sparkSession, [], "query_id bigint, neighbor_id bigint, rank int, adist double"
         )
     q_ids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
     q_mat = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
@@ -745,8 +741,8 @@ def lsh_pq_topk(
     books = _pq_codebook_numpy(corpus.sparkSession, cb)
     q_rows = queries.select(id_col, vec_col).collect()
     if not q_rows:
-        return corpus.sparkSession.createDataFrame(
-            [], schema="query_id bigint, neighbor_id bigint, rank int, cos double"
+        return small_frame(
+            corpus.sparkSession, [], "query_id bigint, neighbor_id bigint, rank int, cos double"
         )
     q_ids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
     q_mat = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)

@@ -46,21 +46,20 @@ from ..operators.joins import assemble_features
 from ..operators.pivots import pivot_exprs, row_normalize
 from ..schema import DAYS_OF_MONTH, DAYS_OF_WEEK, HOURS
 
-# Explicit output orders for the fused projection (the FEATURE_COLS
-# contract).  Built from the known suffix lists rather than prefix scans
-# of the intermediate schemas: a future family prefix that is a string
-# prefix of another (e.g. "mcc_freq_stats" / "mcc_freq_stats_v2") would
-# make a startswith() scan double-select columns and silently break the
-# contract order.
-_HSTAT_SUFFIXES = (
-    "mean", "median", "min", "max", "std", "sem", "skew", "var",
-    "amplitude1", "amplitude2", "amplitude3", "amplitude4", "amplitude5",
-    "divmm1", "divmm2", "divmm3", "divmm4", "divmm5",
-)
-_MOMENT_SUFFIXES = (
-    "n", "mean", "median", "min", "max", "std", "sem", "skew", "var",
-    "sum", "amplitude",
-)
+def feature_columns(cat_vocab: Sequence) -> list[str]:
+    """Branch C's output columns after ``user_id``, in the historical
+    8-block assembly order (the ``FEATURE_COLS`` contract in
+    ``suite.submission_e2e``)."""
+    return (
+        [f"mcc_freq-{v}" for v in cat_vocab]
+        + [f"mcc_sum-{v}" for v in cat_vocab]
+        + [f"mcc_freq_stats_{s}" for s in sqlgen.HSTAT_COLS]
+        + [f"mcc_freq_proc_stats_{s}" for s in sqlgen.HSTAT_COLS]
+        + [f"dom-{d}" for d in DAYS_OF_MONTH]
+        + [f"dow-{d}" for d in DAYS_OF_WEEK]
+        + [f"hod-{h}" for h in HOURS]
+        + [f"time_day_{s}" for s in sqlgen.MOMENT_COLS]
+    )
 
 
 def _long_counts(kept: DataFrame, freq_divisor: int) -> DataFrame:
@@ -125,17 +124,5 @@ def branch_c_features(
     )
 
     feats = assemble_features([kept_block, stats_block], key="user_id", how="outer", fill=0.0)
-    # present columns in the historical 8-block assembly order (the
-    # FEATURE_COLS contract in suite.submission_e2e) — a zero-cost
-    # projection over the joined row.
-    ordered = (
-        [f"mcc_freq-{v}" for v in cat_vocab]
-        + [f"mcc_sum-{v}" for v in cat_vocab]
-        + [f"mcc_freq_stats_{s}" for s in _HSTAT_SUFFIXES]
-        + [f"mcc_freq_proc_stats_{s}" for s in _HSTAT_SUFFIXES]
-        + [f"dom-{d}" for d in DAYS_OF_MONTH]
-        + [f"dow-{d}" for d in DAYS_OF_WEEK]
-        + [f"hod-{h}" for h in HOURS]
-        + [f"time_day_{s}" for s in _MOMENT_SUFFIXES]
-    )
-    return feats.selectExpr("user_id", *[sqlgen.ident(c) for c in ordered])
+    # a zero-cost projection over the joined row into the contract order
+    return feats.selectExpr("user_id", *[sqlgen.ident(c) for c in feature_columns(cat_vocab)])

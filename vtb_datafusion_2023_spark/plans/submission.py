@@ -29,11 +29,10 @@ The three branches are independent DAG subtrees off one scan: Spark runs
 them as parallel jobs feeding the assembly joins (vs the reference's
 sequential single-threaded loops — SURVEY §4).
 
-The scorer inputs over the wide row (the feature vector, the stand-in
-score) are single SQL expressions rather than one Column-API call per
-feature: PySpark 4.x captures the call site on every Column call, at
-several py4j round trips each, and building this plan runs on the
-driver before the eager checkpoint below can start.
+The stand-in score over the wide row is one SQL expression rather than
+one Column-API call per feature: PySpark 4.x captures the call site on
+every Column call, at several py4j round trips each, and building this
+plan runs on the Spark driver before the eager checkpoint below can start.
 """
 
 from __future__ import annotations
@@ -44,7 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import sqlgen
-from ..inference.udfs import BroadcastModel, score_rnn_sequences, score_with_model
+from ..inference.udfs import BroadcastModel, score_catboost, score_rnn_sequences
 from ..operators.cleaning import clean_transactions
 from ..operators.joins import (
     anti_join_missing,
@@ -58,6 +57,8 @@ from .sequences import reference_feature_frame, rnn_input_sequences
 
 
 REFERENCE_BINS = "/root/reference/nn_bins.pickle"
+# seeds the real-weights branch A's bootstrap draws (model.py:279-281)
+BOOTSTRAP_SEED = 42
 
 # --- stand-ins for absent reference artifacts -----------------------------
 #
@@ -93,13 +94,6 @@ def standin_target_column(feature_cols: Sequence[str]):
     over the NAME-SORTED feature columns — the same SQL text the oracle
     side evaluates (``standin_target_sql``)."""
     return F.expr(standin_target_sql(feature_cols, quote="`"))
-
-
-def feature_vector_column(feature_cols: Sequence[str]):
-    """The positional double vector the model UDF scores."""
-    return F.expr(
-        "array(" + ", ".join(f"cast({sqlgen.ident(c)} as double)" for c in feature_cols) + ")"
-    )
 
 
 def standin_target_sql(feature_cols: Sequence[str], quote: str = '"') -> str:
@@ -174,7 +168,7 @@ def _rnn_branch_md5(tx: DataFrame, n_reps: int) -> DataFrame:
     ).filter(F.col("nn_predict").isNotNull())
 
 
-def _rnn_branch(tx: DataFrame, n_reps: int, seed: int, use_real_rnn: bool) -> DataFrame:
+def _rnn_branch(tx: DataFrame, n_reps: int, use_real_rnn: bool) -> DataFrame:
     """Branch A: ``reliable_predict`` (model.py:247-294) — bootstrap x
     RNN scorer x mean.
 
@@ -190,7 +184,7 @@ def _rnn_branch(tx: DataFrame, n_reps: int, seed: int, use_real_rnn: bool) -> Da
         return _rnn_branch_md5(tx, n_reps)
     bins, model = real
     runs = []
-    for rep in bootstrap_runs(tx, n_reps, fraction=0.95, seed=seed):
+    for rep in bootstrap_runs(tx, n_reps, fraction=0.95, seed=BOOTSTRAP_SEED):
         seqs = rnn_input_sequences(reference_feature_frame(rep), bins, seq_len=300)
         scored = score_rnn_sequences(
             seqs, model, id_col="user_id", seq_col="seq"
@@ -207,8 +201,6 @@ def run_submission(
     cat_vocab: Sequence,
     model: BroadcastModel | None = None,
     n_reps: int = 5,
-    seed: int = 42,
-    output_path: str | None = None,
     use_real_rnn: bool = True,
     blacklist_cats: Sequence = (6012,),
 ) -> DataFrame:
@@ -217,14 +209,14 @@ def run_submission(
     Without the reference artifacts (or with ``use_real_rnn=False``) and
     without a ``model``, every stage is in-plan SQL: branch A draws by
     md5 of ``ord`` and U6 is the linear stand-in score, so the output
-    depends on the rows alone, not on their partitioning.  ``seed``
-    seeds the real-weights branch A's bootstrap draws only.
+    depends on the rows alone, not on their partitioning.  ``model`` is
+    the reference CatBoost model (``inference.udfs.catboost_cbm_model``).
 
-    Returns the submission DataFrame sorted by user_id; optionally writes
-    the CSV (S3).
+    Returns the submission DataFrame sorted by user_id; ``write_csv``
+    writes it (S3).
     """
     # Branch A on the raw log (the reference scores the RNN before cleaning)
-    nn = _rnn_branch(tx, n_reps=n_reps, seed=seed, use_real_rnn=use_real_rnn)
+    nn = _rnn_branch(tx, n_reps=n_reps, use_real_rnn=use_real_rnn)
 
     # Robust cleaning (A7-A9) then branch C features
     cleaned = clean_transactions(
@@ -236,31 +228,17 @@ def run_submission(
     # Assembly J2 + strict dropna M1 (run.py:435-465)
     assembled = assemble_features([nn, feats], key="user_id", how="outer", fill=None).na.drop()
 
-    # U6 scoring over the wide row.  A ``kind='cbm'`` model
-    # (inference.udfs.catboost_cbm_model) scores through the REAL
-    # reference GBDT, conforming columns by name (J5); any other kind
-    # scores the positional feature vector in a broadcast-model
-    # mapInPandas; no model is the in-plan stand-in score.
-    feature_cols = [c for c in assembled.columns if c != "user_id"]
+    # U6 scoring over the wide row: the reference CatBoost model scores
+    # through the REAL GBDT, conforming columns by name (J5); no model is
+    # the in-plan stand-in score.
     if model is None:
+        feature_cols = [c for c in assembled.columns if c != "user_id"]
         preds = assembled.select(
             "user_id", standin_target_column(feature_cols).alias("target")
         )
-    elif model.kind == "cbm":
-        from ..inference.udfs import score_catboost
-
+    else:
         preds = (
             score_catboost(assembled, model, id_col="user_id")
-            .withColumnRenamed("vec_id", "user_id")
-            .select("user_id", F.col("score").alias("target"))
-        )
-    else:
-        vecs = assembled.select(
-            "user_id",
-            feature_vector_column(feature_cols).alias("features"),
-        )
-        preds = (
-            score_with_model(vecs, model, id_col="user_id", vec_col="features")
             .withColumnRenamed("vec_id", "user_id")
             .select("user_id", F.col("score").alias("target"))
         )
@@ -273,12 +251,4 @@ def run_submission(
     preds = preds.localCheckpoint(eager=True)
     all_users = tx.select("user_id").distinct()
     missing = anti_join_missing(all_users, preds, "user_id")
-    submission = union_fill_max(preds, missing, key="user_id", score_col="target").orderBy(
-        "user_id"
-    )
-
-    if output_path is not None:
-        from ..sources.writers import write_csv
-
-        write_csv(submission, output_path)
-    return submission
+    return union_fill_max(preds, missing, key="user_id", score_col="target").orderBy("user_id")

@@ -7,9 +7,8 @@ transaction_amt, transaction_dttm[, ord]), runs the full scoring pipeline
 (plans.submission), writes the sorted (user_id, target) submission CSV.
 
 Note: with no model artifact the deterministic linear stand-in emits
-UNCALIBRATED scores; swapping in a real CatBoost/torch BroadcastModel
-(inference.udfs) yields predict_proba-style [0,1] targets like the
-reference.
+UNCALIBRATED scores; ``run_submission(model=catboost_cbm_model())``
+(inference.udfs) scores through the reference CatBoost model instead.
 
 Without the reference artifacts the output depends only on the rows and
 their ``ord`` column, not on how Spark splits the file.  An input without

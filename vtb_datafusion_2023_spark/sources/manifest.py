@@ -31,6 +31,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .readers import small_frame
+
 _MANIFEST_GLOB = "manifest-v*.json"
 
 
@@ -320,7 +322,7 @@ def _bucket_expr(key_col: str, n_buckets: int):
 
     # hash the canonical string form: xxhash64 is physical-type-sensitive
     # (int vs bigint hash differently), and lookup keys arrive with
-    # whatever width createDataFrame infers
+    # whatever width their Python type maps to
     return F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(n_buckets)).cast("int")
 
 
@@ -469,6 +471,10 @@ def merge_into(
     return _publish(table_dir, manifest)
 
 
+# DDL type of a lookup key by its Python type, as createDataFrame infers it
+_KEY_TYPES = {bool: "boolean", int: "bigint", float: "double", str: "string"}
+
+
 def read_versioned_pruned(
     spark: SparkSession,
     table_dir: str,
@@ -490,7 +496,8 @@ def read_versioned_pruned(
         raise ValueError("read_versioned_pruned requires a bucketed table")
     key_col = m["bucketing"]["key_col"]
     n_buckets = m["bucketing"]["n_buckets"]
-    lookup = spark.createDataFrame([(k,) for k in keys], [key_col])
+    ddl = _KEY_TYPES[type(keys[0])] if keys else "string"
+    lookup = small_frame(spark, [(k,) for k in keys], f"`{key_col}` {ddl}")
     touched = {
         r["_b"]
         for r in lookup.select(_bucket_expr(key_col, n_buckets).alias("_b"))

@@ -77,7 +77,8 @@ def small_frame(spark: SparkSession, rows: list[tuple], schema: StructType | str
     ``defaultParallelism`` partitions, so each job that reads the frame
     starts Python workers (~0.25 s per job on local[4]); an Arrow table
     becomes a JVM-side relation and starts none.  Integers, doubles
-    (NaN included), strings and NULLs arrive bit-for-bit."""
+    (NaN included), strings, arrays of doubles, naive ``timestamp_ntz``
+    datetimes and NULLs arrive as ``createDataFrame`` builds them."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 

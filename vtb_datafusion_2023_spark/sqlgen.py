@@ -15,7 +15,10 @@ correct engines produce last-ulp-different answers.  Strategy:
 
 These fragments are not just test plumbing: decimal-exact sums are the
 engine's scale-stable aggregation mode (run-to-run reproducible at 100 TB
-regardless of task scheduling), mirrored in ``functions.stats``.
+regardless of task scheduling), and the Spark plans build them from this
+same text.  This module is also the one definition of the A10/A11
+statistics: their fragments, their column names (``MOMENT_COLS``,
+``HSTAT_COLS``) and the intermediate columns A11 drops.
 """
 
 from __future__ import annotations
@@ -74,11 +77,11 @@ def davg(x: str, alias: str | None = None) -> str:
 
 
 def dsum_cast(x: str, alias: str | None = None) -> str:
-    """Spark-only SQL text of ``functions.stats.dsum``: the same exact
-    decimal sum and integral/fractional split as ``dsum``, with a plain
-    signed cast of the integral part.  Spark rounds that cast once, so
-    the bits equal ``dsum``'s; DuckDB double-rounds negative integral
-    parts past 2^53 (see ``dec_to_double``), so oracle SQL uses ``dsum``."""
+    """Spark-only exact sum: the same decimal sum and integral/fractional
+    split as ``dsum``, with a plain signed cast of the integral part.
+    Spark rounds that cast once, so the bits equal ``dsum``'s; DuckDB
+    double-rounds negative integral parts past 2^53 (see
+    ``dec_to_double``), so oracle SQL uses ``dsum``."""
     s = f"sum(cast(({x}) as {DEC}))"
     e = f"(cast(cast({s} - ({s} % 1) as decimal(38,0)) as double) + cast({s} % 1 as double))"
     return f"{e} as {alias}" if alias else e
@@ -187,6 +190,14 @@ def fsum_final(prefix: str, alias: str | None = None) -> str:
     return f"{e} as {alias}" if alias else e
 
 
+#: The columns ``moment_stats`` emits for a prefix, in order: the
+#: reference's ``.agg(['mean','std','min','max','median','sem','skew',
+#: 'var','sum'])`` plus count and amplitude (A10, run.py:428-430).
+MOMENT_COLS = [
+    "n", "mean", "median", "min", "max", "std", "sem", "skew", "var", "sum", "amplitude",
+]
+
+
 def moment_stats(
     x: str, prefix: str, percentile_fn: str, in_prec: int = 12, in_scale: int = 2
 ) -> list[str]:
@@ -235,19 +246,11 @@ def moment_stats(
         f"({m3} / ({m2} * sqrt({m2}))) * sqrt(cast({n} * ({n} - 1) as double)) / ({n} - 2) "
         f"end)"
     )
-    return [
-        f"{n} as {prefix}_n",
-        f"{mean} as {prefix}_mean",
-        f"{percentile_fn}({x}, 0.5) as {prefix}_median",
-        f"min({x}) as {prefix}_min",
-        f"max({x}) as {prefix}_max",
-        f"{std} as {prefix}_std",
-        f"{sem} as {prefix}_sem",
-        f"{skew} as {prefix}_skew",
-        f"{var} as {prefix}_var",
-        f"{s1} as {prefix}_sum",
-        f"(max({x}) - min({x})) as {prefix}_amplitude",
+    exprs = [
+        n, mean, f"{percentile_fn}({x}, 0.5)", f"min({x})", f"max({x})",
+        std, sem, skew, var, s1, f"(max({x}) - min({x}))",
     ]
+    return [f"{e} as {prefix}_{c}" for e, c in zip(exprs, MOMENT_COLS, strict=True)]
 
 
 def dprod_sum(
@@ -364,11 +367,35 @@ def minmax_window(x: str, partition: str) -> str:
     return f"((({x}) - {mn}) / nullif({mx} - {mn}, 0))"
 
 
-HSTAT_COLS = [
-    "mean", "median", "min", "max", "std", "sem", "skew", "var",
-    "amplitude1", "amplitude2", "amplitude3", "amplitude4", "amplitude5",
-    "divmm1", "divmm2", "divmm3", "divmm4", "divmm5",
+# A11 ``get_stats``' amplitudes and ratios (run.py:207-234) as
+# (name, left moment, operator, right moment).
+_HSTAT_DERIVED = [
+    ("amplitude1", "max", "-", "min"),
+    ("amplitude2", "max", "-", "median"),
+    ("amplitude3", "max", "-", "mean"),
+    ("amplitude4", "median", "-", "min"),
+    ("amplitude5", "mean", "-", "min"),
+    ("divmm1", "max", "/", "min"),
+    ("divmm2", "max", "/", "mean"),
+    ("divmm3", "max", "/", "median"),
+    ("divmm4", "mean", "/", "min"),
+    ("divmm5", "median", "/", "min"),
 ]
+
+#: The ``moment_stats`` columns A11 computes from but does not output.
+HSTAT_DROPPED = ["n", "sum", "amplitude"]
+
+#: The columns A11 outputs per family prefix, in order.
+HSTAT_COLS = [c for c in MOMENT_COLS if c not in HSTAT_DROPPED] + [
+    name for name, *_ in _HSTAT_DERIVED
+]
+
+
+def hstat_derived(prefix: str) -> list[str]:
+    """The amplitude/ratio fragments of A11 over the ``moment_stats``
+    columns of family ``prefix``."""
+    p = prefix
+    return [f"({p}_{a} {op} {p}_{b}) as {p}_{name}" for name, a, op, b in _HSTAT_DERIVED]
 
 
 def horizontal_stats_sql(long_sql: str, key: str, val: str, prefix: str) -> str:
@@ -378,25 +405,13 @@ def horizontal_stats_sql(long_sql: str, key: str, val: str, prefix: str) -> str:
     p = prefix
     masked = f"(case when {val} > 0 then {val} end)"
     frags = moment_stats(masked, p, percentile_fn="quantile_cont")
-    keep = [f for f in frags if not f.endswith((f"as {p}_n", f"as {p}_sum", f"as {p}_amplitude"))]
-    derived = [
-        f"({p}_max - {p}_min) as {p}_amplitude1",
-        f"({p}_max - {p}_median) as {p}_amplitude2",
-        f"({p}_max - {p}_mean) as {p}_amplitude3",
-        f"({p}_median - {p}_min) as {p}_amplitude4",
-        f"({p}_mean - {p}_min) as {p}_amplitude5",
-        f"({p}_max / {p}_min) as {p}_divmm1",
-        f"({p}_max / {p}_mean) as {p}_divmm2",
-        f"({p}_max / {p}_median) as {p}_divmm3",
-        f"({p}_mean / {p}_min) as {p}_divmm4",
-        f"({p}_median / {p}_min) as {p}_divmm5",
-    ]
+    keep = [f for f, c in zip(frags, MOMENT_COLS) if c not in HSTAT_DROPPED]
     final = ", ".join(
         f"coalesce(cast({p}_{c} as double), cast(0 as double)) as {p}_{c}" for c in HSTAT_COLS
     )
     return f"""
 select {key}, {final} from (
-  select *, {', '.join(derived)} from (
+  select *, {', '.join(hstat_derived(p))} from (
     select {key}, {', '.join(keep)} from ({long_sql}) group by {key}
   )
 )

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import sqlgen
+from ..sources.readers import small_frame
 
 EVENTS_STREAM_SCHEMA = T.StructType(
     [
@@ -118,7 +119,7 @@ def events_stream_with_sentinel(
         (-10**12 - i, sent_ts, SENTINEL_USER, et, 0.0, "{}")
         for i, et in enumerate(event_types)
     ]
-    spark.createDataFrame(rows, EVENTS_STREAM_SCHEMA).coalesce(1).write.mode(
+    small_frame(spark, rows, EVENTS_STREAM_SCHEMA).coalesce(1).write.mode(
         "overwrite"
     ).parquet(path)
     sentinel = (

@@ -9,7 +9,7 @@ and ``tests/test_oracle.py`` replicate the driver's t2 gate locally.
 Contract (see repo root ``__spark_entry__.py``): Spark result and oracle
 result must match on row count, schema, and order-insensitive value hash —
 so every computed column is aliased identically on both sides, and float
-aggregates use deterministic arithmetic (see ``functions.stats``).
+aggregates use deterministic arithmetic (the shared ``sqlgen`` fragments).
 
 Certification order: the external certification gate checks ~50 heads
 per round in registry order and records each round as

@@ -11,7 +11,8 @@ from pyspark.sql import functions as F
 
 from .. import sqlgen
 from ..operators.gstats import horizontal_stats, vertical_stats
-from ..operators.pivots import pivot_agg, row_normalize
+from ..operators.joins import ensemble_mean
+from ..operators.pivots import pivot_agg, row_normalize, row_sum
 from ..schema import DAYS_OF_WEEK, HOURS
 from . import register
 from ._util import SIGNED_AMT, T
@@ -191,13 +192,8 @@ from long
 def a12_a13_row_normalize(spark, sf_dir):
     ev = T(spark, sf_dir, "events")
     long = ev.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("cnt"))
-    return long.select(
-        "user_id",
-        "event_type",
-        "cnt",
-        F.expr(f"(cnt / {sqlgen.wdsum('cnt', 'user_id')}) as freq"),
-        F.expr(f"{sqlgen.wdsum('cnt', 'user_id')} as row_total"),
-    )
+    freq = row_normalize(long, "user_id", "cnt", out_col="freq")
+    return row_sum(freq, "user_id", "cnt", out_col="row_total")
 
 
 # ---------------------------------------------------------------------------
@@ -227,9 +223,9 @@ def a15_ensemble_mean(spark, sf_dir):
     scored = users.crossJoin(reps).select(
         "user_id", F.expr(f"{_SCORE} as target")
     )
-    return scored.groupBy("user_id").agg(
-        F.expr(f"({sqlgen.dsum('target')} / count(target)) as target_mean")
-    )
+    # the 50 repetitions arrive as one frame: the union of one run is
+    # the run itself, so this certifies ensemble_mean's aggregate text
+    return ensemble_mean([scored], key="user_id", score_col="target")
 
 
 # ---------------------------------------------------------------------------

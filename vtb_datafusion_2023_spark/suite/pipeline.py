@@ -63,8 +63,7 @@ td as (
   group by user_id
 )
 select freq_wide.*, {', '.join('hs.hs_' + c for c in sqlgen.HSTAT_COLS)},
-       td.td_n, td.td_mean, td.td_median, td.td_min, td.td_max, td.td_std,
-       td.td_sem, td.td_skew, td.td_var, td.td_sum, td.td_amplitude
+       {', '.join('td.td_' + c for c in sqlgen.MOMENT_COLS)}
 from freq_wide
 join hs using (user_id)
 join td using (user_id)

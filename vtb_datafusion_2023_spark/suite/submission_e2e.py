@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from .. import sqlgen
 from ..operators.gstats import group_percentiles_sql
+from ..plans.features import feature_columns
 from ..plans.submission import (
     md5_keep_sql,
     run_submission,
@@ -48,22 +49,10 @@ CAT_CODE = (
     "when 'purchase' then 3 when 'signup' then 4 when 'view' then 5 end"
 )
 
-_TD_COLS = ["n", "mean", "median", "min", "max", "std", "sem", "skew", "var", "sum", "amplitude"]
-
 #: the exact feature-column inventory of ``branch_c_features`` + branch A,
 #: in assembly order — pinned by tests/test_submission_e2e.py against the
 #: runtime DataFrame so the name-keyed oracle weights cannot drift.
-FEATURE_COLS = (
-    ["nn_predict"]
-    + [f"mcc_freq-{v}" for v in VOCAB]
-    + [f"mcc_sum-{v}" for v in VOCAB]
-    + [f"mcc_freq_stats_{c}" for c in sqlgen.HSTAT_COLS]
-    + [f"mcc_freq_proc_stats_{c}" for c in sqlgen.HSTAT_COLS]
-    + [f"dom-{d}" for d in range(1, 32)]
-    + [f"dow-{d}" for d in range(7)]
-    + [f"hod-{h}" for h in range(24)]
-    + [f"time_day_{c}" for c in _TD_COLS]
-)
+FEATURE_COLS = ["nn_predict"] + feature_columns(VOCAB)
 
 
 def _rep_sql(i: int) -> str:
