@@ -4,7 +4,8 @@ alternatives now live in tests as reference implementations.  This
 guard fails if any of them is accepted again, as it does for the
 parameters that no caller set, for frames of Python rows built outside
 ``sources.readers.small_frame`` and for copies of the A10/A11 statistic
-names, which only ``sqlgen`` spells.  It needs no SparkSession."""
+names and of A7's rank-interpolation text, which only ``sqlgen`` spells.
+It needs no SparkSession."""
 
 from __future__ import annotations
 
@@ -75,6 +76,7 @@ REMOVED = [
     (profile.profile, "approx"),
     (graph.pagerank, "materialize_aux"),
     (cleaning.pseudonymize, "keep_null"),
+    (cleaning.rare_category_rewrite, "stats_source"),
     (filtering.frequency_filter, "keep_above"),
     (readers.read_transactions_csv, "drop_null"),
     (readers.read_jsonl, "drop_corrupt"),
@@ -102,6 +104,8 @@ def test_removed_selector_not_accepted(fn, param):
         (submission, "feature_vector_column"),
         (joins, "join_labels"),
         (dedup, "minhash_signature"),
+        (cleaning, "_cat_counts_top"),
+        (cleaning, "_clean_stats_fused"),
         *[
             (module, name)
             for module in (stats, functions)
@@ -162,3 +166,17 @@ def test_stat_names_only_in_sqlgen(module):
                 e.value for e in node.elts if isinstance(e, ast.Constant) and e.value in moments
             ]
             assert len(names) < 3, (node.lineno, names)
+
+
+_INTERP_NAME = re.compile(r"\b_t_(lo|hi|md)\b")
+
+
+@pytest.mark.parametrize(
+    "module", [m for m in MODULES if m is not sqlgen], ids=lambda m: m.__name__
+)
+def test_rank_interpolation_only_in_sqlgen(module):
+    """A7's dynamic-percentile arithmetic has one definition (``sqlgen``):
+    no other module spells its target positions."""
+    for node in ast.walk(ast.parse(inspect.getsource(module))):
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            assert not _INTERP_NAME.search(node.value), (node.lineno, node.value)

@@ -709,3 +709,27 @@ def test_pipeline_submission_pins_shared_intermediates(spark, sf_small):
     n_rdd = p.count("Scan ExistingRDD")
     assert n_parquet <= 2, f"cleaning chain replayed: {n_parquet} parquet scans"
     assert n_rdd >= 1, "checkpointed intermediates missing from the plan"
+
+
+def test_cleaning_meets_its_stats_in_one_join(spark, sf_small):
+    """Robust cleaning joins the transaction log once, to one (user, cat)
+    statistics frame: the user's top category is a window over the stats
+    rows, not a ``row_number() = 1`` filter joined back on user.  A8
+    reads no top-category column, so Catalyst prunes that window."""
+    from vtb_datafusion_2023_spark.operators.cleaning import (
+        clean_transactions,
+        rare_category_rewrite,
+        winsorize_to_median,
+    )
+
+    ev = load_table(spark, sf_small, "events")
+    args = (ev, "user_id", "event_type", "value")
+    for name, df in (
+        ("clean_transactions", clean_transactions(*args)),
+        ("rare_category_rewrite", rare_category_rewrite(*args)),
+        ("winsorize_to_median", winsorize_to_median(*args)),
+    ):
+        p = df._jdf.queryExecution().optimizedPlan().toString()
+        assert p.count("Join ") == 1, (name, p)
+        assert "WindowGroupLimit" not in p, (name, p)
+        assert ("first(" in p) == (name != "winsorize_to_median"), (name, p)

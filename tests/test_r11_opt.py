@@ -1,9 +1,10 @@
 """Round-11 optimization pins.
 
-1. The fused A7+A9 cleaning statistics (operators.cleaning._clean_stats_fused,
-   r11 guide §2.4: one (user,cat) window + one aggregate instead of two
-   aggregations + three join legs) — differential against the two-block
-   form it replaced, on data engineered to hit every null/tie edge the
+1. The one-table cleaning statistics (operators.cleaning._clean_stats:
+   one (user,cat) window + one aggregate, the top category as a window
+   over the stats rows, one join) — differential against the two-block
+   form it replaced (group_percentiles + ``reference_cat_counts_top``,
+   three join legs), on data engineered to hit every null/tie edge the
    fusion argument relies on: NULL values (rank-among-non-nulls =
    row_number − null count), ALL-null (user,cat) groups (present with
    cnt=0 in the fused stats vs absent before — must be invisible through
@@ -32,11 +33,33 @@ def _hexrows(df, order_cols):
     ]
 
 
-def test_fused_clean_stats_match_two_block_form(spark):
-    from vtb_datafusion_2023_spark.operators.cleaning import (
-        _cat_counts_top,
-        clean_transactions,
+def reference_cat_counts_top(src, user_col: str, cat_col: str, value_col: str):
+    """The A9 statistics as two blocks: per-(user, cat) row counts with
+    the category's builtin ``percentile`` median (NULL for an
+    all-null-value group, which stays present because the count takes
+    every row), and the per-user top category (most rows, then the
+    smallest category: run.py:41-45) picked by ``row_number() = 1``
+    with its median.
+
+    Returns ``(counts(user, cat, _cat_cnt), top(user, _top_cat,
+    _cat_median))``."""
+    counts = src.groupBy(user_col, cat_col).agg(
+        F.count(F.lit(1)).alias("_cat_cnt"),
+        F.expr(f"percentile({value_col}, 0.5)").alias("_cat_median"),
     )
+    top_w = Window.partitionBy(user_col).orderBy(
+        F.col("_cat_cnt").desc(), F.col(cat_col).asc()
+    )
+    top = (
+        counts.withColumn("_rn", F.row_number().over(top_w))
+        .filter(F.col("_rn") == 1)
+        .select(F.col(user_col), F.col(cat_col).alias("_top_cat"), "_cat_median")
+    )
+    return counts.select(user_col, cat_col, "_cat_cnt"), top
+
+
+def test_fused_clean_stats_match_two_block_form(spark):
+    from vtb_datafusion_2023_spark.operators.cleaning import clean_transactions
     from vtb_datafusion_2023_spark.operators.gstats import group_percentiles
 
     rnd = random.Random(7)
@@ -59,7 +82,7 @@ def test_fused_clean_stats_match_two_block_form(spark):
     # clean_transactions had before the r11 fusion)
     keys = ["user_id", "cat"]
     stats = group_percentiles(df, keys, "value", n_amt=10)
-    counts, top_med = _cat_counts_top(df, "user_id", "cat", "value")
+    counts, top_med = reference_cat_counts_top(df, "user_id", "cat", "value")
     enriched = (
         df.join(stats, on=keys, how="left")
         .join(counts, on=keys, how="left")

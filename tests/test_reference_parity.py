@@ -89,7 +89,7 @@ def test_winsorize_bounds_property(spark, sf_small):
 
     stats = group_percentiles(ev, ["user_id", "event_type"], "value", 10).toPandas()
     stats = stats.set_index(["user_id", "event_type"])
-    w = winsorize_to_median(ev, ["user_id", "event_type"], "value", 10, 10).toPandas()
+    w = winsorize_to_median(ev, "user_id", "event_type", "value", 10, 10).toPandas()
     for (uid, et), g in w.groupby(["user_id", "event_type"]):
         s = stats.loc[(uid, et)]
         if s.cnt > 10:

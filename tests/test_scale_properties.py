@@ -329,8 +329,9 @@ def test_route_skew_decision_rule(spark):
 
 
 def test_clean_transactions_fused_equals_two_step(spark):
-    """The fused clean_transactions == rare_category_rewrite(
-    winsorize_to_median(df), stats_source=df) row for row — including on
+    """The fused clean_transactions == winsorize_to_median(df), then the
+    rare rewrite with counts, top category and medians of the ORIGINAL df
+    (test-side, ``reference_cat_counts_top``) row for row — including on
     null categories and null values (where the two count contracts
     diverge: cnt = non-null values, _cat_cnt = all rows), MIXED-SIGN
     values whose median pair straddles zero (outside the Sterbenz region
@@ -340,10 +341,9 @@ def test_clean_transactions_fused_equals_two_step(spark):
     group a median-from-percentiles join silently drops)."""
     import random
 
-    from vtb_datafusion_2023_spark.operators.cleaning import (
-        rare_category_rewrite,
-        winsorize_to_median,
-    )
+    from test_r11_opt import reference_cat_counts_top
+
+    from vtb_datafusion_2023_spark.operators.cleaning import winsorize_to_median
 
     rng = random.Random(7)
     rows = []
@@ -364,13 +364,18 @@ def test_clean_transactions_fused_equals_two_step(spark):
     fused = clean_transactions(
         df, user_col="user_id", cat_col="cat", value_col="value", n_amt=10, n_mcc=10
     )
-    two_step = rare_category_rewrite(
-        winsorize_to_median(df, ["user_id", "cat"], "value", n_amt=10, min_count=10),
-        "user_id",
-        "cat",
-        "value",
-        min_count=10,
-        stats_source=df,
+    winsorized = winsorize_to_median(df, "user_id", "cat", "value", n_amt=10, min_count=10)
+    counts, top_med = reference_cat_counts_top(df, "user_id", "cat", "value")
+    is_rare = F.col("_cat_cnt") <= 10
+    two_step = (
+        winsorized.join(counts, on=["user_id", "cat"], how="left")
+        .join(top_med, on="user_id", how="left")
+        .select(
+            "ord",
+            "user_id",
+            F.when(is_rare, F.col("_top_cat")).otherwise(F.col("cat")).alias("cat"),
+            F.when(is_rare, F.col("_cat_median")).otherwise(F.col("value")).alias("value"),
+        )
     )
     a = fused.orderBy("ord").collect()
     b = two_step.orderBy("ord").collect()

@@ -6,76 +6,136 @@ codes to the code's median beyond dynamic percentile bounds, (2) rewrite
 rare codes (count <= n_mcc) to the user's most frequent code and its
 median amount.  O(users * rows) single-threaded scans.
 
-Spark-first shape: group statistics once (one shuffle on (user, code)),
-broadcast-free join back (same key => co-partitioned sort-merge or AQE
-shuffled-hash), conditional rewrite as a projection.  A skewed power-user
+Spark-first shape: one (user, code) statistics frame (:func:`_clean_stats`:
+one window + one aggregate over one shuffle, the user's top code as a
+window over the stats rows), one left join of the transactions to it on
+(user, code), and the rewrite as a projection.  A skewed power-user
 inflates one group only; AQE skew-join splitting covers it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .gstats import group_percentiles
+from .gstats import dyn_percentiles
+
+
+def _clean_stats(
+    df: DataFrame, user_col: str, cat_col: str, value_col: str, n_amt: int
+) -> DataFrame:
+    """The statistics of A8 and A9 in ONE (user, cat) window + ONE
+    aggregate, plus one per-user window over the stats rows.
+
+    Returns one row per (user, cat) of ``df`` with
+    ``cnt, p_lo, p_hi, p_median`` (A7 over the non-NULL values, as
+    ``group_percentiles``), ``_cat_cnt`` (ALL rows, the A9 count) and the
+    user's top category ``_top_cat`` with its median ``_top_cat_median``.
+
+    The two count contracts meet in one window: NULL values sort FIRST
+    under Spark's ASC default, so the rank of a non-null value among
+    non-nulls is ``row_number - (#nulls in partition)``, computable from
+    the same sorted stream; null rows land at ranks <= -1, which no
+    interpolation position k >= 0 can select (and their ``_v`` is NULL
+    anyway, so even an all-null group's k = -1 probes contribute
+    nothing).  The interpolation is ``group_percentiles``' text over the
+    same non-NULL row sets, so p_lo/p_hi/p_median are bitwise the same.
+    The one difference from ``group_percentiles``: an all-null-value
+    group EXISTS here with cnt = 0 instead of being absent, which the
+    winsorize gate cannot see — cnt = 0 and a missing row (cnt NULL)
+    both fail ``cnt > min_count``, and p_lo/p_hi/p_median are NULL
+    either way (``sqlgen.dyn_percentile_frac`` guards ``_cnt = 0``).
+
+    The category median is the builtin ``percentile`` (the weighted
+    ``(1-f)*lo + f*hi`` interpolation the DuckDB oracle's
+    ``quantile_cont`` matches bitwise; NULL for an all-null group), not
+    ``p_median``, whose ``lo + (hi-lo)*f`` differs in the last ulp.
+
+    Top category: most frequent, smallest category among equal counts —
+    np.unique sorts ascending and argmax takes the first hit
+    (/root/reference/run.py:41-45, SURVEY §7.4.3) — so ``first(...)``
+    over ``partition by user order by _cat_cnt desc, cat asc``.  The
+    (user, cat) rows are unique, so the first row is the one
+    ``row_number() = 1`` would keep, a NULL category included.
+    """
+    keys = [user_col, cat_col]
+    v = F.col(value_col)
+    w_part = Window.partitionBy(*keys)
+    ranked = df.select(
+        *keys,
+        v.alias("_v"),
+        (
+            F.row_number().over(w_part.orderBy(v.asc()))
+            - (F.count(F.lit(1)).over(w_part) - F.count(v).over(w_part))
+            - 1
+        ).alias("_rk"),
+        F.count(v).over(w_part).alias("_cnt"),
+    )
+    stats = dyn_percentiles(
+        ranked,
+        keys,
+        n_amt,
+        _cat_cnt=F.count(F.lit(1)),
+        _cat_median=F.expr("percentile(_v, 0.5)"),
+    )
+    top = Window.partitionBy(user_col).orderBy(F.col("_cat_cnt").desc(), F.col(cat_col).asc())
+    return stats.select(
+        *keys,
+        "cnt",
+        "p_lo",
+        "p_hi",
+        "p_median",
+        "_cat_cnt",
+        F.first(cat_col).over(top).alias("_top_cat"),
+        F.first("_cat_median").over(top).alias("_top_cat_median"),
+    )
+
+
+def _rewrite(
+    df: DataFrame,
+    user_col: str,
+    cat_col: str,
+    value_col: str,
+    n_amt: int,
+    new: dict[str, Column],
+) -> DataFrame:
+    """``df`` left-joined to its :func:`_clean_stats` on (user, cat), with
+    the columns named in ``new`` replaced.  A row whose user or category
+    is NULL finds no stats row, so every rewrite condition is NULL and
+    the row keeps its values."""
+    stats = _clean_stats(df, user_col, cat_col, value_col, n_amt)
+    joined = df.join(stats, on=[user_col, cat_col], how="left")
+    return joined.select(*[new[c].alias(c) if c in new else F.col(c) for c in df.columns])
+
+
+def _winsorized(v: Column, min_count: int) -> Column:
+    """A8's value: the group median where ``v`` leaves [p_lo, p_hi] in a
+    group of more than ``min_count`` values (run.py:60-67)."""
+    outside = (F.col("cnt") > min_count) & ((v > F.col("p_hi")) | (v < F.col("p_lo")))
+    return F.when(outside, F.col("p_median")).otherwise(v)
+
+
+def _if_rare(min_count: int, top: str, other: Column) -> Column:
+    """A9's rewrite (run.py:69-76): column ``top`` on rows of a (user, cat)
+    seen at most ``min_count`` times, else ``other``."""
+    return F.when(F.col("_cat_cnt") <= min_count, F.col(top)).otherwise(other)
 
 
 def winsorize_to_median(
     df: DataFrame,
-    keys: list[str],
+    user_col: str,
+    cat_col: str,
     value_col: str,
     n_amt: int = 10,
     min_count: int = 10,
 ) -> DataFrame:
-    """A8: values outside the group's dynamic percentile bounds are
-    replaced by the group median (/root/reference/run.py:60-67); applies
-    only to groups seen more than ``min_count`` times."""
-    stats = group_percentiles(df, keys, value_col, n_amt=n_amt)
-    joined = df.join(stats, on=keys, how="left")
-    v = F.col(value_col)
-    rewritten = (
-        F.when(
-            (F.col("cnt") > min_count) & ((v > F.col("p_hi")) | (v < F.col("p_lo"))),
-            F.col("p_median"),
-        )
-        .otherwise(v)
-        .alias(value_col)
-    )
-    keep = [c for c in df.columns if c != value_col]
-    return joined.select(*keep, rewritten)
-
-
-def _cat_counts_top(
-    src: DataFrame, user_col: str, cat_col: str, value_col: str
-) -> tuple[DataFrame, DataFrame]:
-    """The shared A9 statistics block: per-(user, cat) row counts with
-    the category's exact median riding the SAME aggregate (builtin
-    ``percentile`` — the weighted ``(1-f)*lo + f*hi`` interpolation the
-    DuckDB oracle's ``quantile_cont`` matches bitwise, and NULL for
-    all-null-value groups, which stay present because the count
-    aggregates every row), plus the per-user top category carrying its
-    own median.  One aggregation, one window — no median re-join.
-
-    Tie-break for "most frequent": smallest category among equal counts —
-    np.unique sorts ascending and argmax takes the first hit
-    (/root/reference/run.py:41-45, SURVEY §7.4.3) =>
-    ``orderBy(cnt desc, cat asc)``.
-
-    Returns ``(counts(user, cat, _cat_cnt), top(user, _top_cat,
-    _cat_median))``."""
-    counts = src.groupBy(user_col, cat_col).agg(
-        F.count(F.lit(1)).alias("_cat_cnt"),
-        F.expr(f"percentile({value_col}, 0.5)").alias("_cat_median"),
-    )
-    top_w = Window.partitionBy(user_col).orderBy(
-        F.col("_cat_cnt").desc(), F.col(cat_col).asc()
-    )
-    top = (
-        counts.withColumn("_rn", F.row_number().over(top_w))
-        .filter(F.col("_rn") == 1)
-        .select(F.col(user_col), F.col(cat_col).alias("_top_cat"), "_cat_median")
-    )
-    return counts.select(user_col, cat_col, "_cat_cnt"), top
+    """A8: values outside the (user, cat) group's dynamic percentile
+    bounds are replaced by the group median (/root/reference/run.py:60-67);
+    applies only to groups of more than ``min_count`` non-NULL values.
+    Catalyst prunes the stats columns this does not read (the A9 count,
+    the top-category window)."""
+    new = {value_col: _winsorized(F.col(value_col), min_count)}
+    return _rewrite(df, user_col, cat_col, value_col, n_amt, new)
 
 
 def rare_category_rewrite(
@@ -84,148 +144,22 @@ def rare_category_rewrite(
     cat_col: str,
     value_col: str,
     min_count: int = 10,
-    stats_source: DataFrame | None = None,
 ) -> DataFrame:
     """A9: rows whose (user, cat) count <= ``min_count`` get cat <- the
-    user's most frequent category and value <- that category's group
-    median (/root/reference/run.py:69-76); statistics via
-    :func:`_cat_counts_top`.
-
-    ``stats_source``: DataFrame to compute counts/top-category/medians
-    from (defaults to ``df``).  The reference captures per-code amount
-    arrays BEFORE winsorization mutates them (run.py:49-50 copies), so the
-    composed cleaner passes the original transactions here.
-    """
-    src = stats_source if stats_source is not None else df
-    counts, top_med = _cat_counts_top(src, user_col, cat_col, value_col)
-
-    enriched = (
-        df.join(counts, on=[user_col, cat_col], how="left")
-        .join(top_med, on=user_col, how="left")
+    user's most frequent category and value <- that category's median
+    (/root/reference/run.py:69-76); statistics via :func:`_clean_stats`,
+    whose percentile columns Catalyst prunes here."""
+    return _rewrite(
+        df,
+        user_col,
+        cat_col,
+        value_col,
+        n_amt=10,  # the bounds are not read
+        new={
+            cat_col: _if_rare(min_count, "_top_cat", F.col(cat_col)),
+            value_col: _if_rare(min_count, "_top_cat_median", F.col(value_col)),
+        },
     )
-    is_rare = F.col("_cat_cnt") <= min_count
-    out_cols = []
-    for c in df.columns:
-        if c == cat_col:
-            out_cols.append(
-                F.when(is_rare, F.col("_top_cat")).otherwise(F.col(cat_col)).alias(cat_col)
-            )
-        elif c == value_col:
-            out_cols.append(
-                F.when(is_rare, F.col("_cat_median")).otherwise(F.col(value_col)).alias(value_col)
-            )
-        else:
-            out_cols.append(F.col(c))
-    return enriched.select(*out_cols)
-
-
-def _clean_stats_fused(
-    df: DataFrame, user_col: str, cat_col: str, value_col: str, n_amt: int
-) -> tuple[DataFrame, DataFrame]:
-    """A7 + A9 statistics in ONE (user, cat) window + ONE aggregate.
-
-    ``group_percentiles`` and ``_cat_counts_top`` both key on (user, cat)
-    but ran as two separate aggregations (two exchanges + two scans of
-    the transaction log) joined back one by one.  Their statistics fuse
-    into a single pass because the only conflict — group_percentiles
-    ranks NON-NULL values while _cat_cnt counts ALL rows — resolves
-    inside one window: NULL values sort FIRST under Spark's ASC default,
-    so the rank of a non-null value among non-nulls is
-    ``row_number - (#nulls in partition)``, computable from the same
-    sorted stream; null rows land at ranks <= -1, which no interpolation
-    position k >= 0 can ever select (and their ``_v`` is NULL anyway, so
-    even the all-null group's k = -1 probes contribute nothing).
-
-    Bitwise-identical outputs to the two-block form (differential-pinned
-    in tests/test_r11_opt.py over nulls / all-null groups / ties /
-    singletons, plus the two-step pin in tests/test_scale_properties.py):
-    the interpolation arithmetic, the builtin ``percentile`` median, and
-    the count contracts (cnt = non-null, _cat_cnt = all rows) are
-    textually the same expressions over the same row sets.  The one
-    observable difference — all-null-value groups now EXIST in the stats
-    table with cnt = 0 instead of being absent — is invisible through
-    the left join: cnt = 0 and cnt = NULL both fail the ``cnt > n_mcc``
-    winsorize gate, and the group's p_lo/p_hi/p_median are NULL either
-    way.  (``_q`` guards ``_cnt = 0`` explicitly so that group divides
-    by nothing.)
-
-    Returns ``(onestats(user, cat, cnt, p_lo, p_hi, p_median, _cat_cnt),
-    top(user, _top_cat, _top_cat_median))``.
-    """
-    keys = [user_col, cat_col]
-    v = F.col(value_col)
-    w_ord = Window.partitionBy(*keys).orderBy(v.asc())
-    w_part = Window.partitionBy(*keys)
-    ranked = df.select(
-        *keys,
-        v.alias("_v"),
-        (
-            F.row_number().over(w_ord)
-            - (F.count(F.lit(1)).over(w_part) - F.count(v).over(w_part))
-            - 1
-        ).alias("_rk"),
-        F.count(v).over(w_part).alias("_cnt"),
-    )
-    pos = ranked.select(
-        "*",
-        F.expr(
-            f"case when _cnt = 0 then cast(1.0 as double) "
-            f"when cast({n_amt} as double) / _cnt > 1.0 then 1.0 "
-            f"else cast({n_amt} as double) / _cnt end"
-        ).alias("_q"),
-    ).select(
-        "*",
-        F.expr("(_cnt - 1) * _q").alias("_t_lo"),
-        F.expr("(_cnt - 1) * (1.0 - _q)").alias("_t_hi"),
-        F.expr("(_cnt - 1) * 0.5").alias("_t_md"),
-    )
-
-    def interp(t: str, alias: str) -> list:
-        k = f"cast(floor({t}) as bigint)"
-        return [
-            F.expr(f"max(case when _rk = {k} then _v end) as _{alias}_lo"),
-            F.expr(f"max(case when _rk = {k} + 1 then _v end) as _{alias}_hi"),
-            F.expr(f"max({t} - {k}) as _{alias}_frac"),
-        ]
-
-    agg = pos.groupBy(*keys).agg(
-        F.max("_cnt").alias("cnt"),
-        *interp("_t_lo", "lo"),
-        *interp("_t_hi", "hi"),
-        *interp("_t_md", "md"),
-        F.count(F.lit(1)).alias("_cat_cnt"),
-        F.expr("percentile(_v, 0.5)").alias("_cat_median"),
-    )
-
-    def finish(alias: str, out: str) -> str:
-        lo, hi, fr = f"_{alias}_lo", f"_{alias}_hi", f"_{alias}_frac"
-        return (
-            f"(case when {hi} is null then {lo} "
-            f"else {lo} + ({hi} - {lo}) * {fr} end) as {out}"
-        )
-
-    onestats = agg.select(
-        *keys,
-        "cnt",
-        F.expr(finish("lo", "p_lo")),
-        F.expr(finish("hi", "p_hi")),
-        F.expr(finish("md", "p_median")),
-        "_cat_cnt",
-        "_cat_median",
-    )
-    top_w = Window.partitionBy(user_col).orderBy(
-        F.col("_cat_cnt").desc(), F.col(cat_col).asc()
-    )
-    top = (
-        onestats.withColumn("_rn", F.row_number().over(top_w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            F.col(user_col),
-            F.col(cat_col).alias("_top_cat"),
-            F.col("_cat_median").alias("_top_cat_median"),
-        )
-    )
-    return onestats.drop("_cat_median"), top
 
 
 def clean_transactions(
@@ -239,49 +173,26 @@ def clean_transactions(
     """The composed robust-cleaning transform (/root/reference/run.py:25-85):
     winsorize frequent categories, then rewrite rare ones.
 
-    Row-identical to ``rare_category_rewrite(winsorize_to_median(df),
-    stats_source=df)`` (pinned by tests/test_scale_properties.py,
-    including mixed-sign medians and all-null-value top categories) but
-    FUSED twice over:
-
-    - the winsorize condition fires only on groups with cnt > ``n_mcc``
-      and the rare rewrite only on cnt <= ``n_mcc`` — disjoint — so both
-      resolve in ONE projection off one enriched join (the r5 fusion);
-    - the A7 percentile statistics and the A9 count/median statistics
-      both key on (user, cat), so they ride ONE window + ONE aggregate
-      (:func:`_clean_stats_fused`, r11) instead of two aggregations and
-      three join legs — one fewer scan + exchange of the transaction
-      log per call, bitwise-identical outputs (see its docstring for the
-      null-handling argument; the builtin ``percentile`` median still
-      rides the counts, never ``group_percentiles``' differently-rounded
-      interpolation)."""
-    keys = [user_col, cat_col]
-    # rare-rewrite statistics come from the ORIGINAL df: the reference
-    # copies per-code amount arrays before winsorization mutates them
-    # (run.py:49-50).  _cat_cnt counts ALL rows (the a9 contract), while
-    # cnt counts non-null values (the winsorize/percentile contract) —
-    # they differ on groups holding null values.
-    onestats, top_med = _clean_stats_fused(df, user_col, cat_col, value_col, n_amt)
-
-    enriched = df.join(onestats, on=keys, how="left").join(top_med, on=user_col, how="left")
-    v = F.col(value_col)
-    is_rare = F.col("_cat_cnt") <= n_mcc
-    winsorize = (F.col("cnt") > n_mcc) & ((v > F.col("p_hi")) | (v < F.col("p_lo")))
-    out_cols = []
-    for c in df.columns:
-        if c == cat_col:
-            out_cols.append(
-                F.when(is_rare, F.col("_top_cat")).otherwise(F.col(cat_col)).alias(cat_col)
-            )
-        elif c == value_col:
-            out_cols.append(
-                F.when(is_rare, F.col("_top_cat_median"))
-                .otherwise(F.when(winsorize, F.col("p_median")).otherwise(v))
-                .alias(value_col)
-            )
-        else:
-            out_cols.append(F.col(c))
-    return enriched.select(*out_cols)
+    Both steps read statistics of the ORIGINAL ``df``: the reference
+    copies per-code amount arrays before winsorization mutates them
+    (run.py:49-50).  The winsorize condition fires only on groups with
+    cnt > ``n_mcc`` and the rare rewrite only on _cat_cnt <= ``n_mcc``
+    (cnt counts a subset of the _cat_cnt rows), so both resolve in ONE
+    projection over ONE join to :func:`_clean_stats` — equal, row for
+    row, to winsorizing and then rewriting with counts, top category and
+    medians taken from ``df`` (pinned in tests/test_scale_properties.py,
+    including mixed-sign medians and all-null-value top categories)."""
+    return _rewrite(
+        df,
+        user_col,
+        cat_col,
+        value_col,
+        n_amt,
+        {
+            cat_col: _if_rare(n_mcc, "_top_cat", F.col(cat_col)),
+            value_col: _if_rare(n_mcc, "_top_cat_median", _winsorized(F.col(value_col), n_mcc)),
+        },
+    )
 
 
 def mad_outliers(

@@ -127,71 +127,32 @@ def group_percentiles(
         (F.row_number().over(w) - 1).alias("_rk"),  # 0-based rank
         F.count(F.lit(1)).over(Window.partitionBy(*keys)).alias("_cnt"),
     )
-    # target positions t = (cnt-1)*q for q in {p, 1-p, 0.5}
-    pos = ranked.select(
-        "*",
-        F.expr(f"case when cast({n_amt} as double) / _cnt > 1.0 then 1.0 "
-               f"else cast({n_amt} as double) / _cnt end").alias("_q"),
-    ).select(
-        "*",
-        F.expr("(_cnt - 1) * _q").alias("_t_lo"),
-        F.expr("(_cnt - 1) * (1.0 - _q)").alias("_t_hi"),
-        F.expr("(_cnt - 1) * 0.5").alias("_t_md"),
-    )
+    return dyn_percentiles(ranked, keys, n_amt)
 
-    def interp(t: str, alias: str) -> list:
-        k = f"cast(floor({t}) as bigint)"
-        return [
-            F.expr(f"max(case when _rk = {k} then _v end) as _{alias}_lo"),
-            F.expr(f"max(case when _rk = {k} + 1 then _v end) as _{alias}_hi"),
-            F.expr(f"max({t} - {k}) as _{alias}_frac"),
-        ]
 
-    agg = pos.groupBy(*keys).agg(
-        F.max("_cnt").alias("cnt"),
-        *interp("_t_lo", "lo"),
-        *interp("_t_hi", "hi"),
-        *interp("_t_md", "md"),
-    )
-
-    def finish(alias: str, out: str) -> str:
-        lo, hi, fr = f"_{alias}_lo", f"_{alias}_hi", f"_{alias}_frac"
-        return (
-            f"(case when {hi} is null then {lo} "
-            f"else {lo} + ({hi} - {lo}) * {fr} end) as {out}"
+def dyn_percentiles(ranked: DataFrame, keys: list[str], n_amt: int, **extra) -> DataFrame:
+    """A7's aggregate over a frame ranked per ``keys`` (columns ``_v``,
+    ``_rk``, ``_cnt``; see ``sqlgen.dyn_percentile_frac``): one row per
+    group with ``cnt, p_lo, p_hi, p_median``, then each ``extra``
+    aggregate Column under its keyword name, riding the same aggregate."""
+    agg = (
+        ranked.select("*", F.expr(sqlgen.dyn_percentile_frac(n_amt)))
+        .select("*", *[F.expr(s) for s in sqlgen.DYN_PERCENTILE_TARGETS])
+        .groupBy(*keys)
+        .agg(
+            *[F.expr(s) for s in sqlgen.DYN_PERCENTILE_AGGS],
+            *[c.alias(name) for name, c in extra.items()],
         )
-
-    return agg.select(
-        *keys,
-        "cnt",
-        F.expr(finish("lo", "p_lo")),
-        F.expr(finish("hi", "p_hi")),
-        F.expr(finish("md", "p_median")),
     )
+    return agg.select(*keys, "cnt", *[F.expr(s) for s in sqlgen.DYN_PERCENTILE_FINAL], *extra)
 
 
 def group_percentiles_sql(
     table: str, keys: list[str], value_col: str, n_amt: int = 10
 ) -> str:
-    """DuckDB oracle for ``group_percentiles`` — same rank-interpolation
-    arithmetic, textually identical float ops."""
+    """DuckDB oracle for ``group_percentiles`` — the same ``sqlgen``
+    rank-interpolation text, so the float ops are identical."""
     ks = ", ".join(keys)
-    q = (f"case when cast({n_amt} as double) / _cnt > 1.0 then 1.0 "
-         f"else cast({n_amt} as double) / _cnt end")
-
-    def interp(t: str, alias: str) -> str:
-        k = f"cast(floor({t}) as bigint)"
-        return (
-            f"max(case when _rk = {k} then _v end) as _{alias}_lo, "
-            f"max(case when _rk = {k} + 1 then _v end) as _{alias}_hi, "
-            f"max({t} - {k}) as _{alias}_frac"
-        )
-
-    def finish(alias: str, out: str) -> str:
-        lo, hi, fr = f"_{alias}_lo", f"_{alias}_hi", f"_{alias}_frac"
-        return (f"(case when {hi} is null then {lo} "
-                f"else {lo} + ({hi} - {lo}) * {fr} end) as {out}")
-
     return f"""
 with ranked as (
   select {ks}, {value_col} as _v,
@@ -199,22 +160,12 @@ with ranked as (
          count(*) over (partition by {ks}) as _cnt
   from {table}
   where {value_col} is not null
+), frac as (
+  select *, {sqlgen.dyn_percentile_frac(n_amt)} from ranked
 ), pos as (
-  select *, {q} as _q,
-         (_cnt - 1) * _q as _t_lo,
-         (_cnt - 1) * (1.0 - _q) as _t_hi,
-         (_cnt - 1) * 0.5 as _t_md
-  from ranked
+  select *, {", ".join(sqlgen.DYN_PERCENTILE_TARGETS)} from frac
 ), agg as (
-  select {ks}, max(_cnt) as cnt,
-         {interp('_t_lo', 'lo')},
-         {interp('_t_hi', 'hi')},
-         {interp('_t_md', 'md')}
-  from pos group by {ks}
+  select {ks}, {", ".join(sqlgen.DYN_PERCENTILE_AGGS)} from pos group by {ks}
 )
-select {ks}, cnt,
-       {finish('lo', 'p_lo')},
-       {finish('hi', 'p_hi')},
-       {finish('md', 'p_median')}
-from agg
+select {ks}, cnt, {", ".join(sqlgen.DYN_PERCENTILE_FINAL)} from agg
 """

@@ -174,6 +174,15 @@ def tune_session(spark: SparkSession, shuffle_partitions: int | None = None) -> 
     return spark
 
 
+def default_driver_mem() -> str:
+    """The driver heap when ``$SPARK_DRIVER_MEM`` is unset: 16g, but at
+    most half the host's physical memory, so on a small host an oversized
+    job fails with a Java OutOfMemoryError instead of taking the host out
+    of memory."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 // 2**20
+    return f"{min(16 * 1024, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "vtb-datafusion-spark",
     cpus: int | None = None,
@@ -184,7 +193,7 @@ def get_spark(
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", default_driver_mem()))
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))

@@ -18,7 +18,8 @@ engine's scale-stable aggregation mode (run-to-run reproducible at 100 TB
 regardless of task scheduling), and the Spark plans build them from this
 same text.  This module is also the one definition of the A10/A11
 statistics: their fragments, their column names (``MOMENT_COLS``,
-``HSTAT_COLS``) and the intermediate columns A11 drops.
+``HSTAT_COLS``) and the intermediate columns A11 drops; and of A7's
+dynamic-percentile rank interpolation (``DYN_PERCENTILE_*``).
 """
 
 from __future__ import annotations
@@ -416,6 +417,52 @@ select {key}, {final} from (
   )
 )
 """
+
+
+# A7's dynamic percentiles (run.py:49-58): per group, the tail fraction is
+# q = clamp(n / cnt, 0, 1), and the bounds are the numpy linear-interpolation
+# quantiles at q and 1 - q, plus the median.  Spark's builtin percentile
+# needs a foldable fraction, so the quantiles are read off a ranked frame
+# carrying the value ``_v``, its 0-based rank ``_rk`` among the group's
+# non-NULL values and their count ``_cnt``.  The stages, in order:
+# ``dyn_percentile_frac`` adds ``_q``; ``DYN_PERCENTILE_TARGETS`` adds the
+# target positions t = (_cnt - 1) * q; ``DYN_PERCENTILE_AGGS`` (grouped by
+# the keys) takes cnt and, per target, the values at ranks floor(t) and
+# floor(t) + 1 with the fraction t - floor(t); ``DYN_PERCENTILE_FINAL``
+# interpolates lo + (hi - lo) * frac.  Both engines run this text.
+# Per target: (alias, quantile, output column).
+_DYN_TARGETS = [("lo", "_q", "p_lo"), ("hi", "(1.0 - _q)", "p_hi"), ("md", "0.5", "p_median")]
+
+
+def dyn_percentile_frac(n: int) -> str:
+    """``_q = clamp(n / _cnt, 0, 1)``.  A group of only NULL values
+    (``_cnt = 0``) gets 1.0 instead of a division by zero."""
+    return (
+        f"case when _cnt = 0 then cast(1.0 as double) "
+        f"when cast({n} as double) / _cnt > 1.0 then 1.0 "
+        f"else cast({n} as double) / _cnt end as _q"
+    )
+
+
+DYN_PERCENTILE_TARGETS = [f"(_cnt - 1) * {q} as _t_{a}" for a, q, _ in _DYN_TARGETS]
+
+
+def _rank_pick(a: str) -> list[str]:
+    k = f"cast(floor(_t_{a}) as bigint)"
+    return [
+        f"max(case when _rk = {k} then _v end) as _{a}_lo",
+        f"max(case when _rk = {k} + 1 then _v end) as _{a}_hi",
+        f"max(_t_{a} - {k}) as _{a}_frac",
+    ]
+
+
+DYN_PERCENTILE_AGGS = ["max(_cnt) as cnt"] + [f for a, _, _ in _DYN_TARGETS for f in _rank_pick(a)]
+
+DYN_PERCENTILE_FINAL = [
+    f"(case when _{a}_hi is null then _{a}_lo "
+    f"else _{a}_lo + (_{a}_hi - _{a}_lo) * _{a}_frac end) as {out}"
+    for a, _, out in _DYN_TARGETS
+]
 
 
 def zscore_pop(x: str, partition: str) -> str:

@@ -30,103 +30,114 @@ def a7_group_percentiles(spark, sf_dir):
     return group_percentiles(ev, ["user_id", "event_type"], "value", n_amt=10)
 
 
-# Winsorize: bounds/medians from the (original) group stats; rows outside
-# (p_lo, p_hi) in groups with cnt > 10 -> group median (run.py:60-67).
-_WINSORIZE_CTE = f"""
-with gp as ({_GP_SQL}),
-w as (
-  select e.user_id, e.event_type,
-         case when gp.cnt > 10 and (e.value > gp.p_hi or e.value < gp.p_lo)
-              then gp.p_median else e.value end as value
-  from events e
-  left join gp on e.user_id = gp.user_id and e.event_type = gp.event_type
-)
+def clean_ctes(
+    table: str, cat: str, value: str, keep: tuple = (), winsorize: bool = True, rare: bool = True
+) -> str:
+    """DuckDB oracle CTEs (no leading ``with``) of the robust cleaning over
+    ``table(user_id, cat, value, *keep)``; the last, ``cleaned``, holds
+    those columns after the chosen steps.  Every statistic comes from the
+    ORIGINAL ``table`` (the reference copies per-code arrays before
+    mutating them, run.py:49-50).
+
+    - winsorize: rows outside (p_lo, p_hi) in groups with cnt > 10 get
+      the group median (run.py:60-67);
+    - rare: categories with count <= 10 become the user's most frequent
+      category (tie-break: smallest) and take its median (run.py:69-76).
+    """
+    extra = "".join(f", e.{c}" for c in keep)
+    ctes, src = [], table
+    if winsorize:
+        gp = group_percentiles_sql(table, ["user_id", cat], value, n_amt=10)
+        ctes += [
+            f"gp as ({gp})",
+            f"""winsorized as (
+  select e.user_id, e.{cat},
+         case when gp.cnt > 10 and (e.{value} > gp.p_hi or e.{value} < gp.p_lo)
+              then gp.p_median else e.{value} end as {value}{extra}
+  from {table} e
+  left join gp on e.user_id = gp.user_id and e.{cat} = gp.{cat}
+)""",
+        ]
+        src = "winsorized"
+    if rare:
+        ctes += [
+            f"counts as (select user_id, {cat}, count(*) as cat_cnt from {table} group by 1, 2)",
+            f"""top as (
+  select user_id, {cat} as top_cat
+  from (select user_id, {cat}, cat_cnt,
+               row_number() over (partition by user_id
+                                  order by cat_cnt desc, {cat} asc) as rn
+        from counts)
+  where rn = 1
+)""",
+            f"""med as (select user_id, {cat}, quantile_cont({value}, 0.5) as cat_median
+        from {table} group by 1, 2)""",
+            f"""topmed as (select top.user_id, top.top_cat, med.cat_median
+           from top join med on top.user_id = med.user_id and top.top_cat = med.{cat})""",
+            f"""rewritten as (
+  select e.user_id,
+         case when c.cat_cnt <= 10 then tm.top_cat else e.{cat} end as {cat},
+         case when c.cat_cnt <= 10 then tm.cat_median else e.{value} end as {value}{extra}
+  from {src} e
+  join counts c on e.user_id = c.user_id and e.{cat} = c.{cat}
+  join topmed tm on e.user_id = tm.user_id
+)""",
+        ]
+        src = "rewritten"
+    return ",\n".join([*ctes, f"cleaned as (select * from {src})"])
+
+
+def _clean_oracle(**steps) -> str:
+    return f"""
+with {clean_ctes("events", "event_type", "value", **steps)}
+select user_id, event_type, count(*) as n, {sqlgen.dsum('value', 'value_sum')}
+from cleaned group by user_id, event_type
 """
+
+
+def _summary(df):
+    return df.groupBy("user_id", "event_type").agg(
+        F.count(F.lit(1)).alias("n"), F.expr(sqlgen.dsum("value", "value_sum"))
+    )
 
 
 @register(
     "a8_winsorize",
-    oracle=_WINSORIZE_CTE
-    + f"""
-select user_id, event_type, count(*) as n, {sqlgen.dsum('value', 'value_sum')}
-from w group by user_id, event_type
-""",
+    oracle=_clean_oracle(rare=False),
     survey_ref="A8",
     doc="winsorize-to-median outside dynamic group percentile bounds (run.py:60-67).",
 )
 def a8_winsorize(spark, sf_dir):
     ev = T(spark, sf_dir, "events")
-    w = winsorize_to_median(ev, ["user_id", "event_type"], "value", n_amt=10, min_count=10)
-    return w.groupBy("user_id", "event_type").agg(
-        F.count(F.lit(1)).alias("n"), F.expr(sqlgen.dsum("value", "value_sum"))
+    return _summary(
+        winsorize_to_median(ev, "user_id", "event_type", "value", n_amt=10, min_count=10)
     )
-
-
-# Rare rewrite: categories with count <= 10 -> user's most frequent
-# category (tie-break: smallest) and its median value (run.py:69-76).
-_RARE_CTES = """
-counts as (select user_id, event_type, count(*) as cat_cnt from events group by 1, 2),
-top as (
-  select user_id, event_type as top_cat
-  from (select user_id, event_type, cat_cnt,
-               row_number() over (partition by user_id
-                                  order by cat_cnt desc, event_type asc) as rn
-        from counts)
-  where rn = 1
-),
-med as (select user_id, event_type, quantile_cont(value, 0.5) as cat_median
-        from events group by 1, 2),
-topmed as (select top.user_id, top.top_cat, med.cat_median
-           from top join med on top.user_id = med.user_id and top.top_cat = med.event_type),
-rewritten as (
-  select e.user_id,
-         case when c.cat_cnt <= 10 then tm.top_cat else e.event_type end as event_type,
-         case when c.cat_cnt <= 10 then tm.cat_median else e.value end as value
-  from events e
-  join counts c on e.user_id = c.user_id and e.event_type = c.event_type
-  join topmed tm on e.user_id = tm.user_id
-)
-"""
 
 
 @register(
     "a9_rare_rewrite",
-    oracle=f"""
-with {_RARE_CTES}
-select user_id, event_type, count(*) as n, {sqlgen.dsum('value', 'value_sum')}
-from rewritten group by user_id, event_type
-""",
+    oracle=_clean_oracle(winsorize=False),
     survey_ref="A9",
     doc="rare-category rewrite to the user's top category + its median (run.py:69-76).",
 )
 def a9_rare_rewrite(spark, sf_dir):
     ev = T(spark, sf_dir, "events")
-    rw = rare_category_rewrite(ev, "user_id", "event_type", "value", min_count=10)
-    return rw.groupBy("user_id", "event_type").agg(
-        F.count(F.lit(1)).alias("n"), F.expr(sqlgen.dsum("value", "value_sum"))
-    )
+    return _summary(rare_category_rewrite(ev, "user_id", "event_type", "value", min_count=10))
 
 
 @register(
     "clean_transactions_composed",
-    oracle=_WINSORIZE_CTE.rstrip()
-    + ",\n"
-    + _RARE_CTES.replace("from events e", "from w e", 1).lstrip()
-    + f"""
-select user_id, event_type, count(*) as n, {sqlgen.dsum('value', 'value_sum')}
-from rewritten group by user_id, event_type
-""",
+    oracle=_clean_oracle(),
     survey_ref="A7,A8,A9,F3",
     doc="composed robust cleaning: winsorize then rare-rewrite, stats from the ORIGINAL "
     "amounts (the reference copies per-code arrays before mutating — run.py:49-50).",
 )
 def clean_transactions_composed(spark, sf_dir):
     ev = T(spark, sf_dir, "events")
-    cleaned = clean_transactions(
-        ev, user_col="user_id", cat_col="event_type", value_col="value", n_amt=10, n_mcc=10
-    )
-    return cleaned.groupBy("user_id", "event_type").agg(
-        F.count(F.lit(1)).alias("n"), F.expr(sqlgen.dsum("value", "value_sum"))
+    return _summary(
+        clean_transactions(
+            ev, user_col="user_id", cat_col="event_type", value_col="value", n_amt=10, n_mcc=10
+        )
     )
 
 

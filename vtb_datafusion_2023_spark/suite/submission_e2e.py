@@ -30,7 +30,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .. import sqlgen
-from ..operators.gstats import group_percentiles_sql
 from ..plans.features import feature_columns
 from ..plans.submission import (
     md5_keep_sql,
@@ -38,6 +37,7 @@ from ..plans.submission import (
     standin_target_sql,
 )
 from . import register
+from .cleaning import clean_ctes
 from ._util import SIGNED_AMT, T
 
 N_REPS = 5
@@ -76,7 +76,6 @@ def _submission_oracle() -> str:
         " + f2 / cast(1024 as double)) as target"
     )
     scores = "\nunion all\n".join(f"select user_id, {score} from rep{i}" for i in range(N_REPS))
-    gp = group_percentiles_sql("tx", ["user_id", "cat"], "amt", n_amt=10)
     catsum = ", ".join(
         f"coalesce({sqlgen.dsum(f'case when cat = {v} then amt end')}, cast(0 as double)) "
         f'as "mcc_sum-{v}"'
@@ -102,34 +101,7 @@ with tx as (
 scores as ({scores}),
 nn as (select user_id, ({sqlgen.dsum('target')} / count(target)) as nn_predict
        from scores group by user_id),
-gp as ({gp}),
-wz as (
-  select t.user_id, t.cat,
-         case when gp.cnt > 10 and (t.amt > gp.p_hi or t.amt < gp.p_lo)
-              then gp.p_median else t.amt end as amt,
-         t.ts, t.ord
-  from tx t left join gp on t.user_id = gp.user_id and t.cat = gp.cat
-),
-counts as (select user_id, cat, count(*) as cat_cnt from tx group by 1, 2),
-topc as (
-  select user_id, cat as top_cat from (
-    select user_id, cat,
-           row_number() over (partition by user_id order by cat_cnt desc, cat asc) as rn
-    from counts)
-  where rn = 1
-),
-med as (select user_id, cat, quantile_cont(amt, 0.5) as cat_median from tx group by 1, 2),
-topmed as (select topc.user_id, topc.top_cat, med.cat_median
-           from topc join med on topc.user_id = med.user_id and topc.top_cat = med.cat),
-cleaned as (
-  select w.user_id,
-         case when c.cat_cnt <= 10 then tm.top_cat else w.cat end as cat,
-         case when c.cat_cnt <= 10 then tm.cat_median else w.amt end as amt,
-         w.ts, w.ord
-  from wz w
-  join counts c on w.user_id = c.user_id and w.cat = c.cat
-  join topmed tm on w.user_id = tm.user_id
-),
+{clean_ctes("tx", "cat", "amt", keep=("ts", "ord"))},
 tp as (select *, hour(ts)*3600 + minute(ts)*60 + second(ts) as time_day from cleaned),
 trimmed as (
   select * from (
