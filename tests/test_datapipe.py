@@ -7,12 +7,12 @@ import hashlib
 import re
 
 import pyspark.sql.functions as F
+import pytest
 
 from vtb_datafusion_2023_spark.operators.dedup import (
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_near_pairs,
-    simhash64,
 )
 from vtb_datafusion_2023_spark.operators.multimodal import fake_decode, media_features
 from vtb_datafusion_2023_spark.operators.similarity import cosine_topk, lsh_ann_topk
@@ -49,16 +49,37 @@ def test_minhash_pairs_subset_of_exact(spark, sf_small):
         assert len(got & strong) / len(strong) >= 0.5
 
 
+def simhash64(text, bits: int = 64):
+    """Reference 64-bit SimHash of the token multiset, one array-lambda
+    expression per row: for each bit position, sum +/-1 over the tokens'
+    xxhash64 bits; the bit is set where the sum is positive.  The
+    signature assembles via bitwise OR (overflow-free for bit 63)."""
+    from functools import reduce
+
+    tok_hashes = F.transform(F.split(F.col(text), " "), lambda t: F.xxhash64(t))
+
+    def bit_expr(b: int):
+        mask = F.shiftleft(F.lit(1).cast("long"), b)
+        vote = F.aggregate(
+            tok_hashes,
+            F.lit(0).cast("long"),
+            lambda a, h: a + F.when(h.bitwiseAND(mask) != 0, 1).otherwise(-1),
+        )
+        return F.when(vote > 0, mask).otherwise(F.lit(0).cast("long"))
+
+    return reduce(lambda x, y: x.bitwiseOR(y), [bit_expr(b) for b in range(bits)])
+
+
 def test_simhash_hamming_bound_and_reproducibility(spark, sf_small):
     d = docs(spark, sf_small)
     pairs = simhash_near_pairs(d, "doc_id", "text", max_hamming=10).collect()
-    assert all(r.hamming <= 10 for r in pairs)
+    assert all(r.hamming <= 10 for r in pairs) and pairs
     # signature is deterministic across evaluations
     a = {r.doc_id: r.sh for r in d.select("doc_id", simhash64("text").alias("sh")).collect()}
     b = {r.doc_id: r.sh for r in d.select("doc_id", simhash64("text").alias("sh")).collect()}
     assert a == b
-    # hamming column equals recomputed popcount(xor)
-    for r in pairs[:20]:
+    # hamming column equals popcount(xor) of the reference signatures
+    for r in pairs:
         assert bin((a[r.id_a] ^ a[r.id_b]) & ((1 << 64) - 1)).count("1") == r.hamming
 
 
@@ -164,6 +185,57 @@ def test_minhash_index_bucketed_join_no_exchange_on_index_side(spark, sf_small, 
     # count exchanges: only the probe side may shuffle
     n_exchanges = len(re.findall(r"Exchange hashpartitioning", plan))
     assert n_exchanges <= 1, plan
+
+
+def reference_band_table(df, num_perm: int, bands: int, shingle_n: int):
+    """Array-shingle reference for ``minhash_band_table``: the
+    ``word_shingles`` set of each doc, exploded, through the operator's
+    affine permutations and band hashes."""
+    from vtb_datafusion_2023_spark.operators.dedup import MERSENNE_P, word_shingles
+
+    rows = num_perm // bands
+    hashed = df.select(
+        F.col("doc_id").alias("_id"), F.explode(word_shingles("text", shingle_n)).alias("_s")
+    ).select("_id", F.pmod(F.xxhash64("_s"), F.lit(MERSENNE_P)).alias("_h"))
+    mins = [
+        F.min(
+            F.pmod(
+                F.lit((i * 40503 + 7919 + 1) % MERSENNE_P + 1) * F.col("_h")
+                + F.lit((i * 2654435761 + 7) % MERSENNE_P),
+                F.lit(MERSENNE_P),
+            )
+        ).alias(f"_mh{i}")
+        for i in range(num_perm)
+    ]
+    buckets = F.array(
+        *[F.hash(*[F.col(f"_mh{b * rows + j}") for j in range(rows)]) for b in range(bands)]
+    )
+    return hashed.groupBy("_id").agg(*mins).select(
+        "_id", F.posexplode(buckets).alias("band", "bucket")
+    )
+
+
+def test_minhash_band_table_matches_array_shingle_reference(spark, sf_small):
+    """The window-lead shingling inside ``minhash_band_table`` yields the
+    band table of the ``word_shingles`` sets, on a corpus with unique ids
+    that adds docs shorter than n, empty tokens and repeated grams."""
+    from vtb_datafusion_2023_spark.operators.dedup import minhash_band_table
+
+    extra = spark.createDataFrame(
+        [
+            (10**9, "x"),
+            (10**9 + 1, "a b"),
+            (10**9 + 2, "p  q r"),
+            (10**9 + 3, "a b c a b c a b c"),
+            (10**9 + 4, " lead and trail "),
+        ],
+        "doc_id long, text string",
+    )
+    d = docs(spark, sf_small).select("doc_id", "text").unionByName(extra)
+    for num_perm, bands in ((64, 16), (16, 4)):
+        got = sorted(minhash_band_table(d, "doc_id", "text", num_perm, bands, 3).collect())
+        want = sorted(reference_band_table(d, num_perm, bands, 3).collect())
+        assert got == want and len(got) == bands * d.count()
 
 
 def test_cluster_safe_split_never_leaks_near_dups(spark, sf_small):
@@ -2660,3 +2732,26 @@ def test_shingled_table_n_must_match_consumer(spark, sf_small):
     assert len(shared) > 0
     bands = sorted(minhash_md5_band_table(d, "doc_id", "text", shingle_n=3, shingled=sh3).collect())
     assert bands == sorted(minhash_md5_band_table(d, "doc_id", "text", shingle_n=3).collect())
+
+
+XXHASH_HEAD_ROWS = {
+    "dd_simhash": (2264, "07028ec6ebf3fc00ca5fb95935a303e130b01af68e087640b4886a38d0918f2c"),
+    "dd_minhash_lsh": (28, "ab1a071112fec57c372bab740dc1d67831b878d09d43f54313c611a5c0773601"),
+    "dd_incremental_minhash": (
+        14,
+        "93ec67a1bb984a7bcefeb4b2bec27db276c6414eca4b95d9b31da9756ce5fed2",
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(XXHASH_HEAD_ROWS))
+def test_xxhash_heads_rows_pinned(spark, sf_small, name):
+    """The rows-only xxhash64 dedup heads have no oracle; their rows at
+    sf0.001 are pinned by count and by the sha256 of the sorted rows'
+    repr, recorded before their signature and pair stages were shared
+    with the certified md5 twins."""
+    from vtb_datafusion_2023_spark.suite import queries
+
+    rows = sorted(tuple(r) for r in queries()[name](spark, sf_small).collect())
+    digest = hashlib.sha256(repr(rows).encode()).hexdigest()
+    assert (len(rows), digest) == XXHASH_HEAD_ROWS[name]

@@ -4,8 +4,9 @@ alternatives now live in tests as reference implementations.  This
 guard fails if any of them is accepted again, as it does for the
 parameters that no caller set, for frames of Python rows built outside
 ``sources.readers.small_frame`` and for copies of the A10/A11 statistic
-names and of A7's rank-interpolation text, which only ``sqlgen`` spells.
-It needs no SparkSession."""
+names and of A7's rank-interpolation text, which only ``sqlgen`` spells,
+and for a second in-bucket pair expansion beside
+``dedup._bucket_pair_structs``.  It needs no SparkSession."""
 
 from __future__ import annotations
 
@@ -34,6 +35,7 @@ from vtb_datafusion_2023_spark.operators import (
 )
 from vtb_datafusion_2023_spark.plans import features, submission
 from vtb_datafusion_2023_spark.sources import readers, writers
+from vtb_datafusion_2023_spark.streaming import dedup as streaming_dedup
 from vtb_datafusion_2023_spark.suite import datapipe
 
 MODULES = [
@@ -59,6 +61,10 @@ REMOVED = [
     (dedup.dedup_clusters, "method"),
     (dedup.simhash_idf_chunks, "hash_family"),
     (dedup.simhash_idf_pairs, "hash_family"),
+    (dedup.minhash_band_table, "shingle_strategy"),
+    (dedup.minhash_lsh_pairs, "shingle_strategy"),
+    (dedup.incremental_minhash_pairs, "shingle_strategy"),
+    (similarity.cosine_near_pairs, "exact"),
     (dedup.ngram_jaccard_pairs, "prefix_filter"),
     (dedup.ngram_jaccard_pairs, "position_filter"),
     (dedup.containment_pairs, "prefix_filter"),
@@ -106,6 +112,9 @@ def test_removed_selector_not_accepted(fn, param):
         (dedup, "minhash_signature"),
         (cleaning, "_cat_counts_top"),
         (cleaning, "_clean_stats_fused"),
+        (dedup, "simhash64"),
+        (dedup, "simhash64_agg"),
+        (streaming_dedup, "_band"),
         *[
             (module, name)
             for module in (stats, functions)
@@ -118,11 +127,11 @@ def test_alternative_entry_point_gone(module, name):
     assert not hasattr(module, name)
 
 
-class _CreateDataFrameCalls(ast.NodeVisitor):
-    """``(enclosing function, line)`` of every ``createDataFrame`` call."""
+class _Calls(ast.NodeVisitor):
+    """``(enclosing function, line)`` of every call ``match`` accepts."""
 
-    def __init__(self):
-        self.functions, self.calls = [], []
+    def __init__(self, match):
+        self.match, self.functions, self.calls = match, [], []
 
     def visit_FunctionDef(self, node):
         self.functions.append(node.name)
@@ -130,7 +139,7 @@ class _CreateDataFrameCalls(ast.NodeVisitor):
         self.functions.pop()
 
     def visit_Call(self, node):
-        if isinstance(node.func, ast.Attribute) and node.func.attr == "createDataFrame":
+        if self.match(node):
             self.calls.append((self.functions[-1] if self.functions else None, node.lineno))
         self.generic_visit(node)
 
@@ -141,7 +150,9 @@ def test_no_python_list_frames(module):
     relation), never ``createDataFrame``, whose Python-list form plans a
     PythonRDD that starts Python workers.  ``small_frame`` itself is the
     one caller."""
-    finder = _CreateDataFrameCalls()
+    finder = _Calls(
+        lambda node: isinstance(node.func, ast.Attribute) and node.func.attr == "createDataFrame"
+    )
     finder.visit(ast.parse(inspect.getsource(module)))
     callers = [function for function, _ in finder.calls]
     assert callers == (["small_frame"] if module is readers else []), finder.calls
@@ -180,3 +191,28 @@ def test_rank_interpolation_only_in_sqlgen(module):
     for node in ast.walk(ast.parse(inspect.getsource(module))):
         if isinstance(node, ast.Constant) and isinstance(node.value, str):
             assert not _INTERP_NAME.search(node.value), (node.lineno, node.value)
+
+
+def _later_members_slice(node) -> bool:
+    """``slice(members, i + 2, ...)``: the "every later member" slice of
+    an in-bucket all-pairs expansion."""
+    start = node.args[1] if len(node.args) >= 2 else None
+    return (
+        getattr(node.func, "attr", getattr(node.func, "id", None)) == "slice"
+        and isinstance(start, ast.BinOp)
+        and isinstance(start.op, ast.Add)
+        and isinstance(start.right, ast.Constant)
+        and start.right.value == 2
+    )
+
+
+def test_one_in_bucket_pair_expansion():
+    """MinHash candidates and all three SimHash families expand buckets
+    into pairs through ``dedup._bucket_pair_structs``; no other function
+    in the package builds that expansion."""
+    found = []
+    for module in MODULES:
+        finder = _Calls(_later_members_slice)
+        finder.visit(ast.parse(inspect.getsource(module)))
+        found += [(module.__name__, function) for function, _ in finder.calls]
+    assert found == [(dedup.__name__, "_bucket_pair_structs")], found

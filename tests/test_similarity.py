@@ -1,12 +1,13 @@
-"""Embedding near-dup: the banded-LSH default path vs the exact all-pairs
-verifier — soundness (subset, exact cosines), recall bound, and the
-plan-shape guarantee that the default never plans a nested-loop join."""
+"""Embedding near-dup: the banded-LSH path vs an exact all-pairs
+reference verifier — soundness (subset, exact cosines), recall bound, and
+the plan-shape guarantee that the operator never plans a nested-loop
+join."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from vtb_datafusion_2023_spark.operators.similarity import cosine_near_pairs
+from vtb_datafusion_2023_spark.operators.similarity import cosine, cosine_near_pairs
 from vtb_datafusion_2023_spark.sources.readers import load_table
 
 
@@ -14,9 +15,23 @@ def _pairs(df):
     return {(r.id_a, r.id_b): r.cos for r in df.collect()}
 
 
+def exact_cosine_pairs(df, threshold, id_col="vec_id", vec_col="embedding"):
+    """All-pairs O(n^2/2) reference: every (id_a < id_b) pair with the
+    operator's cosine >= threshold — a nested-loop join, correct at any
+    threshold, so it bounds the banded path's recall."""
+    a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
+    b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
+    return (
+        a.join(b, F.col("id_a") < F.col("id_b"))
+        .withColumn("cos", cosine(F.col("_va"), F.col("_vb")))
+        .filter(F.col("cos") >= threshold)
+        .select("id_a", "id_b", "cos")
+    )
+
+
 def test_banded_pairs_sound_and_recall_bounded(spark, sf_small):
     emb = load_table(spark, sf_small, "embeddings")
-    exact = _pairs(cosine_near_pairs(emb, threshold=0.4, exact=True))
+    exact = _pairs(exact_cosine_pairs(emb, threshold=0.4))
     # fixture geometry (see operator docstring): loose threshold + 500
     # vectors -> r=4, b=8
     banded = _pairs(cosine_near_pairs(emb, threshold=0.4, n_planes=4, n_bands=8))
@@ -41,14 +56,6 @@ def test_banded_path_plans_no_nested_loop_join(spark, sf_small):
     )
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
-    # the exact verifier IS the nested-loop shape (that's why it's opt-in)
-    exact_plan = (
-        cosine_near_pairs(emb, threshold=0.4, exact=True)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "NestedLoopJoin" in exact_plan or "CartesianProduct" in exact_plan
 
 
 def test_banded_pairs_deterministic_across_partitionings(spark, sf_small):
@@ -60,7 +67,7 @@ def test_banded_pairs_deterministic_across_partitionings(spark, sf_small):
 
 def test_higher_band_count_raises_recall(spark, sf_small):
     emb = load_table(spark, sf_small, "embeddings").limit(150)
-    exact = _pairs(cosine_near_pairs(emb, threshold=0.4, exact=True))
+    exact = _pairs(exact_cosine_pairs(emb, threshold=0.4))
     few = _pairs(cosine_near_pairs(emb, threshold=0.4, n_planes=4, n_bands=2))
     many = _pairs(cosine_near_pairs(emb, threshold=0.4, n_planes=4, n_bands=12))
     assert set(few) <= set(exact) and set(many) <= set(exact)

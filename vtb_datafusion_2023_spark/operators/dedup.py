@@ -7,15 +7,32 @@ Scale design (the whole point of these operators):
 - Naive near-dup is O(n^2) pairs; MinHash-LSH banding reduces it to
   candidates that collide in >= 1 band: shingle -> K permuted min-hashes ->
   B bands of R rows -> bucket grouping -> capped in-bucket pair expansion
-  -> exact-Jaccard verify.  All hashing is JVM-side (xxhash64 + affine
-  permutations under a Mersenne prime) — no Python, no UDF.
+  -> exact-Jaccard verify.  All hashing is JVM-side — no Python, no UDF.
 - SimHash packs a document into one 64-bit signature; near-dup candidates
-  share at least one of C chunk prefixes (pigeonhole: hamming <= k with C
+  share at least one of C chunk keys (pigeonhole: hamming <= k with C
   chunks guarantees a matching chunk when k < C), then exact hamming
   verifies.
+
+The near-duplicate families are ONE pipeline with pluggable hashing;
+every shared step is written once:
+
+- ``_bucket_pair_structs`` is the in-bucket pair expansion (all pairs,
+  or a star past ``max_bucket_size``) of both MinHash candidates and
+  SimHash pairs;
+- MinHash: ``minhash_band_table`` (xxhash64 + affine permutations under
+  a Mersenne prime, the scale path) and ``minhash_md5_band_table`` (md5,
+  oracle-replayable) differ only in their band table; ``_band_table``
+  picks one by ``hash_family``, and ``_lsh_pairs`` is the shared
+  candidate -> ``_verify_jaccard`` tail;
+- SimHash: the xxhash64, md5 and idf-weighted md5 families differ only
+  in their (token, bit test, weight) stream; ``_vote_chunks`` turns any
+  of them into chunk-key signatures and ``_simhash_pairs`` is the one
+  pair stage.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -100,7 +117,6 @@ def minhash_band_table(
     num_perm: int = 64,
     bands: int = 16,
     shingle_n: int = 3,
-    shingle_strategy: str = "window",
 ) -> DataFrame:
     """(id, band, bucket) LSH band assignments — the unit of incremental
     dedup state.
@@ -110,59 +126,49 @@ def minhash_band_table(
     apart, collide identically — persist this table once per corpus
     snapshot (``write_minhash_index``) and new batches dedup against it
     WITHOUT touching historical text (``incremental_minhash_pairs``).
+
+    Shingles come from posexploded tokens and ``lead()`` over a per-id
+    window: fully whole-stage-codegen'd (4x faster locally than the
+    interpreted array-lambda form, SCALE.md rule 8), and the same
+    shingle set as :func:`word_shingles`.  ``id_col`` values must be
+    UNIQUE: rows sharing an id interleave their tokens inside one window
+    partition and corrupt that id's signature — callers with possible
+    duplicate rows drop them first.
     """
     rows = num_perm // bands
     seed_ = 1  # fixed: band tables from separate runs must collide
 
-    if shingle_strategy == "window":
-        w = Window.partitionBy("_id").orderBy("pos")
-        toks = df.select(
-            F.col(id_col).alias("_id"),
-            F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "_t"),
-        )
-        lead_tail = F.lead("_t", shingle_n - 1).over(w)
-        grams = toks.select(
-            "_id",
-            "pos",
-            F.concat_ws(
-                " ", *[F.lead("_t", j).over(w) if j else F.col("_t") for j in range(shingle_n)]
-            ).alias("_s"),
-            lead_tail.alias("_tail"),
-        )
-        # full n-grams only, except the pos-0 partial gram for docs
-        # shorter than n — matching word_shingles' greatest(k, 1) behavior
-        grams = grams.filter(F.col("_tail").isNotNull() | (F.col("pos") == 0))
-        hashed = grams.select("_id", F.pmod(F.xxhash64("_s"), F.lit(MERSENNE_P)).alias("_h"))
-    elif shingle_strategy == "array":
-        base = df.select(
-            F.col(id_col).alias("_id"), word_shingles(text_col, shingle_n).alias("_sh")
-        )
-        hashed = base.select("_id", F.explode("_sh").alias("_s")).select(
-            "_id", F.pmod(F.xxhash64("_s"), F.lit(MERSENNE_P)).alias("_h")
-        )
-    else:
-        raise ValueError(f"unknown shingle_strategy: {shingle_strategy}")
-    perms = []
-    for i in range(num_perm):
-        a_i = (i * 40503 + seed_ * 7919 + 1) % MERSENNE_P + 1
-        b_i = (i * 2654435761 + 7) % MERSENNE_P
-        perms.append(
-            F.min(F.pmod(F.lit(a_i) * F.col("_h") + F.lit(b_i), F.lit(MERSENNE_P))).alias(
-                f"_mh{i}"
-            )
-        )
-    sigs = hashed.groupBy("_id").agg(*perms)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.hash(*[F.col(f"_mh{b * rows + j}") for j in range(rows)]).alias("bucket"),
-            )
-            for b in range(bands)
-        ]
+    w = Window.partitionBy("_id").orderBy("pos")
+    toks = df.select(
+        F.col(id_col).alias("_id"),
+        F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "_t"),
     )
-    return sigs.select("_id", F.explode(band_structs).alias("_b")).select(
-        "_id", F.col("_b.band").alias("band"), F.col("_b.bucket").alias("bucket")
+    lead_tail = F.lead("_t", shingle_n - 1).over(w)
+    grams = toks.select(
+        "_id",
+        "pos",
+        F.concat_ws(
+            " ", *[F.lead("_t", j).over(w) if j else F.col("_t") for j in range(shingle_n)]
+        ).alias("_s"),
+        lead_tail.alias("_tail"),
+    )
+    # full n-grams only, except the pos-0 partial gram for docs
+    # shorter than n — matching word_shingles' greatest(k, 1) behavior
+    grams = grams.filter(F.col("_tail").isNotNull() | (F.col("pos") == 0))
+    hashed = grams.select("_id", F.pmod(F.xxhash64("_s"), F.lit(MERSENNE_P)).alias("_h"))
+    perms = [
+        F.min(
+            F.pmod(
+                F.lit((i * 40503 + seed_ * 7919 + 1) % MERSENNE_P + 1) * F.col("_h")
+                + F.lit((i * 2654435761 + 7) % MERSENNE_P),
+                F.lit(MERSENNE_P),
+            )
+        ).alias(f"_mh{i}")
+        for i in range(num_perm)
+    ]
+    buckets = [F.hash(*[F.col(f"_mh{b * rows + j}") for j in range(rows)]) for b in range(bands)]
+    return hashed.groupBy("_id").agg(*perms).select(
+        "_id", F.posexplode(F.array(*buckets)).alias("band", "bucket")
     )
 
 
@@ -211,6 +217,26 @@ def _verify_jaccard(
     )
 
 
+def _lsh_pairs(
+    banded: DataFrame,
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_n: int,
+    jaccard_threshold: float,
+    max_bucket_size: int,
+) -> DataFrame:
+    """The band -> candidate -> exact-verify tail shared by both MinHash
+    hash families."""
+    # the candidate pairs feed three consumers inside the verify (the two
+    # cand_ids branches + the pair join); pinning them stops each from
+    # replaying the whole shingle->signature->bucket lineage.  Candidates
+    # are (long, long) rows ~linear in true duplicates — tiny relative to
+    # the corpus.
+    cand = _bucket_candidate_pairs(banded, max_bucket_size).localCheckpoint(eager=False)
+    return _verify_jaccard(cand, df, id_col, text_col, shingle_n, jaccard_threshold)
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -219,24 +245,14 @@ def minhash_lsh_pairs(
     bands: int = 16,
     shingle_n: int = 3,
     jaccard_threshold: float = 0.5,
-    shingle_strategy: str = "window",
     max_bucket_size: int = 1000,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash banding + exact-Jaccard verify.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b and jaccard >= threshold.
     Only colliding (band, bucket) groups generate candidates — at 100 TB
-    the candidate set is ~linear in true duplicates, not O(n^2).
-
-    ``shingle_strategy`` trades compute shape for shuffle volume:
-    - 'window' (default): posexplode tokens -> lead() n-grams.  Fully
-      whole-stage-codegen'd (4x faster locally: 0.8s vs 3.1s at sf0.1),
-      but the window shuffles the tokenized corpus by doc id.  Right when
-      compute-bound (local, fat executors).
-    - 'array': map-side interpreted array-lambda shingling + exploded
-      hash with map-side partial min-aggregation, so the exchange carries
-      only ~num_perm longs per doc per partition.  Right when the cluster
-      is shuffle-bound (the usual 100 TB regime).
+    the candidate set is ~linear in true duplicates, not O(n^2).  Ids
+    must be unique (see :func:`minhash_band_table`).
 
     ``max_bucket_size``: hot buckets (m near-identical docs — exactly
     where dedup matters) would otherwise expand to O(m^2) pairs inside
@@ -244,16 +260,10 @@ def minhash_lsh_pairs(
     bucket's minimum id, keeping the duplicate CLUSTER connected with
     O(m) pairs.  Run exact_dedup first to strip true duplicates.
     """
-    banded = minhash_band_table(
-        df, id_col, text_col, num_perm, bands, shingle_n, shingle_strategy
+    banded = minhash_band_table(df, id_col, text_col, num_perm, bands, shingle_n)
+    return _lsh_pairs(
+        banded, df, id_col, text_col, shingle_n, jaccard_threshold, max_bucket_size
     )
-    # the candidate pairs feed three consumers inside the verify (the two
-    # cand_ids branches + the pair join); pinning them stops each from
-    # replaying the whole shingle->signature->bucket lineage.  Candidates
-    # are (long, long) rows ~linear in true duplicates — tiny relative to
-    # the corpus.
-    cand = _bucket_candidate_pairs(banded, max_bucket_size).localCheckpoint(eager=False)
-    return _verify_jaccard(cand, df, id_col, text_col, shingle_n, jaccard_threshold)
 
 
 def minhash_md5_band_table(
@@ -304,20 +314,12 @@ def minhash_md5_band_table(
         F.min(F.md5(F.concat(F.lit(f"{p}:"), F.col("_s")))).alias(f"_m{p}")
         for p in range(num_perm)
     ]
-    sigs = sh.groupBy("_id").agg(*aggs)
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws("|", *[F.col(f"_m{b * r + j}") for j in range(r)])
-                ).alias("bucket"),
-            )
-            for b in range(bands)
-        ]
-    )
-    return sigs.select("_id", F.explode(band_structs).alias("_bb")).select(
-        "_id", F.col("_bb.band").alias("band"), F.col("_bb.bucket").alias("bucket")
+    buckets = [
+        F.md5(F.concat_ws("|", *[F.col(f"_m{b * r + j}") for j in range(r)]))
+        for b in range(bands)
+    ]
+    return sh.groupBy("_id").agg(*aggs).select(
+        "_id", F.posexplode(F.array(*buckets)).alias("band", "bucket")
     )
 
 
@@ -335,8 +337,48 @@ def minhash_md5_pairs(
     `minhash_md5_band_table`): same banding -> candidate -> exact-verify
     shape, oracle-replayable end to end."""
     banded = minhash_md5_band_table(df, id_col, text_col, num_perm, bands, shingle_n)
-    cand = _bucket_candidate_pairs(banded, max_bucket_size).localCheckpoint(eager=False)
-    return _verify_jaccard(cand, df, id_col, text_col, shingle_n, jaccard_threshold)
+    return _lsh_pairs(
+        banded, df, id_col, text_col, shingle_n, jaccard_threshold, max_bucket_size
+    )
+
+
+def _band_table(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_perm: int,
+    bands: int,
+    shingle_n: int,
+    hash_family: str,
+) -> DataFrame:
+    """The (_id, band, bucket) table of ``hash_family``: 'xxhash64' (the
+    fast scale path, :func:`minhash_band_table`) or 'md5' (the
+    oracle-replayable family, :func:`minhash_md5_band_table`)."""
+    if hash_family == "md5":
+        return minhash_md5_band_table(df, id_col, text_col, num_perm, bands, shingle_n)
+    if hash_family == "xxhash64":
+        return minhash_band_table(df, id_col, text_col, num_perm, bands, shingle_n)
+    raise ValueError(f"hash_family must be xxhash64|md5, got {hash_family!r}")
+
+
+def _bucket_pair_structs(members: Column, mk_pair, max_bucket_size: int) -> Column:
+    """The in-bucket pair array of a sorted ``members`` array:
+    ``mk_pair(x, y)`` for every x before y, or — past ``max_bucket_size``
+    members — only the star of the first (minimum) member against every
+    other (O(m) pairs, the duplicate cluster stays connected)."""
+    all_pairs = F.flatten(
+        F.transform(
+            members,
+            lambda x, i: F.transform(
+                F.slice(members, i + 2, F.size(members)), lambda y: mk_pair(x, y)
+            ),
+        )
+    )
+    star_pairs = F.transform(
+        F.slice(members, 2, F.size(members)),
+        lambda y: mk_pair(F.element_at(members, 1), y),
+    )
+    return F.when(F.size(members) > max_bucket_size, star_pairs).otherwise(all_pairs)
 
 
 def _bucket_candidate_pairs(banded: DataFrame, max_bucket_size: int) -> DataFrame:
@@ -348,27 +390,17 @@ def _bucket_candidate_pairs(banded: DataFrame, max_bucket_size: int) -> DataFram
     invocation leaks block-manager state across calls.  Grouping keeps
     ONE lineage: band rows carry only (band, bucket, id) longs; colliding
     buckets expand to sorted in-bucket pairs, star-capped by
-    ``max_bucket_size`` (hot buckets pair every member against the
-    bucket minimum — O(m) pairs, cluster stays connected)."""
+    ``max_bucket_size`` (:func:`_bucket_pair_structs`)."""
     buckets = (
         banded.groupBy("band", "bucket")
         .agg(F.array_sort(F.collect_list("_id")).alias("_ids"))
         .filter(F.size("_ids") > 1)
     )
-    all_pairs = F.flatten(
-        F.transform(
-            F.col("_ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("_ids"), i + 2, F.size(F.col("_ids"))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
+    pair_structs = _bucket_pair_structs(
+        F.col("_ids"),
+        lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b")),
+        max_bucket_size,
     )
-    star_pairs = F.transform(
-        F.slice(F.col("_ids"), 2, F.size(F.col("_ids"))),
-        lambda y: F.struct(F.element_at(F.col("_ids"), 1).alias("id_a"), y.alias("id_b")),
-    )
-    pair_structs = F.when(F.size("_ids") > max_bucket_size, star_pairs).otherwise(all_pairs)
     return (
         buckets.select(F.explode(pair_structs).alias("_p"))
         .select(F.col("_p.id_a").alias("id_a"), F.col("_p.id_b").alias("id_b"))
@@ -421,7 +453,6 @@ def incremental_minhash_pairs(
     bands: int = 16,
     shingle_n: int = 3,
     jaccard_threshold: float = 0.5,
-    shingle_strategy: str = "window",
     max_bucket_size: int = 1000,
     hash_family: str = "xxhash64",
 ) -> DataFrame:
@@ -443,24 +474,28 @@ def incremental_minhash_pairs(
     Determinism of the signatures makes this EXACTLY equivalent to
     re-running ``minhash_lsh_pairs`` over old+new and keeping the pairs
     that touch a new doc (property-tested in tests/test_datapipe.py),
-    at the cost of the batch, not the corpus.  Old-old pairs are the
-    previous run's output and are not re-emitted.
+    at the cost of the batch, not the corpus — as long as every
+    colliding (band, bucket) holds at most ``max_bucket_size`` docs.
+    Past that the two differ: the full rerun star-caps the hot bucket,
+    while the batch x index equi-join here pairs each batch doc with
+    every index member of the bucket.  Old-old pairs are the previous
+    run's output and are not re-emitted.
     """
     # Exact duplicate batch rows (an at-least-once redelivery) must
-    # collapse before they can do harm, but WHERE depends on the shingle
-    # strategy.  The window-lead strategy interleaves a duplicated doc's
-    # tokens inside the per-id window, corrupting its signature — there
-    # the distinct must run BEFORE banding.  The array strategies (md5
-    # family, shingle_strategy='array') build each row's shingle set
-    # independently and min-aggregate per id, so duplicates collapse in
-    # the banding groupBy for free — pre-dedup there would only insert an
-    # exchange whose small-bytes output AQE coalesces onto a few cores,
-    # serializing the CPU-heavy per-shingle hashing that otherwise runs
-    # map-side at input parallelism (measured 4x on dd_incremental_md5).
+    # collapse before they can do harm, but WHERE depends on the hash
+    # family.  The xxhash64 window-lead shingling interleaves a duplicated
+    # doc's tokens inside the per-id window, corrupting its signature —
+    # there the distinct must run BEFORE banding.  The md5 family builds
+    # each row's shingle set independently and min-aggregates per id, so
+    # duplicates collapse in the banding groupBy for free — pre-dedup
+    # there would only insert an exchange whose small-bytes output AQE
+    # coalesces onto a few cores, serializing the CPU-heavy per-shingle
+    # hashing that otherwise runs map-side at input parallelism
+    # (measured 4x on dd_incremental_md5).
     # Duplicates must still collapse before the VERIFY (a doc joining
     # twice multiplies pairs) — handled at new_sel below.
     new_docs = new_docs.select(F.col(id_col), F.col(text_col))
-    pre_dedup = hash_family == "xxhash64" and shingle_strategy == "window"
+    pre_dedup = hash_family == "xxhash64"
     if pre_dedup:
         new_docs = new_docs.distinct()
     # The batch band table feeds BOTH candidate branches (and indirectly
@@ -474,16 +509,9 @@ def incremental_minhash_pairs(
     # accumulators log benign-but-noisy "non-existent accumulator"
     # DAGScheduler errors (the round-3 bench-tail anomaly attributed to
     # this query); eager runs it as its own job, measured cost-neutral.
-    if hash_family == "md5":
-        new_banded = minhash_md5_band_table(
-            new_docs, id_col, text_col, num_perm, bands, shingle_n
-        ).localCheckpoint(eager=True)
-    elif hash_family == "xxhash64":
-        new_banded = minhash_band_table(
-            new_docs, id_col, text_col, num_perm, bands, shingle_n, shingle_strategy
-        ).localCheckpoint(eager=True)
-    else:
-        raise ValueError(f"hash_family must be xxhash64|md5, got {hash_family!r}")
+    new_banded = _band_table(
+        new_docs, id_col, text_col, num_perm, bands, shingle_n, hash_family
+    ).localCheckpoint(eager=True)
     new_new = _bucket_candidate_pairs(new_banded, max_bucket_size)
     old_side = index.select(
         F.col(_index_id_column(index)).alias("_old_id"), "band", "bucket"
@@ -519,56 +547,85 @@ def incremental_minhash_pairs(
     return _verify_jaccard(cand, docs_all, id_col, text_col, shingle_n, jaccard_threshold)
 
 
-def simhash64(text: Column | str, bits: int = 64) -> Column:
-    """64-bit SimHash of the token multiset: for each bit position, sum
-    +/-1 over token hashes; the bit is set where the sum is positive.
+def _vote_chunks(tokens: DataFrame, is_set, weight: Column, chunks: int) -> DataFrame:
+    """SimHash signatures from a (_id, ...) token stream: bit ``p`` of a
+    doc's signature is set where the ``weight``-weighted vote of its
+    tokens — ``+weight`` where ``is_set(p)`` holds, ``-weight`` where it
+    does not — is positive.  Only the token stream differs between hash
+    families; this one 64-sum groupBy over the exploded tokens (map-side
+    partials, codegen'd aggregates — SCALE.md rule 8) serves all three.
 
-    Bit positions are Python ints (shift amounts must be literals in the
-    DataFrame API), so this generates ``bits`` aggregate expressions over
-    one shared token-hash array — still a single projection, no shuffle.
-    The signature assembles via bitwise OR (overflow-free for bit 63).
-    """
-    from functools import reduce as _reduce
-
-    c = F.col(text) if isinstance(text, str) else text
-    tok_hashes = F.transform(F.split(c, " "), lambda t: F.xxhash64(t))
-
-    def bit_expr(b: int) -> Column:
-        mask = F.shiftleft(F.lit(1).cast("long"), b)
-        vote = F.aggregate(
-            tok_hashes,
-            F.lit(0).cast("long"),
-            lambda a, h: a + F.when(h.bitwiseAND(mask) != 0, 1).otherwise(-1),
-        )
-        return F.when(vote > 0, mask).otherwise(F.lit(0).cast("long"))
-
-    return _reduce(lambda x, y: x.bitwiseOR(y), [bit_expr(b) for b in range(bits)])
-
-
-def simhash64_agg(df: DataFrame, id_col: str, text_col: str, bits: int = 64) -> DataFrame:
-    """SimHash signatures via explode + codegen'd bit-vote aggregates —
-    the scale path (same rationale as the MinHash hot path: higher-order
-    array lambdas are interpreted; exploded columnar aggregates are not).
-    Returns (_id, _sh)."""
-    from functools import reduce as _reduce
-
-    toks = df.select(
-        F.col(id_col).alias("_id"), F.explode(F.split(F.col(text_col), " ")).alias("_t")
-    ).select("_id", F.xxhash64("_t").alias("_h"))
+    Emits the signature as ``chunks`` ``64/chunks``-bit integers (the
+    pigeonhole keys) instead of one signed 64-bit word — small positive
+    ints avoid sign/overflow dialect differences entirely.  Returns
+    (_id, sig: array<int> of length ``chunks``)."""
+    if 64 % chunks or chunks < 4:
+        raise ValueError(f"chunks must divide 64 into keys of at most 16 bits, got {chunks}")
+    bits_per = 64 // chunks
     votes = [
-        F.sum(
-            F.when(F.col("_h").bitwiseAND(F.shiftleft(F.lit(1).cast("long"), b)) != 0, 1).otherwise(-1)
-        ).alias(f"_v{b}")
-        for b in range(bits)
+        F.sum(F.when(is_set(p), weight).otherwise(-weight)).alias(f"_v{p}") for p in range(64)
     ]
-    sig_bits = [
-        F.when(F.col(f"_v{b}") > 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(
-            F.lit(0).cast("long")
+    ckeys = [
+        reduce(
+            lambda x, y: x + y,
+            [
+                F.when(F.col(f"_v{c * bits_per + k}") > 0, F.lit(1 << k)).otherwise(F.lit(0))
+                for k in range(bits_per)
+            ],
+        ).cast("int")
+        for c in range(chunks)
+    ]
+    return tokens.groupBy("_id").agg(*votes).select("_id", F.array(*ckeys).alias("sig"))
+
+
+def _simhash_pairs(
+    sig: DataFrame, chunks: int, max_hamming: int, max_bucket_size: int
+) -> DataFrame:
+    """(id_a, id_b, hamming) pairs of :func:`_vote_chunks` signatures of
+    ``chunks`` keys within ``max_hamming`` bits, via the chunk
+    pigeonhole: candidates share one exact chunk key.
+
+    Same plan shape as the MinHash candidates: bucket GROUPING (one
+    lineage, no self-join) with the signature carried inside the bucket
+    list, so the hamming verify needs no join at all; hot buckets
+    star-cap at ``max_bucket_size``.  The bucket list carries each
+    signature packed back into one 64-bit word (the chunks hold disjoint
+    bit ranges), so hamming is one ``bit_count`` of the xor: carrying
+    the chunk array and summing per-chunk counts measured ~15% slower
+    end to end (unweighted head, sf0.1 and a 5,000-doc zipf corpus,
+    local[4] on a 4-vCPU host)."""
+    bits_per = 64 // chunks
+    packed = reduce(
+        lambda x, y: x.bitwiseOR(y),
+        [F.shiftleft(F.col("sig")[c].cast("long"), c * bits_per) for c in range(chunks)],
+    )
+    buckets = (
+        sig.select("_id", packed.alias("_sh"), F.posexplode("sig").alias("chunk", "ckey"))
+        .groupBy("chunk", "ckey")
+        .agg(F.array_sort(F.collect_list(F.struct("_id", "_sh"))).alias("_m"))
+        .filter(F.size("_m") > 1)
+    )
+
+    def mk_pair(x: Column, y: Column) -> Column:
+        return F.struct(
+            x["_id"].alias("id_a"),
+            y["_id"].alias("id_b"),
+            F.bit_count(x["_sh"].bitwiseXOR(y["_sh"])).alias("hamming"),
         )
-        for b in range(bits)
-    ]
-    return toks.groupBy("_id").agg(*votes).select(
-        "_id", _reduce(lambda x, y: x.bitwiseOR(y), sig_bits).alias("_sh")
+
+    # hamming verify INSIDE the bucket array, before the explode: the
+    # pigeonhole buckets expand to O(m^2) candidates (236k at sf0.1 for
+    # the unweighted head) of which only the true near-dups survive —
+    # filtering in the lambda means the explode+dedup shuffle carries
+    # survivors only.
+    survivors = F.filter(
+        _bucket_pair_structs(F.col("_m"), mk_pair, max_bucket_size),
+        lambda p: p["hamming"] <= max_hamming,
+    )
+    return (
+        buckets.select(F.explode(survivors).alias("_p"))
+        .select("_p.id_a", "_p.id_b", "_p.hamming")
+        .distinct()
     )
 
 
@@ -581,68 +638,25 @@ def simhash_near_pairs(
     max_bucket_size: int = 1000,
 ) -> DataFrame:
     """Near-dup pairs with hamming(simhash) <= max_hamming via the chunk
-    pigeonhole: candidates must share one of ``chunks`` 16-bit chunks.
-    (Guaranteed complete when max_hamming < chunks; here it is a recall
-    heuristic matching common practice.)
+    pigeonhole: candidates must share one of ``chunks`` 64/chunks-bit
+    chunks.  (Guaranteed complete when max_hamming < chunks; here it is a
+    recall heuristic matching common practice.)
 
-    Same plan shape as minhash_lsh_pairs: bucket GROUPING (one lineage, no
-    self-join) with the signature carried inside the bucket list, so the
-    hamming verify needs no join at all; hot buckets star-cap at
-    ``max_bucket_size``.
+    The xxhash64 scale family: bit ``p`` of a token's hash votes for
+    signature bit ``p`` (every token counts once per occurrence, empty
+    tokens included).  Same pair stage (:func:`_simhash_pairs`) as the
+    certified md5 twin ``simhash_md5_pairs``.
     """
-    bits_per = 64 // chunks
-    sh = simhash64_agg(df, id_col, text_col)
-    chunk_structs = F.array(
-        *[
-            F.struct(
-                F.lit(cidx).alias("chunk"),
-                F.shiftright(F.col("_sh"), cidx * bits_per)
-                .bitwiseAND(F.lit((1 << bits_per) - 1))
-                .alias("ckey"),
-            )
-            for cidx in range(chunks)
-        ]
+    toks = df.select(
+        F.col(id_col).alias("_id"), F.explode(F.split(F.col(text_col), " ")).alias("_t")
+    ).select("_id", F.xxhash64("_t").alias("_h"))
+    sig = _vote_chunks(
+        toks,
+        lambda p: F.col("_h").bitwiseAND(F.shiftleft(F.lit(1).cast("long"), p)) != 0,
+        F.lit(1),
+        chunks,
     )
-    chunked = sh.select("_id", "_sh", F.explode(chunk_structs).alias("_c")).select(
-        "_id", "_sh", F.col("_c.chunk").alias("chunk"), F.col("_c.ckey").alias("ckey")
-    )
-    buckets = (
-        chunked.groupBy("chunk", "ckey")
-        .agg(F.array_sort(F.collect_list(F.struct("_id", "_sh"))).alias("_m"))
-        .filter(F.size("_m") > 1)
-    )
-    def mk_pair(x: Column, y: Column) -> Column:
-        return F.struct(
-            x["_id"].alias("id_a"),
-            y["_id"].alias("id_b"),
-            F.bit_count(x["_sh"].bitwiseXOR(y["_sh"])).alias("hamming"),
-        )
-
-    all_pairs = F.flatten(
-        F.transform(
-            F.col("_m"),
-            lambda x, i: F.transform(
-                F.slice(F.col("_m"), i + 2, F.size(F.col("_m"))),
-                lambda y: mk_pair(x, y),
-            ),
-        )
-    )
-    star_pairs = F.transform(
-        F.slice(F.col("_m"), 2, F.size(F.col("_m"))),
-        lambda y: mk_pair(F.element_at(F.col("_m"), 1), y),
-    )
-    pair_structs = F.when(F.size("_m") > max_bucket_size, star_pairs).otherwise(all_pairs)
-    # hamming verify INSIDE the bucket array, before the explode: the
-    # pigeonhole buckets expand to O(m^2) candidates (236k at sf0.1) of
-    # which only the true near-dups survive — filtering in the lambda
-    # means the explode+dedup shuffle carries survivors only.
-    survivors = F.filter(pair_structs, lambda p: p["hamming"] <= max_hamming)
-    return (
-        buckets.select(F.explode(survivors).alias("_p"))
-        .select("_p.id_a", "_p.id_b", "_p.hamming")
-        .dropDuplicates(["id_a", "id_b"])
-        .select("id_a", "id_b", "hamming")
-    )
+    return _simhash_pairs(sig, chunks, max_hamming, max_bucket_size)
 
 
 def shingle_array_table(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
@@ -1051,15 +1065,9 @@ def simhash_md5_chunks(
     replayable in any engine with md5 (`dd_simhash_md5`), the same
     rationale as `minhash_md5_band_table` vs the xxhash64 default.
 
-    Emits the signature as ``chunks`` 16-bit integers (the pigeonhole
-    keys) instead of one signed 64-bit word — small positive ints avoid
-    sign/overflow dialect differences entirely.  One explode + one
-    64-sum groupBy (map-side partials), codegen throughout.
-    Returns (_id, sig: array<int> of length ``chunks``).
+    One explode + one 64-sum groupBy (:func:`_vote_chunks`), codegen
+    throughout.  Returns (_id, sig: array<int> of length ``chunks``).
     """
-    from functools import reduce as _reduce
-
-    bits_per = 64 // chunks
     _hw1, _hw2 = _md5_bit_words(F.md5("_t"))
     toks = (
         df.select(
@@ -1068,28 +1076,11 @@ def simhash_md5_chunks(
         )
         .filter(F.col("_t") != "")
         # parse the digest into two bit words ONCE per row; the 64 vote
-        # probes below are then shift+mask (see _md5_bit_words)
+        # probes are then shift+mask (see _md5_bit_words)
         .select("_id", _hw1.alias("_w1"), _hw2.alias("_w2"))
     )
-
-    def bit(p: int):
-        return _md5_bit(F.col("_w1"), F.col("_w2"), p)
-
-    votes = [
-        F.sum(F.when(bit(p) == 1, 1).otherwise(-1)).alias(f"_v{p}") for p in range(64)
-    ]
-    ckeys = [
-        _reduce(
-            lambda x, y: x + y,
-            [
-                F.when(F.col(f"_v{c * bits_per + k}") > 0, F.lit(1 << k)).otherwise(F.lit(0))
-                for k in range(bits_per)
-            ],
-        ).cast("int")
-        for c in range(chunks)
-    ]
-    return toks.groupBy("_id").agg(*votes).select(
-        "_id", F.array(*ckeys).alias("sig")
+    return _vote_chunks(
+        toks, lambda p: _md5_bit(F.col("_w1"), F.col("_w2"), p) == 1, F.lit(1), chunks
     )
 
 
@@ -1102,59 +1093,11 @@ def simhash_md5_pairs(
     max_bucket_size: int = 1000,
 ) -> DataFrame:
     """`simhash_near_pairs` with the md5 hash family: chunk-pigeonhole
-    candidates + in-bucket hamming verify (bit_count over xor'd 16-bit
-    chunks), the same one-lineage bucket-grouping shape — and bitwise
+    candidates + in-bucket hamming verify (bit_count of the xor'd
+    signatures) in the shared pair stage :func:`_simhash_pairs` — and bitwise
     replayable by the DuckDB oracle."""
     sig = simhash_md5_chunks(df, id_col, text_col, chunks)
-    chunked = sig.select(
-        "_id", "sig", F.posexplode("sig").alias("chunk", "ckey")
-    )
-    buckets = (
-        chunked.groupBy("chunk", "ckey")
-        .agg(F.array_sort(F.collect_list(F.struct("_id", "sig"))).alias("_m"))
-        .filter(F.size("_m") > 1)
-    )
-
-    def mk_pair(x, y):
-        return F.struct(
-            x["_id"].alias("id_a"),
-            y["_id"].alias("id_b"),
-            x["sig"].alias("sig_a"),
-            y["sig"].alias("sig_b"),
-        )
-
-    all_pairs = F.flatten(
-        F.transform(
-            F.col("_m"),
-            lambda x, i: F.transform(
-                F.slice(F.col("_m"), i + 2, F.size(F.col("_m"))), lambda y: mk_pair(x, y)
-            ),
-        )
-    )
-    star_pairs = F.transform(
-        F.slice(F.col("_m"), 2, F.size(F.col("_m"))),
-        lambda y: mk_pair(F.element_at(F.col("_m"), 1), y),
-    )
-    pair_structs = F.when(F.size("_m") > max_bucket_size, star_pairs).otherwise(all_pairs)
-    ham = F.aggregate(
-        F.zip_with(
-            F.col("_p.sig_a"),
-            F.col("_p.sig_b"),
-            lambda a, b: F.bit_count(a.bitwiseXOR(b)).cast("int"),
-        ),
-        F.lit(0),
-        lambda acc, d: acc + d,
-    )
-    return (
-        buckets.select(F.explode(pair_structs).alias("_p"))
-        .select(
-            F.col("_p.id_a").alias("id_a"),
-            F.col("_p.id_b").alias("id_b"),
-            ham.alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    return _simhash_pairs(sig, chunks, max_hamming, max_bucket_size)
 
 
 def simhash_idf_chunks(
@@ -1198,11 +1141,6 @@ def simhash_idf_chunks(
     idf join, one 64-sum groupBy — all linear, map-side-combinable.
     """
     import math
-    from functools import reduce as _reduce
-
-    if 64 % chunks:
-        raise ValueError(f"chunks must divide 64, got {chunks}")
-    bits_per = 64 // chunks
 
     terms = df.select(
         F.col(id_col).alias("_id"),
@@ -1265,25 +1203,9 @@ def simhash_idf_chunks(
         "_wq",
         dtype="bigint",
     ).select("_id", (F.col("_tf") * F.col("_wq")).alias("_w"), "_w1", "_w2")
-
-    def bit(p: int):
-        return _md5_bit(F.col("_w1"), F.col("_w2"), p)
-
-    votes = [
-        F.sum(F.when(bit(p) == 1, F.col("_w")).otherwise(-F.col("_w"))).alias(f"_v{p}")
-        for p in range(64)
-    ]
-    ckeys = [
-        _reduce(
-            lambda x, y: x + y,
-            [
-                F.when(F.col(f"_v{c * bits_per + k}") > 0, F.lit(1 << k)).otherwise(F.lit(0))
-                for k in range(bits_per)
-            ],
-        ).cast("int")
-        for c in range(chunks)
-    ]
-    return hashed.groupBy("_id").agg(*votes).select("_id", F.array(*ckeys).alias("sig"))
+    return _vote_chunks(
+        hashed, lambda p: _md5_bit(F.col("_w1"), F.col("_w2"), p) == 1, F.col("_w"), chunks
+    )
 
 
 def simhash_idf_pairs(
@@ -1296,8 +1218,8 @@ def simhash_idf_pairs(
     quant: int = 1_000_000,
 ) -> DataFrame:
     """Near-dup pairs on the IDF-weighted SimHash: chunk-pigeonhole
-    candidates + in-bucket hamming verify — the `simhash_md5_pairs`
-    bucket-grouping shape over `simhash_idf_chunks` signatures.
+    candidates + in-bucket hamming verify — the shared pair stage
+    :func:`_simhash_pairs` over `simhash_idf_chunks` signatures.
 
     The DEFAULT (chunks=8 x 8-bit keys, max_hamming=7) is pigeonhole-
     COMPLETE: 7 differing bits cannot touch all 8 chunks, so every pair
@@ -1309,53 +1231,7 @@ def simhash_idf_pairs(
     (id_a, id_b, hamming).
     """
     sig = simhash_idf_chunks(df, id_col, text_col, chunks=chunks, quant=quant)
-    chunked = sig.select("_id", "sig", F.posexplode("sig").alias("chunk", "ckey"))
-    buckets = (
-        chunked.groupBy("chunk", "ckey")
-        .agg(F.array_sort(F.collect_list(F.struct("_id", "sig"))).alias("_m"))
-        .filter(F.size("_m") > 1)
-    )
-
-    def mk_pair(x, y):
-        return F.struct(
-            x["_id"].alias("id_a"),
-            y["_id"].alias("id_b"),
-            x["sig"].alias("sig_a"),
-            y["sig"].alias("sig_b"),
-        )
-
-    all_pairs = F.flatten(
-        F.transform(
-            F.col("_m"),
-            lambda x, i: F.transform(
-                F.slice(F.col("_m"), i + 2, F.size(F.col("_m"))), lambda y: mk_pair(x, y)
-            ),
-        )
-    )
-    star_pairs = F.transform(
-        F.slice(F.col("_m"), 2, F.size(F.col("_m"))),
-        lambda y: mk_pair(F.element_at(F.col("_m"), 1), y),
-    )
-    pair_structs = F.when(F.size("_m") > max_bucket_size, star_pairs).otherwise(all_pairs)
-    ham = F.aggregate(
-        F.zip_with(
-            F.col("_p.sig_a"),
-            F.col("_p.sig_b"),
-            lambda a, b: F.bit_count(a.bitwiseXOR(b)).cast("int"),
-        ),
-        F.lit(0),
-        lambda acc, d: acc + d,
-    )
-    return (
-        buckets.select(F.explode(pair_structs).alias("_p"))
-        .select(
-            F.col("_p.id_a").alias("id_a"),
-            F.col("_p.id_b").alias("id_b"),
-            ham.alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= max_hamming)
-    )
+    return _simhash_pairs(sig, chunks, max_hamming, max_bucket_size)
 
 
 def substring_dedup(

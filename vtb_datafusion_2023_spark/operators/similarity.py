@@ -71,14 +71,12 @@ def cosine_near_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.9,
-    exact: bool = False,
     n_planes: int = 12,
     n_bands: int = 16,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cos >= t).
 
-    DEFAULT = banded-LSH candidates + exact verify (the 100 TB shape):
-    each vector gets ``n_bands`` bucket keys (disjoint ``n_planes``-plane
+    Banded-LSH candidates + exact verify (the 100 TB shape): each vector gets ``n_bands`` bucket keys (disjoint ``n_planes``-plane
     sign signatures); candidate pairs share ANY band bucket (equi-join on
     (band, bucket) — never a nested loop), are deduped once, then exact
     cosine keeps true pairs.  Everything is the deterministic
@@ -96,21 +94,9 @@ def cosine_near_pairs(
     fixtures / loose thresholds need the opposite corner (the suite uses
     r=4, b=8 for its 500-vector, t=0.4 oracle).  Identical vectors all
     share all buckets — run ``exact_dedup`` first so hot buckets hold
-    near-dups, not exact copies.
-
-    ``exact=True`` is the all-pairs O(n^2/2) verifier — correct at any
-    threshold but a nested-loop join; use only for small n or recall
-    audits.
+    near-dups, not exact copies.  The all-pairs verifier that bounds
+    its recall lives in tests/test_similarity.py.
     """
-    a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
-    b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
-    if exact:
-        return (
-            a.join(b, F.col("id_a") < F.col("id_b"))
-            .withColumn("cos", cosine(F.col("_va"), F.col("_vb")))
-            .filter(F.col("cos") >= threshold)
-            .select("id_a", "id_b", "cos")
-        )
     sigs = F.array(
         *[
             lsh_signature(F.col("_v"), n_planes, plane_offset=band * n_planes)

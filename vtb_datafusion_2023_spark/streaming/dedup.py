@@ -5,8 +5,10 @@ MinHash band index across micro-batches.
 The production loop a 100 TB training-data pipeline runs on arriving
 shards: each micro-batch
 
-1. bands its documents (``dedup.minhash_band_table`` — deterministic
-   signatures),
+1. bands its documents (``dedup._band_table`` of ``hash_family``, the
+   one band-table dispatch batch ``incremental_minhash_pairs`` uses too
+   — deterministic signatures; ids are unique, since the batch drops
+   duplicate ids first and the corpus only ever receives such batches),
 2. finds near-dup candidates in-batch (bucket grouping) and against the
    ACCUMULATED index (equi-join on (band, bucket) — history is probed,
    never re-banded),
@@ -47,22 +49,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.dedup import (
-    _bucket_candidate_pairs,
-    _verify_jaccard,
-    minhash_band_table,
-    minhash_md5_band_table,
-)
-
-
-def _band(df, id_col, text_col, num_perm, bands, shingle_n, hash_family):
-    if hash_family == "md5":
-        return minhash_md5_band_table(df, id_col, text_col, num_perm, bands, shingle_n)
-    if hash_family == "xxhash64":
-        return minhash_band_table(
-            df, id_col, text_col, num_perm, bands, shingle_n, shingle_strategy="array"
-        )
-    raise ValueError(f"hash_family must be xxhash64|md5, got {hash_family!r}")
+from ..operators.dedup import _band_table, _bucket_candidate_pairs, _verify_jaccard
 from ..sources.manifest import commit_versioned, read_versioned, table_versions
 
 
@@ -87,7 +74,7 @@ def _dedup_one_batch(
     the xxhash64 scale path, exactly as in batch ``minhash_md5_pairs``.
     """
     batch = batch.select(id_col, text_col).dropDuplicates([id_col])
-    banded = _band(
+    banded = _band_table(
         batch, id_col, text_col, num_perm, bands, shingle_n, hash_family
     ).localCheckpoint(eager=True)  # feeds both candidate branches once;
     # eager so materialization runs as its own job — a LAZY checkpoint
@@ -110,7 +97,7 @@ def _dedup_one_batch(
             # in-memory fallback only: streaming_dedup_ingest heals a
             # missing index DURABLY (commits the re-banding) before it
             # calls here, so this branch serves ad-hoc callers
-            index = _band(
+            index = _band_table(
                 old, id_col, text_col, num_perm, bands, shingle_n, hash_family
             ).withColumnRenamed("_id", id_col)
         # Cap the batch x index candidate join per (band, bucket), like
@@ -210,7 +197,7 @@ def streaming_dedup_ingest(
             # table_versions(index_dir) would see only this batch's
             # bands.  Deterministic signatures rebuild it identically;
             # a crash after this commit is idempotent (versions exist).
-            rebuilt = _band(
+            rebuilt = _band_table(
                 read_versioned(spark, corpus_dir),
                 id_col, text_col, num_perm, bands, shingle_n, hash_family,
             ).withColumnRenamed("_id", id_col)
@@ -237,7 +224,7 @@ def streaming_dedup_ingest(
                 read_versioned(spark, corpus_dir).select(id_col), id_col, "left_anti"
             )
         if accepted.limit(1).count() > 0:
-            accepted_bands = _band(
+            accepted_bands = _band_table(
                 accepted, id_col, text_col, num_perm, bands, shingle_n, hash_family
             ).withColumnRenamed("_id", id_col)
             # index FIRST: a crash between the commits then leaves an

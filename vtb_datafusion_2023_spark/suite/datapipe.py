@@ -751,9 +751,9 @@ where {_cosf('ea.embedding', 'eb.embedding')} >= 0.4
     doc="embedding-cosine near-dup pairs via the SCALE path: banded-LSH "
     "candidates (equi-join on (band, bucket), never all-pairs) + exact "
     "cosine verify; the oracle replicates the identical banded pipeline "
-    "(deterministic integer planes), so the match is bitwise.  The "
-    "all-pairs verifier stays available as cosine_near_pairs(exact=True) "
-    "and bounds recall in tests/test_similarity.py.",
+    "(deterministic integer planes), so the match is bitwise.  An "
+    "all-pairs reference verifier in tests/test_similarity.py bounds "
+    "its recall.",
 )
 def dd_embedding_cosine(spark, sf_dir):
     emb = T(spark, sf_dir, "embeddings")
