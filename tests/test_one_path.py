@@ -5,8 +5,10 @@ guard fails if any of them is accepted again, as it does for the
 parameters that no caller set, for frames of Python rows built outside
 ``sources.readers.small_frame`` and for copies of the A10/A11 statistic
 names and of A7's rank-interpolation text, which only ``sqlgen`` spells,
-and for a second in-bucket pair expansion beside
-``dedup._bucket_pair_structs``.  It needs no SparkSession."""
+for a second in-bucket pair expansion beside
+``dedup._bucket_pair_structs``, for a per-query top-k outside
+``similarity._rank`` and for a DuckDB dot-product fold outside
+``datapipe._dot_sql``.  It needs no SparkSession."""
 
 from __future__ import annotations
 
@@ -116,6 +118,13 @@ def test_removed_selector_not_accepted(fn, param):
         (dedup, "simhash64_agg"),
         (streaming_dedup, "_band"),
         *[
+            (datapipe, name)
+            for name in (
+                "_DOT", "_NQ", "_NC", "_cosf", "_NRM", "_MRL_NRM", "_D16", "_BUCKET8",
+                "_banded_sig_sql",
+            )
+        ],
+        *[
             (module, name)
             for module in (stats, functions)
             for name in ("dsum", "davg", "sem", "skew_adjusted", "zscore_window")
@@ -142,6 +151,18 @@ class _Calls(ast.NodeVisitor):
         if self.match(node):
             self.calls.append((self.functions[-1] if self.functions else None, node.lineno))
         self.generic_visit(node)
+
+
+class _Strings(_Calls):
+    """``(enclosing function, line)`` of every string constant ``match``
+    accepts (f-string pieces included)."""
+
+    def visit_Call(self, node):
+        self.generic_visit(node)
+
+    def visit_Constant(self, node):
+        if isinstance(node.value, str) and self.match(node.value):
+            self.calls.append((self.functions[-1] if self.functions else None, node.lineno))
 
 
 @pytest.mark.parametrize("module", MODULES, ids=lambda m: m.__name__)
@@ -216,3 +237,29 @@ def test_one_in_bucket_pair_expansion():
         finder.visit(ast.parse(inspect.getsource(module)))
         found += [(module.__name__, function) for function, _ in finder.calls]
     assert found == [(dedup.__name__, "_bucket_pair_structs")], found
+
+
+def test_one_top_k_rank_in_similarity():
+    """Every similarity top-k (the search tails, the PQ shortlist, the
+    funnels' two cuts, the IVF cell choice) ranks through
+    ``similarity._rank``: it holds the module's one ``row_number``."""
+    finder = _Calls(
+        lambda node: getattr(node.func, "attr", getattr(node.func, "id", None)) == "row_number"
+    )
+    finder.visit(ast.parse(inspect.getsource(similarity)))
+    assert [function for function, _ in finder.calls] == ["_rank"], finder.calls
+
+
+_FOLD = "list_reduce(list_transform(range(1, len("
+
+
+def test_one_duckdb_dot_fold():
+    """The oracles' left-fold dot product (and every norm and cosine built
+    on it) is spelled once, by ``datapipe._dot_sql``."""
+    found = []
+    for module in MODULES:
+        if module.__name__.startswith(package.__name__ + ".suite"):
+            finder = _Strings(lambda text: _FOLD in text)
+            finder.visit(ast.parse(inspect.getsource(module)))
+            found += [(module.__name__, function) for function, _ in finder.calls]
+    assert found == [(datapipe.__name__, "_dot_sql")], found

@@ -6,6 +6,7 @@ join."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from vtb_datafusion_2023_spark.operators.similarity import cosine, cosine_near_pairs
 from vtb_datafusion_2023_spark.sources.readers import load_table
@@ -117,6 +118,31 @@ def test_knn_join_blocked_plans_no_nested_loop(spark, sf_small):
     # the candidate set joins back as the BROADCAST side; the corpus scan
     # must not shuffle
     assert "BroadcastHashJoin" in plan, plan
+
+
+_EMPTY_QUERY_CASES = [
+    ("knn_join_blocked", {}, "query_id:bigint,neighbor_id:bigint,rank:int,cos:double"),
+    ("pq_topk", {}, "query_id:bigint,neighbor_id:bigint,rank:int,adist:double"),
+    ("lsh_pq_topk", {"n_planes": 8}, "query_id:bigint,neighbor_id:bigint,rank:int,cos:double"),
+]
+
+
+@pytest.mark.parametrize(
+    "name,kwargs,schema", _EMPTY_QUERY_CASES, ids=[c[0] for c in _EMPTY_QUERY_CASES]
+)
+def test_zero_queries_return_the_documented_empty_frame(spark, sf_small, name, kwargs, schema):
+    """The numpy-kernel paths collect the query side first; with no
+    queries they return no rows, typed as documented and as a
+    one-query search."""
+    from vtb_datafusion_2023_spark.operators import similarity
+
+    fn = getattr(similarity, name)
+    emb = load_table(spark, sf_small, "embeddings")
+    empty = fn(emb, emb.filter(F.col("vec_id") < 0), **kwargs)
+    assert empty.collect() == []
+    assert empty.schema.simpleString() == f"struct<{schema}>"
+    one = fn(emb, emb.filter(F.col("vec_id") == 0), **kwargs)
+    assert one.schema.simpleString() == f"struct<{schema}>"
 
 
 # ---------------------------------------------------------------------------

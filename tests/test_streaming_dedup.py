@@ -112,3 +112,21 @@ def test_streaming_dedup_index_self_heal_is_durable(spark, sf_small, tmp_path):
         for r in read_versioned(spark, index_dir).select("doc_id").distinct().collect()
     }
     assert kept_ids <= idx_ids
+
+
+def test_suite_heads_remove_their_temp_root(spark, sf_small):
+    """Both two-batch suite heads write their source files, corpus, index
+    and checkpoint under one temp root and remove it, while the rows they
+    return stay readable."""
+    import glob
+    import os
+    import tempfile
+
+    from vtb_datafusion_2023_spark.suite import queries
+
+    pattern = os.path.join(tempfile.gettempdir(), "spark_graft_stdedup*")
+    for name in ("st_dedup_ingest", "st_dedup_ingest_md5"):
+        before = set(glob.glob(pattern))
+        rows = queries()[name](spark, sf_small).collect()
+        assert rows, name
+        assert set(glob.glob(pattern)) - before == set(), name

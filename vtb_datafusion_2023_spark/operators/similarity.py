@@ -1,18 +1,39 @@
-"""Similarity search over embedding columns: brute-force cosine top-k
-(baseline) and hyperplane-LSH bucketed ANN (scale path).
+"""Similarity search over embedding columns, built as one retrieval
+pipeline: candidates -> rank -> exact rescore.
 
-All vector math is JVM-side array expressions: ``zip_with`` products +
-``aggregate`` left-fold sums (deterministic order — bitwise reproducible
-and oracle-comparable via DuckDB's ``list_reduce``).  At 100 TB the
-brute-force path is a broadcast-join of the (small) query set against the
-corpus — one scan, no shuffle; the LSH path buckets the corpus once and
-joins per-bucket.
+Each ANN operator differs only in how it produces candidate
+``(query_id, neighbor_id)`` pairs; the shared stages are written once:
+
+- ``_rank``: the one per-query top-k (``row_number`` over ``(score,
+  neighbor_id)``), an int ``rank``; also picks IVF cells per vector.
+- ``_cosine_rank`` / ``_rescore``: the exact left-fold cosine of the
+  candidates (``_rescore`` first broadcast-joins bare id pairs back to
+  both vector sides), self pairs dropped, then ``_rank``.
+- ``_query_block``: the one bounded driver-side collect of the query
+  set for the numpy candidate kernels.
+
+Candidate families: brute force (``cosine_topk``, broadcast cross join;
+``knn_join_blocked``, blocked numpy GEMM pruning), hyperplane-LSH
+buckets (``lsh_ann_topk``, banded ``cosine_near_pairs``), IVF cells
+(``ivf_topk``, the persisted ``write_ivf_index`` / ``ivf_search_indexed``),
+PQ/ADC lookup-table scoring (``pq_topk``, and ``lsh_pq_topk`` with the
+bucket match as its pre-filter; one ``_adc_shortlist`` kernel), and two
+coarse-to-exact funnels (``mrl_rerank_topk`` on a Matryoshka prefix,
+``int8_rerank_topk`` on int8-quantized vectors).
+
+All exact vector math is JVM-side array expressions: ``zip_with``
+products + ``aggregate`` left-fold sums (deterministic order — bitwise
+reproducible and oracle-comparable via DuckDB's ``list_reduce``); the
+numpy kernels replay the same fold orders.  At 100 TB the query side is
+broadcast (|queries| << |corpus|), so every path scans the corpus once
+and shuffles only per-query candidates.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.functions import broadcast
 from pyspark.sql.window import Window
 
@@ -36,6 +57,78 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def _rank(
+    scored: DataFrame,
+    score: str,
+    k: int,
+    asc: bool = False,
+    key: str = "query_id",
+    tie: str = "neighbor_id",
+) -> DataFrame:
+    """The top ``k`` rows per ``key`` by ``score`` (descending unless
+    ``asc``; ties to the lowest ``tie``), numbered 1..k in an int
+    ``rank`` column — Spark plans the cut as a WindowGroupLimit."""
+    order = F.col(score).asc() if asc else F.col(score).desc()
+    w = Window.partitionBy(key).orderBy(order, F.col(tie).asc())
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _sides(corpus: DataFrame, queries: DataFrame, id_col: str, vec_col: str):
+    """The corpus as ``(neighbor_id, _cv)`` and the queries as
+    ``(query_id, _qv)``."""
+    return (
+        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv")),
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")),
+    )
+
+
+def _cosine_rank(cand: DataFrame, k: int, cv: str = "_cv") -> DataFrame:
+    """Exact stage of every cosine path: drop self pairs, score the
+    ``(query_id, _qv)`` x ``(neighbor_id, cv)`` candidates with the
+    left-fold ``cosine`` and keep the top ``k`` per query."""
+    scored = cand.filter(F.col("query_id") != F.col("neighbor_id")).withColumn(
+        "cos", cosine(F.col("_qv"), F.col(cv))
+    )
+    return _rank(scored, "cos", k).select("query_id", "neighbor_id", "rank", "cos")
+
+
+def _rescore(
+    cand: DataFrame, corpus: DataFrame, queries: DataFrame, k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """Exact re-score of a small ``(query_id, neighbor_id)`` candidate
+    set: broadcast-join it back to the corpus vectors (the corpus side
+    stays a plain scan, no shuffle) and to the query vectors, then
+    ``_cosine_rank`` — so (rank, cos) match ``cosine_topk`` and the
+    DuckDB oracle bitwise."""
+    cv, qv = _sides(corpus, queries, id_col, vec_col)
+    joined = cv.join(broadcast(cand), "neighbor_id").join(broadcast(qv), "query_id")
+    return _cosine_rank(joined, k)
+
+
+_PAIR_SCHEMA = T.StructType(
+    [
+        T.StructField("query_id", T.LongType(), False),
+        T.StructField("neighbor_id", T.LongType(), False),
+    ]
+)
+
+
+def _query_block(queries: DataFrame, id_col: str, vec_col: str, empty_schema: str):
+    """Collect the query side to the driver as ``(ids, matrix)`` (int64
+    ids, float64 Q x d) for the numpy candidate kernels — the documented
+    ANN bound |queries| << |corpus|.  With no queries there is nothing
+    to search: returns the empty result frame typed ``empty_schema``."""
+    import numpy as np
+
+    rows = queries.select(id_col, vec_col).collect()
+    if not rows:
+        return small_frame(queries.sparkSession, [], empty_schema)
+    return (
+        np.asarray([r[0] for r in rows], dtype=np.int64),
+        np.asarray([list(r[1]) for r in rows], dtype=np.float64),
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -49,21 +142,8 @@ def cosine_topk(
     broadcast (ANN workloads have |queries| << |corpus|); ranking is a
     per-query window.  Ties break on neighbor_id for determinism.
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
-    )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
-    scored = (
-        c.crossJoin(broadcast(q))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", cosine(F.col("_qv"), F.col("_cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    c, q = _sides(corpus, queries, id_col, vec_col)
+    return _cosine_rank(c.crossJoin(broadcast(q)), k)
 
 
 def cosine_near_pairs(
@@ -175,37 +255,10 @@ def ivf_topk(
     centroid set is tiny), the inverted index is the corpus repartitioned
     by cell, and each query touches n_probe/n_cells of the data.
     """
-    if centroids is not None:
-        cents = centroids.select(
-            F.col("cid").alias("_cid"), F.col("centroid").alias("_cv")
-        )
-    else:
-        cents = corpus.filter(F.col(id_col) < n_cells).select(
-            F.col(id_col).alias("_cid"), F.col(vec_col).alias("_cv")
-        )
-
-    c_cells = _assign_cells(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cvv")),
-        cents,
-        "neighbor_id",
-        "_cvv",
-        1,
-    )
-    q_cells = _assign_cells(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")),
-        cents,
-        "query_id",
-        "_qv",
-        n_probe,
-    )
-    cand = q_cells.join(c_cells, "_cid").filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = cand.withColumn("cos", cosine(F.col("_qv"), F.col("_cvv")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "cos")
-    )
+    cents = _ivf_centroids(corpus, id_col, vec_col, n_cells, centroids)
+    c_cells = _assign_cells(corpus, cents, id_col, vec_col, "neighbor_id", "_cvv", 1)
+    q_cells = _assign_cells(queries, cents, id_col, vec_col, "query_id", "_qv", n_probe)
+    return _cosine_rank(q_cells.join(c_cells, "_cid"), k, cv="_cvv")
 
 
 def hyperplane_weight(plane: Column | int, dim: Column) -> Column:
@@ -264,24 +317,10 @@ def lsh_ann_topk(
     buckets total, so each query scans ~n/2^r corpus vectors — grow r
     with the corpus (the r=16 default ~ 65k buckets suits 10^6-10^8
     vectors; the 500-vector suite fixture passes r=8 explicitly)."""
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("_cv"),
-    ).withColumn("_bkt", lsh_signature(F.col("_cv"), n_planes))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
-    ).withColumn("_bkt", lsh_signature(F.col("_qv"), n_planes))
-    scored = (
-        c.join(broadcast(q), "_bkt")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", cosine(F.col("_qv"), F.col("_cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    c, q = _sides(corpus, queries, id_col, vec_col)
+    c = c.withColumn("_bkt", lsh_signature(F.col("_cv"), n_planes))
+    q = q.withColumn("_bkt", lsh_signature(F.col("_qv"), n_planes))
+    return _cosine_rank(c.join(broadcast(q), "_bkt"), k)
 
 
 def knn_join_blocked(
@@ -322,27 +361,18 @@ def knn_join_blocked(
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
-    q_rows = queries.select(id_col, vec_col).collect()
-    if not q_rows:
-        return small_frame(
-            corpus.sparkSession, [], "query_id bigint, neighbor_id bigint, rank int, cos double"
-        )
-    q_ids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.asarray([r[1] for r in q_rows], dtype=np.float64)
+    block = _query_block(
+        queries, id_col, vec_col, "query_id bigint, neighbor_id bigint, rank int, cos double"
+    )
+    if isinstance(block, DataFrame):
+        return block
+    q_ids, q_mat = block
     q_norms = np.linalg.norm(q_mat, axis=1)
     q_norms[q_norms == 0.0] = 1.0
     q_mat = q_mat / q_norms[:, None]
     b = corpus.sparkSession.sparkContext.broadcast((q_ids, q_mat))
     cap = k + margin
-
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("neighbor_id", T.LongType(), False),
-        ]
-    )
 
     def candidates(batches):
         qids, qm = b.value
@@ -373,21 +403,8 @@ def knn_join_blocked(
                 }
             )
 
-    cand = corpus.select(id_col, vec_col).mapInPandas(candidates, schema=schema)
-    cv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
-    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
-    scored = (
-        cv.join(broadcast(cand), "neighbor_id")
-        .join(broadcast(qv), "query_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cos", cosine(F.col("_qv"), F.col("_cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    cand = corpus.select(id_col, vec_col).mapInPandas(candidates, schema=_PAIR_SCHEMA)
+    return _rescore(cand, corpus, queries, k, id_col, vec_col)
 
 
 def l2_normalize(
@@ -519,7 +536,6 @@ def pq_encode(
     cb = codebook_sql or pq_formula_codebook_sql(m, k, subdim)
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
     books = _pq_codebook_numpy(df.sparkSession, cb)
     b = df.sparkSession.sparkContext.broadcast(books)
@@ -563,38 +579,59 @@ def pq_topk(
     pruning, the ``knn_join_blocked`` shape), so the shuffle carries
     O(batches * Q * k) rows, never the corpus.  Fold orders match the
     DuckDB oracle, and the final (adist, neighbor_id) window makes the
-    cut deterministic — outputs are bitwise identical.
+    cut deterministic — outputs are bitwise identical.  Returns
+    ``(query_id, neighbor_id, rank, adist)``.
     """
-    cb = codebook_sql or pq_formula_codebook_sql(m, k, subdim)
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
+    books = _pq_codebook_numpy(
+        corpus.sparkSession, codebook_sql or pq_formula_codebook_sql(m, k, subdim)
+    )
+    block = _query_block(
+        queries, id_col, vec_col, "query_id bigint, neighbor_id bigint, rank int, adist double"
+    )
+    if isinstance(block, DataFrame):
+        return block
+    scored = _adc_shortlist(corpus, id_col, vec_col, *block, books, k_neighbors)
+    return _rank(scored, "adist", k_neighbors, asc=True).select(
+        "query_id", "neighbor_id", "rank", "adist"
+    )
 
-    books = _pq_codebook_numpy(corpus.sparkSession, cb)
-    q_rows = queries.select(id_col, vec_col).collect()
-    if not q_rows:
-        return small_frame(
-            corpus.sparkSession, [], "query_id bigint, neighbor_id bigint, rank int, adist double"
-        )
-    q_ids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
-    # per-query LUT with the oracle's fold order (j ascending, 0 seed)
-    luts = np.zeros((len(q_ids), m, k))
+
+def _adc_luts(q_mat, books):
+    """Per-query ADC lookup tables, (Q, m, k): the squared distance of
+    each query subvector to every centroid, summed j ascending from a
+    0.0 seed — the oracle's fold order."""
+    import numpy as np
+
+    m, k, subdim = books.shape
+    luts = np.zeros((len(q_mat), m, k))
     for sub in range(m):
         for j in range(subdim):
             diff = q_mat[:, sub * subdim + j, None] - books[None, sub, :, j]
             luts[:, sub, :] += diff * diff
-    b = corpus.sparkSession.sparkContext.broadcast((q_ids, luts, books))
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("neighbor_id", T.LongType(), False),
-            T.StructField("adist", T.DoubleType(), True),
-        ]
-    )
+    return luts
+
+
+_ADC_SCHEMA = T.StructType(_PAIR_SCHEMA.fields + [T.StructField("adist", T.DoubleType(), True)])
+
+
+def _adc_shortlist(corpus, id_col, vec_col, q_ids, q_mat, books, keep, n_planes=None):
+    """The PQ candidate stage, one numpy pass over the corpus scan: per
+    Arrow batch, encode the rows, price every (row, query) pair at m
+    lookups of the query's ``_adc_luts`` table (sub ascending from a 0.0
+    seed, the oracle's fold) and emit the ``keep`` best ``(query_id,
+    neighbor_id, adist)`` per query (ties to the lowest id), self pairs
+    excluded.  With ``n_planes`` a row is a candidate of a query only
+    when their ``n_planes``-plane LSH buckets match — the bucket match
+    is the kernel's one optional pre-filter.  The shuffle carries
+    O(batches * Q * keep) rows, never the corpus."""
+    import numpy as np
+    import pandas as pd
+
+    q_bkt = None if n_planes is None else _lsh_signature_numpy(q_mat, n_planes)
+    b = corpus.sparkSession.sparkContext.broadcast((q_ids, q_bkt, _adc_luts(q_mat, books), books))
 
     def run(batches):
-        qi, lut, bk = b.value
+        qi, qb, lut, bk = b.value
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -604,23 +641,20 @@ def pq_topk(
             acc = np.zeros((len(ids), len(qi)))
             for sub in range(bk.shape[0]):  # s ascending: the SQL fold order
                 acc += lut[:, sub, codes[:, sub]].T
+            cbkt = None if qb is None else _lsh_signature_numpy(x, n_planes)
             out: dict[str, list] = {"query_id": [], "neighbor_id": [], "adist": []}
             for qpos in range(len(qi)):
                 mask = ids != qi[qpos]
+                if qb is not None:
+                    mask &= cbkt == qb[qpos]
                 cand_ids, cand_d = ids[mask], acc[mask, qpos]
-                order = np.lexsort((cand_ids, cand_d))[:k_neighbors]
+                order = np.lexsort((cand_ids, cand_d))[:keep]
                 out["query_id"].extend([int(qi[qpos])] * len(order))
                 out["neighbor_id"].extend(cand_ids[order].tolist())
                 out["adist"].extend(cand_d[order].tolist())
             yield pd.DataFrame(out)
 
-    scored = corpus.select(id_col, vec_col).mapInPandas(run, schema=schema)
-    w = Window.partitionBy("query_id").orderBy(F.col("adist").asc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_neighbors)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "adist")
-    )
+    return corpus.select(id_col, vec_col).mapInPandas(run, schema=_ADC_SCHEMA)
 
 
 def pq_train_codebooks(
@@ -719,82 +753,17 @@ def lsh_pq_topk(
     all-Catalyst form, which costs m*k interpreted lambdas per row);
     only the O(Q * rerank) shortlist reaches the JVM rerank join.
     """
-    cb = codebook_sql or pq_formula_codebook_sql(m, n_centroids, subdim)
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    books = _pq_codebook_numpy(corpus.sparkSession, cb)
-    q_rows = queries.select(id_col, vec_col).collect()
-    if not q_rows:
-        return small_frame(
-            corpus.sparkSession, [], "query_id bigint, neighbor_id bigint, rank int, cos double"
-        )
-    q_ids = np.asarray([r[0] for r in q_rows], dtype=np.int64)
-    q_mat = np.asarray([list(r[1]) for r in q_rows], dtype=np.float64)
-    q_bkt = _lsh_signature_numpy(q_mat, n_planes)
-    luts_np = np.zeros((len(q_ids), m, n_centroids))
-    for sub in range(m):
-        for j in range(subdim):
-            diff = q_mat[:, sub * subdim + j, None] - books[None, sub, :, j]
-            luts_np[:, sub, :] += diff * diff
-    b = corpus.sparkSession.sparkContext.broadcast(
-        (q_ids, q_bkt, luts_np, books, n_planes)
+    books = _pq_codebook_numpy(
+        corpus.sparkSession, codebook_sql or pq_formula_codebook_sql(m, n_centroids, subdim)
     )
-    schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("neighbor_id", T.LongType(), False),
-            T.StructField("_adist", T.DoubleType(), True),
-        ]
+    block = _query_block(
+        queries, id_col, vec_col, "query_id bigint, neighbor_id bigint, rank int, cos double"
     )
-
-    def run(batches):
-        qi, qb, lut, bk, planes = b.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            x = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            cbkt = _lsh_signature_numpy(x, planes)
-            codes = _pq_encode_numpy(x, bk)
-            out: dict[str, list] = {"query_id": [], "neighbor_id": [], "_adist": []}
-            for qpos in range(len(qi)):
-                mask = (cbkt == qb[qpos]) & (ids != qi[qpos])
-                if not mask.any():
-                    continue
-                cids, ccodes = ids[mask], codes[mask]
-                acc = np.zeros(len(cids))
-                for sub in range(bk.shape[0]):  # s ascending: SQL fold order
-                    acc += lut[qpos, sub, ccodes[:, sub]]
-                order = np.lexsort((cids, acc))[:rerank]
-                out["query_id"].extend([int(qi[qpos])] * len(order))
-                out["neighbor_id"].extend(cids[order].tolist())
-                out["_adist"].extend(acc[order].tolist())
-            yield pd.DataFrame(out)
-
-    cand = corpus.select(id_col, vec_col).mapInPandas(run, schema=schema)
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("_adist").asc(), F.col("neighbor_id").asc()
-    )
-    short = (
-        cand.withColumn("_rr", F.row_number().over(w_adc))
-        .filter(F.col("_rr") <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-    qv = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
-    cv = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
-    rescored = (
-        cv.join(broadcast(short), "neighbor_id")
-        .join(broadcast(qv), "query_id")
-        .withColumn("cos", cosine(F.col("_qv"), F.col("_cv")))
-    )
-    w_fin = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        rescored.withColumn("rank", F.row_number().over(w_fin))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "cos")
-    )
+    if isinstance(block, DataFrame):
+        return block
+    cand = _adc_shortlist(corpus, id_col, vec_col, *block, books, rerank, n_planes)
+    short = _rank(cand, "adist", rerank, asc=True).select("query_id", "neighbor_id")
+    return _rescore(short, corpus, queries, k, id_col, vec_col)
 
 
 def pq_dedup_clusters(
@@ -825,18 +794,30 @@ def pq_dedup_clusters(
     )
 
 
-def _assign_cells(side: DataFrame, cents: DataFrame, idc: str, vecc: str, keep: int) -> DataFrame:
+def _ivf_centroids(
+    corpus: DataFrame, id_col: str, vec_col: str, n_cells: int, centroids: DataFrame | None
+) -> DataFrame:
+    """IVF centroids as ``(_cid int, _cv)``: the given ``(cid,
+    centroid)`` frame, or the first ``n_cells`` corpus vectors by id —
+    the deterministic default the DuckDB oracle replays."""
+    if centroids is not None:
+        return centroids.select(F.col("cid").alias("_cid"), F.col("centroid").alias("_cv"))
+    return corpus.filter(F.col(id_col) < n_cells).select(
+        F.col(id_col).cast("int").alias("_cid"), F.col(vec_col).alias("_cv")
+    )
+
+
+def _assign_cells(
+    df: DataFrame, cents: DataFrame, id_col: str, vec_col: str, idc: str, vecc: str, keep: int
+) -> DataFrame:
     """Rank centroids per vector (broadcast cross + window), keep the
-    nearest ``keep`` cell ids.  ``cents``: (_cid, _cv)."""
+    nearest ``keep`` cell ids as ``(idc, vecc, _cid)``.  ``cents``:
+    (_cid, _cv)."""
+    side = df.select(F.col(id_col).alias(idc), F.col(vec_col).alias(vecc))
     scored = side.crossJoin(broadcast(cents)).withColumn(
         "_ccos", cosine(F.col(vecc), F.col("_cv"))
     )
-    w = Window.partitionBy(idc).orderBy(F.col("_ccos").desc(), F.col("_cid").asc())
-    return (
-        scored.withColumn("_crk", F.row_number().over(w))
-        .filter(F.col("_crk") <= keep)
-        .select(idc, vecc, "_cid")
-    )
+    return _rank(scored, "_ccos", keep, key=idc, tie="_cid").select(idc, vecc, "_cid")
 
 
 def write_ivf_index(
@@ -864,23 +845,14 @@ def write_ivf_index(
 
     from ..sources.manifest import commit_versioned, commit_versioned_bucketed
 
-    if centroids is not None:
-        cents = centroids.select(F.col("cid").alias("_cid"), F.col("centroid").alias("_cv"))
-    else:
-        cents = corpus.filter(F.col(id_col) < n_cells).select(
-            F.col(id_col).cast("int").alias("_cid"), F.col(vec_col).alias("_cv")
-        )
+    cents = _ivf_centroids(corpus, id_col, vec_col, n_cells, centroids)
     commit_versioned(
         cents.select(F.col("_cid").alias("cid"), F.col("_cv").alias("centroid")),
         os.path.join(index_dir, "centroids"),
     )
-    assigned = _assign_cells(
-        corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cvv")),
-        cents,
-        "neighbor_id",
-        "_cvv",
-        1,
-    ).select("_cid", "neighbor_id", "_cvv")
+    assigned = _assign_cells(corpus, cents, id_col, vec_col, "neighbor_id", "_cvv", 1).select(
+        "_cid", "neighbor_id", "_cvv"
+    )
     return commit_versioned_bucketed(
         assigned, os.path.join(index_dir, "cells"), key_col="_cid", n_buckets=n_cells
     )
@@ -909,23 +881,10 @@ def ivf_search_indexed(
     cents = read_versioned(spark, os.path.join(index_dir, "centroids")).select(
         F.col("cid").alias("_cid"), F.col("centroid").alias("_cv")
     )
-    q_cells = _assign_cells(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")),
-        cents,
-        "query_id",
-        "_qv",
-        n_probe,
-    )
+    q_cells = _assign_cells(queries, cents, id_col, vec_col, "query_id", "_qv", n_probe)
     probed = [r["_cid"] for r in q_cells.select("_cid").distinct().collect()]
     cells = read_versioned_pruned(spark, os.path.join(index_dir, "cells"), keys=probed)
-    cand = q_cells.join(cells, "_cid").filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = cand.withColumn("cos", cosine(F.col("_qv"), F.col("_cvv")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("int").alias("rank"), "cos")
-    )
+    return _cosine_rank(q_cells.join(cells, "_cid"), k, cv="_cvv")
 
 
 def embedding_gram(
@@ -1203,21 +1162,8 @@ def mrl_rerank_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("_cos16", cosine(F.col("_q16"), F.col("_c16")))
     )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("_cos16").desc(), F.col("neighbor_id").asc()
-    )
-    cands = coarse.withColumn("_r1", F.row_number().over(w1)).filter(
-        F.col("_r1") <= k_coarse
-    )
-    rer = cands.withColumn("cos", cosine(F.col("_qv"), F.col("_cv")))
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos")
-    )
+    rer = _rank(coarse, "_cos16", k_coarse).withColumn("cos", cosine(F.col("_qv"), F.col("_cv")))
+    return _rank(rer, "cos", k).select("query_id", "neighbor_id", "rank", "cos")
 
 
 def _int_dot(a: Column, b: Column) -> Column:
@@ -1284,18 +1230,5 @@ def int8_rerank_topk(
             / (F.sqrt(F.col("_qn2").cast("double")) * F.sqrt(F.col("_cn2").cast("double"))),
         )
     )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("cos8").desc(), F.col("neighbor_id").asc()
-    )
-    cands = coarse.withColumn("_r1", F.row_number().over(w1)).filter(
-        F.col("_r1") <= k_coarse
-    )
-    rer = cands.withColumn("cos", cosine(F.col("_qv"), F.col("_cv")))
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cos8", "cos")
-    )
+    rer = _rank(coarse, "cos8", k_coarse).withColumn("cos", cosine(F.col("_qv"), F.col("_cv")))
+    return _rank(rer, "cos", k).select("query_id", "neighbor_id", "rank", "cos8", "cos")

@@ -370,59 +370,73 @@ def text_token_count(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Similarity search.
 
-_DOT = (
-    "list_reduce(list_transform(range(1, len(qv) + 1), "
-    "i -> cast(qv[i] as double) * cast(cv[i] as double)), (a, b) -> a + b)"
+def _dot_sql(a: str, b: str, typ: str = "double") -> str:
+    """DuckDB left-fold dot product of two list columns, elements cast to
+    ``typ`` — the summation order of ``operators.similarity.dot``, so
+    every norm and cosine built on it matches the engine bitwise."""
+    return (
+        f"list_reduce(list_transform(range(1, len({a}) + 1), "
+        f"i -> cast({a}[i] as {typ}) * cast({b}[i] as {typ})), (x, y) -> x + y)"
+    )
+
+
+def _norm_sql(a: str) -> str:
+    return f"sqrt({_dot_sql(a, a)})"
+
+
+def _cos_sql(a: str, b: str) -> str:
+    return f"({_dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)}))"
+
+
+def _topk_sql(
+    src: str,
+    k: int,
+    score: str = "cos",
+    out: str = "query_id, neighbor_id, rank, cos",
+    asc: bool = False,
+    key: str = "query_id",
+    tie: str = "neighbor_id",
+) -> str:
+    """DuckDB twin of ``operators.similarity._rank``: the ``out`` columns
+    of the top ``k`` rows of ``src`` per ``key`` by ``score`` (descending
+    unless ``asc``; ties to the lowest ``tie``) with their int ``rank``."""
+    order = "asc" if asc else "desc"
+    return f"""
+select {out} from (
+  select *, cast(row_number() over (partition by {key}
+                                    order by {score} {order}, {tie} asc) as int) as rank
+  from {src}
+) where rank <= {k}
+"""
+
+
+# exact cosine top-5 of queries vec_id < 10: the brute-force result that
+# the blocked-GEMM path reproduces bitwise
+_BRUTE_TOPK = f"""
+with q as (select vec_id as query_id, embedding as qv from embeddings where vec_id < 10),
+c as (select vec_id as neighbor_id, embedding as cv from embeddings),
+scored as (
+  select query_id, neighbor_id, {_cos_sql('qv', 'cv')} as cos
+  from c cross join q
+  where query_id <> neighbor_id
 )
-_NQ = "sqrt(list_reduce(list_transform(range(1, len(qv) + 1), i -> cast(qv[i] as double) * cast(qv[i] as double)), (a, b) -> a + b))"
-_NC = "sqrt(list_reduce(list_transform(range(1, len(cv) + 1), i -> cast(cv[i] as double) * cast(cv[i] as double)), (a, b) -> a + b))"
+{_topk_sql('scored', 5)}"""
 
 
 @register(
     "sim_topk_bruteforce",
-    oracle=f"""
-with q as (select vec_id as query_id, embedding as qv from embeddings where vec_id < 10),
-c as (select vec_id as neighbor_id, embedding as cv from embeddings),
-scored as (
-  select query_id, neighbor_id, ({_DOT} / ({_NQ} * {_NC})) as cos
-  from c cross join q
-  where query_id <> neighbor_id
-),
-ranked as (
-  select query_id, neighbor_id, cos,
-         row_number() over (partition by query_id order by cos desc, neighbor_id asc) as rank
-  from scored
-)
-select query_id, neighbor_id, cast(rank as int) as rank, cos
-from ranked where rank <= 5
-""",
+    oracle=_BRUTE_TOPK,
     survey_ref="sim-topk",
     doc="brute-force cosine top-5 per query vector (left-fold dot => cross-engine bitwise).",
 )
 def sim_topk_bruteforce(spark, sf_dir):
     emb = T(spark, sf_dir, "embeddings")
-    out = cosine_topk(emb, emb.filter(F.col("vec_id") < 10), k=5)
-    return out.withColumn("rank", F.col("rank").cast("int"))
+    return cosine_topk(emb, emb.filter(F.col("vec_id") < 10), k=5)
 
 
 @register(
     "ann_gemm_topk",
-    oracle=f"""
-with q as (select vec_id as query_id, embedding as qv from embeddings where vec_id < 10),
-c as (select vec_id as neighbor_id, embedding as cv from embeddings),
-scored as (
-  select query_id, neighbor_id, ({_DOT} / ({_NQ} * {_NC})) as cos
-  from c cross join q
-  where query_id <> neighbor_id
-),
-ranked as (
-  select query_id, neighbor_id, cos,
-         row_number() over (partition by query_id order by cos desc, neighbor_id asc) as rank
-  from scored
-)
-select query_id, neighbor_id, cast(rank as int) as rank, cos
-from ranked where rank <= 5
-""",
+    oracle=_BRUTE_TOPK,
     survey_ref="sim-topk",
     doc=(
         "exact top-5 via blocked-GEMM candidate pruning + left-fold re-score "
@@ -431,22 +445,27 @@ from ranked where rank <= 5
 )
 def ann_gemm_topk(spark, sf_dir):
     emb = T(spark, sf_dir, "embeddings")
-    out = knn_join_blocked(emb, emb.filter(F.col("vec_id") < 10), k=5)
-    return out.withColumn("rank", F.col("rank").cast("int"))
+    return knn_join_blocked(emb, emb.filter(F.col("vec_id") < 10), k=5)
 
 
-_BUCKET8 = """
-select vec_id,
-       list_reduce(
-         list_transform(range(0, 8), p ->
-           case when list_reduce(
-                  list_transform(range(0, len(embedding)), d ->
-                    cast((((p * 1009 + d + 1) * 2654435761) % 2147483648) - 1073741824 as double)
-                    * cast(embedding[d + 1] as double)),
-                  (a, b) -> a + b) > 0
-                then cast(1 as bigint) << p else cast(0 as bigint) end),
-         (a, b) -> a + b) as bucket
-from embeddings
+def _lsh_sig_sql(r: int, bands: int) -> str:
+    """DuckDB replica of the Spark LSH signature, ``(vec_id, band,
+    bucket)`` per band: band ``bd`` uses planes [bd*r, bd*r + r) of the
+    integer-arithmetic family of ``similarity.hyperplane_weight`` (band
+    0 is ``lsh_signature(v, r)``) — bitwise cross-engine."""
+    return f"""
+  select e.vec_id, bands.bd as band,
+         list_reduce(
+           list_transform(range(0, {r}), p ->
+             case when list_reduce(
+                    list_transform(range(0, len(e.embedding)), d ->
+                      cast(((((bands.bd * {r} + p) * 1009 + d + 1) * 2654435761)
+                            % 2147483648) - 1073741824 as double)
+                      * cast(e.embedding[d + 1] as double)),
+                    (a, b) -> a + b) > 0
+                  then cast(1 as bigint) << p else cast(0 as bigint) end),
+           (a, b) -> a + b) as bucket
+  from embeddings e cross join (select unnest(range(0, {bands})) as bd) bands
 """
 
 
@@ -468,11 +487,8 @@ _PQ_DIST = """
 
 _PQ_ENC = f"""
 with dists as ({_PQ_DIST}),
-ranked as (
-  select vec_id, sub, code,
-         row_number() over (partition by vec_id, sub order by dist asc, code asc) as rn
-  from dists
-)
+enc as ({_topk_sql("dists", 1, "dist", "vec_id, sub, code", asc=True, key="vec_id, sub",
+                  tie="code")})
 """
 
 
@@ -481,7 +497,7 @@ ranked as (
     oracle=_PQ_ENC
     + """
 select vec_id, cast(sub as int) as sub, cast(code as int) as code
-from ranked where rn = 1
+from enc
 """,
     survey_ref="sim-ann-pq",
     doc="product-quantization encode (Jegou et al. TPAMI'11): argmin "
@@ -501,8 +517,7 @@ def pq_encode_codes(spark, sf_dir):
 @register(
     "ann_pq_topk",
     oracle=_PQ_ENC
-    + """,
-enc as (select vec_id, sub, code from ranked where rn = 1),
+    + f""",
 qd as (select vec_id, sub, code, dist from dists where vec_id < 5),
 pair as (
   select qd.vec_id as query_id, e.vec_id as neighbor_id,
@@ -511,15 +526,8 @@ pair as (
   join qd on qd.sub = e.sub and qd.code = e.code
   where qd.vec_id <> e.vec_id
   group by qd.vec_id, e.vec_id
-),
-rk as (
-  select query_id, neighbor_id, adist,
-         row_number() over (partition by query_id order by adist asc, neighbor_id asc) as rank
-  from pair
 )
-select query_id, neighbor_id, cast(rank as int) as rank, adist
-from rk where rank <= 5
-""",
+{_topk_sql("pair", 5, "adist", "query_id, neighbor_id, rank, adist", asc=True)}""",
     survey_ref="sim-ann-pq",
     doc="ADC top-k over the PQ-encoded corpus: broadcast per-query "
     "(8x16) lookup tables, m array lookups + one left fold per corpus "
@@ -535,7 +543,7 @@ def ann_pq_topk(spark, sf_dir):
 
 @register(
     "ann_lsh_buckets",
-    oracle=_BUCKET8,
+    oracle=f"select vec_id, bucket from ({_lsh_sig_sql(8, 1)})",
     survey_ref="sim-ann-lsh",
     doc="hyperplane-LSH bucket assignment (deterministic integer-arithmetic planes).",
 )
@@ -549,24 +557,17 @@ def ann_lsh_buckets(spark, sf_dir):
 @register(
     "ann_lsh_topk",
     oracle=f"""
-with sigs as ({_BUCKET8}),
+with sigs as ({_lsh_sig_sql(8, 1)}),
 q as (select s.vec_id as query_id, e.embedding as qv, s.bucket
       from sigs s join embeddings e using (vec_id) where s.vec_id < 10),
 c as (select s.vec_id as neighbor_id, e.embedding as cv, s.bucket
       from sigs s join embeddings e using (vec_id)),
 scored as (
-  select query_id, neighbor_id, ({_DOT} / ({_NQ} * {_NC})) as cos
+  select query_id, neighbor_id, {_cos_sql('qv', 'cv')} as cos
   from c join q using (bucket)
   where query_id <> neighbor_id
-),
-ranked as (
-  select query_id, neighbor_id, cos,
-         row_number() over (partition by query_id order by cos desc, neighbor_id asc) as rank
-  from scored
 )
-select query_id, neighbor_id, cast(rank as int) as rank, cos
-from ranked where rank <= 5
-""",
+{_topk_sql('scored', 5)}""",
     survey_ref="sim-ann-lsh",
     doc="ANN top-k restricted to the query's LSH bucket (scale path); "
     "oracle replays the identical integer-plane bucketing + in-bucket "
@@ -574,36 +575,25 @@ from ranked where rank <= 5
 )
 def ann_lsh_topk(spark, sf_dir):
     emb = T(spark, sf_dir, "embeddings")
-    out = lsh_ann_topk(emb, emb.filter(F.col("vec_id") < 10), k=5, n_planes=8)
-    return out.withColumn("rank", F.col("rank").cast("int"))
+    return lsh_ann_topk(emb, emb.filter(F.col("vec_id") < 10), k=5, n_planes=8)
 
 
 @register(
     "ann_recall_eval",
     oracle=f"""
-with sigs as ({_BUCKET8}),
+with sigs as ({_lsh_sig_sql(8, 1)}),
 q0 as (select vec_id as query_id, embedding as qv from embeddings where vec_id < 10),
 c0 as (select vec_id as neighbor_id, embedding as cv from embeddings),
-ex as (
-  select query_id, neighbor_id from (
-    select query_id, neighbor_id,
-           row_number() over (partition by query_id
-             order by ({_DOT} / ({_NQ} * {_NC})) desc, neighbor_id asc) as rank
-    from c0 cross join q0 where query_id <> neighbor_id) t
-  where rank <= 5
-),
+exs as (select query_id, neighbor_id, {_cos_sql('qv', 'cv')} as cos
+        from c0 cross join q0 where query_id <> neighbor_id),
+ex as ({_topk_sql("exs", 5, out="query_id, neighbor_id")}),
 ql as (select s.vec_id as query_id, e.embedding as qv, s.bucket
        from sigs s join embeddings e using (vec_id) where s.vec_id < 10),
 cl as (select s.vec_id as neighbor_id, e.embedding as cv, s.bucket
        from sigs s join embeddings e using (vec_id)),
-ap as (
-  select query_id, neighbor_id from (
-    select query_id, neighbor_id,
-           row_number() over (partition by query_id
-             order by ({_DOT} / ({_NQ} * {_NC})) desc, neighbor_id asc) as rank
-    from cl join ql using (bucket) where query_id <> neighbor_id) t
-  where rank <= 5
-)
+aps as (select query_id, neighbor_id, {_cos_sql('qv', 'cv')} as cos
+        from cl join ql using (bucket) where query_id <> neighbor_id),
+ap as ({_topk_sql("aps", 5, out="query_id, neighbor_id")})
 select ex.query_id,
        cast(count(ap.neighbor_id) as bigint) as hits,
        (cast(count(ap.neighbor_id) as bigint) / 5.0) as recall_at_5
@@ -646,23 +636,10 @@ def ann_recall_eval(spark, sf_dir):
     )
 
 
-def _cosf(a: str, b: str) -> str:
-    """DuckDB cosine with the same left-fold arithmetic as
-    ``operators.similarity.cosine`` — bitwise-comparable."""
-    def dot(x, y):
-        return (
-            f"list_reduce(list_transform(range(1, len({x}) + 1), "
-            f"i -> cast({x}[i] as double) * cast({y}[i] as double)), (x, y) -> x + y)"
-        )
-
-    return f"({dot(a, b)} / (sqrt({dot(a, a)}) * sqrt({dot(b, b)})))"
-
-
 @register(
     "ann_lsh_pq_topk",
     oracle=f"""{_PQ_ENC},
-enc as (select vec_id, sub, code from ranked where rn = 1),
-sigs as ({_BUCKET8}),
+sigs as ({_lsh_sig_sql(8, 1)}),
 q as (select vec_id as query_id, bucket from sigs where vec_id < 5),
 c as (select vec_id as neighbor_id, bucket from sigs),
 cand as (
@@ -679,26 +656,14 @@ adc as (
   join qd on qd.vec_id = cand.query_id and qd.sub = e.sub and qd.code = e.code
   group by cand.query_id, cand.neighbor_id
 ),
-short as (
-  select query_id, neighbor_id,
-         row_number() over (partition by query_id order by adist asc, neighbor_id asc) as rr
-  from adc
-),
+short as ({_topk_sql("adc", 20, "adist", "query_id, neighbor_id", asc=True)}),
 rescored as (
-  select s.query_id, s.neighbor_id, {_cosf('qe.embedding', 'ne.embedding')} as cos
+  select s.query_id, s.neighbor_id, {_cos_sql('qe.embedding', 'ne.embedding')} as cos
   from short s
   join embeddings qe on qe.vec_id = s.query_id
   join embeddings ne on ne.vec_id = s.neighbor_id
-  where s.rr <= 20
-),
-fin as (
-  select query_id, neighbor_id, cos,
-         row_number() over (partition by query_id order by cos desc, neighbor_id asc) as rank
-  from rescored
 )
-select query_id, neighbor_id, cast(rank as int) as rank, cos
-from fin where rank <= 5
-""",
+{_topk_sql('rescored', 5)}""",
     survey_ref="sim-ann-pq,sim-ann-lsh",
     doc="two-stage production retrieval: LSH bucket recall -> PQ/ADC cheap "
     "scoring -> exact cosine rerank of the 20-row short list.  Every stage "
@@ -711,41 +676,21 @@ def ann_lsh_pq_topk(spark, sf_dir):
     return lsh_pq_topk(emb, emb.filter(F.col("vec_id") < 5), k=5, n_planes=8, rerank=20)
 
 
-def _banded_sig_sql(r: int = 4, b: int = 8) -> str:
-    """DuckDB replica of the Spark banded LSH signature: band ``bd`` uses
-    planes [bd*r, bd*r + r) of the same integer-arithmetic family as
-    ``similarity.hyperplane_weight`` — bitwise cross-engine."""
-    return f"""
-  select e.vec_id, e.embedding, bands.bd as band,
-         list_reduce(
-           list_transform(range(0, {r}), p ->
-             case when list_reduce(
-                    list_transform(range(0, len(e.embedding)), d ->
-                      cast(((((bands.bd * {r} + p) * 1009 + d + 1) * 2654435761)
-                            % 2147483648) - 1073741824 as double)
-                      * cast(e.embedding[d + 1] as double)),
-                    (a, b) -> a + b) > 0
-                  then cast(1 as bigint) << p else cast(0 as bigint) end),
-           (a, b) -> a + b) as bucket
-  from embeddings e cross join (select unnest(range(0, {b})) as bd) bands
-"""
-
-
 @register(
     "dd_embedding_cosine",
     oracle=f"""
-with sigs as ({_banded_sig_sql()}),
+with sigs as ({_lsh_sig_sql(4, 8)}),
 cands as (
   select distinct s1.vec_id as id_a, s2.vec_id as id_b
   from sigs s1
   join sigs s2 on s1.band = s2.band and s1.bucket = s2.bucket
               and s1.vec_id < s2.vec_id
 )
-select c.id_a, c.id_b, {_cosf('ea.embedding', 'eb.embedding')} as cos
+select c.id_a, c.id_b, {_cos_sql('ea.embedding', 'eb.embedding')} as cos
 from cands c
 join embeddings ea on ea.vec_id = c.id_a
 join embeddings eb on eb.vec_id = c.id_b
-where {_cosf('ea.embedding', 'eb.embedding')} >= 0.4
+where {_cos_sql('ea.embedding', 'eb.embedding')} >= 0.4
 """,
     survey_ref="dedup-embedding-cosine",
     doc="embedding-cosine near-dup pairs via the SCALE path: banded-LSH "
@@ -766,7 +711,7 @@ def dd_embedding_cosine(spark, sf_dir):
 @register(
     "dd_semantic_dedup",
     oracle=f"""
-with recursive sigs as ({_banded_sig_sql()}),
+with recursive sigs as ({_lsh_sig_sql(4, 8)}),
 pairs as (
   select c.id_a, c.id_b
   from (
@@ -777,7 +722,7 @@ pairs as (
   ) c
   join embeddings ea on ea.vec_id = c.id_a
   join embeddings eb on eb.vec_id = c.id_b
-  where {_cosf('ea.embedding', 'eb.embedding')} >= 0.4
+  where {_cos_sql('ea.embedding', 'eb.embedding')} >= 0.4
 ),
 edges as (select id_a as src, id_b as dst from pairs
           union all
@@ -815,36 +760,19 @@ def _ivf_oracle(n_cells: int = 8, n_probe: int = 2, k: int = 5) -> str:
     return f"""
 with cents as (select vec_id as _cid, embedding as _cv from embeddings where vec_id < {n_cells}),
 corpus as (select vec_id as neighbor_id, embedding as cvv from embeddings),
-c_assign as (
-  select neighbor_id, cvv, _cid from (
-    select neighbor_id, cvv, _cid,
-           row_number() over (partition by neighbor_id order by ccos desc, _cid asc) as crk
-    from (select neighbor_id, cvv, _cid, {_cosf('cvv', '_cv')} as ccos
-          from corpus cross join cents)
-  ) where crk <= 1
-),
+c_cos as (select neighbor_id, cvv, _cid, {_cos_sql('cvv', '_cv')} as ccos
+          from corpus cross join cents),
+c_assign as ({_topk_sql("c_cos", 1, "ccos", "neighbor_id, cvv, _cid",
+                       key="neighbor_id", tie="_cid")}),
 qs as (select vec_id as query_id, embedding as qv from embeddings where vec_id < 10),
-q_assign as (
-  select query_id, qv, _cid from (
-    select query_id, qv, _cid,
-           row_number() over (partition by query_id order by ccos desc, _cid asc) as crk
-    from (select query_id, qv, _cid, {_cosf('qv', '_cv')} as ccos
-          from qs cross join cents)
-  ) where crk <= {n_probe}
-),
+q_cos as (select query_id, qv, _cid, {_cos_sql('qv', '_cv')} as ccos from qs cross join cents),
+q_assign as ({_topk_sql("q_cos", n_probe, "ccos", "query_id, qv, _cid", tie="_cid")}),
 scored as (
-  select query_id, neighbor_id, {_cosf('qv', 'cvv')} as cos
+  select query_id, neighbor_id, {_cos_sql('qv', 'cvv')} as cos
   from q_assign join c_assign using (_cid)
   where query_id <> neighbor_id
-),
-ranked as (
-  select query_id, neighbor_id, cos,
-         row_number() over (partition by query_id order by cos desc, neighbor_id asc) as rank
-  from scored
 )
-select query_id, neighbor_id, cast(rank as int) as rank, cos
-from ranked where rank <= {k}
-"""
+{_topk_sql('scored', k)}"""
 
 
 @register(
@@ -1404,17 +1332,10 @@ def text_top_ngrams(spark, sf_dir):
     return top_ngrams(docs).select(F.col("n").cast("int").alias("n"), "ngram", "cnt", "rank")
 
 
-_NRM = (
-    "sqrt(list_reduce(list_transform(range(1, len(embedding) + 1), "
-    "i -> cast(embedding[i] as double) * cast(embedding[i] as double)), "
-    "(a, b) -> a + b))"
-)
-
-
 @register(
     "emb_l2_normalize",
     oracle=f"""
-with e as (select vec_id, embedding, {_NRM} as nrm from embeddings),
+with e as (select vec_id, embedding, {_norm_sql('embedding')} as nrm from embeddings),
 u as (select vec_id, nrm, embedding,
              unnest(range(1, len(embedding) + 1)) as i from e)
 select vec_id, cast(i - 1 as int) as pos,
@@ -2810,7 +2731,7 @@ def an_drift_psi(spark, sf_dir):
     "dd_pq_dedup",
     oracle=_PQ_ENC
     + """,
-codes as (select vec_id, list(code order by sub) as cl from ranked where rn = 1 group by vec_id),
+codes as (select vec_id, list(code order by sub) as cl from enc group by vec_id),
 g as (select cl, min(vec_id) as rep_id, count(*) as n from codes group by cl)
 select c.vec_id, g.rep_id, cast(g.n as bigint) as cluster_size
 from codes c join g on c.cl = g.cl
@@ -4831,11 +4752,6 @@ def text_sentence_split(spark, sf_dir):
 
 _MRL_DIMS = 16
 
-_MRL_NRM = (
-    "sqrt(list_reduce(list_transform(range(1, len({v}) + 1), "
-    "i -> cast({v}[i] as double) * cast({v}[i] as double)), "
-    "(a, b) -> a + b))"
-)
 
 
 @register(
@@ -4844,8 +4760,8 @@ _MRL_NRM = (
 with t as (select vec_id, embedding, embedding[1:{_MRL_DIMS}] as e
            from embeddings),
 n as (select vec_id, e,
-             {_MRL_NRM.format(v="e")} as nrm,
-             {_MRL_NRM.format(v="embedding")} as nrm_full
+             {_norm_sql('e')} as nrm,
+             {_norm_sql('embedding')} as nrm_full
       from t),
 u as (select vec_id, e, nrm, nrm / nrm_full as fidelity,
              unnest(range(1, len(e) + 1)) as i
@@ -5017,16 +4933,6 @@ def agg_incremental_ols(spark, sf_dir):
     )
 
 
-_D16 = {
-    "dot": "list_reduce(list_transform(range(1, len(q16) + 1), "
-    "i -> cast(q16[i] as double) * cast(c16[i] as double)), (a, b) -> a + b)",
-    "nq": "sqrt(list_reduce(list_transform(range(1, len(q16) + 1), "
-    "i -> cast(q16[i] as double) * cast(q16[i] as double)), (a, b) -> a + b))",
-    "nc": "sqrt(list_reduce(list_transform(range(1, len(c16) + 1), "
-    "i -> cast(c16[i] as double) * cast(c16[i] as double)), (a, b) -> a + b))",
-}
-
-
 @register(
     "ann_mrl_rerank",
     oracle=f"""
@@ -5037,30 +4943,13 @@ c as (select vec_id as neighbor_id, embedding as cv,
              embedding[1:{_MRL_DIMS}] as c16
       from embeddings),
 s1 as (
-  select query_id, neighbor_id, qv, cv,
-         ({_D16["dot"]} / ({_D16["nq"]} * {_D16["nc"]})) as cos16
+  select query_id, neighbor_id, qv, cv, {_cos_sql('q16', 'c16')} as cos16
   from c cross join q
   where query_id <> neighbor_id
 ),
-r1 as (
-  select query_id, neighbor_id, qv, cv,
-         row_number() over (partition by query_id
-                            order by cos16 desc, neighbor_id asc) as r1
-  from s1
-),
-s2 as (
-  select query_id, neighbor_id, ({_DOT} / ({_NQ} * {_NC})) as cos
-  from r1 where r1 <= 32
-),
-r2 as (
-  select query_id, neighbor_id, cos,
-         row_number() over (partition by query_id
-                            order by cos desc, neighbor_id asc) as rank
-  from s2
-)
-select query_id, neighbor_id, cast(rank as int) as rank, cos
-from r2 where rank <= 5
-""",
+r1 as ({_topk_sql("s1", 32, "cos16", "query_id, neighbor_id, qv, cv")}),
+s2 as (select query_id, neighbor_id, {_cos_sql('qv', 'cv')} as cos from r1)
+{_topk_sql('s2', 5)}""",
     survey_ref="ann-mrl-rerank",
     doc="two-stage Matryoshka retrieval: 16-dim-prefix cosine scans the "
     "corpus (1/2 the arithmetic here; 1/16 at production 64-of-1024 "
@@ -5071,10 +4960,9 @@ def ann_mrl_rerank(spark, sf_dir):
     from ..operators.similarity import mrl_rerank_topk
 
     emb = T(spark, sf_dir, "embeddings")
-    out = mrl_rerank_topk(
+    return mrl_rerank_topk(
         emb, emb.filter(F.col("vec_id") < 10), dims=_MRL_DIMS, k_coarse=32, k=5
     )
-    return out.withColumn("rank", F.col("rank").cast("int"))
 
 
 @register(
@@ -5338,40 +5226,21 @@ qz as (
   from base
 ),
 q as (select vec_id as query_id, embedding as qv, qa,
-             list_reduce(list_transform(range(1, len(qa) + 1),
-                 i -> qa[i] * qa[i]), (a, b) -> a + b) as qn2
+             {_dot_sql('qa', 'qa', 'bigint')} as qn2
       from qz where vec_id < 10),
 c as (select vec_id as neighbor_id, embedding as cv, qa as ca,
-             list_reduce(list_transform(range(1, len(qa) + 1),
-                 i -> qa[i] * qa[i]), (a, b) -> a + b) as cn2
+             {_dot_sql('qa', 'qa', 'bigint')} as cn2
       from qz),
 s1 as (
   select query_id, neighbor_id, qv, cv,
-         cast(list_reduce(list_transform(range(1, len(qa) + 1),
-                  i -> qa[i] * ca[i]), (a, b) -> a + b) as double)
+         cast({_dot_sql('qa', 'ca', 'bigint')} as double)
            / (sqrt(cast(qn2 as double)) * sqrt(cast(cn2 as double))) as cos8
   from c cross join q
   where query_id <> neighbor_id
 ),
-r1 as (
-  select query_id, neighbor_id, qv, cv, cos8,
-         row_number() over (partition by query_id
-                            order by cos8 desc, neighbor_id asc) as _r1
-  from s1
-),
-s2 as (
-  select query_id, neighbor_id, cos8, ({_DOT} / ({_NQ} * {_NC})) as cos
-  from r1 where _r1 <= 32
-),
-r2 as (
-  select query_id, neighbor_id, cos8, cos,
-         row_number() over (partition by query_id
-                            order by cos desc, neighbor_id asc) as rank
-  from s2
-)
-select query_id, neighbor_id, cast(rank as int) as rank, cos8, cos
-from r2 where rank <= 5
-""",
+r1 as ({_topk_sql("s1", 32, "cos8", "query_id, neighbor_id, qv, cv, cos8")}),
+s2 as (select query_id, neighbor_id, cos8, {_cos_sql('qv', 'cv')} as cos from r1)
+{_topk_sql('s2', 5, out="query_id, neighbor_id, rank, cos8, cos")}""",
     survey_ref="ann-int8-rerank",
     doc="two-stage int8 retrieval funnel: the corpus scan ranks on "
     "symmetric-int8 quantized vectors (4x smaller candidate store; "
@@ -5385,10 +5254,7 @@ def ann_int8_rerank(spark, sf_dir):
     from ..operators.similarity import int8_rerank_topk
 
     emb = T(spark, sf_dir, "embeddings")
-    out = int8_rerank_topk(
-        emb, emb.filter(F.col("vec_id") < 10), k_coarse=32, k=5
-    )
-    return out.withColumn("rank", F.col("rank").cast("int"))
+    return int8_rerank_topk(emb, emb.filter(F.col("vec_id") < 10), k_coarse=32, k=5)
 
 
 # Shared closed-form dHash derivation for the mm_phash_* oracles: md5-coin

@@ -99,7 +99,7 @@ _SD_T = 0.4
 
 
 def _semdedup_oracle() -> str:
-    from .datapipe import _cosf
+    from .datapipe import _cos_sql
 
     return _kmeans_ctes() + f""",
 j as (
@@ -109,7 +109,7 @@ j as (
 drp as (
   select distinct b.vec_id
   from j a join j b on a.cid = b.cid and a.vec_id < b.vec_id
-  where {_cosf('a.embedding', 'b.embedding')} >= cast({_SD_T!r} as double)
+  where {_cos_sql('a.embedding', 'b.embedding')} >= cast({_SD_T!r} as double)
 )
 select j.vec_id, j.cid from j
 left join drp on j.vec_id = drp.vec_id

@@ -260,6 +260,59 @@ def st_attribution_full(spark, sf_dir):
     )
 
 
+def _two_batch_dedup_ingest(spark, sf_dir, hash_family: str):
+    """Replay the documents through ``streaming_dedup_ingest`` as two
+    micro-batches, even doc_ids then odd, and return the final clean
+    corpus ``(doc_id)``.  The signature is narrow (16 perms / 4 bands,
+    Jaccard 0.5): the gate certifies the pipeline shape, not recall —
+    pytest covers the wide settings.
+
+    The file source orders batches by (mtime, path), so the two source
+    files' mtimes are pinned.  Everything the replay writes (source
+    files, corpus, index, checkpoint) lives under one temp root, which
+    is removed once the corpus ids are pinned by an eager
+    ``localCheckpoint``."""
+    import os
+    import shutil
+    import tempfile
+
+    from ..sources.manifest import read_versioned
+    from ..streaming.dedup import streaming_dedup_ingest
+
+    root = tempfile.mkdtemp(prefix="spark_graft_stdedup_")
+    try:
+        src = f"{root}/src"
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        for i in range(2):
+            docs.filter(F.col("doc_id") % 2 == i).coalesce(1).write.mode(
+                "append"
+            ).parquet(src)
+            stamp = 1_000_000_000 + (i + 1) * 100
+            for f in os.listdir(src):
+                full = os.path.join(src, f)
+                if f.endswith(".parquet") and os.stat(full).st_mtime >= stamp:
+                    os.utime(full, (stamp, stamp))
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        streaming_dedup_ingest(
+            stream,
+            f"{root}/corpus",
+            f"{root}/index",
+            f"{root}/ckpt",
+            jaccard_threshold=0.5,
+            num_perm=16,
+            bands=4,
+            hash_family=hash_family,
+        )
+        corpus = read_versioned(spark, f"{root}/corpus").select("doc_id")
+        return corpus.localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 @register(
     "st_dedup_ingest",
     oracle=None,  # foreachBatch pipeline with versioned-table side effects;
@@ -274,39 +327,7 @@ def st_attribution_full(spark, sf_dir):
     "corpus.",
 )
 def st_dedup_ingest(spark, sf_dir):
-    import tempfile
-    import uuid as _uuid
-
-    import pyspark.sql.functions as F2
-
-    from ..sources.manifest import read_versioned
-    from ..sources.readers import load_table
-    from ..streaming.dedup import streaming_dedup_ingest
-
-    root = tempfile.mkdtemp(prefix=f"spark_graft_stdedup_{_uuid.uuid4().hex[:6]}_")
-    src = f"{root}/src"
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    for i in range(2):  # two micro-batches
-        docs.filter(F2.col("doc_id") % 2 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    streaming_dedup_ingest(
-        stream,
-        f"{root}/corpus",
-        f"{root}/index",
-        f"{root}/ckpt",
-        jaccard_threshold=0.5,
-        # narrow signature (16 perms / 4 bands): the gate certifies the
-        # pipeline shape, not recall — pytest covers the wide settings
-        num_perm=16,
-        bands=4,
-    )
-    return read_versioned(spark, f"{root}/corpus").select("doc_id")
+    return _two_batch_dedup_ingest(spark, sf_dir, "xxhash64")
 
 
 def _stream_dedup_md5_oracle(
@@ -416,44 +437,7 @@ select _id as doc_id from acc1
     "odds) is deterministic.",
 )
 def st_dedup_ingest_md5(spark, sf_dir):
-    import os
-    import tempfile
-    import uuid as _uuid
-
-    from ..sources.manifest import read_versioned
-    from ..streaming.dedup import streaming_dedup_ingest
-
-    root = tempfile.mkdtemp(prefix=f"spark_graft_stdedupmd5_{_uuid.uuid4().hex[:6]}_")
-    src = f"{root}/src"
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    for i in range(2):
-        docs.filter(F.col("doc_id") % 2 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        # the file source orders batches by (mtime, path); pin mtimes so
-        # batch 0 = evens, batch 1 = odds deterministically
-        for f in os.listdir(src):
-            if f.endswith(".parquet"):
-                full = os.path.join(src, f)
-                if os.stat(full).st_mtime < 1_000_000_000 + (i + 1) * 100:
-                    continue
-                os.utime(full, (1_000_000_000 + (i + 1) * 100,) * 2)
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    streaming_dedup_ingest(
-        stream,
-        f"{root}/corpus",
-        f"{root}/index",
-        f"{root}/ckpt",
-        jaccard_threshold=0.5,
-        num_perm=16,
-        bands=4,
-        hash_family="md5",
-    )
-    return read_versioned(spark, f"{root}/corpus").select("doc_id")
+    return _two_batch_dedup_ingest(spark, sf_dir, "md5")
 
 
 @register(
