@@ -7,8 +7,9 @@ parameters that no caller set, for frames of Python rows built outside
 names and of A7's rank-interpolation text, which only ``sqlgen`` spells,
 for a second in-bucket pair expansion beside
 ``dedup._bucket_pair_structs``, for a per-query top-k outside
-``similarity._rank`` and for a DuckDB dot-product fold outside
-``datapipe._dot_sql``.  It needs no SparkSession."""
+``similarity._rank``, for a DuckDB dot-product fold outside
+``datapipe._dot_sql`` and for an LM-family log, count pin or per-doc
+fold outside its ``text``/``stats`` helper.  It needs no SparkSession."""
 
 from __future__ import annotations
 
@@ -78,6 +79,12 @@ REMOVED = [
     (text.token_entropy, "exact_log"),
     (text.stupid_backoff_logprob, "exact_log"),
     (text.bigram_pmi, "exact_log"),
+    (text.unigram_logprob, "min_count"),
+    (text.unigram_logprob, "oov_weight"),
+    (text.bigram_logprob, "min_count"),
+    (text.bigram_logprob, "oov_weight"),
+    (text.top_ngrams, "n_values"),
+    (text.top_ngrams, "k"),
     (text.tfidf, "exact_idf"),
     (text.tfidf, "max_distinct_dfs"),
     (dedup.simhash_idf_chunks, "max_distinct_dfs"),
@@ -263,3 +270,40 @@ def test_one_duckdb_dot_fold():
             finder.visit(ast.parse(inspect.getsource(module)))
             found += [(module.__name__, function) for function, _ in finder.calls]
     assert found == [(datapipe.__name__, "_dot_sql")], found
+
+
+_LM_FAMILY = {
+    "unigram_logprob", "bigram_logprob", "token_entropy", "stupid_backoff_logprob",
+    "bigram_pmi", "top_ngrams", "_ngrams", "_count", "_ordered_sum",
+}
+
+
+def _is_call(name, owner=None):
+    """A call of ``name`` (``owner.name`` when ``owner`` is given)."""
+    def match(node):
+        func = node.func
+        return getattr(func, "attr", getattr(func, "id", None)) == name and (
+            owner is None or getattr(getattr(func, "value", None), "id", None) == owner
+        )
+
+    return match
+
+
+@pytest.mark.parametrize(
+    "module,finder,helpers",
+    [
+        (text, _Calls(_is_call("log", "F")), []),
+        (stats, _Calls(_is_call("log", "F")), ["with_ln"]),
+        (text, _Calls(_is_call("localCheckpoint")), ["_count"]),
+        (text, _Calls(_is_call("aggregate", "F")), ["_ordered_sum"]),
+        (text, _Strings(lambda sql: "aggregate(" in sql), []),
+    ],
+    ids=["text-F.log", "stats-F.log", "localCheckpoint", "fold", "fold-sql"],
+)
+def test_lm_step_only_in_its_helper(module, finder, helpers):
+    """The LM scorers share one exact-or-in-plan log (``stats.with_ln``),
+    one pinned count table (``text._count``) and one ordered per-doc fold
+    (``text._ordered_sum``): no other function of the family spells them."""
+    finder.visit(ast.parse(inspect.getsource(module)))
+    found = [f for f, _ in finder.calls if module is stats or f in _LM_FAMILY]
+    assert found == helpers, finder.calls

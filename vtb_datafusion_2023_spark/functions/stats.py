@@ -7,12 +7,14 @@ distinct arguments are collected to the driver (:func:`exact_ints`),
 ``f(int)`` is evaluated there with Python's libm, and the table is
 broadcast-joined back (:func:`join_exact`).  Past
 :data:`EXACT_LN_GUARD` distinct arguments the collect returns None and
-the caller falls back to in-plan ``F.log`` (1-ulp engine variance) or
-raises where a 1-ulp difference would change an integer result.
+the caller falls back to in-plan ``F.log`` (1-ulp engine variance,
+:func:`with_ln` picks the side) or raises where a 1-ulp difference would
+change an integer result.
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Callable, Iterable
 from functools import reduce
 
@@ -74,3 +76,16 @@ def join_exact(
         frame.sparkSession, [(v, fn(v)) for v in values], f"`{col}` bigint, `{out}` {dtype}"
     )
     return frame.join(F.broadcast(table), col, how)
+
+
+def with_ln(
+    frame: DataFrame, src: str, values: list[int] | None, dst: str, over: int = 1
+) -> DataFrame:
+    """``frame`` with ``dst = ln(src / over)``: from the exact-libm table
+    over ``values`` (a left join, so a NULL ``src`` keeps its row with a
+    NULL ``dst``), or in-plan ``F.log`` when ``values`` is None (past
+    :data:`EXACT_LN_GUARD`)."""
+    if values is not None:
+        return join_exact(frame, src, values, lambda v: math.log(v / over), dst, how="left")
+    arg = F.col(src).cast("double")
+    return frame.withColumn(dst, F.log(arg if over == 1 else arg / F.lit(float(over))))

@@ -232,8 +232,10 @@ def _lsh_pairs(
     # cand_ids branches + the pair join); pinning them stops each from
     # replaying the whole shingle->signature->bucket lineage.  Candidates
     # are (long, long) rows ~linear in true duplicates — tiny relative to
-    # the corpus.
-    cand = _bucket_candidate_pairs(banded, max_bucket_size).localCheckpoint(eager=False)
+    # the corpus.  Eager, as in incremental_minhash_pairs: a lazy pin here
+    # made every later call in the JVM log ~25 "non-existent accumulator"
+    # DAGScheduler ERRORs.
+    cand = _bucket_candidate_pairs(banded, max_bucket_size).localCheckpoint(eager=True)
     return _verify_jaccard(cand, df, id_col, text_col, shingle_n, jaccard_threshold)
 
 

@@ -8,20 +8,32 @@ UDFs.  The per-document features (quality, langid, fingerprint, token
 count, repetition, chunking, PII scrub, HTML strip) stay inside
 whole-stage codegen as a narrow map over the corpus (100 TB = one scan,
 no shuffle).  The corpus-statistics family (TF-IDF, BM25, the LM
-scorers) additionally pays one hash aggregation per count table — each
-pinned once at its fan-out (lazy ``localCheckpoint``).  Their logarithms
-take integer arguments and come from the exact-libm tables of
+scorers) additionally pays one hash aggregation per count table.  Their
+logarithms take integer arguments and come from the exact-libm tables of
 ``functions.stats`` (bitwise equal to the DuckDB oracle's ``ln``) while
 the distinct arguments stay under ``stats.EXACT_LN_GUARD``; past it the
 scorers and :func:`tfidf` switch to in-plan ``F.log``.
+
+The six LM functions (:func:`unigram_logprob`, :func:`bigram_logprob`,
+:func:`token_entropy`, :func:`stupid_backoff_logprob`,
+:func:`bigram_pmi`, :func:`top_ngrams`) are one count-and-score engine
+of four stages, each written once: :func:`_ngrams` (the ``(pos,
+w1..wn)`` n-gram stream), :func:`_count` (a count table pinned once
+with a lazy ``localCheckpoint``), ``stats.with_ln`` (the exact table or
+in-plan ``F.log``) and :func:`_ordered_sum` (the per-document fold in
+position or term order, seeded from its first element like DuckDB's
+``list_reduce``).  Each scorer says only which count tables it builds
+and its log-probability expression.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.stats import exact_ints, exact_ints_agg, guarded, join_exact
+from ..functions.stats import exact_ints, exact_ints_agg, guarded, join_exact, with_ln
 
 # A small English stopword list (public knowledge); frozen so language
 # scores are reproducible.
@@ -520,283 +532,171 @@ def strip_html(df: DataFrame, text_col: str = "text", out_col: str = "text_clean
     return df.withColumn(out_col, c)
 
 
-def unigram_logprob(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_count: int = 2,
-    oov_weight: float = 0.5,
-) -> DataFrame:
+# The corpus LM family (see the module docstring).
+LM_MIN_COUNT = 2  # unigram/bigram types seen fewer times score as OOV ...
+LM_OOV_WEIGHT = 0.5  # ... at LM_OOV_WEIGHT / total
+TOP_NGRAM_NS = (1, 2, 3)
+TOP_NGRAM_K = 20
+_W = ("w1", "w2", "w3")
+
+
+def _ngrams(toks: Column, n: int) -> Column:
+    """The ``(pos, w1..wn)`` struct of every word n-gram of the token
+    array ``toks``, ``pos`` the 1-based position of ``w1``: the n shifted
+    slices zipped, so ``toks`` is read once per document, not once per
+    gram.  Empty below ``n`` tokens: the slice length is clamped at 0,
+    where a ``sequence(1, size - n + 1)`` would count down."""
+    m = F.greatest(F.size(toks) - (n - 1), F.lit(0))
+    zipped = F.arrays_zip(*[F.slice(toks, 1 + j, m) for j in range(n)])
+    return F.transform(
+        zipped,
+        lambda g, i: F.struct(
+            (i + 1).alias("pos"), *[g[str(j)].alias(_W[j]) for j in range(n)]
+        ),
+    )
+
+
+def _count(frame: DataFrame, keys: list[str], out: str) -> DataFrame:
+    """``frame``'s rows per ``keys`` as ``out``, pinned once (lazy
+    ``localCheckpoint``, vocab-scale): a count table feeds a driver-side
+    collect and the scoring joins, which would each replay the corpus
+    explode."""
+    return frame.groupBy(*keys).agg(F.count(F.lit(1)).alias(out)).localCheckpoint(eager=False)
+
+
+def _ordered_sum(key: str, value: str) -> Column:
+    """Aggregate: the group's ``value`` summed left to right in ``key``
+    order, seeded from the first element as DuckDB's ``list_reduce`` is,
+    so the float sum is the same on every partitioning and in the
+    oracle."""
+    vals = F.transform(F.array_sort(F.collect_list(F.struct(key, value))), lambda s: s[value])
+    return F.aggregate(F.slice(vals, 2, F.size(vals)), F.element_at(vals, 1), lambda a, b: a + b)
+
+
+def _doc_mean(scored: DataFrame, id_col: str, term: Column, n_out: str, out: str) -> DataFrame:
+    """Per document of ``scored``: its gram count as ``n_out`` and the
+    position-ordered sum of ``term`` over it as ``out``."""
+    n = F.count(F.lit(1))
+    return (
+        scored.select(id_col, "pos", term.alias("_v"))
+        .groupBy(id_col)
+        .agg(n.alias(n_out), (_ordered_sum("pos", "_v") / n).alias(out))
+    )
+
+
+def unigram_logprob(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Unigram language-model surprisal per document: mean
     ``-ln p(token)`` under the corpus's own unigram distribution, with
-    tokens seen fewer than ``min_count`` times scored as OOV at
-    ``oov_weight / total``.  High surprisal = rare-word soup / junk; low =
-    repetitive boilerplate — the cheap LM-based quality filter between
-    heuristics and a real perplexity model.
+    tokens seen fewer than ``LM_MIN_COUNT`` times scored as OOV at
+    ``LM_OOV_WEIGHT / total``.  High surprisal = rare-word soup / junk;
+    low = repetitive boilerplate — the cheap LM-based quality filter
+    between heuristics and a real perplexity model.
 
-    Two corpus passes: (1) token counts (explode -> hash agg, one shuffle
-    on token); (2) posexplode -> broadcast-join the per-count ``ln``
-    lookup (an exact-libm table over the distinct count values, same
-    contract as :func:`tfidf`) -> reassemble per doc.  The per-doc float
-    sum folds oldest->newest over a position-sorted array, so it is
-    bitwise-deterministic across partitionings and engines.  Past
-    ``EXACT_LN_GUARD`` distinct count values the ``ln`` is in-plan JVM
-    ``F.log`` (no driver materialization, tolerant-equal, tested).
+    One count table (one shuffle on the token) and one build-time job
+    for the corpus total and the distinct in-vocabulary counts; the
+    token stream then left-joins the counts and ``ln(c / total)``.
 
     Returns ``(id_col, n_tokens, surprisal)``.
     """
-    import math
-
-    toks = F.split(F.col(text_col), " ")
-    pos = df.select(
-        F.col(id_col), F.posexplode(toks).alias("pos", "term")
-    )
-    # counts feeds the vocab collect, the corpus-total aggregation, and
-    # the scoring join — pin once (vocab-scale) instead of replaying the
-    # posexplode per reference
-    counts = (
-        pos.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=False)
-    )
-    vocab = counts.filter(F.col("cnt") >= min_count)
-    # ONE build-time job for both driver-side inputs: the corpus total
-    # and the distinct vocab count values (collect_set skips the
-    # when()-nulled sub-min_count rows)
+    grams = df.select(F.col(id_col), F.inline(_ngrams(tokens(text_col), 1)))
+    counts = _count(grams, ["w1"], "cnt")
+    seen = F.col("cnt") >= LM_MIN_COUNT
+    # one job for both driver-side inputs (collect_set skips the nulls)
     row = counts.agg(
-        F.sum("cnt").alias("t"),
-        exact_ints_agg(F.when(F.col("cnt") >= min_count, F.col("cnt"))).alias("vals"),
+        F.sum("cnt").alias("t"), exact_ints_agg(F.when(seen, F.col("cnt"))).alias("v")
     ).collect()[0]
     total = int(row["t"])
-    cnt_values = guarded(row["vals"])
-    ln_oov = math.log(oov_weight / total)
-    scored = pos.join(vocab, "term", "left")
-    if cnt_values is not None:
-        scored = join_exact(
-            scored, "cnt", cnt_values, lambda c: math.log(c / total), "_lnp", how="left"
-        )
-        lnp = F.coalesce(F.col("_lnp"), F.lit(ln_oov))
-    else:
-        lnp = F.coalesce(F.log(F.col("cnt") / F.lit(float(total))), F.lit(ln_oov))
-    scored = scored.select(id_col, "pos", lnp.alias("_lnp"))
-    per_doc = scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_tokens"),
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("pos", "_lnp"))), lambda s: -s["_lnp"]
-        ).alias("_nl"),
+    scored = with_ln(
+        grams.join(counts.filter(seen), "w1", "left"), "cnt", guarded(row["v"]), "_ln", total
     )
-    fold = F.aggregate(
-        F.slice(F.col("_nl"), 2, F.size(F.col("_nl"))),
-        F.element_at(F.col("_nl"), 1),
-        lambda acc, x: acc + x,
-    )
-    return per_doc.select(
-        id_col, "n_tokens", (fold / F.col("n_tokens")).alias("surprisal")
-    )
+    lnp = F.coalesce(F.col("_ln"), F.lit(math.log(LM_OOV_WEIGHT / total)))
+    return _doc_mean(scored, id_col, -lnp, "n_tokens", "surprisal")
 
 
-def top_ngrams(
-    df: DataFrame,
-    text_col: str = "text",
-    n_values: tuple[int, ...] = (1, 2, 3),
-    k: int = 20,
-) -> DataFrame:
-    """Corpus-level top-``k`` word n-grams per n — the vocabulary /
-    collocation profile of a training corpus (and the building block for
-    contamination and boilerplate reports).
+def top_ngrams(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """Corpus-level top-``TOP_NGRAM_K`` word n-grams for each n in
+    ``TOP_NGRAM_NS`` — the vocabulary / collocation profile of a training
+    corpus (and the building block for contamination and boilerplate
+    reports).
 
-    One explode + hash count per n (shuffle carries (ngram, partial
-    count) pairs only), unioned, then a per-n top-k window over the
-    counted (tiny) result.  Ties break on the gram text for determinism.
+    One scan explodes the grams of every n together and one hash count
+    keys on ``(n, ngram)`` (the shuffle carries partial counts only; the
+    table has one consumer, so it is not pinned), then a per-n top-k
+    window over the counted result.  Ties break on the gram text.
     Returns ``(n, ngram, cnt, rank)``.
     """
     from pyspark.sql.window import Window
 
-    def _gram_fn(width: int):
-        # single-arg lambda on purpose: F.transform dispatches on lambda
-        # arity, and a two-arg lambda (even with a default) is called as
-        # (element, array_index) — a default-arg capture of ``n`` would
-        # silently receive the index instead
-        toks = F.split(F.col(text_col), " ")
-        return lambda i: F.array_join(F.slice(toks, i, width), " ")
+    def as_text(n):
+        # a one-argument lambda: F.transform passes the index to a second
+        return lambda g: F.struct(
+            F.lit(n).alias("n"), F.array_join(F.array(*[g[w] for w in _W[:n]]), " ").alias("ngram")
+        )
 
-    parts = []
-    for n in n_values:
-        toks = F.split(F.col(text_col), " ")
-        cnt_grams = F.size(toks) - (n - 1)
-        grams = F.transform(
-            F.sequence(F.lit(1), F.greatest(cnt_grams, F.lit(1))),
-            _gram_fn(n),
-        )
-        parts.append(
-            df.filter(F.size(toks) >= n).select(
-                F.lit(n).alias("n"), F.explode(grams).alias("ngram")
-            )
-        )
-    allg = parts[0]
-    for p in parts[1:]:
-        allg = allg.unionByName(p)
-    counted = allg.groupBy("n", "ngram").agg(F.count(F.lit(1)).alias("cnt"))
+    toks = tokens(text_col)
+    grams = F.concat(*[F.transform(_ngrams(toks, n), as_text(n)) for n in TOP_NGRAM_NS])
+    counted = df.select(F.inline(grams)).groupBy("n", "ngram").agg(F.count(F.lit(1)).alias("cnt"))
     w = Window.partitionBy("n").orderBy(F.col("cnt").desc(), F.col("ngram").asc())
     return (
         counted.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_NGRAM_K)
         .select("n", "ngram", "cnt", "rank")
     )
 
 
-def bigram_logprob(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_count: int = 2,
-    oov_weight: float = 0.5,
-) -> DataFrame:
+def bigram_logprob(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Bigram language-model surprisal per document: mean
     ``-ln p(w2 | w1)`` under the corpus's own bigram distribution
     (conditional MLE ``c(w1,w2)/c(w1,·)``), bigrams seen fewer than
-    ``min_count`` times scored as OOV at ``oov_weight/total_bigrams``.
-    One order sharper than :func:`unigram_logprob` at spotting
-    word-salad (every token common, transitions impossible).
+    ``LM_MIN_COUNT`` times scored as OOV at
+    ``LM_OOV_WEIGHT / total_bigrams``.  One order sharper than
+    :func:`unigram_logprob` at spotting word-salad (every token common,
+    transitions impossible).
 
-    Same determinism contract: both logs take INTEGER arguments
-    (``ln c(w1,w2) - ln c(w1,·)``), served from exact-libm tables over
-    the distinct count values (in-plan ``F.log`` past
-    ``EXACT_LN_GUARD``, as in :func:`unigram_logprob`); the per-doc fold
-    runs over the position-sorted array.  Bigram assembly is a
-    shuffle-free array transform (no window/lead pass over the corpus);
-    the two count aggregations are the only shuffles.
+    One count table; ``c(w1,·)`` and the total are exact integer sums of
+    it, and both logs take integer arguments (``ln c(w1,w2) -
+    ln c(w1,·)``).
 
     Returns ``(id_col, n_bigrams, bi_surprisal)`` for docs with >= 1
     bigram.
     """
-    import math
-
-    toks = F.split(F.col(text_col), " ")
-    pairs = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - 1),
-        lambda i: F.struct(
-            i.alias("pos"),
-            F.element_at(toks, i).alias("w1"),
-            F.element_at(toks, i + 1).alias("w2"),
-        ),
+    grams = df.select(F.col(id_col), F.inline(_ngrams(tokens(text_col), 2)))
+    cb = _count(grams, ["w1", "w2"], "cnt")
+    cw = cb.groupBy("w1").agg(F.sum("cnt").cast("bigint").alias("ctx"))
+    vocab = cb.filter(F.col("cnt") >= LM_MIN_COUNT)
+    total = int(cb.agg(F.sum("cnt")).collect()[0][0])
+    vals = exact_ints((vocab, "cnt"), (cw, "ctx"))
+    scored = grams.join(cw, "w1").join(vocab, ["w1", "w2"], "left")
+    scored = with_ln(with_ln(scored, "cnt", vals, "_lncnt"), "ctx", vals, "_lnctx")
+    lnp = F.coalesce(
+        F.col("_lncnt") - F.col("_lnctx"), F.lit(math.log(LM_OOV_WEIGHT) - math.log(total))
     )
-    big = (
-        df.filter(F.size(toks) >= 2)
-        .select(F.col(id_col), F.explode(pairs).alias("_p"))
-        .select(id_col, F.col("_p.pos").alias("pos"), F.col("_p.w1").alias("w1"), F.col("_p.w2").alias("w2"))
-    )
-    # ONE corpus aggregation: cw (occurrences per w1) and the corpus
-    # total both derive from the pinned (w1, w2) counts by exact integer
-    # sums — without the pin, each count table, distinct-collect, and
-    # the final join replayed the full bigram explode independently.
-    cb = (
-        big.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=False)
-    )
-    # cw feeds the ctx-value collect AND the scoring join — pin it so
-    # the cb -> cw aggregation runs once (the ctx collect materializes
-    # the pinned blocks; the join reads them)
-    cw = (
-        cb.groupBy("w1")
-        .agg(F.sum("cnt").cast("bigint").alias("ctx"))
-        .localCheckpoint(eager=False)
-    )
-    vocab = cb.filter(F.col("cnt") >= min_count)
-    # ONE job over the pinned cb for total + distinct vocab cnt values
-    # (same merged-collect idiom as unigram_logprob)
-    row = cb.agg(
-        F.sum("cnt").alias("t"),
-        exact_ints_agg(F.when(F.col("cnt") >= min_count, F.col("cnt"))).alias("vals"),
-    ).collect()[0]
-    total = int(row["t"])
-    ln_oov = math.log(oov_weight) - math.log(total)
-    cnt_vals = guarded(row["vals"])
-    ctx_vals = exact_ints((cw, "ctx")) if cnt_vals is not None else None
-    scored = big.join(cw, "w1").join(vocab, ["w1", "w2"], "left")
-    if cnt_vals is not None and ctx_vals is not None:
-        scored = join_exact(scored, "cnt", cnt_vals, math.log, "_lncnt", how="left")
-        scored = join_exact(scored, "ctx", ctx_vals, math.log, "_lnctx", how="left")
-        lnp = F.coalesce(F.col("_lncnt") - F.col("_lnctx"), F.lit(ln_oov))
-    else:
-        # in-plan JVM log (the 100 TB path — no driver ln tables)
-        lnp = F.coalesce(
-            F.log(F.col("cnt").cast("double")) - F.log(F.col("ctx").cast("double")),
-            F.lit(ln_oov),
-        )
-    scored = scored.select(id_col, "pos", lnp.alias("_lnp"))
-    per_doc = scored.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_bigrams"),
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("pos", "_lnp"))), lambda s: -s["_lnp"]
-        ).alias("_nl"),
-    )
-    fold = F.aggregate(
-        F.slice(F.col("_nl"), 2, F.size(F.col("_nl"))),
-        F.element_at(F.col("_nl"), 1),
-        lambda acc, x: acc + x,
-    )
-    return per_doc.select(
-        id_col,
-        F.col("n_bigrams").cast("bigint").alias("n_bigrams"),
-        (fold / F.col("n_bigrams")).alias("bi_surprisal"),
-    )
+    return _doc_mean(scored, id_col, -lnp, "n_bigrams", "bi_surprisal")
 
 
-def token_entropy(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def token_entropy(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Shannon entropy of each document's token distribution:
     ``H = ln(n) - (1/n) * sum_c c*ln(c)`` over per-doc term counts ``c``
     (nats).  Low entropy = repetitive/templated text, high = diverse
     vocabulary — with :func:`unigram_logprob` (corpus-relative) this is
     the doc-local half of the cheap LM-quality pair.
 
-    Bitwise cross-engine by the module's established contract: ``ln`` is
-    evaluated only at INTEGER arguments (exact-libm tables over the
-    distinct counts/lengths; in-plan ``F.log`` past ``EXACT_LN_GUARD``
-    of them), and the per-doc sum folds in term order over a sorted
-    array.  One shuffle on ``(doc, term)``, one on ``doc``.
+    One ``(doc, term)`` count table; ``ln`` is taken at the integer
+    counts and lengths (one build-time collect for both), and the
+    per-doc sum folds in term order.
 
     Returns ``(id_col, n_tokens, entropy)``.
     """
-    import math
-
-    toks = F.split(F.col(text_col), " ")
-    # tc feeds the distinct-count collect and the per-doc fold; the
-    # per-doc aggregate additionally feeds the n_tokens collect — pin
-    # both so the exact path's extra collects reuse, not replay
-    tc = (
-        df.select(F.col(id_col), F.explode(toks).alias("term"))
-        .groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
-    )
-    c_values = exact_ints((tc, "c"))
-    if c_values is not None:
-        tc = join_exact(tc, "c", c_values, lambda c: float(c) * math.log(c), "_cl")
-    else:
-        tc = tc.withColumn("_cl", F.col("c").cast("double") * F.log(F.col("c").cast("double")))
+    terms = df.select(F.col(id_col), F.inline(_ngrams(tokens(text_col), 1)))
+    tc = _count(terms, [id_col, "w1"], "c")
+    lengths = tc.groupBy(id_col).agg(F.sum("c").alias("n"))
+    vals = exact_ints((tc, "c"), (lengths, "n"))
+    tc = with_ln(tc, "c", vals, "_lnc").withColumn("_cl", F.col("c").cast("double") * F.col("_lnc"))
     per_doc = tc.groupBy(id_col).agg(
-        F.sum("c").alias("n_tokens"),
-        F.expr(
-            "aggregate(transform(array_sort(collect_list(struct(term, _cl))),"
-            " x -> x._cl), cast(0 as double), (a, b) -> a + b)"
-        ).alias("_s"),
-    ).localCheckpoint(eager=False)
-    n_values = exact_ints((per_doc, "n_tokens")) if c_values is not None else None
-    if n_values is not None:
-        per_doc = join_exact(per_doc, "n_tokens", n_values, math.log, "_lnn")
-        lnn = F.col("_lnn")
-    else:
-        lnn = F.log(F.col("n_tokens").cast("double"))
-    return per_doc.select(
-        id_col,
-        "n_tokens",
-        (lnn - F.col("_s") / F.col("n_tokens")).alias("entropy"),
+        F.sum("c").alias("n_tokens"), _ordered_sum("w1", "_cl").alias("_s")
+    )
+    return with_ln(per_doc, "n_tokens", vals, "_lnn").select(
+        id_col, "n_tokens", (F.col("_lnn") - F.col("_s") / F.col("n_tokens")).alias("entropy")
     )
 
 
@@ -818,100 +718,34 @@ def stupid_backoff_logprob(
     Returns ``(id_col, n_scored, sb_surprisal)`` — mean ``-ln S`` over
     positions 3..n (docs shorter than 3 tokens produce no row).
 
-    Distributed shape: three count tables (one hash agg each), four
-    equi-joins back to the position stream, then the module's bitwise
-    contract — ``ln`` ONLY at integer arguments via an exact-libm table
-    over the distinct count values of all three tables (in-plan
-    ``F.log`` past ``EXACT_LN_GUARD`` of them, as in
-    :func:`unigram_logprob`), ``ln(0.4)`` as a python-libm literal
-    (DuckDB's ln agrees on the same double), and a position-ordered fold
-    per document.
+    Three count tables over ``train`` (default ``df``), five left joins
+    back to the trigram stream, ``ln`` at the integer counts of all three
+    tables (one build-time collect) and ``ln(0.4)`` as a libm literal
+    (DuckDB's ``ln`` agrees on the same double).
     """
-    import math
-
-    toks = F.split(F.col(text_col), " ")
+    toks = tokens(text_col)
     train = train if train is not None else df
-    tbase = train.select(toks.alias("_t"), F.size(toks).alias("_n"))
-    base = df.select(F.col(id_col), toks.alias("_t"), F.size(toks).alias("_n"))
-    pos = (
-        base.filter(F.col("_n") >= 3)
-        .select(
-            id_col,
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(3), F.col("_n")),
-                    lambda i: F.struct(
-                        i.alias("pos"),
-                        F.element_at("_t", i - 2).alias("w1"),
-                        F.element_at("_t", i - 1).alias("w2"),
-                        F.element_at("_t", i).alias("w3"),
-                    ),
-                )
-            ).alias("_g"),
-        )
-        .select(id_col, "_g.pos", "_g.w1", "_g.w2", "_g.w3")
-    )
-    # each count table is referenced twice (ln-value collect + scoring
-    # join) and would replay its corpus explode per reference; pin them
-    # (vocab-scale) and derive the token total from uni by integer sum
-    words = train.select(F.explode(toks).alias("w"))
-    uni = (
-        words.groupBy("w")
-        .agg(F.count(F.lit(1)).alias("cu"))
-        .localCheckpoint(eager=False)
+    uni, bi, tri = (
+        _count(train.select(F.inline(_ngrams(toks, n))), list(_W[:n]), out)
+        for n, out in ((1, "cu"), (2, "cb"), (3, "c3"))
     )
     total = int(uni.agg(F.sum("cu")).collect()[0][0])
-    bi = (
-        tbase.filter(F.col("_n") >= 2)  # sequence(2, 1) would DESCEND
-        .select(F.explode(F.transform(F.sequence(F.lit(2), F.col("_n")), lambda i: F.struct(
-            F.element_at("_t", i - 1).alias("w1"), F.element_at("_t", i).alias("w2")
-        ))).alias("_b"))
-        .groupBy("_b.w1", "_b.w2")
-        .agg(F.count(F.lit(1)).alias("cb"))
-        .localCheckpoint(eager=False)
-    )
-    tri = (
-        tbase.filter(F.col("_n") >= 3)
-        .select(F.explode(F.transform(F.sequence(F.lit(3), F.col("_n")), lambda i: F.struct(
-            F.element_at("_t", i - 2).alias("w1"),
-            F.element_at("_t", i - 1).alias("w2"),
-            F.element_at("_t", i).alias("w3"),
-        ))).alias("_r"))
-        .groupBy("_r.w1", "_r.w2", "_r.w3")
-        .agg(F.count(F.lit(1)).alias("c3"))
-        .localCheckpoint(eager=False)
-    )
-
     scored = (
-        pos.join(tri, ["w1", "w2", "w3"], "left")
-        .join(bi.select(F.col("w1"), F.col("w2"), F.col("cb").alias("cb12")), ["w1", "w2"], "left")
+        df.select(F.col(id_col), F.inline(_ngrams(toks, 3)))
+        .join(tri, ["w1", "w2", "w3"], "left")
+        .join(bi.select("w1", "w2", F.col("cb").alias("cb12")), ["w1", "w2"], "left")
         .join(
             bi.select(F.col("w1").alias("w2"), F.col("w2").alias("w3"), F.col("cb").alias("cb23")),
             ["w2", "w3"],
             "left",
         )
-        .join(uni.select(F.col("w").alias("w2"), F.col("cu").alias("cu2")), ["w2"], "left")
-        .join(uni.select(F.col("w").alias("w3"), F.col("cu").alias("cu3")), ["w3"], "left")
+        .join(uni.select(F.col("w1").alias("w2"), F.col("cu").alias("cu2")), ["w2"], "left")
+        .join(uni.select(F.col("w1").alias("w3"), F.col("cu").alias("cu3")), ["w3"], "left")
     )
-    # integer-argument libm ln over the distinct count values of all
-    # three tables, collected in one job — or, past the guard, fully
-    # in-plan JVM log with no driver materialization.
     vals = exact_ints((tri, "c3"), (bi, "cb"), (uni, "cu"))
-    if vals is not None:
-
-        def with_ln(frame, src, dst):
-            return join_exact(frame, src, vals, math.log, dst, how="left")
-
-    else:
-
-        def with_ln(frame, src, dst):
-            return frame.withColumn(dst, F.log(F.col(src).cast("double")))
-
-    for src, dst in (("c3", "ln_c3"), ("cb12", "ln_cb12"), ("cb23", "ln_cb23"),
-                     ("cu2", "ln_cu2"), ("cu3", "ln_cu3")):
-        scored = with_ln(scored, src, dst)
+    for src in ("c3", "cb12", "cb23", "cu2", "cu3"):
+        scored = with_ln(scored, src, vals, "ln_" + src)
     ln_backoff = math.log(0.4)
-    ln_total = math.log(total)
     lns = (
         F.when(F.col("c3").isNotNull(), F.col("ln_c3") - F.col("ln_cb12"))
         .when(
@@ -921,94 +755,43 @@ def stupid_backoff_logprob(
         .otherwise(
             # OOV unigram (unseen in train): pseudo-count 1 => ln 1 = 0
             F.lit(ln_backoff) + F.lit(ln_backoff)
-            + F.coalesce(F.col("ln_cu3"), F.lit(0.0)) - F.lit(ln_total)
+            + F.coalesce(F.col("ln_cu3"), F.lit(0.0)) - F.lit(math.log(total))
         )
     )
-    per = scored.select(id_col, "pos", lns.alias("_lns"))
-    ordered = F.array_sort(F.collect_list(F.struct("pos", "_lns")))
-    return per.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_scored"),
-        (
-            -F.expr(
-                "aggregate(transform(array_sort(collect_list(struct(pos, _lns))),"
-                " x -> x._lns), cast(0 as double), (a, b) -> a + b)"
-            )
-            / F.count(F.lit(1))
-        ).alias("sb_surprisal"),
-    )
+    # every term is <= 0 and none is -0.0, so summing the negated terms
+    # equals negating the sum bit for bit (round-to-nearest is symmetric)
+    return _doc_mean(scored, id_col, -lns, "n_scored", "sb_surprisal")
 
 
-def bigram_pmi(
-    df: DataFrame,
-    text_col: str = "text",
-    min_count: int = 5,
-) -> DataFrame:
+def bigram_pmi(df: DataFrame, text_col: str = "text", min_count: int = 5) -> DataFrame:
     """Pointwise mutual information of adjacent word pairs — the classic
     collocation detector (Church & Hanks 1990), used on training corpora
     to find multi-word expressions worth protecting from tokenizer
     splits and to profile boilerplate.
 
     ``pmi(a, b) = ln p(a,b) - ln p(a) - ln p(b)`` decomposes into lns of
-    INTEGER counts: ``ln c_ab - ln N_big - ln c_a - ln c_b + 2 ln N_uni``
-    — so the engine's exact-log contract applies unchanged: under
-    ``EXACT_LN_GUARD`` distinct count values, an exact-libm ``ln`` table
-    (bitwise equal to DuckDB's glibc ``ln``); beyond it,
-    in-plan JVM ``F.log`` (the 100 TB path, no driver materialization).
-    The PMI sum is left-associated single IEEE ops, so both engines and
-    both paths agree bitwise given equal ln inputs.
+    INTEGER counts: ``ln c_ab - ln N_big - ln c_a - ln c_b + 2 ln N_uni``,
+    so the module's exact-log contract applies unchanged.  The PMI sum is
+    left-associated single IEEE ops, so both engines and both log paths
+    agree bitwise given equal ln inputs.
 
-    Plan shape: one scan -> in-array ``zip_with`` bigram pairing (no
-    per-token self-join) -> two hash aggregates (bigram + unigram
-    counts) -> two count-table joins for c_a/c_b.  Scalar totals are
-    single-row collects.  Returns ``(w1, w2, c_ab, pmi)`` for bigram
-    types with ``c_ab >= min_count``.
+    Two count tables (bigram + unigram; the totals are their integer
+    sums) and two unigram joins for c_a/c_b.  Returns
+    ``(w1, w2, c_ab, pmi)`` for bigram types with ``c_ab >= min_count``.
     """
-    import math
-
-    toks = F.split(F.col(text_col), " ")
-    d = df.select(toks.alias("_tk"))
-    tok = d.select(F.explode("_tk").alias("w"))
-    # unigram counts feed the totals aggregate and both c_a/c_b joins —
-    # pin once instead of replaying the explode per consumer
-    uni = tok.groupBy("w").agg(F.count(F.lit(1)).alias("c")).localCheckpoint(eager=False)
-    pairs = d.filter(F.size("_tk") >= 2).select(
-        F.explode(
-            F.expr(
-                "zip_with(slice(_tk, 1, size(_tk) - 1), slice(_tk, 2, size(_tk) - 1),"
-                " (a, b) -> struct(a as w1, b as w2))"
-            )
-        ).alias("p")
-    ).select("p.w1", "p.w2")
-    n_uni = int(uni.agg(F.sum("c")).collect()[0][0])
-    # total bigrams = sum(max(len-1, 0)): a narrow size projection, not a
-    # second full zip_with/explode pass over the corpus
-    n_big = int(
-        d.agg(F.sum(F.greatest(F.size("_tk") - 1, F.lit(0)))).collect()[0][0]
+    toks = tokens(text_col)
+    uni = _count(df.select(F.inline(_ngrams(toks, 1))), ["w1"], "c")
+    pairs = _count(df.select(F.inline(_ngrams(toks, 2))), ["w1", "w2"], "c_ab")
+    ln_nu = math.log(int(uni.agg(F.sum("c")).collect()[0][0]))
+    ln_nb = math.log(int(pairs.agg(F.sum("c_ab")).collect()[0][0]))
+    big = pairs.filter(F.col("c_ab") >= min_count)
+    vals = exact_ints((big, "c_ab"), (uni, "c"))
+    joined = big.join(uni.select("w1", F.col("c").alias("_ca")), "w1").join(
+        uni.select(F.col("w1").alias("w2"), F.col("c").alias("_cb")), "w2"
     )
-    # the bigram aggregate feeds both the guard's distinct-count collect
-    # and the returned plan — pin it once (the uni treatment) or the
-    # corpus-scale explode+agg executes twice per invocation
-    big = (
-        pairs.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c_ab"))
-        .filter(F.col("c_ab") >= min_count)
-        .localCheckpoint(eager=False)
-    )
-
-    cnt_vals = exact_ints((big, "c_ab"), (uni, "c"))
-    joined = (
-        big.join(uni.withColumnRenamed("w", "w1").withColumnRenamed("c", "_ca"), "w1")
-        .join(uni.withColumnRenamed("w", "w2").withColumnRenamed("c", "_cb"), "w2")
-    )
-    if cnt_vals is not None:
-        for src, dst in (("c_ab", "_ln_ab"), ("_ca", "_ln_a"), ("_cb", "_ln_b")):
-            joined = join_exact(joined, src, cnt_vals, math.log, dst)
-        ln_ab, ln_a, ln_b = F.col("_ln_ab"), F.col("_ln_a"), F.col("_ln_b")
-    else:
-        ln_ab = F.log(F.col("c_ab").cast("double"))
-        ln_a = F.log(F.col("_ca").cast("double"))
-        ln_b = F.log(F.col("_cb").cast("double"))
-    ln_nu, ln_nb = math.log(n_uni), math.log(n_big)
+    for src, dst in (("c_ab", "_ln_ab"), ("_ca", "_ln_a"), ("_cb", "_ln_b")):
+        joined = with_ln(joined, src, vals, dst)
+    ln_ab, ln_a, ln_b = F.col("_ln_ab"), F.col("_ln_a"), F.col("_ln_b")
     pmi = ((((ln_ab - F.lit(ln_nb)) - ln_a) - ln_b) + F.lit(ln_nu)) + F.lit(ln_nu)
     return joined.select("w1", "w2", "c_ab", pmi.alias("pmi"))
 

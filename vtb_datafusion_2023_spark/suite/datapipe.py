@@ -380,6 +380,17 @@ def _dot_sql(a: str, b: str, typ: str = "double") -> str:
     )
 
 
+def _ngrams_sql(tk: str, n: int) -> str:
+    """DuckDB select item: one ``(pos, w1..wn)`` row per word n-gram of
+    the list column ``tk`` (``pos`` the 1-based position of ``w1``, none
+    below ``n`` tokens) — the stream of ``operators.text._ngrams``."""
+    fields = ", ".join(f"'w{j + 1}': {tk}[i + {j}]" for j in range(n))
+    return (
+        f"unnest(list_transform(range(1, greatest(len({tk}) - {n - 1}, 0) + 1), "
+        f"i -> {{'pos': i, {fields}}}), recursive := true)"
+    )
+
+
 def _norm_sql(a: str) -> str:
     return f"sqrt({_dot_sql(a, a)})"
 
@@ -1223,17 +1234,12 @@ def text_surprisal(spark, sf_dir):
 
 @register(
     "text_pmi",
-    oracle="""
+    oracle=f"""
 with d as (select doc_id, string_split(text, ' ') as tk from documents),
 tok as (select unnest(tk) as w from d),
 uni as (select w, count(*) as c from tok group by w),
 nu as (select count(*) as t from tok),
-bigall as (
-  select unnest(list_transform(range(1, len(tk)),
-                               i -> {'w1': tk[i], 'w2': tk[i+1]}),
-                recursive := true)
-  from d where len(tk) >= 2
-),
+bigall as (select {_ngrams_sql('tk', 2)} from d),
 nb as (select count(*) as t from bigall),
 big as (select w1, w2, count(*) as c_ab from bigall
         group by w1, w2 having count(*) >= 5)
@@ -1251,7 +1257,7 @@ join uni u2 on big.w2 = u2.w
     "ln-decomposed into integer-count lns under the engine's exact-log "
     "contract (libm lookup under EXACT_LN_GUARD, in-plan F.log at "
     "scale), left-associated IEEE sum => bitwise cross-engine.  "
-    "In-array zip_with pairing — no per-token self-join.",
+    "In-array n-gram pairing — no per-token self-join.",
 )
 def text_pmi(spark, sf_dir):
     from ..operators.text import bigram_pmi
@@ -1299,18 +1305,15 @@ def text_hash_classifier(spark, sf_dir):
 
 @register(
     "text_top_ngrams",
-    oracle="""
+    oracle=f"""
 with toks as (select doc_id, string_split(text, ' ') as tk from documents),
 g as (
-  select 1 as n, unnest(tk) as ngram from toks
+  select 1 as n, w1 as ngram from (select {_ngrams_sql('tk', 1)} from toks)
   union all
-  select 2 as n, unnest(list_transform(range(1, greatest(len(tk) - 1, 0) + 1),
-                                       i -> array_to_string(tk[i:i+1], ' '))) as ngram
-  from toks where len(tk) >= 2
+  select 2 as n, w1 || ' ' || w2 as ngram from (select {_ngrams_sql('tk', 2)} from toks)
   union all
-  select 3 as n, unnest(list_transform(range(1, greatest(len(tk) - 2, 0) + 1),
-                                       i -> array_to_string(tk[i:i+2], ' '))) as ngram
-  from toks where len(tk) >= 3
+  select 3 as n, w1 || ' ' || w2 || ' ' || w3 as ngram
+  from (select {_ngrams_sql('tk', 3)} from toks)
 ),
 counted as (select n, ngram, count(*) as cnt from g group by n, ngram),
 ranked as (
@@ -1322,8 +1325,8 @@ select cast(n as int) as n, ngram, cnt, rank from ranked where rank <= 20
 """,
     survey_ref="text-top-ngrams",
     doc="corpus top-20 n-grams for n=1..3 (vocabulary/collocation "
-    "profile): per-n explode + hash count + top-k window; ties break on "
-    "gram text.",
+    "profile): one scan explodes every n, one hash count on (n, ngram), "
+    "top-k window; ties break on gram text.",
 )
 def text_top_ngrams(spark, sf_dir):
     from ..operators.text import top_ngrams
@@ -2978,19 +2981,9 @@ def dd_simhash_idf(spark, sf_dir):
 
 @register(
     "text_bigram_surprisal",
-    oracle="""
-with tok as (
-  select doc_id,
-         unnest(string_split(text, ' ')) as term,
-         generate_subscripts(string_split(text, ' '), 1) as pos
-  from documents
-),
-big as (
-  select doc_id, pos, term as w1,
-         lead(term) over (partition by doc_id order by pos) as w2
-  from tok
-),
-b2 as (select doc_id, pos, w1, w2 from big where w2 is not null),
+    oracle=f"""
+with d as (select doc_id, string_split(text, ' ') as tk from documents),
+b2 as (select doc_id, {_ngrams_sql('tk', 2)} from d),
 cb as (select w1, w2, count(*) as cnt from b2 group by w1, w2),
 cw as (select w1, count(*) as ctx from b2 group by w1),
 tot as (select sum(cnt) as t from cb),
@@ -3767,7 +3760,7 @@ def an_seasonal_anomaly(spark, sf_dir):
 
 @register(
     "text_stupid_backoff",
-    oracle="""
+    oracle=f"""
 with tr as (
   select str_split(text, ' ') as t, len(str_split(text, ' ')) as n
   from documents where doc_id % 3 <> 0
@@ -3776,31 +3769,19 @@ ev as (
   select doc_id, str_split(text, ' ') as t, len(str_split(text, ' ')) as n
   from documents where doc_id % 3 = 0
 ),
-pos as (
-  select doc_id,
-         unnest(generate_series(3, n)) as pos,
-         unnest([t[i-2] for i in generate_series(3, n)]) as w1,
-         unnest([t[i-1] for i in generate_series(3, n)]) as w2,
-         unnest([t[i] for i in generate_series(3, n)]) as w3
-  from ev where n >= 3
-),
+pos as (select doc_id, {_ngrams_sql('t', 3)} from ev),
 uni as (
   select w, cast(count(*) as bigint) as cu
   from (select unnest(t) as w from tr) group by w
 ),
 tot as (select cast(sum(cu) as bigint) as n from uni),
 bi as (
-  select w1, w2, cast(count(*) as bigint) as cb from (
-    select unnest([t[i-1] for i in generate_series(2, n)]) as w1,
-           unnest([t[i] for i in generate_series(2, n)]) as w2
-    from tr where n >= 2) group by w1, w2
+  select w1, w2, cast(count(*) as bigint) as cb
+  from (select {_ngrams_sql('t', 2)} from tr) group by w1, w2
 ),
 tri as (
-  select w1, w2, w3, cast(count(*) as bigint) as c3 from (
-    select unnest([t[i-2] for i in generate_series(3, n)]) as w1,
-           unnest([t[i-1] for i in generate_series(3, n)]) as w2,
-           unnest([t[i] for i in generate_series(3, n)]) as w3
-    from tr where n >= 3) group by w1, w2, w3
+  select w1, w2, w3, cast(count(*) as bigint) as c3
+  from (select {_ngrams_sql('t', 3)} from tr) group by w1, w2, w3
 ),
 scored as (
   select p.doc_id, p.pos,
